@@ -1,20 +1,19 @@
 """Single-document extraction surface (reference extractor.py:6-44).
 
-The distributed path is operators/extract.py; this is the convenience
-wrapper for one document — same kernels, same model — returning the
-positive nodes' XPaths (the reference's ``extract_from_html`` contract)
-or the ordered content block texts.
+A thin caller of the document kernel (``kernels/document.py``) on a batch
+of one: the markup is a one-span document, parsed and classified by the
+same phase functions — and the same one-predict model verdict — that
+``extract_content_spans`` runs per Arrow batch, so the single-document
+API cannot drift from serving.  Returns the positive nodes' XPaths (the
+reference's ``extract_from_html`` contract) or the ordered content block
+texts.  Unlike the distributed surfaces, a failure here raises to the
+caller instead of becoming an error row.
 """
 
 from __future__ import annotations
 
-import numpy as np
-
-from learnhtml_spark.htmlparse import getpath, parse_html
-from learnhtml_spark.kernels.blockify import blocks_from_tree
-from learnhtml_spark.kernels.features import extract_features_from_tree
+from learnhtml_spark.kernels.document import block_columns, parse_doc, predict_keep
 from learnhtml_spark.model import NodeClassifier
-from learnhtml_spark.training import BLOCK_STAT_COLUMNS, add_block_stats, block_stats_list
 
 
 class HTMLExtractor:
@@ -23,40 +22,20 @@ class HTMLExtractor:
         self.depth = depth
         self.height = height
 
-    def _score_blocks(self, html: str):
-        root = parse_html(html)
-        if root is None:
-            return [], []
-        blocks = blocks_from_tree(root, do_css=False)
-        if not blocks:
-            return [], []
-        starts = {id(b.features["block_start_element"]) for b in blocks}
-        feats = extract_features_from_tree(
-            root, self.depth, self.height, select_nodes=starts
-        )
-        feats = add_block_stats(feats, block_stats_list(blocks))
-        pred = np.asarray(self.model.predict(feats), dtype=bool)
-        positive = set(feats["path"][pred])
-        return blocks, positive
+    def _kept_blocks(self, html: str) -> list:
+        """(block, path) pairs the model keeps, document order."""
+        doc = parse_doc([{"kind": "html", "text": html, "offset": 0}])
+        cols = block_columns(doc, self.depth, self.height)
+        (keep,) = predict_keep(self.model, [doc], [cols], self.depth, self.height)
+        return [(b, p) for b, p, k in zip(doc.blocks, doc.paths, keep) if k]
 
     def extract_from_html(self, html: str) -> list[str]:
         """XPaths of content nodes (prediction == 1), document order."""
-        blocks, positive = self._score_blocks(html)
-        out = []
-        for b in blocks:
-            p = getpath(b.features["block_start_element"])
-            if p in positive and p not in out:
-                out.append(p)
-        return out
+        return list(dict.fromkeys(p for _, p in self._kept_blocks(html)))
 
     def extract_text_blocks(self, html: str) -> list[str]:
         """Ordered content block texts."""
-        blocks, positive = self._score_blocks(html)
-        return [
-            b.text
-            for b in blocks
-            if getpath(b.features["block_start_element"]) in positive
-        ]
+        return [b.text for b, _ in self._kept_blocks(html)]
 
     @classmethod
     def load(cls, path: str, **kw) -> "HTMLExtractor":

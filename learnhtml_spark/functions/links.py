@@ -73,14 +73,14 @@ def doc_outlinks(base_url: str, html: str) -> list[tuple]:
 def extract_outlinks(docs: DataFrame) -> DataFrame:
     """(doc_id, spans) -> outlink edge rows.  The doc_id column is the
     page URL (the crawl document model, sources/warc_source.py)."""
-    from learnhtml_spark.operators.extract import _spans_list
+    from learnhtml_spark.kernels.document import spans_list
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [f.name for f in OUTLINKS.fields]
         for pdf in batches:
             rows = []
             for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                html, _ = html_from_spans(_spans_list(spans))
+                html, _ = html_from_spans(spans_list(spans))
                 rows.extend(
                     (doc_id, *r) for r in doc_outlinks(doc_id, html)
                 )

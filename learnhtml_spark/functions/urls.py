@@ -50,8 +50,9 @@ def canonical_url(url: Column) -> Column:
     mangling ``http://[::1]:8080/x`` into a corrupt form would be worse
     than not normalizing it (crawl corpora key on hostnames; IPv6
     literals are vanishingly rare and never arrive in case/port-variant
-    spellings from the same fetcher).  Guarded by a ``[`` prefix test on
-    the authority, pinned by a unit test.
+    spellings from the same fetcher).  Guarded by a ``[`` anywhere in
+    the authority (``http://u@[::1]:80/x`` carries userinfo before the
+    bracket), pinned by a unit test.
 
     Deliberately NOT applied (documented scope, not an oversight):
     path dot-segment removal and percent-encoding normalization
@@ -87,7 +88,7 @@ def canonical_url(url: Column) -> Column:
     ).otherwise(F.concat(F.lit("?"), sorted_q))
     canon = F.concat(scheme, F.lit("://"), host, port_part, path, q_part)
     # IPv6/bracketed authority: out of scope, pass through (see docstring)
-    return F.when(auth.startswith("["), url).otherwise(canon)
+    return F.when(auth.contains("["), url).otherwise(canon)
 
 
 def url_canonicalize(df: DataFrame, url_col: str = "url") -> DataFrame:

@@ -51,12 +51,3 @@ def readability_score(node: Element) -> int:
     elif tag in _MINUS5:
         weight -= 5
     return weight
-
-
-def readability_scores(root: Element) -> dict[int, int]:
-    """{id(node): score} for every element of the tree (document order)."""
-    return {
-        id(node): readability_score(node)
-        for node in root.iter()
-        if isinstance(node.tag, str)
-    }

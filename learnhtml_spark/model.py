@@ -38,10 +38,6 @@ def camel_case_split(s: str) -> str:
     return _RE_CAMEL.sub(" ", s)
 
 
-def _slot(feature: str) -> int:
-    return zlib.crc32(feature.encode("utf-8", "ignore")) % HASH_DIM
-
-
 def _string_columns(df: pd.DataFrame) -> list[str]:
     return [c for c in df.columns if c != "path" and df[c].dtype == object]
 

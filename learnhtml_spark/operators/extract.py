@@ -8,9 +8,11 @@ The serving pipeline (reference lifecycle 3.1/3.3 re-expressed Spark-first):
       → ordered (doc_id, kind, text, media_ref, offset) span rows
 
 Design notes for 100 TB scale:
-- ONE mapInPandas stage does everything per document — no explode of parsed
-  nodes into a distributed table, no join between features and predictions,
-  zero shuffles in the default plan (scan → map → write).
+- ONE mapInPandas stage does everything per document — the shared document
+  kernel (kernels/document.py) with one model predict per Arrow batch; no
+  explode of parsed nodes into a distributed table, no join between
+  features and predictions, zero shuffles in the default plan
+  (scan → map → write).
 - The model is shipped once per executor via ``SparkContext.broadcast`` of
   the serialized artifact; deserialized lazily per python worker.
 - Documents never split across partitions (rows are atomic), matching the
@@ -23,13 +25,12 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from learnhtml_spark.htmlparse import getpath, parse_html
-from learnhtml_spark.kernels.blockify import blocks_from_tree
+from learnhtml_spark.htmlparse import parse_html
+from learnhtml_spark.kernels.document import concat_columns, extract_rows, spans_list
 from learnhtml_spark.kernels.features import extract_features_from_tree
 from learnhtml_spark.kernels.labeling import (
     NON_CONTENT_BLOCK_RATIO,
@@ -41,8 +42,7 @@ from learnhtml_spark.schemas import (
     LABELS,
     node_features_schema,
 )
-from learnhtml_spark.spans import assemble_output, html_from_spans, media_spans
-from learnhtml_spark.training import add_block_stats, block_stats_frame
+from learnhtml_spark.spans import html_from_spans
 
 
 #: per-python-worker deserialized model cache (workers handle many tasks;
@@ -65,17 +65,14 @@ def _load_model(key, payload: bytes) -> NodeClassifier:
     return model
 
 
-def _spans_list(value) -> list[dict]:
-    """Normalize an Arrow-transferred spans cell into a list of dicts."""
-    if value is None:
-        return []
-    out = []
-    for s in value:
-        if isinstance(s, dict):
-            out.append(s)
-        else:  # pyspark Row
-            out.append(s.asDict())
-    return out
+def broadcast_model(spark: SparkSession, model: NodeClassifier | bytes):
+    """Ship a model artifact once per executor; returns the zero-argument
+    loader a python worker calls to get its cached deserialized model."""
+    payload = model if isinstance(model, (bytes, bytearray)) else model.to_bytes()
+    payload = bytes(payload)
+    bc = spark.sparkContext.broadcast(payload)
+    key = ("model", len(payload), hash(payload[:512]), hash(payload[-512:]))
+    return lambda: _load_model(key, bc.value)
 
 
 def repartition_docs(
@@ -104,108 +101,18 @@ def extract_content_spans(
     num_partitions: int | None = None,
 ) -> DataFrame:
     """The flagship operator: classify each document's blocks and emit the
-    ordered content+media span sequence."""
-    spark = docs.sparkSession
-    payload = model if isinstance(model, (bytes, bytearray)) else model.to_bytes()
-    payload = bytes(payload)
-    bc = spark.sparkContext.broadcast(payload)
-    model_key = ("model", len(payload), hash(payload[:512]), hash(payload[-512:]))
-
+    ordered content+media span sequence (kernels/document.py, one model
+    predict per Arrow batch)."""
+    load = broadcast_model(docs.sparkSession, model)
     if num_partitions:
         docs = repartition_docs(docs, num_partitions)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from itertools import chain
-
-        from learnhtml_spark.kernels.features import feature_columns
-        from learnhtml_spark.training import BLOCK_STAT_COLUMNS, block_stats_list
-
-        clf = _load_model(model_key, bc.value)
-        cols = ["doc_id", "kind", "text", "media_ref", "offset"]
-        feat_cols = feature_columns(depth, height)
+        clf = load()
+        cols = EXTRACTED_SPANS.fieldNames()
         for pdf in batches:
-            # phase 1: parse + blockify + featurize every doc in the batch;
-            # features collected as raw column dicts (one pandas frame is
-            # built per BATCH, not per doc — construction cost dominates
-            # otherwise)
-            parsed = []  # (doc_id, blocks, block_paths, boundaries, media)
-            col_dicts = []
-            doc_keys = []
-            error_rows = []  # poison documents must never kill the job
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                try:
-                    spans = _spans_list(spans)
-                    html, boundaries = html_from_spans(spans)
-                    media = media_spans(spans)
-                    root = parse_html(html) if html else None
-                    blocks = (
-                        blocks_from_tree(root, do_css=False)
-                        if root is not None
-                        else []
-                    )
-                    block_paths = [
-                        getpath(b.features["block_start_element"]) for b in blocks
-                    ]
-                    if blocks:
-                        starts = {
-                            id(b.features["block_start_element"]) for b in blocks
-                        }
-                        d = extract_features_from_tree(
-                            root, depth, height, select_nodes=starts, as_columns=True
-                        )
-                        stats = block_stats_list(blocks)
-                        for name, vals in zip(
-                            BLOCK_STAT_COLUMNS,
-                            zip(*(stats.get(p, None) or [0.0] * len(BLOCK_STAT_COLUMNS)
-                                  for p in d["path"])),
-                        ):
-                            d[name] = np.asarray(vals, dtype=np.float64)
-                        col_dicts.append(d)
-                        doc_keys.extend([doc_id] * len(d["path"]))
-                    parsed.append((doc_id, blocks, block_paths, boundaries, media))
-                except Exception as exc:  # noqa: BLE001 — per-doc isolation
-                    # auditable error row: kind='error', offset=-1; filtered
-                    # by consumers, counted into lineage error_count
-                    error_rows.append(
-                        (doc_id, "error", f"{type(exc).__name__}: {exc}"[:500],
-                         None, -1)
-                    )
-
-            # phase 2: ONE vectorized model call for the whole Arrow batch
-            positive_by_doc: dict = {}
-            if col_dicts:
-                merged = {}
-                for k in feat_cols + BLOCK_STAT_COLUMNS:
-                    first = col_dicts[0][k]
-                    if isinstance(first, np.ndarray):
-                        merged[k] = np.concatenate([d[k] for d in col_dicts])
-                    else:
-                        merged[k] = list(chain.from_iterable(d[k] for d in col_dicts))
-                allbf = pd.DataFrame(merged, columns=feat_cols + BLOCK_STAT_COLUMNS)
-                pred = np.asarray(clf.predict(allbf), dtype=bool)
-                for d, p in zip(
-                    np.asarray(doc_keys, dtype=object)[pred],
-                    np.asarray(merged["path"], dtype=object)[pred],
-                ):
-                    positive_by_doc.setdefault(d, set()).add(p)
-
-            # phase 3: assemble ordered output spans per doc
-            rows = list(error_rows)
-            for doc_id, blocks, block_paths, boundaries, media in parsed:
-                try:
-                    positive = positive_by_doc.get(doc_id, set())
-                    content = [
-                        (b.text, b.features["block_start_element"].srcpos)
-                        for b, p in zip(blocks, block_paths)
-                        if p in positive
-                    ]
-                    rows.extend(assemble_output(doc_id, content, boundaries, media))
-                except Exception as exc:  # noqa: BLE001
-                    rows.append(
-                        (doc_id, "error", f"{type(exc).__name__}: {exc}"[:500],
-                         None, -1)
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+            keyed = zip(zip(pdf["doc_id"]), pdf["spans"])
+            yield pd.DataFrame(extract_rows(keyed, clf, depth, height), columns=cols)
 
     return docs.mapInPandas(run, schema=EXTRACTED_SPANS)
 
@@ -219,38 +126,23 @@ def extract_node_features(
     names = schema.fieldNames()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from itertools import chain
-
         for pdf in batches:
             # column dicts per doc, ONE DataFrame per batch: the pandas
             # constructor on 100+ columns costs ~4× the feature kernel
             # itself when built per doc
             col_dicts = []
-            doc_ids = []
             for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                html, _ = html_from_spans(_spans_list(spans))
+                html, _ = html_from_spans(spans_list(spans))
                 root = parse_html(html) if html else None
                 if root is None:
                     continue
-                d = extract_features_from_tree(
-                    root, depth, height, as_columns=True
-                )
+                d = extract_features_from_tree(root, depth, height, as_columns=True)
+                d["doc_id"] = [doc_id] * len(d["path"])
                 col_dicts.append(d)
-                doc_ids.extend([doc_id] * len(d["path"]))
             if col_dicts:
-                merged = {"doc_id": doc_ids}
-                for k in col_dicts[0]:
-                    first = col_dicts[0][k]
-                    if isinstance(first, np.ndarray):
-                        merged[k] = np.concatenate([d[k] for d in col_dicts])
-                    else:
-                        merged[k] = list(
-                            chain.from_iterable(d[k] for d in col_dicts)
-                        )
-                out = pd.DataFrame(merged, columns=names)
+                yield pd.DataFrame(concat_columns(col_dicts, names), columns=names)
             else:
-                out = pd.DataFrame(columns=names)
-            yield out
+                yield pd.DataFrame(columns=names)
 
     return docs.mapInPandas(run, schema=schema)
 
@@ -274,7 +166,7 @@ def label_documents(docs_with_gold: DataFrame) -> DataFrame:
             for doc_id, spans, gold in zip(
                 pdf["doc_id"], pdf["spans"], pdf["gold_blocks"]
             ):
-                html, _ = html_from_spans(_spans_list(spans))
+                html, _ = html_from_spans(spans_list(spans))
                 gold = list(gold) if gold is not None else []
                 for path, ratio, text in get_ratios_per_html(html, gold):
                     rows.append(

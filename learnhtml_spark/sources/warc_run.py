@@ -6,12 +6,18 @@ lineage + metrics.  Here the natural unit of work, checkpointing, AND
 output partitioning is the archive file (the CommonCrawl convention —
 production crawl jobs track a manifest of processed WARC paths):
 
-- one task per archive, end-to-end: WARC framing -> gzip members ->
-  HTTP decode -> parser -> blockifier -> density rules -> ordered spans
-  in ONE ``mapInPandas`` (``warc_heuristic_spans_fused``) — the archive
-  column rides through the kernel natively, so per-archive metrics need
-  no join and the whole job runs with zero exchanges besides the final
-  per-archive metric aggregate;
+- one task per archive, end-to-end in ONE ``mapInPandas``
+  (``warc_spans_fused``): WARC framing -> gzip members -> HTTP decode ->
+  interleaved page assembly -> the shared document kernel
+  (``kernels/document.py``: parse -> blockify -> density rules or model
+  -> ordered spans).  Pages are keyed ``(archive, uri)``, a key the kernel
+  carries through untouched, so the archive column needs no packing, no
+  join and no second stage; the job runs with zero exchanges besides the
+  final per-archive metric aggregate;
+- failures follow the kernel's one error-row contract on both verdicts:
+  an archive that cannot be decoded, a record that cannot be decoded and
+  a page that cannot be extracted each become a ``kind='error'``,
+  ``offset=-1`` row, counted into the archive's lineage ``error_count``;
 - output is ``partitionBy(archive)`` with dynamic partition overwrite:
   re-processing an archive atomically replaces exactly its own files
   (the parquet stand-in for Iceberg ``overwritePartitions``);
@@ -45,7 +51,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from learnhtml_spark.sources.warc_source import assemble_interleaved, parse_warc
+from learnhtml_spark.kernels.document import error_row, extract_rows
+from learnhtml_spark.operators.extract import broadcast_model
+from learnhtml_spark.sources.warc_source import assemble_interleaved, parse_archive
 
 WARC_SPANS = StructType(
     [
@@ -74,107 +82,44 @@ WARC_LINEAGE = StructType(
 )
 
 
-def warc_heuristic_spans_fused(raw: DataFrame) -> DataFrame:
-    """(path, content) archive rows -> ordered heuristic spans with the
-    archive basename attached.  One task per archive, zero exchanges;
-    per-document and per-archive failures become auditable error rows
-    (the media_features poison contract), never task failures."""
-    import gzip
+def warc_spans_fused(raw: DataFrame, model_bytes: bytes | None = None) -> DataFrame:
+    """(path, content) archive rows -> ordered spans with the archive
+    basename attached: WARC decode, then the document kernel over the
+    archives' pages keyed ``(archive, uri)``.  ``model_bytes`` None selects
+    the density rules, an artifact the classifier (one predict per kernel
+    batch).  One task per archive, one ``mapInPandas``, zero exchanges.
 
-    from learnhtml_spark.operators.heuristic import extract_spans_heuristic_doc
+    Pages reach the kernel in batches of at most the session's
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` documents, however
+    many pages an archive holds: on the model path that is how many parsed
+    trees are live at once."""
+    spark = raw.sparkSession
+    load = None if model_bytes is None else broadcast_model(spark, model_bytes)
+    batch_docs = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in WARC_SPANS.fields]
+        clf = None if load is None else load()
+        cols = WARC_SPANS.fieldNames()
+        rows, docs = [], []
         for pdf in batches:
-            rows = []
             for path, content in zip(pdf["path"], pdf["content"]):
                 base = os.path.basename(path)
-                data = bytes(content)
                 try:
-                    if path.endswith(".gz"):
-                        data = gzip.decompress(data)
-                    records = parse_warc(data)
-                except Exception as exc:  # archive-level poison
-                    rows.append(
-                        (base, "", "error",
-                         f"{type(exc).__name__}: {exc}"[:500], None, -1)
-                    )
+                    pages, errors = assemble_interleaved(parse_archive(path, content))
+                except Exception as exc:  # noqa: BLE001 — archive-level poison
+                    rows.append(error_row((base, ""), exc))
                     continue
-                docs, errors = assemble_interleaved(records)
-                rows.extend(
-                    (base, uri, "error", err, None, -1) for uri, err in errors
-                )
-                for uri, spans in docs:
-                    try:
-                        rows.extend(
-                            (base, *r)
-                            for r in extract_spans_heuristic_doc(uri, spans)
-                        )
-                    except Exception as exc:  # per-document poison
-                        rows.append(
-                            (base, uri, "error",
-                             f"{type(exc).__name__}: {exc}"[:500], None, -1)
-                        )
-            yield pd.DataFrame(rows, columns=cols)
+                rows.extend(error_row((base, uri), err) for uri, err in errors)
+                for uri, spans in pages:
+                    docs.append(((base, uri), spans))
+                    if len(docs) == batch_docs:
+                        rows.extend(extract_rows(docs, clf))
+                        yield pd.DataFrame(rows, columns=cols)
+                        rows, docs = [], []
+        rows.extend(extract_rows(docs, clf))
+        yield pd.DataFrame(rows, columns=cols)
 
     return raw.mapInPandas(run, schema=WARC_SPANS)
-
-
-#: separator packing the archive basename into doc_id across the
-#: classifier kernel (tab cannot appear in an archive basename or URL
-#: written by any sane crawler; guarded at pack time)
-_KEY_SEP = "\t"
-
-
-def warc_classifier_spans_fused(raw: DataFrame, model_bytes: bytes) -> DataFrame:
-    """Classifier-model variant of the fused run: per archive, the SAME
-    interleaved assembly, then the golden-tested batched classifier
-    kernel (operators/extract.py:extract_content_spans) — reused
-    verbatim by packing the archive basename into the doc key (split
-    back afterwards), so the whole path stays zero-shuffle and the
-    model's Arrow-batch phase-2 predict batching is preserved."""
-    import gzip
-
-    from learnhtml_spark.operators.extract import extract_content_spans
-
-    def assemble(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                base = os.path.basename(path)
-                if _KEY_SEP in base:
-                    raise ValueError(f"archive name contains tab: {base!r}")
-                data = bytes(content)
-                try:
-                    if path.endswith(".gz"):
-                        data = gzip.decompress(data)
-                    docs, _errors = assemble_interleaved(parse_warc(data))
-                except Exception:  # archive-level poison: no docs
-                    continue
-                rows.extend(
-                    (f"{base}{_KEY_SEP}{uri}", spans) for uri, spans in docs
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "spans"])
-
-    from learnhtml_spark.sources.warc_source import WARC_DOCS
-
-    docs = raw.mapInPandas(assemble, schema=WARC_DOCS)
-    spans = extract_content_spans(docs, model_bytes)
-    key = F.split_part(F.col("doc_id"), F.lit(_KEY_SEP), F.lit(1))
-    # everything after the FIRST separator is the URI — a tab inside a
-    # URI stays part of it instead of silently truncating the doc_id
-    # (the basename itself is guarded against tabs at pack time)
-    url = F.expr(
-        f"substring(doc_id, length(split_part(doc_id, '{_KEY_SEP}', 1)) + 2)"
-    )
-    return spans.select(
-        key.alias("archive"),
-        url.alias("doc_id"),
-        "kind",
-        "text",
-        "media_ref",
-        "offset",
-    )
 
 
 def _read_lineage(spark: SparkSession, base_path: str) -> DataFrame:
@@ -230,7 +175,7 @@ def write_warc_run(
 
     ``model_bytes``: None -> the heuristic density extractor (cheap
     first-pass strip); a NodeClassifier artifact -> the full ML
-    extraction path (warc_classifier_spans_fused).
+    extraction path.  Either way through ``warc_spans_fused``.
     """
     manifest = list_archives(spark, warc_dir)
     done = completed_archives(spark, base_path, run_id)
@@ -247,10 +192,7 @@ def write_warc_run(
         .load([manifest[b] for b in pending])
         .select("path", "content")
     )
-    if model_bytes is None:
-        out = warc_heuristic_spans_fused(raw)
-    else:
-        out = warc_classifier_spans_fused(raw, model_bytes)
+    out = warc_spans_fused(raw, model_bytes)
     # per-write dynamic overwrite: only the partitions this call produced
     # are replaced, WITHOUT mutating the caller's session-wide overwrite
     # semantics (spark.conf.set would leak to unrelated writes)

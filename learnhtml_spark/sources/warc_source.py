@@ -54,6 +54,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from learnhtml_spark.kernels.document import error_text
+
 CRLF = b"\r\n"
 
 _SYNTH_VERSION = 5  # bump when synth_response_for's construction changes
@@ -271,6 +273,13 @@ def parse_warc(data: bytes) -> list[tuple[dict, bytes, str | None]]:
     return out
 
 
+def parse_archive(path: str, content) -> list[tuple[dict, bytes, str | None]]:
+    """One archive file's bytes -> ``parse_warc`` records; ``.gz`` paths
+    are gzip members first.  Raises on an undecodable archive."""
+    data = bytes(content)
+    return parse_warc(gzip.decompress(data) if path.endswith(".gz") else data)
+
+
 def parse_http_response(block: bytes) -> tuple[int, str, bytes]:
     """(status, content_type, body) from an application/http block."""
     sep = block.find(CRLF + CRLF)
@@ -323,15 +332,11 @@ def read_warc_dir(spark: SparkSession, directory: str) -> DataFrame:
         for pdf in batches:
             rows = []
             for path, content in zip(pdf["path"], pdf["content"]):
-                data = bytes(content)
                 try:
-                    if path.endswith(".gz"):
-                        data = gzip.decompress(data)
-                    records = parse_warc(data)
+                    records = parse_archive(path, content)
                 except Exception as exc:  # archive-level poison
                     rows.append(
-                        (path, -1, None, None, None, None, None,
-                         f"{type(exc).__name__}: {exc}"[:500])
+                        (path, -1, None, None, None, None, None, error_text(exc))
                     )
                     continue
                 for idx, (hdrs, block, err) in enumerate(records):
@@ -349,7 +354,7 @@ def read_warc_dir(spark: SparkSession, directory: str) -> DataFrame:
                         except Exception as exc:
                             rows.append(
                                 (path, idx, wtype, uri, None, None, None,
-                                 f"{type(exc).__name__}: {exc}"[:500])
+                                 error_text(exc))
                             )
                     else:
                         rows.append((path, idx, wtype, uri, None, None, None, None))
@@ -467,8 +472,9 @@ def read_warc_cdx(spark: SparkSession, directory: str) -> DataFrame:
 
 def assemble_interleaved(
     records: list[tuple[dict, bytes, str | None]],
-) -> tuple[list[tuple[str, list[dict]]], list[tuple[str, str]]]:
-    """Parsed records -> interleaved (url, spans) docs + (uri, error)s.
+) -> tuple[list[tuple[str, list[dict]]], list[tuple[str, Exception]]]:
+    """Parsed records -> interleaved (url, spans) docs + (uri, exception)s
+    for the response records that could not be decoded.
 
     A ``text/html`` 200 opens a document (html span, offset 0); the
     media responses that immediately follow it under ``<page-url>/...``
@@ -477,20 +483,20 @@ def assemble_interleaved(
     assets land consecutively in the same archive, so assembly needs no
     shuffle and no cross-archive state)."""
     docs: list[tuple[str, list[dict]]] = []
-    errors: list[tuple[str, str]] = []
+    errors: list[tuple[str, Exception]] = []
     cur: tuple[str, list[dict]] | None = None
     for hdrs, block, err in records:
         if hdrs.get("warc-type") != "response":
             continue
         uri = hdrs.get("warc-target-uri") or ""
         if err is not None:
-            errors.append((uri, err))
+            errors.append((uri, ValueError(err)))
             cur = None
             continue
         try:
             status, ctype, body = parse_http_response(block)
         except Exception as exc:  # noqa: BLE001 — per-record isolation
-            errors.append((uri, f"{type(exc).__name__}: {exc}"[:500]))
+            errors.append((uri, exc))
             cur = None
             continue
         if status != 200:
@@ -548,11 +554,8 @@ def read_warc_docs(spark: SparkSession, directory: str) -> DataFrame:
         for pdf in batches:
             rows = []
             for path, content in zip(pdf["path"], pdf["content"]):
-                data = bytes(content)
                 try:
-                    if path.endswith(".gz"):
-                        data = gzip.decompress(data)
-                    records = parse_warc(data)
+                    records = parse_archive(path, content)
                 except Exception:  # archive-level poison: no docs
                     continue
                 docs, _errors = assemble_interleaved(records)

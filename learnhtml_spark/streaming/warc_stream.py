@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from learnhtml_spark.sources.warc_run import WARC_SPANS, warc_heuristic_spans_fused
+from learnhtml_spark.sources.warc_run import WARC_SPANS, warc_spans_fused
 
 #: binaryFile's fixed schema — streaming sources require it stated
 BINARYFILE_SCHEMA = (
@@ -45,7 +45,7 @@ def warc_stream_spans(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     raw = reader.load(warc_dir).select("path", "content")
-    return warc_heuristic_spans_fused(raw)
+    return warc_spans_fused(raw)
 
 
 def run_available_now(

@@ -1,0 +1,146 @@
+"""The shared document kernel (kernels/document.py) and its callers:
+single-document API == distributed serving, composite keys and the one
+error-row contract, the fused WARC plan shape, and session hygiene of the
+span-table sink."""
+
+import os
+import sys
+
+import pytest
+
+sys.path.insert(0, os.path.dirname(__file__))
+
+from learnhtml_spark.kernels.document import error_row, extract_rows
+from learnhtml_spark.operators.extract import docs_from_pairs, extract_content_spans
+from learnhtml_spark.sources.warc_source import build_warc
+from learnhtml_spark.spans import split_html_to_spans
+
+FIX = os.path.join(os.path.dirname(__file__), "fixtures", "dragnet", "HTML")
+
+PAGE = (
+    "<html><body><h1>Heading of the report page</h1><p>"
+    + " ".join(["content"] * 20)
+    + "</p><div><a href='x'>nav</a> <a href='y'>links</a></div></body></html>"
+)
+
+
+def _one_span(html):
+    return [{"kind": "html", "text": html, "media_ref": None, "offset": 0}]
+
+
+@pytest.mark.parametrize("name", sorted(os.listdir(FIX)))
+def test_html_extractor_equals_serving(spark, fixture_model, name):
+    from learnhtml_spark.extractor import HTMLExtractor
+
+    html = open(os.path.join(FIX, name), encoding="utf-8").read()
+    got = HTMLExtractor(fixture_model).extract_text_blocks(html)
+    rows = extract_content_spans(
+        docs_from_pairs(spark, [(name, _one_span(html))]), fixture_model
+    ).collect()
+    served = [r.text for r in sorted(rows, key=lambda r: r.offset) if r.kind == "text"]
+    assert got and got == served
+
+
+def test_composite_keys_and_error_rows(fixture_model):
+    spans = split_html_to_spans(PAGE, 3, media_refs=["m1"])
+    plain = extract_rows([(("d",), spans)], fixture_model)
+    keyed = extract_rows([(("a.warc", "d"), spans)], fixture_model)
+    # the leading key tuple rides through untouched on every row
+    assert keyed == [("a.warc", *r) for r in plain]
+    assert any(r[1] == "media" for r in plain)
+
+    # two different pages under one key in one batch: verdicts stay per
+    # document, not per key
+    other = _one_span(open(os.path.join(FIX, "9.html"), encoding="utf-8").read())
+    alone = extract_rows([(("d",), other)], fixture_model)
+    both = extract_rows([(("d",), spans), (("d",), other)], fixture_model)
+    assert both == plain + alone
+
+    # a poison document becomes one error row; its batch neighbours survive
+    for clf in (None, fixture_model):
+        out = extract_rows(
+            [(("bad",), [{"kind": "html"}]), (("ok",), spans)], clf
+        )
+        errs = [r for r in out if r[1] == "error"]
+        assert errs == [("bad", "error", "KeyError: 'offset'", None, -1)]
+        assert [r for r in out if r[0] == "ok"] == extract_rows([(("ok",), spans)], clf)
+    assert error_row(("a", ""), ValueError("x" * 600))[3] == "ValueError: " + "x" * 488
+
+
+@pytest.mark.parametrize("verdict", ["heuristic", "model"])
+def test_warc_fused_plan_shape(spark, tmp_path, verdict):
+    from learnhtml_spark.sources.warc_run import warc_spans_fused
+    from test_warc_run import _packaged_model
+
+    d = tmp_path / "warc"
+    d.mkdir()
+    (d / "a.warc").write_bytes(build_warc([f"p{i}" for i in range(6)], False))
+    raw = spark.read.format("binaryFile").load(str(d)).select("path", "content")
+    out = warc_spans_fused(raw, _packaged_model() if verdict == "model" else None)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1
+    assert "Exchange" not in plan
+    rows = out.collect()
+    assert rows and all(r.kind != "error" for r in rows)
+
+
+@pytest.mark.parametrize("verdict", ["heuristic", "model"])
+def test_warc_fused_kernel_batches(spark, tmp_path, verdict):
+    from learnhtml_spark.sources.warc_run import warc_spans_fused
+    from learnhtml_spark.sources.warc_source import build_record, http_response
+    from test_warc_run import _packaged_model
+
+    d = tmp_path / "warc"
+    d.mkdir()
+    bad = build_record("response", {"WARC-Target-URI": "u"},
+                       http_response(200, "OK", "text/html", b"x" * 50))
+    (d / "a.warc").write_bytes(
+        build_warc([f"p{i}" for i in range(7)], False) + bad[:-30]
+    )
+    raw = spark.read.format("binaryFile").load(str(d)).select("path", "content")
+    model = _packaged_model() if verdict == "model" else None
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    whole = sorted(map(tuple, warc_spans_fused(raw, model).collect()), key=repr)
+    before = spark.conf.get(key)
+    # the kernel sees the archive's pages two at a time: same rows
+    spark.conf.set(key, "2")
+    try:
+        paired = sorted(map(tuple, warc_spans_fused(raw, model).collect()), key=repr)
+    finally:
+        spark.conf.set(key, before)
+    assert paired == whole
+    # an undecodable record follows the kernel's error-row format
+    assert [r for r in whole if r[2] == "error"] == [
+        ("a.warc", "u", "error", "ValueError: truncated WARC block", None, -1)
+    ]
+
+
+def test_write_extraction_run_keeps_session_conf(spark, fixture_model, tmp_path):
+    from pyspark.sql import functions as F
+
+    from learnhtml_spark.sources.tables import bucket_col, write_extraction_run
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    # one page per bucket
+    ids = spark.createDataFrame([(f"p{i}",) for i in range(20)], ["doc_id"])
+    by_bucket = dict(
+        ids.select("doc_id", bucket_col(2).alias("b")).groupBy("b")
+        .agg(F.min("doc_id")).collect()
+    )
+    html = open(os.path.join(FIX, "R578.html"), encoding="utf-8").read()
+    docs = docs_from_pairs(
+        spark, [(by_bucket[b], split_html_to_spans(html, 2)) for b in (0, 1)]
+    )
+    model = fixture_model.to_bytes()
+    base = str(tmp_path / "run")
+    assert write_extraction_run(docs, model, base, "r", num_buckets=2)["docs"] == 2
+    assert spark.conf.get(key) == before
+    # the write itself still overwrites dynamically: re-running bucket 0
+    # under a new run id leaves bucket 1's landed rows in place
+    spans = os.path.join(base, "spans")
+    landed = spark.read.parquet(spans).filter("bucket = 1").count()
+    write_extraction_run(docs, model, base, "r2", num_buckets=2,
+                         max_buckets_per_call=1)
+    assert landed and spark.read.parquet(spans).filter("bucket = 1").count() == landed
+    assert spark.conf.get(key) == before

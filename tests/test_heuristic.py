@@ -12,10 +12,9 @@ from types import SimpleNamespace
 
 import pandas as pd
 
+from learnhtml_spark.kernels.document import LONG_TOKENS, heuristic_block_flags
 from learnhtml_spark.operators.heuristic import (
-    LONG_TOKENS,
     extract_spans_heuristic_doc,
-    heuristic_block_flags,
     heuristic_extract_spans,
 )
 

@@ -118,6 +118,7 @@ def test_ipv6_authority_passthrough(spark):
         "http://[::1]:8080/x",
         "HTTP://[2001:db8::1]/p?b=2&a=1#f",
         "https://[::1]:443/",
+        "http://u@[::1]:80/x",  # userinfo before the bracket
     ]
     assert _canon(spark, urls) == urls
 

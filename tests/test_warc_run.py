@@ -7,6 +7,8 @@ import os
 import shutil
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(__file__))
 
 from learnhtml_spark.sources.warc_run import write_warc_run
@@ -92,11 +94,21 @@ def test_run_resume_and_catchup(spark, tmp_path):
     assert sum(r.span_count for r in lin) == 2 * (n200 + len(new_ids)) + all_media
 
 
-def test_poison_archive_is_lineage_error_count(spark, tmp_path):
+def _packaged_model() -> bytes:
+    import importlib.resources as res
+
+    return (res.files("learnhtml_spark") / "artifacts" / "model.npz").read_bytes()
+
+
+@pytest.mark.parametrize("verdict", ["heuristic", "model"])
+def test_poison_archive_is_lineage_error_count(spark, tmp_path, verdict):
+    # both verdicts share one error-row contract: a corrupt archive is an
+    # error row in its lineage, never a silent "ok" with zero docs
+    model_bytes = _packaged_model() if verdict == "model" else None
     d, ids = _archive_dir(tmp_path, n_files=1)
     (d / "bad.warc.gz").write_bytes(b"\x1f\x8b\x08\x00not-really-gzip")
     base = str(tmp_path / "out")
-    s = write_warc_run(spark, str(d), base, "r1")
+    s = write_warc_run(spark, str(d), base, "r1", model_bytes=model_bytes)
     assert len(s["processed"]) == 2 and s["errors"] == 1
     lin = {
         r.archive: r
@@ -119,11 +131,7 @@ def test_max_archives_batching(spark, tmp_path):
 def test_classifier_extractor_path(spark, tmp_path):
     d, ids = _archive_dir(tmp_path, n_files=2)
     base = str(tmp_path / "out")
-    import importlib.resources as res
-
-    model_bytes = (
-        res.files("learnhtml_spark") / "artifacts" / "model.npz"
-    ).read_bytes()
+    model_bytes = _packaged_model()
     s = write_warc_run(spark, str(d), base, "r1", model_bytes=model_bytes)
     assert len(s["processed"]) == 2 and s["errors"] == 0
     spans = spark.read.parquet(os.path.join(base, "spans"))

@@ -6,7 +6,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(__file__))
 
-from learnhtml_spark.sources.warc_run import warc_heuristic_spans_fused
+from learnhtml_spark.sources.warc_run import warc_spans_fused
 from learnhtml_spark.sources.warc_source import build_warc
 from learnhtml_spark.streaming.warc_stream import run_available_now
 
@@ -27,7 +27,7 @@ def test_stream_equals_batch(spark, tmp_path):
     streamed = run_available_now(
         spark, str(d), str(tmp_path / "sink"), str(tmp_path / "ckpt")
     )
-    batch = warc_heuristic_spans_fused(
+    batch = warc_spans_fused(
         spark.read.format("binaryFile").load(str(d)).select("path", "content")
     )
     assert _rows(streamed) == _rows(batch)
