@@ -89,6 +89,7 @@ class ExactNodeClassifier:
 
     # -- (de)serialization -------------------------------------------------
     def to_bytes(self) -> bytes:
+        mlp_meta, mlp_arrays = self.mlp.to_arrays()
         meta = dict(
             min_df=self.vec.min_df,
             tag_vocab=self.vec.tag_vocab_,
@@ -96,20 +97,15 @@ class ExactNodeClassifier:
             text_vocab=self.vec.text_vocab_,
             numeric_cols=self.vec.numeric_cols_,
             n_features=self.vec.n_features_,
-            mlp=dict(
-                hidden=self.mlp.hidden_layers,
-                activation=self.mlp.activation,
-            ),
+            mlp=mlp_meta,
             threshold=self.threshold,
         )
         payload = {
             "exact_meta_json": np.array(json.dumps(meta)),
             "scale": self.scale,
             "keep": self.keep,
+            **mlp_arrays,
         }
-        for i, (w, b) in enumerate(self.mlp.weights_):
-            payload[f"mlp_w{i}"] = w
-            payload[f"mlp_b{i}"] = b
         buf = io.BytesIO()
         np.savez(buf, **payload)
         return buf.getvalue()
@@ -124,22 +120,11 @@ class ExactNodeClassifier:
             vec.text_vocab_ = meta["text_vocab"]
             vec.numeric_cols_ = meta["numeric_cols"]
             vec.n_features_ = meta["n_features"]
-            mlp = MLPClassifier(
-                hidden_layers=list(meta["mlp"]["hidden"]),
-                activation=meta["mlp"]["activation"],
-                dropout=None,
-            )
-            weights = []
-            i = 0
-            while f"mlp_w{i}" in z:
-                weights.append((z[f"mlp_w{i}"], z[f"mlp_b{i}"]))
-                i += 1
-            mlp.weights_ = weights
             return cls(
                 vec,
                 z["scale"],
                 z["keep"],
-                mlp,
+                MLPClassifier.from_arrays(meta["mlp"], z),
                 float(meta.get("threshold", 0.5)),
             )
 

@@ -884,26 +884,36 @@ def simhash(docs: DataFrame, bits: int = 16) -> DataFrame:
     shuffle; the signature is assembled from the vote sums post-agg and
     cast to bigint explicitly so SQL oracles (DuckDB sum → HUGEINT)
     compare exactly."""
+    if not 1 <= bits <= 64:
+        raise ValueError(f"simhash bits must be in 1..64 (got {bits})")
     # ONE base-16 conversion of the leading bits/4 hex chars per token
     # (materialized in a prior projection so it cannot be re-evaluated
     # per vote), then each vote is a cheap shift/and: hex char j
     # (1-based) carries weight 16^(nchars-j) in _v, so the old per-bit
     # conv(substr(th, 1 + b//4, 1)) nibble is (_v >> 4*(nchars-1-b//4))
     # & 15 and its bit (b % 4) is the single shift below — identical
-    # ±1 votes, 16× fewer conv/substr evaluations per token row
+    # ±1 votes, 16× fewer conv/substr evaluations per token row.  Past 60
+    # bits, 16 hex chars overflow a signed long, so the chars are read as
+    # two words of at most 8 (_v, then _v1)
     nchars = (bits + 3) // 4
+    words = [nchars] if bits <= 60 else [8, 8]
+    word_cols = ["_v", "_v1"]
     tok = docs.select(
         "doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("tok")
     ).select(
         "doc_id",
-        F.conv(F.md5("tok").substr(1, nchars), 16, 10)
-        .cast("long")
-        .alias("_v"),
+        *[
+            F.conv(F.md5("tok").substr(1 + 8 * w, n), 16, 10)
+            .cast("long")
+            .alias(word_cols[w])
+            for w, n in enumerate(words)
+        ],
     )
 
     def vote(b):
-        shift = 4 * (nchars - 1 - b // 4) + (b % 4)
-        return F.shiftright(F.col("_v"), shift).bitwiseAND(F.lit(1)) * 2 - 1
+        w, j = divmod(b // 4, words[0])
+        shift = 4 * (words[w] - 1 - j) + (b % 4)
+        return F.shiftright(F.col(word_cols[w]), shift).bitwiseAND(F.lit(1)) * 2 - 1
 
     sums = tok.groupBy("doc_id").agg(
         *[F.sum(vote(b)).alias(f"v{b}") for b in range(bits)]
@@ -911,7 +921,9 @@ def simhash(docs: DataFrame, bits: int = 16) -> DataFrame:
     sig = sums.select(
         "doc_id",
         sum(
-            F.when(F.col(f"v{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
+            # bit 63 is the sign bit of the bigint signature
+            F.when(F.col(f"v{b}") > 0, F.lit(1 << b if b < 63 else -(1 << 63)))
+            .otherwise(F.lit(0))
             for b in range(bits)
         )
         .cast("long")

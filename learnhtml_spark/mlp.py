@@ -224,3 +224,20 @@ class MLPClassifier:
 
     def predict(self, x, _ws=None) -> np.ndarray:
         return self.predict_proba(x, _ws=_ws) >= 0.5
+
+    # -- (de)serialization: the one npz codec for a fitted MLP -------------
+    def to_arrays(self) -> tuple[dict, dict]:
+        """(meta, arrays): hidden widths + activation, and the per-layer
+        ``mlp_w{i}``/``mlp_b{i}`` weights."""
+        arrays = {}
+        for i, (w, b) in enumerate(self.weights_):
+            arrays[f"mlp_w{i}"] = w
+            arrays[f"mlp_b{i}"] = b
+        return {"hidden": self.hidden_layers, "activation": self.activation}, arrays
+
+    @classmethod
+    def from_arrays(cls, meta: dict, z) -> "MLPClassifier":
+        mlp = cls(hidden_layers=meta["hidden"], activation=meta["activation"])
+        n_layers = sum(k.startswith("mlp_w") for k in z)
+        mlp.weights_ = [(z[f"mlp_w{i}"], z[f"mlp_b{i}"]) for i in range(n_layers)]
+        return mlp

@@ -22,6 +22,7 @@ inside the extraction UDF (reference J4/M8: the broadcast-model pattern).
 from __future__ import annotations
 
 import io
+import json
 import re
 import zlib
 
@@ -152,8 +153,8 @@ class NodeClassifier:
         #: chi2-dropped numeric columns (1.0 = kept); applied at inference
         #: so serving sees exactly the zeroed columns training saw
         self.num_mask = num_mask
-        #: optional deep head (M8 variant; in-memory only — the packaged
-        #: npz model always ships the GBDT head)
+        #: optional deep head (M8 variant; serialized with the MLP's own
+        #: npz codec — the packaged npz model ships the GBDT head)
         self.mlp = None
 
     # -- training ----------------------------------------------------------
@@ -295,6 +296,9 @@ class NodeClassifier:
             payload["num_mask"] = self.num_mask
         if self.gbdt is not None:
             payload.update(self.gbdt.to_arrays())
+        if self.mlp is not None:
+            mlp_meta, mlp_arrays = self.mlp.to_arrays()
+            payload.update(mlp_arrays, mlp_meta_json=np.array(json.dumps(mlp_meta)))
         # uncompressed: executors deserialize this per worker; load speed
         # matters more than a few hundred KB of broadcast size
         np.savez(buf, **payload)
@@ -316,6 +320,11 @@ class NodeClassifier:
                 from learnhtml_spark.gbdt import GBDTClassifier
 
                 model.gbdt = GBDTClassifier.from_arrays(z)
+            if "mlp_meta_json" in z:
+                from learnhtml_spark.mlp import MLPClassifier
+
+                meta = json.loads(str(z["mlp_meta_json"]))
+                model.mlp = MLPClassifier.from_arrays(meta, z)
             return model
 
     def save(self, path: str):

@@ -18,16 +18,17 @@ production crawl jobs track a manifest of processed WARC paths):
   an archive that cannot be decoded, a record that cannot be decoded and
   a page that cannot be extracted each become a ``kind='error'``,
   ``offset=-1`` row, counted into the archive's lineage ``error_count``;
-- output is ``partitionBy(archive)`` with dynamic partition overwrite:
-  re-processing an archive atomically replaces exactly its own files
-  (the parquet stand-in for Iceberg ``overwritePartitions``);
-- a lineage row (run_id, archive, doc/span/error counts, wall, status)
-  lands per processed archive; resume = skip archives already ``ok``
-  for this run_id.  New archives appearing in the directory are picked
-  up by the next invocation (incremental crawl catch-up) while finished
-  ones are never re-read — the input listing is pruned BEFORE any bytes
-  are read, so a resumed job's scan cost is proportional to remaining
-  work.
+- resume, output and lineage are the one protocol of
+  ``sources/tables.run_partitions``, keyed by ``archive``: output is
+  ``partitionBy(archive)`` with dynamic partition overwrite, one lineage
+  row (run_id, archive, doc/span/error counts, wall, status) lands per
+  processed archive, and the metrics are read back from the pending
+  archives' partitions only, on any Hadoop-compatible base path.  Resume
+  = skip archives already ``ok`` for this run_id.  New archives appearing
+  in the directory are picked up by the next invocation (incremental
+  crawl catch-up) while finished ones are never re-read — the input
+  listing is pruned BEFORE any bytes are read, so a resumed job's scan
+  cost is proportional to remaining work.
 
 The driver-side state is one row per archive (the manifest) — ~100k
 strings at 100 TB, trivially collectable; all per-document work stays on
@@ -37,12 +38,10 @@ executors.
 from __future__ import annotations
 
 import os
-import time
 from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
     LongType,
@@ -53,6 +52,7 @@ from pyspark.sql.types import (
 
 from learnhtml_spark.kernels.document import error_row, extract_rows
 from learnhtml_spark.operators.extract import broadcast_model
+from learnhtml_spark.sources.tables import completed_keys, lineage_table, run_partitions
 from learnhtml_spark.sources.warc_source import assemble_interleaved, parse_archive
 
 WARC_SPANS = StructType(
@@ -75,7 +75,9 @@ WARC_LINEAGE = StructType(
         StructField("error_count", LongType()),
         # wall clock of the WHOLE batch call that landed this archive (the
         # same value is stamped on every archive of one call) — named so
-        # the manifest cannot be misread as per-archive timing
+        # the manifest cannot be misread as per-archive timing.  Renamed
+        # from ``wall_ms``; rows written before the rename read back null
+        # here, since the lineage is read by name with this schema
         StructField("batch_wall_ms", LongType()),
         StructField("status", StringType()),
     ]
@@ -123,24 +125,11 @@ def warc_spans_fused(raw: DataFrame, model_bytes: bytes | None = None) -> DataFr
 
 
 def _read_lineage(spark: SparkSession, base_path: str) -> DataFrame:
-    path = os.path.join(base_path, "lineage")
-    try:
-        return spark.read.schema(WARC_LINEAGE).parquet(path)
-    except Exception:
-        return spark.createDataFrame([], WARC_LINEAGE)
+    return lineage_table(spark, base_path, WARC_LINEAGE)
 
 
-def completed_archives(
-    spark: SparkSession, base_path: str, run_id: str
-) -> set[str]:
-    rows = (
-        _read_lineage(spark, base_path)
-        .filter((F.col("run_id") == run_id) & (F.col("status") == "ok"))
-        .select("archive")
-        .distinct()
-        .collect()
-    )
-    return {r.archive for r in rows}
+def completed_archives(spark: SparkSession, base_path: str, run_id: str) -> set[str]:
+    return completed_keys(_read_lineage(spark, base_path), run_id, "archive")
 
 
 def list_archives(spark: SparkSession, warc_dir: str) -> dict[str, str]:
@@ -178,90 +167,14 @@ def write_warc_run(
     extraction path.  Either way through ``warc_spans_fused``.
     """
     manifest = list_archives(spark, warc_dir)
-    done = completed_archives(spark, base_path, run_id)
-    pending = sorted(set(manifest) - done)
-    if max_archives_per_call is not None:
-        pending = pending[:max_archives_per_call]
-    if not pending:
-        return {"processed": [], "skipped": sorted(done), "docs": 0,
-                "spans": 0, "errors": 0}
 
-    t0 = time.time()
-    raw = (
-        spark.read.format("binaryFile")
-        .load([manifest[b] for b in pending])
-        .select("path", "content")
-    )
-    out = warc_spans_fused(raw, model_bytes)
-    # per-write dynamic overwrite: only the partitions this call produced
-    # are replaced, WITHOUT mutating the caller's session-wide overwrite
-    # semantics (spark.conf.set would leak to unrelated writes)
-    out.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("archive").parquet(os.path.join(base_path, "spans"))
-    wall_ms = int((time.time() - t0) * 1000)
+    def output_for(pending: list) -> DataFrame:
+        raw = (
+            spark.read.format("binaryFile")
+            .load([manifest[b] for b in pending])
+            .select("path", "content")
+        )
+        return warc_spans_fused(raw, model_bytes)
 
-    # per-archive metrics from the landed output (explicit schema: an
-    # all-404 archive leaves an empty partition that inference can't read)
-    landed_schema = StructType(
-        [f for f in WARC_SPANS.fields if f.name != "archive"]
-        + [StructField("archive", StringType())]
-    )
-    # read ONLY the pending archives' partition dirs (basePath keeps the
-    # partition column) — a catch-up's metric read stays O(new archives)
-    # instead of listing every landed partition at 100k-archive scale.
-    # An archive whose pages produced zero rows writes no partition dir,
-    # so prune to the dirs that exist (swap os.path.exists for a Hadoop
-    # FileSystem.exists on a real cluster FS).
-    spans_root = os.path.join(base_path, "spans")
-    part_dirs = [
-        p
-        for b in pending
-        if os.path.exists(p := os.path.join(spans_root, f"archive={b}"))
-    ]
-    if part_dirs:
-        landed = (
-            spark.read.schema(landed_schema)
-            .option("basePath", spans_root)
-            .parquet(*part_dirs)
-        )
-    else:
-        landed = spark.createDataFrame([], landed_schema)
-    stats = {
-        r.archive: r
-        for r in landed.groupBy("archive")
-        .agg(
-            F.countDistinct(
-                F.when(F.col("kind") != "error", F.col("doc_id"))
-            ).alias("doc_count"),
-            F.sum(F.when(F.col("kind") != "error", 1).otherwise(0)).alias(
-                "span_count"
-            ),
-            F.sum(F.when(F.col("kind") == "error", 1).otherwise(0)).alias(
-                "error_count"
-            ),
-        )
-        .collect()
-    }
-    rows = [
-        (
-            run_id,
-            b,
-            int(stats[b].doc_count) if b in stats else 0,
-            int(stats[b].span_count or 0) if b in stats else 0,
-            int(stats[b].error_count or 0) if b in stats else 0,
-            wall_ms,
-            "ok",
-        )
-        for b in pending
-    ]
-    spark.createDataFrame(rows, WARC_LINEAGE).coalesce(1).write.mode(
-        "append"
-    ).parquet(os.path.join(base_path, "lineage"))
-    return {
-        "processed": pending,
-        "skipped": sorted(done),
-        "docs": sum(r[2] for r in rows),
-        "spans": sum(r[3] for r in rows),
-        "errors": sum(r[4] for r in rows),
-    }
+    return run_partitions(spark, base_path, run_id, "archive", WARC_LINEAGE,
+                          manifest, output_for, max_archives_per_call)

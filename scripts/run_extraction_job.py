@@ -29,7 +29,7 @@ def main():
     spark = SparkSession.builder.appName("learnhtml-spark-extract").getOrCreate()
 
     # import AFTER the session exists so --py-files zips are importable
-    from learnhtml_spark.model import NodeClassifier
+    from learnhtml_spark.exact_model import load_any_model
     from learnhtml_spark.sources.tables import write_extraction_run
 
     if args.model:
@@ -40,8 +40,10 @@ def main():
         model_bytes = (
             res.files("learnhtml_spark") / "artifacts" / "model.npz"
         ).read_bytes()
-    # validate the artifact before shipping it to every executor
-    NodeClassifier.from_bytes(model_bytes)
+    # validate the artifact before shipping it to every executor; either
+    # kind loads (model.npz or the exact pipeline's exact.npz), as in
+    # ``learnhtml extract --model``
+    load_any_model(model_bytes)
 
     docs = spark.read.parquet(args.input)
     summary = write_extraction_run(

@@ -74,6 +74,45 @@ def test_simhash_single_shuffle(docs):
     assert dict(simhash(docs).dtypes)["simhash"] == "bigint"
 
 
+@pytest.mark.parametrize("bits", [16, 61, 64])
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_simhash_matches_md5_vote_reference(spark, docs, bits, ansi):
+    import hashlib
+
+    from pyspark.sql import functions as F
+
+    from learnhtml_spark.functions.dedup import simhash
+    from learnhtml_spark.functions.textstats import tokens
+
+    toks = docs.select("doc_id", tokens(F.lower(F.col("text"))).alias("t"))
+    want = {}
+    for r in toks.collect():
+        if not r["t"]:
+            continue  # no tokens, no signature row
+        votes = [0] * bits
+        for t in r["t"]:
+            h = hashlib.md5(t.encode()).hexdigest()
+            for b in range(bits):
+                votes[b] += 1 if int(h[b // 4], 16) >> (b % 4) & 1 else -1
+        sig = sum(1 << b for b in range(bits) if votes[b] > 0)
+        want[r["doc_id"]] = sig - (1 << 64) if sig >= 1 << 63 else sig
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        got = {r["doc_id"]: r["simhash"] for r in simhash(docs, bits=bits).collect()}
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert got == want
+
+
+@pytest.mark.parametrize("bits", [0, 65])
+def test_simhash_bits_out_of_range(docs, bits):
+    from learnhtml_spark.functions.dedup import simhash
+
+    with pytest.raises(ValueError):
+        simhash(docs, bits=bits)
+
+
 def test_minhash_lsh_candidates(docs):
     from learnhtml_spark.functions.dedup import minhash_lsh_candidates
 

@@ -142,3 +142,8 @@ def test_node_classifier_mlp_head():
         ]
     )
     assert acc > 0.9
+    # the head survives serialization: the reloaded model serves the MLP,
+    # not the bare logistic score
+    again = NodeClassifier.from_bytes(clf.to_bytes())
+    for f in frames:
+        np.testing.assert_array_equal(again.predict_proba(f), clf.predict_proba(f))

@@ -3,6 +3,8 @@
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(__file__))
 
 from pyspark.sql import functions as F
@@ -17,7 +19,9 @@ def _pairs(fixture_docs):
     ]
 
 
-def test_write_extraction_run_resume(spark, fixture_docs, fixture_model, tmp_path):
+@pytest.mark.parametrize("scheme", ["", "file://"], ids=["plain", "file-uri"])
+def test_write_extraction_run_resume(spark, fixture_docs, fixture_model, tmp_path,
+                                     scheme):
     from learnhtml_spark.operators.extract import docs_from_pairs
     from learnhtml_spark.sources.tables import (
         completed_buckets,
@@ -26,7 +30,7 @@ def test_write_extraction_run_resume(spark, fixture_docs, fixture_model, tmp_pat
     )
 
     docs = docs_from_pairs(spark, _pairs(fixture_docs))
-    base = str(tmp_path / "out")
+    base = scheme + str(tmp_path / "out")
     mb = fixture_model.to_bytes()
 
     # first call: limited to 3 buckets (simulates an interrupted run)

@@ -33,9 +33,12 @@ def _archive_dir(tmp_path, n_files=3, docs_per_file=4):
     return d, ids
 
 
-def test_run_resume_and_catchup(spark, tmp_path):
+@pytest.mark.parametrize("scheme", ["", "file://"], ids=["plain", "file-uri"])
+def test_run_resume_and_catchup(spark, tmp_path, scheme):
+    # the base path may be a plain path or any Hadoop-compatible URI: the
+    # landed metrics must count the same either way
     d, ids = _archive_dir(tmp_path)
-    base = str(tmp_path / "out")
+    base = scheme + str(tmp_path / "out")
 
     s1 = write_warc_run(spark, str(d), base, "r1")
     assert len(s1["processed"]) == 3 and s1["skipped"] == []
