@@ -406,12 +406,19 @@ def main():
     print(compact_line(result, full_path), flush=True)
 
 
+#: compact_line drops these first, in this order, when the line is too long
+#: (the full record keeps them)
+OPTIONAL_FIELDS = ("noisy_queries", "wall_sec", "sf", "n_docs", "docs_per_sec",
+                   "scaling_pair", "unit", "metric")
+
+
 def compact_line(result: dict, full_path: str, budget: int = 1900) -> str:
     """Headline-only JSON line guaranteed to fit a bounded stdout tail
     capture (round-3's full record outgrew the driver's window and the
-    round recorded parsed:null).  Drops optional fields, then truncates
-    the query table (keeping the slowest entries) if a huge query count
-    would ever push past ``budget``."""
+    round recorded parsed:null).  Past ``budget`` it drops the optional
+    fields, then rounds query walls to 3 significant figures, so every
+    query key stays; only a query count far past the registry's would
+    still truncate the table to its slowest entries."""
     compact = {
         "metric": result["metric"],
         "unit": "sec",
@@ -433,11 +440,22 @@ def compact_line(result: dict, full_path: str, budget: int = 1900) -> str:
         ),
         "full_record": full_path,
     }
-    line = json.dumps(compact)
+
+    def dumps() -> str:
+        return json.dumps(compact, separators=(",", ":"))
+
+    line = dumps()
+    for field in OPTIONAL_FIELDS:
+        if len(line) <= budget:
+            break
+        compact.pop(field, None)
+        line = dumps()
     if len(line) > budget:
-        compact.pop("noisy_queries", None)
-        compact.pop("wall_sec", None)
-        line = json.dumps(compact)
+        compact["queries"] = {
+            k: float(f"{v:.3g}") if isinstance(v, (int, float)) else v
+            for k, v in compact["queries"].items()
+        }
+        line = dumps()
     while len(line) > budget and compact["queries"]:
         # keep the slowest half — those carry the information
         q = {
@@ -447,7 +465,7 @@ def compact_line(result: dict, full_path: str, budget: int = 1900) -> str:
         keep = sorted(q, key=lambda k: -q[k])[: max(len(q) // 2, 1)]
         compact["queries"] = {k: q[k] for k in keep}
         compact["queries_truncated_to_slowest"] = len(keep)
-        line = json.dumps(compact)
+        line = dumps()
         if len(keep) <= 1:
             break
     return line

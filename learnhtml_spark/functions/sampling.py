@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from learnhtml_spark.functions.windows import sibling_positions
+from learnhtml_spark.schemas import local_frame
 
 #: Knuth multiplicative hash over the Mersenne prime — portable to any
 #: SQL engine as (doc_id * A) % P (same family as doc_split)
@@ -124,7 +125,7 @@ def mixture_sample(
             )
         rows.append((key, num, den))
     spark = docs.sparkSession
-    rdf = spark.createDataFrame(rows, f"{strata} string, _num long, _den long")
+    rdf = local_frame(spark, rows, f"{strata} string, _num long, _den long")
     base = (
         docs.select(F.col("doc_id").cast("long").alias("doc_id"), strata)
         .join(F.broadcast(rdf.select(strata)), strata)

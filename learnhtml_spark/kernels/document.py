@@ -17,8 +17,9 @@ HTML extraction surface.
 - **assemble** (``assemble_doc``): kept blocks + carried-through media ->
   ordered ``(kind, text, media_ref, offset)`` rows.
 
-Keys are opaque tuples that lead every output row untouched: ``(doc_id,)``
-for span tables, ``(archive, uri)`` for crawl archives.
+Keys are opaque tuples, ``doc_id`` last, that lead every output row
+untouched: ``(doc_id,)`` or ``(bucket, doc_id)`` for span tables,
+``(archive, uri)`` for crawl archives; a run sink ``tally``s them.
 
 Error-row contract (``error_row``): a document whose parse, featurization
 or assembly raises becomes ONE row ``key + ("error", "{Class}: {msg}"[:500],
@@ -33,6 +34,7 @@ sequential run), ``extractor.py`` (single document) and
 
 from __future__ import annotations
 
+from collections import Counter
 from itertools import chain
 from typing import Iterable, NamedTuple
 
@@ -71,6 +73,15 @@ def error_text(exc: BaseException) -> str:
 def error_row(key: tuple, exc: BaseException) -> tuple:
     """The auditable poison row for a document (or archive) that raised."""
     return (*key, "error", error_text(exc), None, -1)
+
+
+def tally(rows: list[tuple], doc_parts: Iterable) -> Counter:
+    """One kernel batch's lineage counts ``{(part, 0 docs | 1 spans | 2
+    errors): n}`` from rows leading with ``(part, doc_id, kind)``, ``part``
+    a run's partition key; each element of ``doc_parts`` is one document."""
+    counts = Counter((part, 0) for part in doc_parts)
+    counts.update((part, 1 + (kind == "error")) for part, _, kind, *_ in rows)
+    return counts
 
 
 def spans_list(value) -> list[dict]:

@@ -26,11 +26,14 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
+from pyspark import Accumulator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from learnhtml_spark.htmlparse import parse_html
-from learnhtml_spark.kernels.document import concat_columns, extract_rows, spans_list
+from learnhtml_spark.kernels.document import (
+    concat_columns, extract_rows, spans_list, tally)
 from learnhtml_spark.kernels.features import extract_features_from_tree
 from learnhtml_spark.kernels.labeling import (
     NON_CONTENT_BLOCK_RATIO,
@@ -38,8 +41,10 @@ from learnhtml_spark.kernels.labeling import (
 )
 from learnhtml_spark.model import NodeClassifier
 from learnhtml_spark.schemas import (
+    DOCS,
     EXTRACTED_SPANS,
     LABELS,
+    local_frame,
     node_features_schema,
 )
 from learnhtml_spark.spans import html_from_spans
@@ -103,18 +108,31 @@ def extract_content_spans(
     """The flagship operator: classify each document's blocks and emit the
     ordered content+media span sequence (kernels/document.py, one model
     predict per Arrow batch)."""
-    load = broadcast_model(docs.sparkSession, model)
     if num_partitions:
         docs = repartition_docs(docs, num_partitions)
+    return keyed_spans(docs, model, ["doc_id"], EXTRACTED_SPANS, depth, height)
+
+
+def keyed_spans(docs: DataFrame, model: NodeClassifier | bytes | None, keys: list[str],
+                schema: StructType, depth: int = 5, height: int = 5,
+                counts: Accumulator | None = None) -> DataFrame:
+    """The one ``mapInPandas`` body of span-table extraction: rows lead with
+    the ``keys`` columns (``doc_id`` last) of ``schema``; ``model`` None
+    selects the density rules.  ``counts``, a run sink's accumulator, gets
+    each batch's ``tally`` by ``keys[0]``."""
+    load = None if model is None else broadcast_model(docs.sparkSession, model)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        clf = load()
-        cols = EXTRACTED_SPANS.fieldNames()
+        clf = None if load is None else load()
+        cols = schema.fieldNames()
         for pdf in batches:
-            keyed = zip(zip(pdf["doc_id"]), pdf["spans"])
-            yield pd.DataFrame(extract_rows(keyed, clf, depth, height), columns=cols)
+            keyed = zip(zip(*(pdf[k] for k in keys)), pdf["spans"])
+            rows = extract_rows(keyed, clf, depth, height)
+            if counts is not None:
+                counts.add(tally(rows, pdf[keys[0]]))
+            yield pd.DataFrame(rows, columns=cols)
 
-    return docs.mapInPandas(run, schema=EXTRACTED_SPANS)
+    return docs.mapInPandas(run, schema=schema)
 
 
 def extract_node_features(
@@ -188,8 +206,4 @@ def docs_from_pairs(
     spark: SparkSession, pairs: list[tuple[str, list[dict]]]
 ) -> DataFrame:
     """Small-data helper: build a docs DataFrame from (doc_id, spans)."""
-    from learnhtml_spark.schemas import DOCS
-
-    return spark.createDataFrame(
-        [(d, s) for d, s in pairs], schema=DOCS
-    )
+    return local_frame(spark, pairs, DOCS)

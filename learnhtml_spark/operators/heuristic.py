@@ -33,12 +33,10 @@ is beyond-reference surface motivated by the north rule's wording.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from learnhtml_spark.kernels.document import extract_rows
+from learnhtml_spark.operators.extract import keyed_spans
 from learnhtml_spark.schemas import EXTRACTED_SPANS
 
 
@@ -60,11 +58,4 @@ def heuristic_extract_spans(docs: DataFrame) -> DataFrame:
     extraction, no predict), so this is the cheap first-pass strip for
     pipelines that reserve the classifier for ambiguous pages.
     """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = EXTRACTED_SPANS.fieldNames()
-        for pdf in batches:
-            keyed = zip(zip(pdf["doc_id"]), pdf["spans"])
-            yield pd.DataFrame(extract_rows(keyed), columns=cols)
-
-    return docs.mapInPandas(run, schema=EXTRACTED_SPANS)
+    return keyed_spans(docs, None, ["doc_id"], EXTRACTED_SPANS)

@@ -4,9 +4,12 @@ stage has a fixed schema so Catalyst can prune/pushdown)."""
 
 from __future__ import annotations
 
+import pyarrow as pa
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
+    DataType,
     DoubleType,
     IntegerType,
     LongType,
@@ -104,3 +107,13 @@ def node_features_schema(depth: int, height: int) -> StructType:
         fields += [local_field(c, f"ancestor{i}_") for c in LOCAL_COLUMNS]
     fields.append(StructField("path", StringType(), False))
     return StructType(fields)
+
+
+def local_frame(spark, rows: list[tuple], schema: StructType | str):
+    """Driver-side rows as a local relation built from one Arrow table, so
+    no Python-worker stage runs whatever the session's Arrow setting
+    (``createDataFrame`` of a list pickles its rows through one)."""
+    schema = DataType.fromDDL(schema) if isinstance(schema, str) else schema
+    rows = [dict(zip(schema.names, r)) for r in rows]
+    table = pa.Table.from_pylist(rows, to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)

@@ -4,9 +4,9 @@ shared by bucketed span-table runs and crawl archive runs.
 North-rule requirement (no reference equivalent — the reference's restart
 story is "rerun from scratch"): extraction over a 10^12-doc corpus must be
 resumable.  Work is split into partitions keyed by one column: here a
-hash bucket of doc_id (``|xxhash64(doc_id)| % num_buckets``, recomputable
-on both input and output sides), in ``sources/warc_run.py`` an archive
-basename.  ``run_partitions`` is the one protocol both surfaces call:
+hash bucket of doc_id (``|xxhash64(doc_id)| % num_buckets``), in
+``sources/warc_run.py`` an archive basename.  ``run_partitions`` is the
+one protocol both surfaces call:
 
 - resume = read ``<base>/lineage`` (missing reads as empty), skip keys
   already ``ok`` for this run_id; the rest, capped per call, are pending;
@@ -14,30 +14,35 @@ basename.  ``run_partitions`` is the one protocol both surfaces call:
   per-write dynamic partition overwrite: re-processing a key atomically
   replaces exactly its own files (the parquet-backed stand-in for Iceberg
   ``overwritePartitions``);
-- ONE aggregation over the landed rows of the pending partitions only
-  gives the metrics; their directories are resolved through the session's
-  Hadoop ``FileSystem``, so it works on any Hadoop-compatible path and a
-  catch-up's metric read stays O(new work).  ``doc_count`` is the
-  caller's input documents per key when it supplies them (span tables:
-  documents with no output rows count), else the distinct documents with
-  a non-error row (crawls);
+- the metrics are kernel counters, a by-product of that one write: the
+  kernel's ``mapInPandas`` adds each batch's per-key (docs, spans,
+  errors) tally to a per-call accumulator, counted exactly once as the
+  write's result stage (``run_partitions``), so nothing re-reads the
+  output or the input.  ``doc_count`` is a span table's input documents
+  per bucket (documents with no output rows count) or a crawl's distinct
+  pages with a non-error row per archive;
 - one lineage row (run_id, key, doc/span/error counts, wall, status) per
-  processed key is appended to ``<base>/lineage``; the wall is the whole
-  call's, on a monotonic clock.
+  processed key is appended to ``<base>/lineage`` from an Arrow-backed
+  local frame; the wall is the write's, on a monotonic clock.
 """
 
 from __future__ import annotations
 
 import os
 import time
+from collections import Counter
 from typing import Callable, Iterable
 
+from pyspark import Accumulator
+from pyspark.accumulators import AddingAccumulatorParam
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from learnhtml_spark.schemas import LINEAGE
+from learnhtml_spark.log import logger
+from learnhtml_spark.operators.extract import keyed_spans
+from learnhtml_spark.schemas import EXTRACTED_SPANS, LINEAGE, local_frame
 
 
 def bucket_col(num_buckets: int, col: str = "doc_id"):
@@ -48,17 +53,12 @@ def lineage_table(spark: SparkSession, base_path: str, schema: StructType) -> Da
     try:
         return spark.read.schema(schema).parquet(os.path.join(base_path, "lineage"))
     except AnalysisException:  # no lineage yet
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
 
 
 def completed_keys(lineage: DataFrame, run_id: str, key: str) -> set:
-    rows = (
-        lineage.filter((F.col("run_id") == run_id) & (F.col("status") == "ok"))
-        .select(key)
-        .distinct()
-        .collect()
-    )
-    return {r[0] for r in rows}
+    ok = lineage.filter((F.col("run_id") == run_id) & (F.col("status") == "ok"))
+    return {r[0] for r in ok.select(key).collect()}
 
 
 def read_lineage(spark: SparkSession, base_path: str) -> DataFrame:
@@ -69,26 +69,6 @@ def completed_buckets(spark: SparkSession, base_path: str, run_id: str) -> set[i
     return completed_keys(read_lineage(spark, base_path), run_id, "bucket")
 
 
-def _landed(spark: SparkSession, spans_root: str, key: str,
-            schema: StructType, pending: list) -> DataFrame:
-    """The landed (doc_id, kind, key) rows of the pending partitions only.
-    A partition whose work produced no rows has no directory, so keep the
-    directories that exist (explicit schema: inference cannot read an
-    empty table); ``basePath`` keeps the partition column."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path
-    root = path(spans_root)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    catalog = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    names = [catalog.getPartitionPathString(key, str(k)) for k in pending]
-    dirs = [os.path.join(spans_root, n) for n in names if fs.exists(path(root, n))]
-    landed_schema = StructType([schema["doc_id"], schema["kind"], schema[key]])
-    if not dirs:
-        return spark.createDataFrame([], landed_schema)
-    return (spark.read.schema(landed_schema)
-            .option("basePath", spans_root).parquet(*dirs))
-
-
 def run_partitions(
     spark: SparkSession,
     base_path: str,
@@ -96,63 +76,49 @@ def run_partitions(
     key: str,
     lineage_schema: StructType,
     candidates: Iterable,
-    output_for: Callable[[list], DataFrame],
+    output_for: Callable[[list, Accumulator], DataFrame],
     max_per_call: int | None = None,
-    inputs: DataFrame | None = None,
 ) -> dict:
-    """Run (or resume) one partitioned job: ``output_for(pending)`` builds
-    the output rows (with the ``key`` column) of the pending keys among
-    ``candidates``; ``inputs``, when given, holds one row per input
-    document with its ``key`` and supplies ``doc_count``.
+    """Run (or resume) one partitioned job: ``output_for(pending, counts)``
+    builds the output rows (with the ``key`` column) of the pending keys
+    among ``candidates`` through the kernel, which adds every batch's
+    ``tally`` to ``counts``, the lineage rows' source.
 
-    Returns {processed, skipped, docs, spans, errors}.  Idempotent: a
-    completed run is a no-op on re-invocation."""
+    Why they count exactly once: the kernel's ``mapInPandas`` runs in the
+    write's result stage, since nothing between it and the writer adds an
+    Exchange (a plan test pins this on both surfaces).  Spark merges a
+    result task's accumulator update once per partition, from its first
+    successful attempt; failed attempts and speculative copies are
+    dropped.  In a shuffle map stage a recomputed task would add again.
+
+    Returns {processed, skipped, docs, spans, errors} and logs it on one
+    INFO line.  Idempotent: a completed run is a no-op on re-invocation."""
     done = completed_keys(lineage_table(spark, base_path, lineage_schema), run_id, key)
     pending = sorted(set(candidates) - done)
     if max_per_call is not None:
         pending = pending[:max_per_call]
-    if not pending:
-        return {"processed": [], "skipped": sorted(done), "docs": 0,
-                "spans": 0, "errors": 0}
-
-    spans_root = os.path.join(base_path, "spans")
-    t0 = time.monotonic()
-    out = output_for(pending)
-    # per-write dynamic overwrite: only the pending keys' partitions are
-    # replaced, without touching the session's overwrite mode
-    out.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy(key).parquet(spans_root)
-    wall_ms = int((time.monotonic() - t0) * 1000)
-
-    is_error = F.col("kind") == "error"
-    stats = _landed(spark, spans_root, key, out.schema, pending).groupBy(key).agg(
-        F.countDistinct(F.when(~is_error, F.col("doc_id"))).alias("doc_count"),
-        F.sum(F.when(~is_error, 1).otherwise(0)).alias("span_count"),
-        F.sum(F.when(is_error, 1).otherwise(0)).alias("error_count"),
-    )
-    if inputs is not None:
-        stats = (
-            inputs.filter(F.col(key).isin(pending))
-            .groupBy(key)
-            .agg(F.count("*").alias("doc_count"))
-            .join(stats.drop("doc_count"), key, "left")
-        )
-    counts = {
-        r[key]: tuple(int(r[c] or 0) for c in ("doc_count", "span_count", "error_count"))
-        for r in stats.collect()
-    }
-    rows = [(run_id, k, *counts.get(k, (0, 0, 0)), wall_ms, "ok") for k in pending]
-    spark.createDataFrame(rows, lineage_schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(os.path.join(base_path, "lineage"))
-    return {
-        "processed": pending,
-        "skipped": sorted(done),
-        "docs": sum(r[2] for r in rows),
-        "spans": sum(r[3] for r in rows),
-        "errors": sum(r[4] for r in rows),
-    }
+    rows, wall_ms = [], 0
+    if pending:
+        counts = spark.sparkContext.accumulator(
+            Counter(), AddingAccumulatorParam(Counter()))
+        t0 = time.monotonic()
+        # per-write dynamic overwrite: only the pending keys' partitions are
+        # replaced, without touching the session's overwrite mode
+        output_for(pending, counts).write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy(key).parquet(os.path.join(base_path, "spans"))
+        wall_ms = int((time.monotonic() - t0) * 1000)
+        rows = [(run_id, k, *(counts.value[k, i] for i in range(3)), wall_ms, "ok")
+                for k in pending]
+        local_frame(spark, rows, lineage_schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(os.path.join(base_path, "lineage"))
+    docs, spans, errors = (sum(r[i] for r in rows) for i in (2, 3, 4))
+    logger.info("run %s by %s: %d processed, %d skipped, %d docs, %d spans, "
+                "%d errors, wall_ms %d", run_id, key, len(pending), len(done),
+                docs, spans, errors, wall_ms)
+    return {"processed": pending, "skipped": sorted(done), "docs": docs,
+            "spans": spans, "errors": errors}
 
 
 def write_extraction_run(
@@ -169,17 +135,16 @@ def write_extraction_run(
     Returns a summary dict {processed_buckets, skipped_buckets, docs, spans}.
     Idempotent: a completed run is a no-op on re-invocation.
     """
-    from learnhtml_spark.operators.extract import extract_content_spans
-
     bucketed = docs.withColumn("bucket", bucket_col(num_buckets))
+    # the bucket rides through the kernel as the leading key component
+    schema = StructType([LINEAGE["bucket"], *EXTRACTED_SPANS.fields])
 
-    def output_for(pending: list) -> DataFrame:
-        batch = bucketed.filter(F.col("bucket").isin(pending)).drop("bucket")
-        out = extract_content_spans(batch, model_bytes)
-        return out.withColumn("bucket", bucket_col(num_buckets))
+    def output_for(pending: list, counts: Accumulator) -> DataFrame:
+        batch = bucketed.filter(F.col("bucket").isin(pending))
+        return keyed_spans(batch, model_bytes, ["bucket", "doc_id"], schema,
+                           counts=counts)
 
     s = run_partitions(docs.sparkSession, base_path, run_id, "bucket", LINEAGE,
-                       range(num_buckets), output_for, max_buckets_per_call,
-                       inputs=bucketed)
+                       range(num_buckets), output_for, max_buckets_per_call)
     return {"processed_buckets": s["processed"], "skipped_buckets": s["skipped"],
             "docs": s["docs"], "spans": s["spans"]}

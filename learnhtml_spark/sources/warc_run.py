@@ -12,8 +12,8 @@ production crawl jobs track a manifest of processed WARC paths):
   (``kernels/document.py``: parse -> blockify -> density rules or model
   -> ordered spans).  Pages are keyed ``(archive, uri)``, a key the kernel
   carries through untouched, so the archive column needs no packing, no
-  join and no second stage; the job runs with zero exchanges besides the
-  final per-archive metric aggregate;
+  join and no second stage; the job, write included, runs with zero
+  exchanges;
 - failures follow the kernel's one error-row contract on both verdicts:
   an archive that cannot be decoded, a record that cannot be decoded and
   a page that cannot be extracted each become a ``kind='error'``,
@@ -22,13 +22,13 @@ production crawl jobs track a manifest of processed WARC paths):
   ``sources/tables.run_partitions``, keyed by ``archive``: output is
   ``partitionBy(archive)`` with dynamic partition overwrite, one lineage
   row (run_id, archive, doc/span/error counts, wall, status) lands per
-  processed archive, and the metrics are read back from the pending
-  archives' partitions only, on any Hadoop-compatible base path.  Resume
-  = skip archives already ``ok`` for this run_id.  New archives appearing
-  in the directory are picked up by the next invocation (incremental
-  crawl catch-up) while finished ones are never re-read — the input
-  listing is pruned BEFORE any bytes are read, so a resumed job's scan
-  cost is proportional to remaining work.
+  processed archive, and its counts are kernel counters the fused stage
+  adds as it runs (counted once: it is the write's result stage), never a
+  read of the output.  Resume = skip archives already ``ok`` for this
+  run_id.  New archives appearing in the directory are picked up by the
+  next invocation (incremental crawl catch-up) while finished ones are
+  never re-read — the input listing is pruned BEFORE any bytes are read,
+  so a resumed job's scan cost is proportional to remaining work.
 
 The driver-side state is one row per archive (the manifest) — ~100k
 strings at 100 TB, trivially collectable; all per-document work stays on
@@ -41,30 +41,15 @@ import os
 from typing import Iterator
 
 import pandas as pd
+from pyspark import Accumulator
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import (
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from learnhtml_spark.kernels.document import error_row, extract_rows
+from learnhtml_spark.kernels.document import error_row, extract_rows, tally
 from learnhtml_spark.operators.extract import broadcast_model
+from learnhtml_spark.schemas import EXTRACTED_SPANS
 from learnhtml_spark.sources.tables import completed_keys, lineage_table, run_partitions
 from learnhtml_spark.sources.warc_source import assemble_interleaved, parse_archive
-
-WARC_SPANS = StructType(
-    [
-        StructField("archive", StringType(), False),
-        StructField("doc_id", StringType(), False),
-        StructField("kind", StringType(), False),
-        StructField("text", StringType()),
-        StructField("media_ref", StringType()),
-        StructField("offset", IntegerType(), False),
-    ]
-)
 
 WARC_LINEAGE = StructType(
     [
@@ -83,6 +68,9 @@ WARC_LINEAGE = StructType(
     ]
 )
 
+#: the kernel's output rows led by the archive key
+WARC_SPANS = StructType([WARC_LINEAGE["archive"], *EXTRACTED_SPANS.fields])
+
 
 def warc_spans_fused(raw: DataFrame, model_bytes: bytes | None = None) -> DataFrame:
     """(path, content) archive rows -> ordered spans with the archive
@@ -95,6 +83,14 @@ def warc_spans_fused(raw: DataFrame, model_bytes: bytes | None = None) -> DataFr
     ``spark.sql.execution.arrow.maxRecordsPerBatch`` documents, however
     many pages an archive holds: on the model path that is how many parsed
     trees are live at once."""
+    return _archive_spans(raw, model_bytes, None)
+
+
+def _archive_spans(raw: DataFrame, model_bytes: bytes | None,
+                   counts: Accumulator | None) -> DataFrame:
+    """``warc_spans_fused``; ``counts``, a run sink's accumulator, gets
+    each kernel batch's ``tally`` per archive, a document being a page of
+    the archive with a non-error row (one task sees an archive's pages)."""
     spark = raw.sparkSession
     load = None if model_bytes is None else broadcast_model(spark, model_bytes)
     batch_docs = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
@@ -102,6 +98,15 @@ def warc_spans_fused(raw: DataFrame, model_bytes: bytes | None = None) -> DataFr
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         clf = None if load is None else load()
         cols = WARC_SPANS.fieldNames()
+        counted: set = set()  # (archive, uri) pages already counted
+
+        def frame(rows: list) -> pd.DataFrame:
+            if counts is not None:
+                pages = {r[:2] for r in rows if r[2] != "error"} - counted
+                counted.update(pages)
+                counts.add(tally(rows, (archive for archive, _ in pages)))
+            return pd.DataFrame(rows, columns=cols)
+
         rows, docs = [], []
         for pdf in batches:
             for path, content in zip(pdf["path"], pdf["content"]):
@@ -116,10 +121,10 @@ def warc_spans_fused(raw: DataFrame, model_bytes: bytes | None = None) -> DataFr
                     docs.append(((base, uri), spans))
                     if len(docs) == batch_docs:
                         rows.extend(extract_rows(docs, clf))
-                        yield pd.DataFrame(rows, columns=cols)
+                        yield frame(rows)
                         rows, docs = [], []
         rows.extend(extract_rows(docs, clf))
-        yield pd.DataFrame(rows, columns=cols)
+        yield frame(rows)
 
     return raw.mapInPandas(run, schema=WARC_SPANS)
 
@@ -168,13 +173,13 @@ def write_warc_run(
     """
     manifest = list_archives(spark, warc_dir)
 
-    def output_for(pending: list) -> DataFrame:
+    def output_for(pending: list, counts: Accumulator) -> DataFrame:
         raw = (
             spark.read.format("binaryFile")
             .load([manifest[b] for b in pending])
             .select("path", "content")
         )
-        return warc_spans_fused(raw, model_bytes)
+        return _archive_spans(raw, model_bytes, counts)
 
     return run_partitions(spark, base_path, run_id, "archive", WARC_LINEAGE,
                           manifest, output_for, max_archives_per_call)

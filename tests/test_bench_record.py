@@ -66,3 +66,26 @@ def test_compact_line_truncates_to_slowest():
     assert len(kept) < 400
     # the kept entries are the slowest ones
     assert min(kept.values()) >= 0.1 + (400 - 2 * len(kept)) * 0.137 - 1e-9
+
+
+def test_compact_line_keeps_every_registry_query():
+    from __spark_entry__ import queries
+    from bench import compact_line
+
+    names = list(queries())
+    assert len(names) == 80
+    result = _fake_result(0)
+    # three-decimal walls from 0.3 s to 15 s, every query noisy
+    result["queries"] = {n: round(0.3 + (i * 1.937) % 15, 3) for i, n in enumerate(names)}
+    result["query_noise"] = {n: "noisy" for n in names}
+    line = compact_line(result, "/srv/checkout/learnhtml-spark/artifacts_bench_full.json")
+    assert len(line) <= 1900
+    d = json.loads(line)
+    assert list(d["queries"]) == names
+    assert "queries_truncated_to_slowest" not in d
+    for n, wall in result["queries"].items():  # 3 significant figures
+        assert abs(d["queries"][n] - wall) <= 0.005 * wall, n
+    for key in ("value", "value_certified", "docs_per_sec_certified",
+                "scaling_efficiency", "noise_tier",
+                "scaling_efficiency_full_machine", "full_record"):
+        assert d[key] == result.get(key, d["full_record"]), key

@@ -144,3 +144,60 @@ def test_write_extraction_run_keeps_session_conf(spark, fixture_model, tmp_path)
                          max_buckets_per_call=1)
     assert landed and spark.read.parquet(spans).filter("bucket = 1").count() == landed
     assert spark.conf.get(key) == before
+
+
+def _written_plans(spark, path: str) -> list[str]:
+    """Physical plan trees of the SQL executions that wrote under
+    ``path``, as the session's SQL status store recorded them."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    newest = range(max(execs.size() - 20, 0), execs.size())
+    plans = (execs.apply(i).physicalPlanDescription() for i in newest)
+    # the formatted plan: the node tree, a blank line, then node details
+    return [p.split("\n\n")[0] for p in plans if path in p]
+
+
+@pytest.mark.parametrize("surface", ["table", "crawl-heuristic", "crawl-model"])
+def test_run_counters_in_write_result_stage(spark, fixture_model, tmp_path, surface):
+    # the lineage counters are exactly-once only while the kernel runs in
+    # the write's result stage: no Exchange between the kernel's
+    # MapInPandas and the writer, on every sink surface and verdict
+    from learnhtml_spark.sources.tables import write_extraction_run
+    from learnhtml_spark.sources.warc_run import write_warc_run
+    from test_warc_run import _packaged_model
+
+    base = str(tmp_path / "run")
+    if surface == "table":
+        html = open(os.path.join(FIX, "R578.html"), encoding="utf-8").read()
+        docs = docs_from_pairs(spark, [(f"p{i}", split_html_to_spans(html, 2))
+                                       for i in range(4)])
+        write_extraction_run(docs, fixture_model.to_bytes(), base, "r", num_buckets=2)
+    else:
+        d = tmp_path / "warc"
+        d.mkdir()
+        (d / "a.warc").write_bytes(build_warc([f"p{i}" for i in range(6)], False))
+        model = _packaged_model() if surface == "crawl-model" else None
+        write_warc_run(spark, str(d), base, "r", model_bytes=model)
+    plans = [p for p in _written_plans(spark, os.path.join(base, "spans"))
+             if "MapInPandas" in p]
+    assert len(plans) == 1
+    tree = plans[0].splitlines()
+    kernels = [i for i, line in enumerate(tree) if "MapInPandas" in line]
+    assert kernels
+    for i in kernels:  # AQE prints its final and initial plans
+        assert "WriteFiles" in "".join(_ancestors(tree, i))
+        assert "Exchange" not in "".join(_ancestors(tree, i)), plans[0]
+
+
+def _ancestors(tree: list[str], i: int) -> list[str]:
+    """The lines of a plan tree's node ``i``'s ancestors: each is the
+    nearest line above with a smaller indent."""
+    def indent(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    out, depth = [], indent(tree[i])
+    for line in reversed(tree[:i]):
+        if indent(line) < depth:
+            out.append(line)
+            depth = indent(line)
+    return out

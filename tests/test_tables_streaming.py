@@ -1,6 +1,7 @@
 """Checkpoint-resume lineage sink, streaming wrapper, multimodal plumbing."""
 
 import os
+import re
 import sys
 
 import pytest
@@ -21,17 +22,32 @@ def _pairs(fixture_docs):
 
 @pytest.mark.parametrize("scheme", ["", "file://"], ids=["plain", "file-uri"])
 def test_write_extraction_run_resume(spark, fixture_docs, fixture_model, tmp_path,
-                                     scheme):
+                                     scheme, caplog, monkeypatch):
+    from learnhtml_spark.log import logger
     from learnhtml_spark.operators.extract import docs_from_pairs
     from learnhtml_spark.sources.tables import (
+        bucket_col,
         completed_buckets,
         read_lineage,
         write_extraction_run,
     )
+    from test_warc_run import landed_counts
 
-    docs = docs_from_pairs(spark, _pairs(fixture_docs))
+    # beside the fixture pages: a malformed document (a null offset among
+    # others makes the kernel's span sort raise) and one with no spans (no
+    # output rows); 8 buckets for 6 documents leave some buckets empty
+    malformed = [
+        {"kind": "html", "text": "<p>x</p>", "media_ref": None, "offset": None},
+        {"kind": "html", "text": "<p>y</p>", "media_ref": None, "offset": 1},
+    ]
+    docs = docs_from_pairs(spark, _pairs(fixture_docs) + [("malformed", malformed),
+                                                          ("empty", [])])
+    n_docs = len(fixture_docs) + 2
     base = scheme + str(tmp_path / "out")
     mb = fixture_model.to_bytes()
+    # one INFO summary line per call
+    monkeypatch.setattr(logger, "propagate", True)
+    caplog.set_level("INFO", logger="learnhtml_spark")
 
     # first call: limited to 3 buckets (simulates an interrupted run)
     r1 = write_extraction_run(docs, mb, base, "run1", num_buckets=8,
@@ -48,12 +64,42 @@ def test_write_extraction_run_resume(spark, fixture_docs, fixture_model, tmp_pat
     r3 = write_extraction_run(docs, mb, base, "run1", num_buckets=8)
     assert r3["processed_buckets"] == []
 
+    logged = [
+        re.fullmatch(r"run run1 by bucket: (\d+) processed, (\d+) skipped, (\d+) docs, "
+                     r"(\d+) spans, (\d+) errors, wall_ms (\d+)", r.getMessage())
+        for r in caplog.records if r.name == "learnhtml_spark"
+    ]
+    assert len(logged) == 3 and all(logged)
+    logged = [tuple(map(int, m.groups())) for m in logged]
+    assert [m[:4] for m in logged] == [
+        (len(r["processed_buckets"]), len(r["skipped_buckets"]), r["docs"], r["spans"])
+        for r in (r1, r2, r3)
+    ]
+
     # landed data covers all docs exactly once, lineage accounts all buckets
     spans = spark.read.parquet(os.path.join(base, "spans"))
-    assert spans.select("doc_id").distinct().count() == len(fixture_docs)
+    assert spans.select("doc_id").distinct().count() == n_docs - 1  # "empty" has no rows
     lin = read_lineage(spark, base)
     assert lin.filter(F.col("status") == "ok").select("bucket").distinct().count() == 8
-    assert lin.agg(F.sum("doc_count")).collect()[0][0] == len(fixture_docs)
+    assert lin.agg(F.sum("doc_count")).collect()[0][0] == n_docs
+    assert r1["docs"] + r2["docs"] == n_docs
+
+    # every lineage row's counts equal a recount of the landed rows, with
+    # doc_count the bucket's input documents
+    inputs = dict(docs.groupBy(bucket_col(8).alias("b")).count().collect())
+    landed = landed_counts(spark, base, "bucket")
+    rows = {r.bucket: r for r in lin.collect()}
+    assert sorted(rows) == list(range(8)) and 0 in [inputs.get(b, 0) for b in rows]
+    for b, r in rows.items():
+        _, spans_n, errors_n = landed.get(b, (0, 0, 0))
+        assert (r.doc_count, r.span_count, r.error_count) == (
+            inputs.get(b, 0), spans_n, errors_n), b
+    assert sum(r.error_count for r in rows.values()) == 1
+    # the logged errors and wall are the lineage's
+    for m, r in zip(logged, (r1, r2)):
+        assert m[4] == sum(rows[b].error_count for b in r["processed_buckets"])
+        assert {rows[b].wall_ms for b in r["processed_buckets"]} == {m[5]}
+    assert logged[2][4:] == (0, 0)
 
 
 def test_stream_extract_available_now(spark, fixture_docs, fixture_model, tmp_path):

@@ -103,16 +103,43 @@ def _packaged_model() -> bytes:
     return (res.files("learnhtml_spark") / "artifacts" / "model.npz").read_bytes()
 
 
+def landed_counts(spark, base, key):
+    """{key: (distinct docs with a non-error row, non-error rows, error
+    rows)} recounted from the landed ``<base>/spans``."""
+    from pyspark.sql import functions as F
+
+    is_error = F.col("kind") == "error"
+    out = spark.read.parquet(os.path.join(base, "spans")).groupBy(key).agg(
+        F.countDistinct(F.when(~is_error, F.col("doc_id"))),
+        F.sum((~is_error).cast("long")),
+        F.sum(is_error.cast("long")),
+    )
+    return {r[0]: tuple(r[1:]) for r in out.collect()}
+
+
 @pytest.mark.parametrize("verdict", ["heuristic", "model"])
 def test_poison_archive_is_lineage_error_count(spark, tmp_path, verdict):
+    from learnhtml_spark.sources.warc_source import build_record, http_response
+
     # both verdicts share one error-row contract: a corrupt archive is an
     # error row in its lineage, never a silent "ok" with zero docs
     model_bytes = _packaged_model() if verdict == "model" else None
-    d, ids = _archive_dir(tmp_path, n_files=1)
+    d, ids = _archive_dir(tmp_path, n_files=2)
     (d / "bad.warc.gz").write_bytes(b"\x1f\x8b\x08\x00not-really-gzip")
+    # an archive whose last record is truncated
+    cut = build_record("response", {"WARC-Target-URI": "u"},
+                       http_response(200, "OK", "text/html", b"x" * 50))[:-30]
+    (d / "part-00002.warc").write_bytes(build_warc(["t0", "t1", "t2"], False) + cut)
     base = str(tmp_path / "out")
-    s = write_warc_run(spark, str(d), base, "r1", model_bytes=model_bytes)
+    # interrupted after two archives, then resumed, then a no-op
+    s = write_warc_run(spark, str(d), base, "r1", model_bytes=model_bytes,
+                       max_archives_per_call=2)
     assert len(s["processed"]) == 2 and s["errors"] == 1
+    s2 = write_warc_run(spark, str(d), base, "r1", model_bytes=model_bytes)
+    assert s2["processed"] == ["part-00001.warc.gz", "part-00002.warc"]
+    assert s2["errors"] == 1
+    s3 = write_warc_run(spark, str(d), base, "r1", model_bytes=model_bytes)
+    assert s3["processed"] == [] and len(s3["skipped"]) == 4
     lin = {
         r.archive: r
         for r in spark.read.parquet(os.path.join(base, "lineage")).collect()
@@ -120,6 +147,13 @@ def test_poison_archive_is_lineage_error_count(spark, tmp_path, verdict):
     assert lin["bad.warc.gz"].error_count == 1
     assert lin["bad.warc.gz"].doc_count == 0
     assert lin["part-00000.warc"].error_count == 0
+    assert lin["part-00002.warc"].error_count == 1
+    # every lineage row's counts equal a recount of the landed rows
+    landed = landed_counts(spark, base, "archive")
+    assert sorted(lin) == sorted(landed)
+    for name, r in lin.items():
+        assert (r.doc_count, r.span_count, r.error_count) == landed[name], name
+    assert sum(r.doc_count for r in lin.values()) == s["docs"] + s2["docs"]
 
 
 def test_max_archives_batching(spark, tmp_path):
