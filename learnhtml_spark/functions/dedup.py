@@ -15,10 +15,13 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from learnhtml_spark.functions.textstats import fingerprint, tokens
+from learnhtml_spark.log import logger
 
 
 def exact_dedup(docs: DataFrame) -> DataFrame:
@@ -372,6 +375,22 @@ def ngram_jaccard_pairs(
 _MH_P = 2147483647
 
 
+def _check_lsh_params(num_hashes: int, k: int, band_size: int = 1) -> None:
+    """ValueError at call time for MinHash/LSH parameters outside their
+    ranges, which would otherwise fail deep in plan building (``k=0``:
+    IndexError; ``band_size=0``: ZeroDivisionError) or silently drop the
+    trailing ``num_hashes % band_size`` minhashes from every band."""
+    if num_hashes < 1:
+        raise ValueError(f"num_hashes must be >= 1, got {num_hashes}")
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
+    if band_size < 1 or num_hashes % band_size:
+        raise ValueError(
+            f"band_size must be >= 1 and divide num_hashes={num_hashes} "
+            f"evenly, got {band_size}"
+        )
+
+
 def _mh_constants(num_hashes: int):
     """Deterministic universal-hash constants (A_j odd 29-bit, B_j 28-bit)
     derived from md5 so Spark code and SQL oracles embed identical
@@ -401,6 +420,7 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = 16, k: int = 3) -> Dat
     ONE shuffle: all N mins are aggregated in a single groupBy over the
     shingle rows; map-side combine collapses each partition to one row
     per doc before the exchange."""
+    _check_lsh_params(num_hashes, k)
     A, B = _mh_constants(num_hashes)
     sh = shingles(docs, k)
     hashed = sh.select(
@@ -435,6 +455,7 @@ def lsh_band_rows(
     shingle→minhash pipeline (A/B r7 on the candidate join: ~8% off);
     leave it off when the caller checkpoints the band rows itself
     (``dup_clusters``) or consumes them once."""
+    _check_lsh_params(num_hashes, k, band_size)
     sig = minhash_signatures(docs, num_hashes, k)
     if checkpoint_sig:
         sig = sig.localCheckpoint(eager=False)
@@ -660,6 +681,82 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return _canon_edges(out)
 
 
+#: one INFO line per contraction: input edges, rounds, executor
+_CONTRACTED = "star contraction: %d edges, %d rounds, %s executor"
+
+
+def _broadcast_threshold(spark) -> int:
+    """The session's ``spark.sql.autoBroadcastJoinThreshold`` in bytes, as
+    Spark itself parsed it (``-1`` when broadcasting is disabled)."""
+    return spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+
+
+def _star_contract_local(edges: DataFrame, max_iter: int) -> tuple[DataFrame, int]:
+    """``_star_contract``'s rounds on the driver, for an edge list Spark
+    would broadcast anyway: collected once, contracted in numpy, returned
+    as a local relation built from one Arrow table.
+
+    The trajectory is the distributed loop's, operator for operator: the
+    raw large-star step, small-star, canonical distinct; convergence when
+    a round's edge set equals the previous one (exact equality here, where
+    the distributed loop compares hash signatures), then the
+    ``large_star(E) == E`` check; same ``rounds``, same ``RuntimeError``.
+    The first comparison is against the input as given, duplicates
+    included, as the distributed signature counts them.
+
+    Node ids are mapped once to dense order-preserving ints, so a group
+    min on the dense ids is the min on the real ones and an edge packs
+    into one int64 ``a*V + b`` (V <= 2 * edges, far below 2^31.5 at any
+    driver-sized graph) for the distinct and the equality checks."""
+    t = edges.select("a", "b").toArrow()
+    n = t.num_rows
+    ids, dense = np.unique(
+        np.concatenate([t["a"].to_numpy(), t["b"].to_numpy()]),
+        return_inverse=True,
+    )
+    v = len(ids)
+
+    def node_min(g, vals):
+        # m[u] = min(u, vals over rows with g == u): one argsort, one reduceat
+        order = np.argsort(g)
+        g, vals = g[order], vals[order]
+        starts = np.flatnonzero(np.diff(g, prepend=-1))
+        m = np.arange(v)
+        m[g[starts]] = np.minimum(g[starts], np.minimum.reduceat(vals, starts))
+        return m
+
+    def large_star_raw(a, b):
+        # canonical (m(u), w) for every neighbor w > u; m(u) <= u < w
+        src, dst = np.concatenate([a, b]), np.concatenate([b, a])
+        up = dst > src
+        return node_min(src, dst)[src[up]], dst[up]
+
+    def small_star(a, b):
+        # canonical input (a < b): m(b) = min of b's a-sides, below both
+        # a != m(b) and b, so each emitted edge is already (m, node)
+        mb = node_min(b, a)[b]
+        keep = a != mb
+        return np.unique(
+            np.concatenate([mb[keep], mb]) * v + np.concatenate([a[keep], b])
+        )
+
+    a, b = dense[:n], dense[n:]
+    prev = np.sort(a * v + b)
+    for rounds in range(1, max_iter + 1):
+        cur = small_star(*large_star_raw(a, b))
+        a, b = np.divmod(cur, v)
+        if np.array_equal(cur, prev):
+            ls_a, ls_b = large_star_raw(a, b)
+            if np.array_equal(np.unique(ls_a * v + ls_b), cur):
+                stars = pa.table({"a": ids[a], "b": ids[b]}).cast(t.schema)
+                return edges.sparkSession.createDataFrame(stars), rounds
+        prev = cur
+    raise RuntimeError(
+        f"dup_clusters did not converge within max_iter={max_iter} "
+        "star rounds; raise max_iter"
+    )
+
+
 def _star_contract(edges: DataFrame, max_iter: int) -> tuple[DataFrame, int]:
     """Contract an undirected canonical edge list (a < b, distinct) to
     star graphs centered at each connected component's minimum node, via
@@ -669,13 +766,24 @@ def _star_contract(edges: DataFrame, max_iter: int) -> tuple[DataFrame, int]:
     contract on ``max_iter`` exhaustion.  Returns (star_edges, rounds);
     at the fixed point every edge is (component_min, member).
 
-    Round economics (optimization round, guide §1-§2): each round is ONE
-    fused small∘large plan behind a LAZY ``localCheckpoint`` whose
-    materialization is triggered by the signature aggregate itself — one
-    driver-synchronized job per round instead of the previous four (two
-    eager checkpoints + two signature collects), and the window-min form
-    of the star operators (see ``_large_star``) drops one Exchange per
-    operator.  Convergence is detected on the composition (signature
+    Two executors run the SAME operator trajectory (same edge set after
+    every round, same ``rounds``, same ``max_iter`` failure), chosen by
+    the edge count ``n`` the first signature below returns, so the choice
+    costs no job:
+    - **local** when ``n * 16`` bytes (two longs per edge) is at most the
+      session's ``spark.sql.autoBroadcastJoinThreshold``: Spark would ship
+      a relation that size to every executor, so the driver can hold it.
+      ``_star_contract_local`` collects the edges once and contracts them
+      in numpy; no Spark job runs per round.  ``-1`` disables it.
+    - **distributed** otherwise: the Spark rounds below.
+
+    Distributed round economics (optimization round, guide §1-§2): each
+    round is ONE fused small∘large plan behind a LAZY ``localCheckpoint``
+    whose materialization is triggered by the signature aggregate itself
+    — one driver-synchronized job per round instead of the previous four
+    (two eager checkpoints + two signature collects), and the window-min
+    form of the star operators (see ``_large_star``) drops one Exchange
+    per operator.  Convergence is detected on the composition (signature
     unchanged across a full round == the edge set is a fixed point of
     small∘large) and then VERIFIED per operator with one extra aggregate:
     large_star(E) == E together with small(large(E)) == E implies
@@ -688,7 +796,8 @@ def _star_contract(edges: DataFrame, max_iter: int) -> tuple[DataFrame, int]:
     Signatures are (count, double-seeded xxhash64 bit_xor) — the edge
     lists are canonical and distinct, so signature equality is set
     equality up to a ~2^-128 hash collision (xor, not sum: ANSI mode
-    makes a 64-bit hash sum overflow loudly)."""
+    makes a 64-bit hash sum overflow loudly).  Each non-empty contraction
+    logs one INFO line: input edges, rounds, executor."""
 
     def _sig(e: DataFrame):
         row = e.agg(
@@ -700,8 +809,13 @@ def _star_contract(edges: DataFrame, max_iter: int) -> tuple[DataFrame, int]:
 
     edges = edges.localCheckpoint(eager=False)
     prev = _sig(edges)
-    if prev[0] == 0:
+    n_edges = prev[0]
+    if n_edges == 0:
         return edges, 0
+    if n_edges * 16 <= _broadcast_threshold(edges.sparkSession):
+        stars, rounds = _star_contract_local(edges, max_iter)
+        logger.info(_CONTRACTED, n_edges, rounds, "local")
+        return stars, rounds
     for rounds in range(1, max_iter + 1):
         edges = _small_star(_large_star_raw(edges)).localCheckpoint(
             eager=False
@@ -711,6 +825,7 @@ def _star_contract(edges: DataFrame, max_iter: int) -> tuple[DataFrame, int]:
             # fixed point of the composition; one cheap aggregate confirms
             # large-star alone also fixes it (=> small-star does too)
             if _sig(_large_star(edges)) == cur:
+                logger.info(_CONTRACTED, n_edges, rounds, "distributed")
                 return edges, rounds
         prev = cur
     # silently returning partial contraction would split one transitive
@@ -737,8 +852,12 @@ def dup_clusters(
     Algorithm: alternating large-star/small-star contraction (Kiveris et
     al. 2014) over the undirected (doc, band-group-min) edges —
     O(log diameter) rounds, so chain-shaped components that would cost
-    min-label propagation one shuffle round per hop collapse in a
-    handful of rounds at any scale.  See ``_star_contract``.
+    min-label propagation one round per hop collapse in a handful of
+    rounds.  ``_star_contract`` runs those rounds on the driver when the
+    edge list fits the session's ``spark.sql.autoBroadcastJoinThreshold``
+    (16 bytes per edge; no Spark job per round) and as shuffled Spark
+    rounds above it; both executors follow the same trajectory and return
+    the same star edges.
 
     This is genuinely iterative — the SQL oracle replays the SEMANTICS
     (transitive closure, min label) as a recursive CTE over the same

@@ -188,10 +188,14 @@ def connected_components(
     duplicates are canonicalized away first.
 
     Algorithm: alternating large-star/small-star contraction (Kiveris et
-    al. 2014) — O(log d) shuffled rounds vs label propagation's
-    O(diameter), the same battle-tested kernel behind the dedup family's
-    ``dup_clusters`` (functions/dedup.py:_star_contract), exposed here
-    over arbitrary edge lists (e.g. the crawl link graph)."""
+    al. 2014) — O(log d) rounds vs label propagation's O(diameter), the
+    same kernel behind the dedup family's ``dup_clusters``
+    (functions/dedup.py:_star_contract), exposed here over arbitrary edge
+    lists (e.g. the crawl link graph).  An edge list within the session's
+    ``spark.sql.autoBroadcastJoinThreshold`` (16 bytes per edge) is
+    contracted on the driver with no Spark job per round; a larger one
+    runs shuffled Spark rounds.  Both executors follow the same
+    trajectory and give the same components."""
     from learnhtml_spark.functions.dedup import _canon_edges, _star_contract
 
     canon = _canon_edges(

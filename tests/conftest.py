@@ -24,6 +24,32 @@ def spark():
     spark.stop()
 
 
+@pytest.fixture
+def star_executor_conf(spark):
+    """Callable that selects ``functions.dedup._star_contract``'s executor
+    through the session's broadcast threshold: the 10 MB default keeps
+    test-sized graphs on the driver, ``-1`` forces the distributed rounds.
+    The setting is restored after the test."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key, None)
+
+    def select(executor):
+        spark.conf.set(key, {"local": "10MB", "distributed": "-1"}[executor])
+
+    yield select
+    if old is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, old)
+
+
+@pytest.fixture(params=["local", "distributed"])
+def star_executor(request, star_executor_conf):
+    """Runs the test once per ``_star_contract`` executor."""
+    star_executor_conf(request.param)
+    return request.param
+
+
 FIXTURE_SPECS = [
     ("dragnet/HTML/R578.html", "dragnet/Corrected/R578.html.corrected.txt", "utf-8", False),
     ("dragnet/HTML/9.html", "dragnet/Corrected/9.html.corrected.txt", "utf-8", False),

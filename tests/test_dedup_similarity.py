@@ -113,6 +113,38 @@ def test_simhash_bits_out_of_range(docs, bits):
         simhash(docs, bits=bits)
 
 
+@pytest.mark.parametrize("params", [
+    {"num_hashes": 0}, {"num_hashes": -4, "band_size": 1}, {"k": 0},
+    {"k": -1}, {"band_size": 0}, {"band_size": -2}, {"band_size": 3},
+    {"num_hashes": 4, "band_size": 8},
+], ids=lambda p: ",".join(f"{k}={v}" for k, v in p.items()))
+def test_lsh_params_out_of_range(docs, params):
+    """Out-of-range MinHash/LSH parameters raise ValueError at call time
+    (band_size=0 raised ZeroDivisionError, k=0 IndexError, and a
+    band_size not dividing num_hashes dropped the trailing minhashes)."""
+    from learnhtml_spark.functions.dedup import lsh_band_rows, minhash_signatures
+
+    with pytest.raises(ValueError):
+        lsh_band_rows(docs, **params)
+    if "band_size" not in params:
+        with pytest.raises(ValueError):
+            minhash_signatures(docs, **params)
+
+
+def test_lsh_params_range_bounds(docs):
+    """The smallest legal point (one hash, unigram shingles, one-hash
+    bands) and one band spanning every hash both run."""
+    from learnhtml_spark.functions.dedup import lsh_band_rows, minhash_signatures
+
+    assert minhash_signatures(docs, num_hashes=1, k=1).columns == ["doc_id", "mh1"]
+    tiny = lsh_band_rows(docs, num_hashes=1, band_size=1, k=1).collect()
+    # doc 5 is empty: no shingles, no band rows
+    assert sorted(r["doc_id"] for r in tiny) == [1, 2, 3, 4]
+    wide = lsh_band_rows(docs, num_hashes=16, band_size=16).collect()
+    assert {r["band"] for r in wide} == {0}
+    assert all(len(r["band_sig"].split("|")) == 16 for r in wide)
+
+
 def test_minhash_lsh_candidates(docs):
     from learnhtml_spark.functions.dedup import minhash_lsh_candidates
 
@@ -656,31 +688,81 @@ def test_tfidf_topk_hand_checked(spark):
     assert out[(2, 1)][0] == "banana" and out[(2, 2)][0] == "cherry"
 
 
-def test_star_contract_chain_logarithmic_rounds(spark):
+def _chain_edges(spark, n):
+    return spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "a long, b long"
+    )
+
+
+def _random_pairs(n_nodes=200, m=400, seed=42):
+    """Distinct canonical (a < b) pairs of a random sparse graph."""
+    import random
+
+    rng = random.Random(seed)
+    pairs = [(rng.randrange(n_nodes), rng.randrange(n_nodes)) for _ in range(m)]
+    return sorted({(min(a, b), max(a, b)) for a, b in pairs if a != b})
+
+
+def _planted_dup_edges(spark):
+    """dup_clusters' (doc, band-group-min) edge list over a corpus of
+    singletons plus planted near-dup chains (each copy changes one word
+    of the previous one)."""
+    import random
+
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from learnhtml_spark.functions.dedup import _canon_edges, lsh_band_rows
+
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(500)]
+    texts = [" ".join(rng.choices(vocab, k=20)) for _ in range(40)]
+    for length in (2, 5, 8, 12):
+        words = rng.choices(vocab, k=30)
+        for _ in range(length):
+            texts.append(" ".join(words))
+            words[rng.randrange(30)] = rng.choice(vocab)
+    docs = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+    bands = lsh_band_rows(docs)
+    return _canon_edges(
+        bands.select(
+            F.col("doc_id").alias("x"),
+            F.min("doc_id").over(Window.partitionBy("band", "band_sig")).alias("y"),
+        )
+    )
+
+
+def test_star_contract_chain_logarithmic_rounds(
+    spark, star_executor, caplog, monkeypatch
+):
     """The large-star/small-star kernel must close a CHAIN component —
     min-label propagation's worst case, one round per hop — in
     O(log diameter) rounds: for a 300-node path, within ~2*log2(n)
     rounds, and every node must label to node 0.  Plus a random-graph
-    spot check against python union-find."""
+    spot check against python union-find.  Run once per executor; each
+    contraction logs one INFO line naming it."""
     import math
-    import random
 
     from learnhtml_spark.functions.dedup import _star_contract
+    from learnhtml_spark.log import logger
 
+    monkeypatch.setattr(logger, "propagate", True)
+    caplog.set_level("INFO", logger="learnhtml_spark")
     n = 300
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "a long, b long"
-    )
-    stars, rounds = _star_contract(chain, max_iter=25)
+    stars, rounds = _star_contract(_chain_edges(spark, n), max_iter=25)
     assert rounds <= 2 * math.log2(n)  # ~16.5; propagation would need 299
     got = {r["b"]: r["a"] for r in stars.collect()}
     assert got == {i: 0 for i in range(1, n)}
+    assert [r.getMessage() for r in caplog.records
+            if r.getMessage().startswith("star contraction")] == [
+        f"star contraction: {n - 1} edges, {rounds} rounds, "
+        f"{star_executor} executor"
+    ]
 
     # random sparse graph vs union-find ground truth
-    rng = random.Random(42)
-    m = 400
-    pairs = [(rng.randrange(200), rng.randrange(200)) for _ in range(m)]
-    pairs = [(min(a, b), max(a, b)) for a, b in pairs if a != b]
+    pairs = _random_pairs()
     parent = list(range(200))
 
     def find(x):
@@ -698,7 +780,7 @@ def test_star_contract_chain_logarithmic_rounds(spark):
         truth.setdefault(find(x), set()).add(x)
     expected = {x: min(comp) for comp in truth.values() for x in comp}
 
-    edges = spark.createDataFrame(list(set(pairs)), "a long, b long")
+    edges = spark.createDataFrame(pairs, "a long, b long")
     stars, rounds = _star_contract(edges, max_iter=25)
     assert rounds <= 2 * math.log2(200)
     got = {r["b"]: r["a"] for r in stars.collect()}
@@ -710,7 +792,28 @@ def test_star_contract_chain_logarithmic_rounds(spark):
             assert got[x] == root
 
 
-def test_dup_clusters_nonconvergence_raises(spark):
+def test_star_contract_executors_agree(spark, star_executor_conf):
+    """The driver-side and the distributed executor follow one trajectory:
+    identical star edge set and identical round count on the chain, the
+    random graph and a planted near-dup corpus's edges."""
+    from learnhtml_spark.functions.dedup import _star_contract
+
+    graphs = {
+        "chain": _chain_edges(spark, 300),
+        "random": spark.createDataFrame(_random_pairs(), "a long, b long"),
+        "planted": _planted_dup_edges(spark),
+    }
+    for name, edges in graphs.items():
+        out = {}
+        for executor in ("local", "distributed"):
+            star_executor_conf(executor)
+            stars, rounds = _star_contract(edges, max_iter=25)
+            out[executor] = ({tuple(r) for r in stars.collect()}, rounds)
+        assert out["local"] == out["distributed"], name
+        assert out["local"][1] > 1, name
+
+
+def test_dup_clusters_nonconvergence_raises(spark, star_executor):
     """Exhausting max_iter without a fixed point must fail loudly, never
     return partially-propagated (split) components."""
     import pytest

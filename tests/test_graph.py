@@ -73,7 +73,7 @@ def test_float_mass_conserved_with_dangling(spark):
     assert max(ranks, key=ranks.get) == 3
 
 
-def test_connected_components_vs_union_find(spark):
+def test_connected_components_vs_union_find(spark, star_executor):
     from learnhtml_spark.functions.graph import connected_components
 
     # several components of varying shape: a chain, a star, a triangle
