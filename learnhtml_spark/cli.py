@@ -46,7 +46,7 @@ def cmd_extract(args):
     if args.resume_base:
         summary = write_extraction_run(
             docs, model.to_bytes(), args.resume_base, args.run_id,
-            num_buckets=args.buckets,
+            num_buckets=args.buckets, depth=args.depth, height=args.height,
         )
         print(summary)
     else:
@@ -89,7 +89,8 @@ _DATA_PARAMS = {"height", "depth", "blocks_only"}
 
 def parse_train_params(params: dict):
     """Split a reference-schema param dict into (data_params, fixed_fit,
-    distributions, ignored_keys)."""
+    distributions, ignored_keys).  ``blocks_only`` must be true: models
+    train on the block rows serving predicts on."""
     data = {"height": 5, "depth": 5, "blocks_only": True}
     fixed, dists, ignored = {}, {}, []
     for key, val in params.items():
@@ -103,6 +104,9 @@ def parse_train_params(params: dict):
                 fixed[k] = val
         else:
             ignored.append(key)
+    if not data.pop("blocks_only"):
+        raise ValueError("blocks_only=false is not supported: serving "
+                         "predicts on block-start rows only, with block stats")
     return data, fixed, dists, ignored
 
 
@@ -156,7 +160,6 @@ def cmd_train(args):
         n_synth=args.n_synth,
         depth=int(data["depth"]),
         height=int(data["height"]),
-        blocks_only=bool(data["blocks_only"]),
     )
     int_n, int_total = args.internal_folds
     ext_n, ext_total = args.external_folds

@@ -171,9 +171,20 @@ def synthesize_docs(documents_df):
     return documents_df.select(*cols).mapInPandas(run, schema=DOCS)
 
 
+def expected_page_rows(doc_id: str, spans, expected) -> list[tuple]:
+    """Ground-truth (doc_id, kind, text, media_ref, offset) rows of one
+    synthetic page: its blocks whose text is one of its known content
+    texts, parsed and assembled by the document kernel."""
+    from learnhtml_spark.kernels.document import assemble_doc, parse_doc
+
+    doc = parse_doc(spans)
+    want = set(expected)
+    return assemble_doc((doc_id,), doc, [b.text in want for b in doc.blocks])
+
+
 def expected_extraction(documents_pdf):
-    """Ground-truth (doc_id, kind, text, media_ref, offset) rows for a
-    documents-table pandas frame — the oracle for pipeline correctness."""
+    """Ground-truth rows for a documents-table pandas frame — the oracle
+    for pipeline correctness."""
     rows = []
     for doc_id, text, lang, source in zip(
         documents_pdf["doc_id"],
@@ -181,27 +192,6 @@ def expected_extraction(documents_pdf):
         documents_pdf["lang"],
         documents_pdf["source"],
     ):
-        doc_id = str(doc_id)
-        spans, expected = synthesize_page(doc_id, text, source, lang)
-        # hero image precedes all content (offset 1 in a span stream whose
-        # first content anchor is in span 0 or later)... anchoring follows
-        # assemble_output semantics; recompute exactly with the real kernels:
-        from learnhtml_spark.htmlparse import parse_html, getpath
-        from learnhtml_spark.kernels.blockify import blocks_from_tree
-        from learnhtml_spark.spans import (
-            assemble_output,
-            html_from_spans,
-            media_spans,
-        )
-
-        html, boundaries = html_from_spans(spans)
-        root = parse_html(html)
-        blocks = blocks_from_tree(root, do_css=False)
-        want = set(expected)
-        content = [
-            (b.text, b.features["block_start_element"].srcpos)
-            for b in blocks
-            if b.text in want
-        ]
-        rows.extend(assemble_output(doc_id, content, boundaries, media_spans(spans)))
+        spans, expected = synthesize_page(str(doc_id), text, source, lang)
+        rows.extend(expected_page_rows(str(doc_id), spans, expected))
     return rows

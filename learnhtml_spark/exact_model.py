@@ -78,6 +78,12 @@ class ExactNodeClassifier:
         return cls(vec, scale, keep.astype(np.int64), mlp)
 
     # -- inference ---------------------------------------------------------
+    def input_columns(self) -> list[str]:
+        """The frame columns this model reads: its vocabularies' columns
+        and its numeric columns."""
+        v = self.vec
+        return [*v.tag_vocab_, *v.tags_vocab_, *v.text_vocab_, *v.numeric_cols_]
+
     def _features(self, frame: pd.DataFrame) -> np.ndarray:
         return (self.vec.transform(frame) / self.scale)[:, self.keep]
 

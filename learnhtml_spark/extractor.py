@@ -7,24 +7,27 @@ same phase functions — and the same one-predict model verdict — that
 API cannot drift from serving.  Returns the positive nodes' XPaths (the
 reference's ``extract_from_html`` contract) or the ordered content block
 texts.  Unlike the distributed surfaces, a failure here raises to the
-caller instead of becoming an error row.
+caller instead of becoming an error row, and a model whose input columns
+differ from the featurizer's is rejected at construction.
 """
 
 from __future__ import annotations
 
-from learnhtml_spark.kernels.document import block_columns, parse_doc, predict_keep
+from learnhtml_spark.kernels.document import (
+    block_columns, check_model_columns, html_doc, predict_keep)
 from learnhtml_spark.model import NodeClassifier
 
 
 class HTMLExtractor:
     def __init__(self, model: NodeClassifier, depth: int = 5, height: int = 5):
+        check_model_columns(model, depth, height)
         self.model = model
         self.depth = depth
         self.height = height
 
     def _kept_blocks(self, html: str) -> list:
         """(block, path) pairs the model keeps, document order."""
-        doc = parse_doc([{"kind": "html", "text": html, "offset": 0}])
+        doc = html_doc(html)
         cols = block_columns(doc, self.depth, self.height)
         (keep,) = predict_keep(self.model, [doc], [cols], self.depth, self.height)
         return [(b, p) for b, p, k in zip(doc.blocks, doc.paths, keep) if k]

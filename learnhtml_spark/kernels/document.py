@@ -8,12 +8,15 @@ HTML extraction surface.
   block; the model's block stats re-read the path ``getpath`` memoized).
 - **verdict**: the density rules (``heuristic_block_flags``,
   jusText/boilerpipe style), per document; or the model, per batch of
-  documents — per-document feature columns plus block stats
-  (``block_columns``), concatenated (``concat_columns``) into ONE frame
-  and ONE ``clf.predict`` for the whole batch (``predict_keep``).  No
+  documents — per-document feature columns plus the blockifier's block
+  stats (``block_columns``, the one featurizer: training fits on the same
+  rows), concatenated (``concat_columns``) into ONE frame and ONE
+  ``clf.predict`` for the whole batch (``predict_keep``).  No
   per-document pandas frame: its construction cost dominates the kernel
   otherwise.  The batch's parsed trees stay live until its predict
-  returns, so the batch size is the model path's memory bound.
+  returns, so the batch size is the model path's memory bound.  A model
+  is checked against the featurizer's columns on the driver
+  (``check_model_columns``) before any batch reaches it.
 - **assemble** (``assemble_doc``): kept blocks + carried-through media ->
   ordered ``(kind, text, media_ref, offset)`` rows.
 
@@ -28,8 +31,11 @@ None, -1)`` instead of failing its task; consumers filter ``kind ==
 
 Callers: ``operators/extract.py`` (classifier spans, node features),
 ``operators/heuristic.py`` (model-free spans, the golden generator's
-sequential run), ``extractor.py`` (single document) and
-``sources/warc_run.py`` (crawl archives, both verdicts).
+sequential run), ``extractor.py`` (single document),
+``sources/warc_run.py`` (crawl archives, both verdicts) and
+``training.py`` (training rows: ``parse_doc`` + ``block_columns`` + a
+label).  This module imports nothing from ``training.py``: the block stats
+(``BLOCK_STAT_COLUMNS``, ``block_stats_list``) live here.
 """
 
 from __future__ import annotations
@@ -48,7 +54,6 @@ from learnhtml_spark.kernels.features import (
     feature_columns,
 )
 from learnhtml_spark.spans import assemble_output, html_from_spans, media_spans
-from learnhtml_spark.training import BLOCK_STAT_COLUMNS, block_stats_list
 
 #: jusText-ish defaults: stopword lists are language-bound, so the
 #: density thresholds carry the whole decision here (the corpus is
@@ -56,6 +61,19 @@ from learnhtml_spark.training import BLOCK_STAT_COLUMNS, block_stats_list
 MAX_LINK_DENSITY = 0.33
 LONG_TOKENS = 16
 SHORT_TOKENS = 3
+
+#: block-level stats merged into block rows (Kohlschütter-style densities
+#: from the blockifier — the dragnet lineage the reference builds on)
+BLOCK_STAT_COLUMNS = [
+    "blk_link_density",
+    "blk_text_density",
+    "blk_tagcount",
+    "blk_tagcount_since_last_block",
+    "blk_anchor_count",
+    "blk_min_depth_since_last_block",
+    "blk_text_len",
+    "blk_position",
+]
 
 
 class Doc(NamedTuple):
@@ -98,6 +116,11 @@ def parse_doc(spans: list[dict]) -> Doc:
     blocks = blocks_from_tree(root, do_css=False) if root is not None else []
     paths = [getpath(b.features["block_start_element"]) for b in blocks]
     return Doc(boundaries, media, root, blocks, paths)
+
+
+def html_doc(html: str) -> Doc:
+    """``parse_doc`` of a page given as one html span."""
+    return parse_doc([{"kind": "html", "text": html, "offset": 0}])
 
 
 def heuristic_block_flags(
@@ -152,9 +175,37 @@ def concat_columns(col_dicts: list[dict], names: list[str]) -> dict:
     return merged
 
 
+def block_stats_list(blocks) -> dict[str, list[float]]:
+    """Per block-start-path stats (``BLOCK_STAT_COLUMNS`` order) for a
+    block list."""
+    stats = {}
+    for k, b in enumerate(blocks):
+        path = getpath(b.features["block_start_element"])
+        f = b.features
+        stats[path] = [
+            b.link_density,
+            b.text_density,
+            float(f["tagcount"]),
+            float(f["tagcount_since_last_block"]),
+            float(f["anchor_count"]),
+            float(f["min_depth_since_last_block"]),
+            float(len(b.text)),
+            k / max(len(blocks) - 1, 1),
+        ]
+    return stats
+
+
+def block_frame_columns(depth: int, height: int) -> list[str]:
+    """``block_columns``' keys in frame order: the tree features (``path``
+    last), then the block stats."""
+    return feature_columns(depth, height) + BLOCK_STAT_COLUMNS
+
+
 def block_columns(doc: Doc, depth: int, height: int) -> dict | None:
     """Model input columns for the document's block-start nodes: tree
-    features plus the blockifier's per-block stats (None without blocks)."""
+    features plus the blockifier's per-block stats (None without blocks).
+    The one featurizer: serving predicts on these rows, and training
+    (``training.py``, serial and distributed) fits on them plus a label."""
     if not doc.blocks:
         return None
     starts = {id(b.features["block_start_element"]) for b in doc.blocks}
@@ -178,7 +229,7 @@ def predict_keep(
     present = [c for c in cols if c is not None]
     positive = [set() for _ in cols]
     if present:
-        names = feature_columns(depth, height) + BLOCK_STAT_COLUMNS
+        names = block_frame_columns(depth, height)
         merged = concat_columns(present, names)
         pred = np.asarray(
             clf.predict(pd.DataFrame(merged, columns=names)), dtype=bool
@@ -192,6 +243,33 @@ def predict_keep(
         ):
             positive[i].add(p)
     return [[p in pos for p in doc.paths] for doc, pos in zip(docs, positive)]
+
+
+class ModelColumnsError(ValueError):
+    """A model's input columns differ from the block featurizer's."""
+
+
+def check_model_columns(clf, depth: int = 5, height: int = 5) -> None:
+    """Raise ``ModelColumnsError`` unless ``clf.input_columns()`` are
+    exactly the columns ``block_columns`` gives at this window (for a
+    nameless artifact: the numeric width of a one-block page's columns)."""
+    have = [c for c in block_frame_columns(depth, height) if c != "path"]
+    want = clf.input_columns()
+    window = f"the block featurizer at depth={depth}, height={height}"
+    if isinstance(want, int):
+        probe = block_columns(html_doc("<p>x</p>"), depth, height)
+        width = sum(isinstance(probe[c], np.ndarray) for c in have)
+        if want != width:
+            raise ModelColumnsError(
+                f"nameless model reads {want} numeric columns; {window} "
+                f"gives {width}")
+        return
+    missing = sorted(set(want) - set(have))
+    extra = sorted(set(have) - set(want))
+    if missing or extra:
+        raise ModelColumnsError(
+            f"model input columns do not match {window}: the featurizer "
+            f"lacks {missing}, the model was not fit on {extra}")
 
 
 def assemble_doc(key: tuple, doc: Doc, keep: list[bool]) -> list[tuple]:

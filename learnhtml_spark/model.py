@@ -94,9 +94,19 @@ def _value_slots(col: str, v: str) -> tuple:
     return out
 
 
-def featurize_frame(df: pd.DataFrame):
+def _input_names(df: pd.DataFrame) -> list[str]:
+    return [c for c in df.columns if c != "path"]
+
+
+def featurize_frame(df: pd.DataFrame, columns: list[str] | None = None):
     """Returns (x_num, rows, slots): dense numeric matrix plus sparse
-    COO triplets of the hashed text features."""
+    COO triplets of the hashed text features.
+
+    ``columns``, a model's fitted input column names, selects and orders
+    the frame's columns first; without it (a nameless artifact) every
+    non-path column is read in frame order."""
+    if columns is not None and _input_names(df) != columns:
+        df = df[columns]
     num_cols = _numeric_columns(df)
     x_num = df[num_cols].to_numpy(dtype=np.float64, copy=True)
 
@@ -143,6 +153,7 @@ class NodeClassifier:
         threshold=0.5,
         gbdt=None,
         num_mask=None,
+        columns=None,
     ):
         self.w_num = w_num
         self.w_hash = w_hash
@@ -153,6 +164,9 @@ class NodeClassifier:
         #: chi2-dropped numeric columns (1.0 = kept); applied at inference
         #: so serving sees exactly the zeroed columns training saw
         self.num_mask = num_mask
+        #: ordered input column names the model was fit on (None for a
+        #: nameless legacy artifact, which reads columns by position)
+        self.columns = columns
         #: optional deep head (M8 variant; serialized with the MLP's own
         #: npz codec — the packaged npz model ships the GBDT head)
         self.mlp = None
@@ -173,10 +187,16 @@ class NodeClassifier:
         head: str = "gbdt",
         mlp_params: dict | None = None,
     ) -> "NodeClassifier":
+        columns = _input_names(frames[0])
         xs_num, rr, ss = [], [], []
         offset = 0
         for f in frames:
-            xn, r, s = featurize_frame(f)
+            if set(_input_names(f)) != set(columns):
+                diff = sorted(set(columns) ^ set(_input_names(f)))
+                raise ValueError(f"training frames disagree on columns {diff}")
+            if not len(f):
+                continue  # no rows (a page without blocks): nothing to fit
+            xn, r, s = featurize_frame(f, columns)
             xs_num.append(xn)
             rr.append(r + offset)
             ss.append(s)
@@ -235,7 +255,7 @@ class NodeClassifier:
             np.add.at(gh, slots, g[rows])
             w_h -= lr * (gh + l2 * w_h)
             b -= lr * g.sum()
-        model = cls(w_n, w_h, float(b), scale, num_mask=num_mask)
+        model = cls(w_n, w_h, float(b), scale, num_mask=num_mask, columns=columns)
 
         if head == "mlp":
             # M8 deep variant (reference utils/keras.py create_model via
@@ -262,8 +282,13 @@ class NodeClassifier:
         return model
 
     # -- inference -----------------------------------------------------------
+    def input_columns(self) -> list[str] | int:
+        """The frame columns this model reads: its fitted names, or for a
+        nameless artifact how many numeric columns it reads in order."""
+        return self.columns if self.columns is not None else len(self.scale)
+
     def _logit_and_numeric(self, frame: pd.DataFrame):
-        x_num, rows, slots = featurize_frame(frame)
+        x_num, rows, slots = featurize_frame(frame, self.columns)
         x_scaled = x_num / self.scale
         if self.num_mask is not None:
             x_scaled = x_scaled * self.num_mask  # train/serve parity (M7)
@@ -294,6 +319,8 @@ class NodeClassifier:
         )
         if self.num_mask is not None:
             payload["num_mask"] = self.num_mask
+        if self.columns is not None:
+            payload["input_columns_json"] = np.array(json.dumps(self.columns))
         if self.gbdt is not None:
             payload.update(self.gbdt.to_arrays())
         if self.mlp is not None:
@@ -316,6 +343,8 @@ class NodeClassifier:
             )
             if "num_mask" in z:
                 model.num_mask = z["num_mask"]
+            if "input_columns_json" in z:
+                model.columns = json.loads(str(z["input_columns_json"]))
             if "tree_sizes" in z:
                 from learnhtml_spark.gbdt import GBDTClassifier
 

@@ -33,7 +33,7 @@ from pyspark.sql.types import StructType
 
 from learnhtml_spark.htmlparse import parse_html
 from learnhtml_spark.kernels.document import (
-    concat_columns, extract_rows, spans_list, tally)
+    check_model_columns, concat_columns, extract_rows, spans_list, tally)
 from learnhtml_spark.kernels.features import extract_features_from_tree
 from learnhtml_spark.kernels.labeling import (
     NON_CONTENT_BLOCK_RATIO,
@@ -70,9 +70,21 @@ def _load_model(key, payload: bytes) -> NodeClassifier:
     return model
 
 
-def broadcast_model(spark: SparkSession, model: NodeClassifier | bytes):
-    """Ship a model artifact once per executor; returns the zero-argument
-    loader a python worker calls to get its cached deserialized model."""
+def check_model(model: NodeClassifier | bytes, depth: int = 5, height: int = 5):
+    """Driver-side ``check_model_columns`` of a model or artifact, so a
+    mismatch raises before any job instead of inside an executor."""
+    from learnhtml_spark.exact_model import load_any_model
+
+    clf = load_any_model(bytes(model)) if isinstance(model, (bytes, bytearray)) else model
+    check_model_columns(clf, depth, height)
+
+
+def broadcast_model(spark: SparkSession, model: NodeClassifier | bytes,
+                    depth: int = 5, height: int = 5):
+    """Check a model artifact against the featurizer (``check_model``), then
+    ship it once per executor; returns the zero-argument loader a python
+    worker calls to get its cached deserialized model."""
+    check_model(model, depth, height)
     payload = model if isinstance(model, (bytes, bytearray)) else model.to_bytes()
     payload = bytes(payload)
     bc = spark.sparkContext.broadcast(payload)
@@ -120,7 +132,8 @@ def keyed_spans(docs: DataFrame, model: NodeClassifier | bytes | None, keys: lis
     the ``keys`` columns (``doc_id`` last) of ``schema``; ``model`` None
     selects the density rules.  ``counts``, a run sink's accumulator, gets
     each batch's ``tally`` by ``keys[0]``."""
-    load = None if model is None else broadcast_model(docs.sparkSession, model)
+    load = None if model is None else broadcast_model(
+        docs.sparkSession, model, depth, height)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         clf = None if load is None else load()

@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from learnhtml_spark.log import logger
-from learnhtml_spark.operators.extract import keyed_spans
+from learnhtml_spark.operators.extract import check_model, keyed_spans
 from learnhtml_spark.schemas import EXTRACTED_SPANS, LINEAGE, local_frame
 
 
@@ -128,13 +128,18 @@ def write_extraction_run(
     run_id: str,
     num_buckets: int = 16,
     max_buckets_per_call: int | None = None,
+    depth: int = 5,
+    height: int = 5,
 ) -> dict:
     """Run (or resume) an extraction job: process pending buckets, write
-    span output partitioned by bucket, append lineage rows.
+    span output partitioned by bucket, append lineage rows.  ``depth`` /
+    ``height`` are the featurizer window, as in ``extract_content_spans``;
+    the model is checked against it before any job.
 
     Returns a summary dict {processed_buckets, skipped_buckets, docs, spans}.
     Idempotent: a completed run is a no-op on re-invocation.
     """
+    check_model(model_bytes, depth, height)
     bucketed = docs.withColumn("bucket", bucket_col(num_buckets))
     # the bucket rides through the kernel as the leading key component
     schema = StructType([LINEAGE["bucket"], *EXTRACTED_SPANS.fields])
@@ -142,7 +147,7 @@ def write_extraction_run(
     def output_for(pending: list, counts: Accumulator) -> DataFrame:
         batch = bucketed.filter(F.col("bucket").isin(pending))
         return keyed_spans(batch, model_bytes, ["bucket", "doc_id"], schema,
-                           counts=counts)
+                           depth, height, counts)
 
     s = run_partitions(docs.sparkSession, base_path, run_id, "bucket", LINEAGE,
                        range(num_buckets), output_for, max_buckets_per_call)

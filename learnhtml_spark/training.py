@@ -1,137 +1,150 @@
-"""Training utilities: label fixture/synthetic documents via the LCS path
-and fit the broadcastable node classifier.
+"""Training on the serving kernel: label fixture/synthetic documents and
+fit the broadcastable node classifier.
 
-Mirrors the reference's train path (cli/script.py:117-195 +
-model_selection.py:434-466): features + labels joined on node path,
-blocks-only filtering is NOT applied here — we train on all nodes with
-content_label as the target, which reproduces the extractor contract
-(extractor.py:36-44: positive nodes' paths are the extraction)."""
+The reference joins node features with labels on ``(url, path)``
+(cli/utils.py:27-47); here a training row IS a serving row, so there is no
+join.  A page goes through the document kernel's ``parse_doc`` and its one
+featurizer ``block_columns`` (block-start nodes, the reference's
+``is_extracted_block`` filter, model_selection.py:447-455), and each block
+gets a label from the same parsed blocks: LCS (``lcs_labels``, inclusion
+ratio > ``RATIO_THRESHOLD``) or exact (``exact_labels``, block text is a
+known content text).  Labels are keyed by block start path, the last
+duplicate winning.  ``training_rows`` is the same per-document function as
+one ``mapInPandas``, for distributed training."""
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 
-from learnhtml_spark.htmlparse import getpath, parse_html
-from learnhtml_spark.kernels.blockify import blocks_from_tree
-from learnhtml_spark.kernels.features import extract_features_from_tree
-from learnhtml_spark.kernels.labeling import get_ratios_per_html
+# the block stats live in the kernel; re-exported because perfbench/ledger.py imports them from here
+from learnhtml_spark.kernels.document import BLOCK_STAT_COLUMNS, block_stats_list  # noqa: F401
+from learnhtml_spark.kernels.document import (
+    Doc,
+    block_columns,
+    block_frame_columns,
+    concat_columns,
+    html_doc,
+    parse_doc,
+    spans_list,
+)
+from learnhtml_spark.kernels.labeling import block_ratios
 from learnhtml_spark.model import NodeClassifier
 
 RATIO_THRESHOLD = 0.1
 
-#: block-level stats merged into block rows (Kohlschütter-style densities
-#: from the blockifier — the dragnet lineage the reference builds on)
-BLOCK_STAT_COLUMNS = [
-    "blk_link_density",
-    "blk_text_density",
-    "blk_tagcount",
-    "blk_tagcount_since_last_block",
-    "blk_anchor_count",
-    "blk_min_depth_since_last_block",
-    "blk_text_len",
-    "blk_position",
-]
+
+def lcs_labels(doc: Doc, gold_blocks: list[str]) -> list[int]:
+    """Per-block labels: LCS inclusion ratio > ``RATIO_THRESHOLD``."""
+    return [
+        int(r > RATIO_THRESHOLD)
+        for _, r in block_ratios(doc.blocks, doc.paths, gold_blocks)
+    ]
 
 
-def block_stats_frame(root) -> dict[str, list[float]]:
-    """Per block-start-path stats from the blockifier."""
-    return block_stats_list(blocks_from_tree(root, do_css=False))
+def exact_labels(doc: Doc, content_texts: list[str]) -> list[int]:
+    """Per-block labels: the block's text is one of ``content_texts``."""
+    want = set(content_texts)
+    return [int(b.text in want) for b in doc.blocks]
 
 
-def block_stats_list(blocks) -> dict[str, list[float]]:
-    """Per block-start-path stats for an already-computed block list."""
-    stats = {}
-    for k, b in enumerate(blocks):
-        path = getpath(b.features["block_start_element"])
-        f = b.features
-        stats[path] = [
-            b.link_density,
-            b.text_density,
-            float(f["tagcount"]),
-            float(f["tagcount_since_last_block"]),
-            float(f["anchor_count"]),
-            float(f["min_depth_since_last_block"]),
-            float(len(b.text)),
-            k / max(len(blocks) - 1, 1),
-        ]
-    return stats
+def labeled_block_columns(doc: Doc, labels: list[int], depth: int, height: int):
+    """``block_columns`` plus a ``label`` column from per-block ``labels``
+    (None without blocks)."""
+    cols = block_columns(doc, depth, height)
+    if cols is not None:
+        by_path = dict(zip(doc.paths, labels))
+        cols["label"] = np.asarray([by_path[p] for p in cols["path"]], dtype=np.int64)
+    return cols
+
+
+def _training_pair(doc: Doc, labels: list[int], depth: int, height: int):
+    frame = pd.DataFrame(
+        labeled_block_columns(doc, labels, depth, height),
+        columns=block_frame_columns(depth, height) + ["label"],
+    )
+    return frame, frame.pop("label").to_numpy(dtype=np.int64)
 
 
 def build_training_pair(
-    html: str,
-    gold_blocks: list[str],
-    depth: int = 5,
-    height: int = 5,
-    blocks_only: bool = True,
+    html: str, gold_blocks: list[str], depth: int = 5, height: int = 5
 ):
-    """(feature_frame, label_vector) for one document.
-
-    ``blocks_only`` keeps only block-start nodes — the reference's training
-    filter (model_selection.py:447-455, ``is_extracted_block``); these are
-    also the only nodes whose prediction affects the extraction output.
-    """
-    root = parse_html(html, remove_comments=False, remove_pis=False)
-    feats = extract_features_from_tree(root, depth, height)
-    rows = get_ratios_per_html(html, gold_blocks)
-    label_by_path = {p: (1 if r > RATIO_THRESHOLD else 0) for p, r, _ in rows}
-    if blocks_only:
-        block_paths = {p for p, r, _ in rows if r != 1e-10}
-        feats = feats[feats["path"].isin(block_paths)].reset_index(drop=True)
-        feats = add_block_stats(feats, block_stats_frame(root))
-    y = np.asarray([label_by_path.get(p, 0) for p in feats["path"]], dtype=np.int64)
-    return feats, y
-
-
-def add_block_stats(feats, stats: dict) -> "object":
-    """Append the blockifier's per-block stats columns to a block-row frame."""
-    zeros = [0.0] * len(BLOCK_STAT_COLUMNS)
-    cols = list(zip(*(stats.get(p, zeros) for p in feats["path"])))
-    out = feats.copy()
-    for name, vals in zip(BLOCK_STAT_COLUMNS, cols):
-        out[name] = np.asarray(vals, dtype=np.float64)
-    return out
+    """(feature_frame, label_vector) for one LCS-labeled document: the
+    serving kernel's block rows and their LCS labels."""
+    doc = html_doc(html)
+    return _training_pair(doc, lcs_labels(doc, gold_blocks), depth, height)
 
 
 def build_training_pair_exact(
     html: str, content_texts: list[str], depth: int = 5, height: int = 5
 ):
-    """(block_feature_frame, labels) where a block is positive iff its text
-    is one of ``content_texts`` — exact labeling for synthetic pages whose
-    ground-truth content is known by construction (no LCS needed)."""
-    root = parse_html(html, remove_comments=False, remove_pis=False)
-    feats = extract_features_from_tree(root, depth, height)
-    blocks = blocks_from_tree(root, do_css=False)
-    want = set(content_texts)
-    label_by_path = {}
-    for b in blocks:
-        p = getpath(b.features["block_start_element"])
-        label_by_path[p] = 1 if b.text in want else 0
-    feats = feats[feats["path"].isin(label_by_path)].reset_index(drop=True)
-    feats = add_block_stats(feats, block_stats_frame(root))
-    y = np.asarray([label_by_path[p] for p in feats["path"]], dtype=np.int64)
-    return feats, y
+    """(feature_frame, label_vector) where a block is positive iff its
+    text is one of ``content_texts`` — exact labeling for synthetic pages
+    whose ground-truth content is known by construction (no LCS needed)."""
+    doc = html_doc(html)
+    return _training_pair(doc, exact_labels(doc, content_texts), depth, height)
+
+
+def training_rows(docs_with_gold, depth: int = 5, height: int = 5):
+    """Distributed training rows: ``docs_with_gold`` (doc_id, spans,
+    gold_blocks) -> one row per block-start node, ``(doc_id, features...,
+    path, block stats..., label)`` with LCS labels, from one
+    ``mapInPandas`` of ``labeled_block_columns`` per document — no
+    features-labels join."""
+    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
+    from learnhtml_spark.schemas import node_features_schema
+
+    schema = StructType(
+        node_features_schema(depth, height).fields
+        + [StructField(c, DoubleType()) for c in BLOCK_STAT_COLUMNS]
+        + [StructField("label", LongType())]
+    )
+    names = schema.fieldNames()
+
+    def run(batches):
+        for pdf in batches:
+            col_dicts = []
+            for doc_id, spans, gold in zip(
+                pdf["doc_id"], pdf["spans"], pdf["gold_blocks"]
+            ):
+                doc = parse_doc(spans_list(spans))
+                labels = lcs_labels(doc, [] if gold is None else list(gold))
+                cols = labeled_block_columns(doc, labels, depth, height)
+                if cols is not None:
+                    cols["doc_id"] = [doc_id] * len(cols["path"])
+                    col_dicts.append(cols)
+            if col_dicts:
+                yield pd.DataFrame(concat_columns(col_dicts, names), columns=names)
+
+    return docs_with_gold.mapInPandas(run, schema=schema)
+
+
+def training_pairs(
+    docs: list[tuple[str, list[str]]],
+    exact_docs: list[tuple[str, list[str]]] = (),
+    depth: int = 5,
+    height: int = 5,
+):
+    """Per-document (frames, labels) lists: LCS-labeled (html,
+    gold_blocks) pairs, then exactly-labeled (html, content_texts) pairs."""
+    pairs = [build_training_pair(h, g, depth, height) for h, g in docs]
+    pairs += [build_training_pair_exact(h, t, depth, height) for h, t in exact_docs]
+    return [f for f, _ in pairs], [y for _, y in pairs]
 
 
 def train(
     docs: list[tuple[str, list[str]]],
     depth: int = 5,
     height: int = 5,
-    blocks_only: bool = True,
     exact_docs: list[tuple[str, list[str]]] = (),
     **fit_kw,
 ) -> NodeClassifier:
     """Fit the classifier on LCS-labeled (html, gold_blocks) pairs plus
     optional exactly-labeled (html, content_texts) pairs."""
-    frames, labels = [], []
-    for html, gold in docs:
-        f, y = build_training_pair(html, gold, depth, height, blocks_only)
-        frames.append(f)
-        labels.append(y)
-    for html, texts in exact_docs:
-        f, y = build_training_pair_exact(html, texts, depth, height)
-        frames.append(f)
-        labels.append(y)
-    return NodeClassifier.fit(frames, labels, **fit_kw)
+    return NodeClassifier.fit(
+        *training_pairs(docs, exact_docs, depth, height), **fit_kw
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -200,18 +213,10 @@ def training_frames(
     n_synth: int = 24,
     depth: int = 5,
     height: int = 5,
-    blocks_only: bool = True,
     sf_dir: str | None = None,
 ):
     """Per-document (frames, labels) lists for the default corpus — the
     grouped-CV unit the selection module consumes."""
-    frames, labels = [], []
-    for html, gold in fixture_training_docs():
-        f, y = build_training_pair(html, gold, depth, height, blocks_only)
-        frames.append(f)
-        labels.append(y)
-    for html, texts in synthetic_training_docs(n_synth, sf_dir):
-        f, y = build_training_pair_exact(html, texts, depth, height)
-        frames.append(f)
-        labels.append(y)
-    return frames, labels
+    return training_pairs(
+        fixture_training_docs(), synthetic_training_docs(n_synth, sf_dir), depth, height
+    )

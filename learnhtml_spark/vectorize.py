@@ -55,6 +55,19 @@ def _char_wb_3grams(s: str) -> list[str]:
     return out
 
 
+def _text_grams(s: str) -> list[str]:
+    return _char_wb_3grams(camel_case_split(s))
+
+
+def _vocab(vals, tokens, min_df: int) -> dict[str, int]:
+    """Sorted-token index of the tokens found in >= ``min_df`` values."""
+    df_count: dict[str, int] = {}
+    for v in vals:
+        for t in set(tokens(v)):
+            df_count[t] = df_count.get(t, 0) + 1
+    return {t: i for i, t in enumerate(sorted(t for t, n in df_count.items() if n >= min_df))}
+
+
 def _is_tag_col(c):
     return c.endswith("tag")
 
@@ -98,27 +111,9 @@ class ExactVectorizer:
             if _is_tag_col(c):
                 self.tag_vocab_[c] = sorted(set(vals))
             elif _is_tags_col(c):
-                df_count: dict[str, int] = {}
-                for v in vals:
-                    for t in set(_word_tokens(v)):
-                        df_count[t] = df_count.get(t, 0) + 1
-                self.tags_vocab_[c] = dict(
-                    (t, i)
-                    for i, t in enumerate(
-                        sorted(t for t, n_ in df_count.items() if n_ >= self.min_df)
-                    )
-                )
+                self.tags_vocab_[c] = _vocab(vals, _word_tokens, self.min_df)
             elif _is_text_col(c):
-                df_count = {}
-                for v in vals:
-                    for g in set(_char_wb_3grams(camel_case_split(v))):
-                        df_count[g] = df_count.get(g, 0) + 1
-                self.text_vocab_[c] = dict(
-                    (g, i)
-                    for i, g in enumerate(
-                        sorted(g for g, n_ in df_count.items() if n_ >= self.min_df)
-                    )
-                )
+                self.text_vocab_[c] = _vocab(vals, _text_grams, self.min_df)
         self.numeric_cols_ = [c for c in cols if df[c].dtype != object]
         self.n_features_ = (
             sum(
@@ -133,11 +128,13 @@ class ExactVectorizer:
 
     # -- transform -------------------------------------------------------------
     def transform(self, frame: pd.DataFrame) -> np.ndarray:
+        """Dense features of ``frame``, which must carry every fitted
+        column (a missing one raises ``KeyError``, never reads as zeros)."""
         n = len(frame)
         out = np.zeros((n, self.n_features_))
         off = 0
         for c, classes in self.tag_vocab_.items():
-            vals = frame[c].fillna("").astype(str).tolist() if c in frame else [""] * n
+            vals = frame[c].fillna("").astype(str).tolist()
             if len(classes) <= 2:  # LabelBinarizer binary/degenerate: 1 col
                 pos = classes[-1] if classes else None
                 for i, v in enumerate(vals):
@@ -150,37 +147,22 @@ class ExactVectorizer:
                     if j is not None:
                         out[i, off + j] = 1.0
                 off += len(classes)
-        for c, vocab in self.tags_vocab_.items():
-            vals = frame[c].fillna("").astype(str).tolist() if c in frame else [""] * n
-            for i, v in enumerate(vals):
-                row = {}
-                for t in _word_tokens(v):
-                    j = vocab.get(t)
-                    if j is not None:
-                        row[j] = row.get(j, 0.0) + 1.0
-                if row:
-                    norm = np.sqrt(sum(x * x for x in row.values()))
-                    for j, x in row.items():
-                        out[i, off + j] = x / norm
-            off += len(vocab)
-        for c, vocab in self.text_vocab_.items():
-            vals = frame[c].fillna("").astype(str).tolist() if c in frame else [""] * n
-            for i, v in enumerate(vals):
-                row = {}
-                for g in _char_wb_3grams(camel_case_split(v)):
-                    j = vocab.get(g)
-                    if j is not None:
-                        row[j] = row.get(j, 0.0) + 1.0
-                if row:
-                    norm = np.sqrt(sum(x * x for x in row.values()))
-                    for j, x in row.items():
-                        out[i, off + j] = x / norm
-            off += len(vocab)
+        for vocabs, tokens in (
+            (self.tags_vocab_, _word_tokens), (self.text_vocab_, _text_grams)
+        ):
+            for c, vocab in vocabs.items():
+                vals = frame[c].fillna("").astype(str).tolist()
+                for i, v in enumerate(vals):
+                    row = {}
+                    for t in tokens(v):
+                        j = vocab.get(t)
+                        if j is not None:
+                            row[j] = row.get(j, 0.0) + 1.0
+                    if row:
+                        norm = np.sqrt(sum(x * x for x in row.values()))
+                        for j, x in row.items():
+                            out[i, off + j] = x / norm
+                off += len(vocab)
         for k, c in enumerate(self.numeric_cols_):
-            if c in frame:
-                out[:, off + k] = frame[c].to_numpy(dtype=np.float64)
+            out[:, off + k] = frame[c].to_numpy(dtype=np.float64)
         return out
-
-    def fit_transform(self, frames: list[pd.DataFrame]) -> list[np.ndarray]:
-        self.fit(frames)
-        return [self.transform(f) for f in frames]

@@ -21,35 +21,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import numpy as np
 
-from learnhtml_spark.kernels.tokenize import get_blocks
 from learnhtml_spark.model import NodeClassifier
 from learnhtml_spark.selection import (
     chi2_percentile_mask,
     f1_score,
     search_params,
 )
-from learnhtml_spark.training import build_training_pair
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-FIX = os.path.join(REPO, "tests/fixtures")
-
-SPECS = [
-    ("dragnet/HTML/R578.html", "dragnet/Corrected/R578.html.corrected.txt", "utf-8", False),
-    ("dragnet/HTML/9.html", "dragnet/Corrected/9.html.corrected.txt", "utf-8", False),
-    ("cleaneval/HTML/2.html", "cleaneval/Corrected/2.html.corrected.txt", "latin-1", True),
-    ("cleaneval/HTML/1.html", "cleaneval/Corrected/1.html.corrected.txt", "latin-1", True),
-]
-
-
-def fixture_frames():
-    frames, labels = [], []
-    for h, c, enc, ce in SPECS:
-        html = open(os.path.join(FIX, h), encoding=enc).read()
-        gold = get_blocks(open(os.path.join(FIX, c), encoding=enc).read(), cleaneval=ce)
-        f, y = build_training_pair(html, gold)
-        frames.append(f)
-        labels.append(y)
-    return frames, labels
+from learnhtml_spark.training import fixture_training_docs, training_pairs
 
 
 def loo_f1(fit_fn, predict_fn, frames, labels):
@@ -64,7 +42,7 @@ def loo_f1(fit_fn, predict_fn, frames, labels):
 
 
 def main():
-    frames, labels = fixture_frames()
+    frames, labels = training_pairs(fixture_training_docs())
     print(f"{len(frames)} fixture pages, block rows:", [len(f) for f in frames])
     results = {}
 

@@ -45,20 +45,15 @@ def row_key(doc_id, lang, source, text) -> str:
 
 
 def main() -> None:
-    from learnhtml_spark.corpus import synthesize_page
+    from learnhtml_spark.corpus import expected_page_rows, synthesize_page
     from learnhtml_spark.htmlparse import parse_html
-    from learnhtml_spark.kernels.blockify import blocks_from_tree
     from learnhtml_spark.kernels.features import extract_features_from_tree
     from learnhtml_spark.kernels.labeling import (
         NON_CONTENT_BLOCK_RATIO,
         get_ratios_per_html,
     )
     from learnhtml_spark.schemas import node_features_schema
-    from learnhtml_spark.spans import (
-        assemble_output,
-        html_from_spans,
-        media_spans,
-    )
+    from learnhtml_spark.spans import html_from_spans
 
     feat_names = node_features_schema(DEPTH, HEIGHT).fieldNames()
 
@@ -81,18 +76,11 @@ def main() -> None:
             seen.add(key)
             doc_id = str(doc_id)
             spans, expected = synthesize_page(doc_id, text, source, lang)
-            html, boundaries = html_from_spans(spans)
+            html, _ = html_from_spans(spans)
             root = parse_html(html)
 
             # 1. extract_spans ground truth (generator-anchored)
-            blocks = blocks_from_tree(root, do_css=False)
-            want = set(expected)
-            content = [
-                (b.text, b.features["block_start_element"].srcpos)
-                for b in blocks
-                if b.text in want
-            ]
-            for r in assemble_output(doc_id, content, boundaries, media_spans(spans)):
+            for r in expected_page_rows(doc_id, spans, expected):
                 span_rows.append((key,) + tuple(r))
 
             # 1b. heuristic_spans reference run (sequential execution of

@@ -26,17 +26,15 @@ import os
 import sys
 import time
 
-_HERE = os.path.dirname(os.path.abspath(__file__))
-sys.path.insert(0, os.path.dirname(_HERE))
-sys.path.insert(0, _HERE)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import numpy as np
 
 from learnhtml_spark.gbdt import GBDTClassifier
 from learnhtml_spark.mlp import MLPClassifier
 from learnhtml_spark.selection import chi2_scores, f1_score
+from learnhtml_spark.training import fixture_training_docs, training_pairs
 from learnhtml_spark.vectorize import ExactVectorizer
-from loo_study import fixture_frames  # scripts/ is not a package
 
 RNG = np.random.default_rng(7)
 
@@ -125,7 +123,7 @@ def fit_predict(xs, labels, train_idx, test_idx, cand, seed=0):
 
 
 def main():
-    frames, labels = fixture_frames()
+    frames, labels = training_pairs(fixture_training_docs())
     n_pages = len(frames)
     n_iter = int(os.environ.get("NESTED_N_ITER", "12"))
     candidates = [sample_candidate(RNG) for _ in range(n_iter)]

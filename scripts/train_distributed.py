@@ -3,17 +3,18 @@
 The reference builds its training matrix by merging a features csv with a
 labels csv on (url, path) (J1, cli/utils.py:27-47) after dask-parallel
 feature/label extraction.  This script is the Spark rendition at corpus
-scale:
+scale, with the join gone: a training row is a serving row.
 
-    docs table ──┬─ extract_node_features ──┐
-                 └─ label_documents ────────┴─ join on (doc_id, path)
-                      → grouped train/holdout split by portable doc hash
-                      → block rows to the driver → NodeClassifier.fit
+    docs table ── training_rows (one mapInPandas: the serving kernel's
+                  block featurizer + LCS labels, per document)
+      → grouped train/holdout split by portable doc hash
+      → block rows to the driver → NodeClassifier.fit
 
-Feature/label generation and the join are fully distributed; the final
-fit is driver-side numpy (the collected block-row matrix is tiny relative
-to the corpus — ~25 rows per document — and the reference's nested CV was
-single-node too).  Usage: python scripts/train_distributed.py [n_docs]
+Feature/label generation is fully distributed; the final fit is
+driver-side numpy (the collected block-row matrix is tiny relative to the
+corpus — ~25 rows per document — and the reference's nested CV was
+single-node too).  The saved model records the featurizer's column names, so it serves through ``extract`` and
+``HTMLExtractor``.  Usage: python scripts/train_distributed.py [n_docs]
 """
 
 import os
@@ -32,12 +33,8 @@ def main(n_docs: int = 300):
     from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
     from learnhtml_spark.model import NodeClassifier
-    from learnhtml_spark.operators.extract import (
-        extract_node_features,
-        label_documents,
-    )
     from learnhtml_spark.schemas import SPAN
-    from learnhtml_spark.training import BLOCK_STAT_COLUMNS  # noqa: F401
+    from learnhtml_spark.training import training_rows
 
     spark = (
         SparkSession.builder.master("local[16]")
@@ -80,24 +77,16 @@ def main(n_docs: int = 300):
     with_gold = with_gold.repartition(32, "doc_id").cache()
 
     t0 = time.time()
-    feats = extract_node_features(with_gold.select("doc_id", "spans"), depth=5, height=5)
-    labels = label_documents(with_gold)
-
-    # J1: distributed equi-join of features and labels on (doc_id, path),
-    # block rows only (reference P4 filter)
-    joined = feats.join(
-        labels.withColumnRenamed("node_path", "path"),
-        on=["doc_id", "path"],
-    ).filter(F.col("is_extracted_block"))
+    # block rows only (reference P4 filter), labeled in the same pass
+    all_rows = training_rows(with_gold, depth=5, height=5)
 
     # grouped split by portable doc hash (reference O2/M9: whole documents
     # go to one side, never split)
     bucket = (F.abs(F.xxhash64("doc_id")) % 100)
-    all_rows = joined.drop("is_extracted_block", "ratio", "block_text")
     pdf_train = all_rows.filter(bucket < 80).toPandas()
     pdf_hold = all_rows.filter(bucket >= 80).toPandas()
     print(
-        f"distributed features+labels+join: {time.time() - t0:.1f}s, "
+        f"distributed training rows: {time.time() - t0:.1f}s, "
         f"{len(pdf_train)} train / {len(pdf_hold)} holdout block rows "
         f"from {n_docs} docs"
     )
@@ -105,7 +94,7 @@ def main(n_docs: int = 300):
     def per_doc(pdf):
         frames, labels = [], []
         for _, g in pdf.groupby("doc_id", sort=True):
-            labels.append(g.pop("content_label").astype(int).to_numpy())
+            labels.append(g.pop("label").to_numpy())
             frames.append(g.drop(columns=["doc_id"]).reset_index(drop=True))
         return frames, labels
 

@@ -4,9 +4,10 @@
 MODEL.md's LOO study measured exact M1-M4 vectorization + chi² top-400 +
 MLP at ≈0.5-0.6 cross-domain F1 vs the hashed path's 0.244 — this script
 makes that configuration a shippable artifact the CLI can serve
-(`extract --model exact.npz`), per VERDICT r3 #8.  Training corpus
-mirrors scripts/train_model.py (4 reference fixture pages LCS-labeled +
-a deterministic synthetic slice for vocabulary/label balance).
+(`extract --model exact.npz`), per VERDICT r3 #8.  Training corpus: the
+one in ``learnhtml_spark.training`` that scripts/train_model.py uses (4
+reference fixture pages LCS-labeled + a deterministic 40-page synthetic
+slice for vocabulary/label balance), on the serving kernel's block rows.
 
 Run from repo root: python scripts/train_exact_model.py
 """
@@ -23,23 +24,16 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def main():
-    from train_model import fixture_pairs, synthetic_pairs
-
     from learnhtml_spark.exact_model import ExactNodeClassifier
     from learnhtml_spark.training import (
-        build_training_pair,
-        build_training_pair_exact,
+        fixture_training_docs,
+        synthetic_training_docs,
+        training_pairs,
     )
 
-    frames, labels = [], []
-    for html, gold in fixture_pairs():
-        f, y = build_training_pair(html, gold)
-        frames.append(f)
-        labels.append(y)
-    for html, texts in synthetic_pairs(40):
-        f, y = build_training_pair_exact(html, texts)
-        frames.append(f)
-        labels.append(y)
+    frames, labels = training_pairs(
+        fixture_training_docs(), synthetic_training_docs(40)
+    )
 
     t0 = time.time()
     model = ExactNodeClassifier.fit(

@@ -1,10 +1,12 @@
 """Train and package the content classifier artifact.
 
-Training corpus: the 4 reference fixture pages (labels from the LCS
-gold-standard path) + a deterministic slice of synthetic pages built from
-the sf0.001 documents table (labels likewise via LCS against the known
-content).  The artifact (learnhtml_spark/artifacts/model.npz) ships with
-the repo and is broadcast at inference.
+Training corpus (``learnhtml_spark.training``): the 4 reference fixture
+pages (labels from the LCS gold-standard path) + a deterministic slice of
+80 synthetic pages built from the sf0.001 documents table (exact labels:
+their content is known by construction).  Rows come from the serving
+kernel's block featurizer, so the model records the input columns
+serving builds.  The artifact (learnhtml_spark/artifacts/model.npz) ships
+with the repo and is broadcast at inference.
 
 Run from repo root: python scripts/train_model.py
 """
@@ -15,74 +17,32 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb
-
-from learnhtml_spark.corpus import synthesize_page
-from learnhtml_spark.kernels.tokenize import get_blocks
-from learnhtml_spark.spans import html_from_spans
-from learnhtml_spark.training import build_training_pair, train
+from learnhtml_spark.model import NodeClassifier
+from learnhtml_spark.training import (
+    fixture_training_docs,
+    synthetic_training_docs,
+    training_pairs,
+)
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-FIX = os.path.join(REPO, "tests/fixtures")
-TESTDATA = os.environ.get("SPARK_GRAFT_TRAIN_SF_DIR", "/root/testdata/sf0.001")
 N_SYNTH = 80
 
 
-def fixture_pairs():
-    specs = [
-        ("dragnet/HTML/R578.html", "dragnet/Corrected/R578.html.corrected.txt", "utf-8", False),
-        ("dragnet/HTML/9.html", "dragnet/Corrected/9.html.corrected.txt", "utf-8", False),
-        ("cleaneval/HTML/2.html", "cleaneval/Corrected/2.html.corrected.txt", "latin-1", True),
-        ("cleaneval/HTML/1.html", "cleaneval/Corrected/1.html.corrected.txt", "latin-1", True),
-    ]
-    out = []
-    for h, c, enc, ce in specs:
-        html = open(os.path.join(FIX, h), encoding=enc).read()
-        gold = get_blocks(open(os.path.join(FIX, c), encoding=enc).read(), cleaneval=ce)
-        out.append((html, gold))
-    return out
-
-
-def synthetic_pairs(n=N_SYNTH):
-    con = duckdb.connect()
-    rows = con.execute(
-        f"select doc_id, text, lang, source from read_parquet('{TESTDATA}/documents.parquet') "
-        f"order by doc_id limit {n}"
-    ).fetchall()
-    out = []
-    for doc_id, text, lang, source in rows:
-        spans, expected = synthesize_page(str(doc_id), text, source, lang)
-        html, _ = html_from_spans(spans)
-        out.append((html, expected))
-    return out
-
-
 def main():
-    fixtures = fixture_pairs()
-    synth = synthetic_pairs()
-    t0 = time.time()
-    model = train(
-        fixtures,
-        exact_docs=synth,
-        epochs=400,
-        lr=1.0,
-        l2=1e-5,
-        gbdt_rounds=200,
-        gbdt_depth=4,
+    frames, labels = training_pairs(
+        fixture_training_docs(), synthetic_training_docs(N_SYNTH)
     )
-    print(f"trained on {len(fixtures) + len(synth)} docs in {time.time() - t0:.1f}s "
+    t0 = time.time()
+    model = NodeClassifier.fit(frames, labels, epochs=400, lr=1.0, l2=1e-5,
+                               gbdt_rounds=200, gbdt_depth=4)
+    print(f"trained on {len(frames)} docs in {time.time() - t0:.1f}s "
           f"({len(model.gbdt.trees)} trees)")
 
     # verify exact fit on the training corpus
-    from learnhtml_spark.training import build_training_pair_exact
-
-    bad = 0
-    for html, gold in fixtures:
-        f, y = build_training_pair(html, gold)
-        bad += int(((model.predict(f) == 1) != (y == 1)).sum())
-    for html, texts in synth:
-        f, y = build_training_pair_exact(html, texts)
-        bad += int(((model.predict(f) == 1) != (y == 1)).sum())
+    bad = sum(
+        int(((model.predict(f) == 1) != (y == 1)).sum())
+        for f, y in zip(frames, labels)
+    )
     print("misclassified block rows on training corpus:", bad)
 
     out_dir = os.path.join(REPO, "learnhtml_spark", "artifacts")

@@ -50,26 +50,13 @@ def star_executor(request, star_executor_conf):
     return request.param
 
 
-FIXTURE_SPECS = [
-    ("dragnet/HTML/R578.html", "dragnet/Corrected/R578.html.corrected.txt", "utf-8", False),
-    ("dragnet/HTML/9.html", "dragnet/Corrected/9.html.corrected.txt", "utf-8", False),
-    ("cleaneval/HTML/2.html", "cleaneval/Corrected/2.html.corrected.txt", "latin-1", True),
-    ("cleaneval/HTML/1.html", "cleaneval/Corrected/1.html.corrected.txt", "latin-1", True),
-]
-
-
 @pytest.fixture(scope="session")
 def fixture_docs():
     """[(name, html, gold_blocks)] for the four reference fixture pages."""
-    from learnhtml_spark.kernels.tokenize import get_blocks
+    from learnhtml_spark.training import FIXTURE_SPECS, fixture_training_docs
 
-    fix = os.path.join(os.path.dirname(__file__), "fixtures")
-    out = []
-    for h, c, enc, ce in FIXTURE_SPECS:
-        html = open(os.path.join(fix, h), encoding=enc).read()
-        gold = get_blocks(open(os.path.join(fix, c), encoding=enc).read(), cleaneval=ce)
-        out.append((h, html, gold))
-    return out
+    return [(spec[0], html, gold)
+            for spec, (html, gold) in zip(FIXTURE_SPECS, fixture_training_docs())]
 
 
 @pytest.fixture(scope="session")
