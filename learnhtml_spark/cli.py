@@ -309,7 +309,8 @@ def main(argv=None):
     p.add_argument("--model", default=DEFAULT_MODEL)
     p.add_argument("--depth", type=int, default=5)
     p.add_argument("--height", type=int, default=5)
-    p.add_argument("--partitions", type=int, default=None)
+    p.add_argument("--partitions", type=int, default=None,
+                   help="kernel input partitions (not with --resume-base)")
     p.add_argument("--cores", default="*")
     p.add_argument("--resume-base", help="bucketed sink base dir (checkpoint-resume mode)")
     p.add_argument("--run-id", default="run1")
@@ -380,6 +381,9 @@ def main(argv=None):
     p.set_defaults(fn=cmd_extract_html)
 
     args = ap.parse_args(argv)
+    if args.cmd == "extract" and args.resume_base and args.partitions is not None:
+        # the resume path's kernel runs spark.sql.shuffle.partitions tasks
+        ap.error("extract: --partitions does not apply with --resume-base")
     from learnhtml_spark.log import set_verbosity
 
     set_verbosity(args.verbosity)

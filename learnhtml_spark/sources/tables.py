@@ -14,11 +14,19 @@ one protocol both surfaces call:
   per-write dynamic partition overwrite: re-processing a key atomically
   replaces exactly its own files (the parquet-backed stand-in for Iceberg
   ``overwritePartitions``);
+- a span table's bucket is computed, so every call scans the whole input
+  and filters it to the pending buckets; a range exchange on
+  ``(bucket, doc_id)`` (its bounds cost one sampling job) then feeds the
+  kernel ``spark.sql.shuffle.partitions`` tasks, each holding one
+  contiguous run of buckets, so a call writes at most pending + tasks - 1
+  span files (not input splits x pending) and its Python task count does
+  not grow with the input's splits;
 - the metrics are kernel counters, a by-product of that one write: the
   kernel's ``mapInPandas`` adds each batch's per-key (docs, spans,
   errors) tally to a per-call accumulator, counted exactly once as the
-  write's result stage (``run_partitions``), so nothing re-reads the
-  output or the input.  ``doc_count`` is a span table's input documents
+  write's result stage (``run_partitions``; the range exchange is below
+  the kernel, not between it and the writer), so nothing re-reads the
+  output.  ``doc_count`` is a span table's input documents
   per bucket (documents with no output rows count) or a crawl's distinct
   pages with a non-error row per archive;
 - one lineage row (run_id, key, doc/span/error counts, wall, status) per
@@ -69,6 +77,12 @@ def completed_buckets(spark: SparkSession, base_path: str, run_id: str) -> set[i
     return completed_keys(read_lineage(spark, base_path), run_id, "bucket")
 
 
+def check_max_per_call(max_per_call: int | None) -> None:
+    """A per-call cap is None (no cap) or a positive key count."""
+    if max_per_call is not None and max_per_call < 1:
+        raise ValueError(f"max_per_call must be None or >= 1, got {max_per_call}")
+
+
 def run_partitions(
     spark: SparkSession,
     base_path: str,
@@ -93,6 +107,7 @@ def run_partitions(
 
     Returns {processed, skipped, docs, spans, errors} and logs it on one
     INFO line.  Idempotent: a completed run is a no-op on re-invocation."""
+    check_max_per_call(max_per_call)
     done = completed_keys(lineage_table(spark, base_path, lineage_schema), run_id, key)
     pending = sorted(set(candidates) - done)
     if max_per_call is not None:
@@ -134,22 +149,32 @@ def write_extraction_run(
     """Run (or resume) an extraction job: process pending buckets, write
     span output partitioned by bucket, append lineage rows.  ``depth`` /
     ``height`` are the featurizer window, as in ``extract_content_spans``;
-    the model is checked against it before any job.
+    the model is checked against it before any job, and so are
+    ``num_buckets`` and ``max_buckets_per_call`` (``ValueError`` below 1).
+    The kernel runs ``spark.sql.shuffle.partitions`` tasks per call.
 
     Returns a summary dict {processed_buckets, skipped_buckets, docs, spans}.
     Idempotent: a completed run is a no-op on re-invocation.
     """
+    if num_buckets < 1:
+        raise ValueError(f"num_buckets must be >= 1, got {num_buckets}")
     check_model(model_bytes, depth, height)
+    spark = docs.sparkSession
     bucketed = docs.withColumn("bucket", bucket_col(num_buckets))
     # the bucket rides through the kernel as the leading key component
     schema = StructType([LINEAGE["bucket"], *EXTRACTED_SPANS.fields])
 
     def output_for(pending: list, counts: Accumulator) -> DataFrame:
-        batch = bucketed.filter(F.col("bucket").isin(pending))
+        # one contiguous (bucket, doc_id) range per kernel task; the task
+        # count is explicit, or AQE coalesces a few MB of pending input
+        # into a couple of kernel tasks
+        n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        batch = (bucketed.filter(F.col("bucket").isin(pending))
+                 .repartitionByRange(n, "bucket", "doc_id"))
         return keyed_spans(batch, model_bytes, ["bucket", "doc_id"], schema,
                            depth, height, counts)
 
-    s = run_partitions(docs.sparkSession, base_path, run_id, "bucket", LINEAGE,
+    s = run_partitions(spark, base_path, run_id, "bucket", LINEAGE,
                        range(num_buckets), output_for, max_buckets_per_call)
     return {"processed_buckets": s["processed"], "skipped_buckets": s["skipped"],
             "docs": s["docs"], "spans": s["spans"]}

@@ -48,7 +48,12 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 from learnhtml_spark.kernels.document import error_row, extract_rows, tally
 from learnhtml_spark.operators.extract import broadcast_model
 from learnhtml_spark.schemas import EXTRACTED_SPANS
-from learnhtml_spark.sources.tables import completed_keys, lineage_table, run_partitions
+from learnhtml_spark.sources.tables import (
+    check_max_per_call,
+    completed_keys,
+    lineage_table,
+    run_partitions,
+)
 from learnhtml_spark.sources.warc_source import assemble_interleaved, parse_archive
 
 WARC_LINEAGE = StructType(
@@ -171,6 +176,7 @@ def write_warc_run(
     first-pass strip); a NodeClassifier artifact -> the full ML
     extraction path.  Either way through ``warc_spans_fused``.
     """
+    check_max_per_call(max_archives_per_call)  # before the listing job
     manifest = list_archives(spark, warc_dir)
 
     def output_for(pending: list, counts: Accumulator) -> DataFrame:

@@ -4,6 +4,7 @@ error-row contract, the fused WARC plan shape, and session hygiene of the
 span-table sink."""
 
 import os
+import re
 import sys
 
 import pytest
@@ -146,15 +147,16 @@ def test_write_extraction_run_keeps_session_conf(spark, fixture_model, tmp_path)
     assert spark.conf.get(key) == before
 
 
-def _written_plans(spark, path: str) -> list[str]:
+def _written_plans(spark, path: str, details: bool = False) -> list[str]:
     """Physical plan trees of the SQL executions that wrote under
-    ``path``, as the session's SQL status store recorded them."""
+    ``path``, as the session's SQL status store recorded them; with
+    ``details``, the whole formatted plan."""
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     execs = spark._jsparkSession.sharedState().statusStore().executionsList()
     newest = range(max(execs.size() - 20, 0), execs.size())
     plans = (execs.apply(i).physicalPlanDescription() for i in newest)
     # the formatted plan: the node tree, a blank line, then node details
-    return [p.split("\n\n")[0] for p in plans if path in p]
+    return [p if details else p.split("\n\n")[0] for p in plans if path in p]
 
 
 @pytest.mark.parametrize("surface", ["table", "crawl-heuristic", "crawl-model"])
@@ -187,6 +189,103 @@ def test_run_counters_in_write_result_stage(spark, fixture_model, tmp_path, surf
     for i in kernels:  # AQE prints its final and initial plans
         assert "WriteFiles" in "".join(_ancestors(tree, i))
         assert "Exchange" not in "".join(_ancestors(tree, i)), plans[0]
+
+
+def test_table_sink_range_partitions_below_kernel(spark, fixture_model, tmp_path):
+    # the one Exchange of the table surface's write is a range exchange on
+    # (bucket, doc_id) under the kernel's MapInPandas
+    from learnhtml_spark.sources.tables import write_extraction_run
+
+    base = str(tmp_path / "run")
+    docs = docs_from_pairs(spark, [(f"p{i}", split_html_to_spans(PAGE, 2))
+                                   for i in range(6)])
+    write_extraction_run(docs, fixture_model.to_bytes(), base, "r", num_buckets=2)
+    [plan] = [p for p in _written_plans(spark, os.path.join(base, "spans"), True)
+              if "MapInPandas" in p]
+    tree = plan.split("\n\n")[0].splitlines()
+    # AQE prints its final and initial plans: one node id in both
+    exchanges = {i: re.search(r"Exchange \((\d+)\)", line).group(1)
+                 for i, line in enumerate(tree) if "Exchange" in line}
+    assert len(set(exchanges.values())) == 1, plan
+    for i in exchanges:
+        assert "MapInPandas" in "".join(_ancestors(tree, i))
+    node = plan.split(f"({exchanges.popitem()[1]}) Exchange")[1].split("\n\n")[0]
+    assert re.search(r"Arguments: rangepartitioning\(bucket#\d+ ASC NULLS FIRST, "
+                     r"doc_id#\d+ ASC NULLS FIRST, 8\)", node), node
+
+
+def test_table_sink_files_per_call(spark, fixture_model, tmp_path):
+    # each kernel task writes one contiguous (bucket, doc_id) range: a call
+    # writes at most pending + shuffle partitions - 1 span files, and one
+    # pending bucket still spreads over several tasks
+    from learnhtml_spark.corpus import synthesize_page
+    from learnhtml_spark.sources.tables import read_lineage, write_extraction_run
+    from test_warc_run import landed_counts
+
+    ind = str(tmp_path / "docs")
+    pages = [synthesize_page(f"p{i:02d}", f"body words number {i} " * 12)[0]
+             for i in range(48)]
+    docs_from_pairs(spark, [(f"p{i:02d}", sp) for i, sp in enumerate(pages)]
+                    ).repartition(6).write.parquet(ind)
+    docs = spark.read.parquet(ind)
+    assert docs.rdd.getNumPartitions() > 1
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    base = str(tmp_path / "run")
+    spans = tmp_path / "run" / "spans"
+    model = fixture_model.to_bytes()
+
+    def files(buckets):
+        return [f for b in buckets for f in (spans / f"bucket={b}").glob("*.parquet")]
+
+    r1 = write_extraction_run(docs, model, base, "r", num_buckets=4,
+                              max_buckets_per_call=1)
+    assert 1 < len(files(r1["processed_buckets"])) <= n
+    r2 = write_extraction_run(docs, model, base, "r", num_buckets=4)
+    pending = r2["processed_buckets"]
+    assert len(pending) == 3
+    assert len(files(pending)) <= len(pending) + n - 1
+    assert r1["docs"] + r2["docs"] == 48 and r1["spans"] and r2["spans"]
+    # the counters still count each landed row once
+    landed = landed_counts(spark, base, "bucket")
+    for r in read_lineage(spark, base).collect():
+        assert (r.doc_count, r.span_count, r.error_count) == landed[r.bucket], r.bucket
+
+
+def test_sink_rejects_out_of_range_parameters(spark, fixture_model, tmp_path):
+    # a bucket count or per-call cap below 1 fails on the driver, before
+    # any job, on both sink surfaces
+    from learnhtml_spark.sources.tables import write_extraction_run
+    from learnhtml_spark.sources.warc_run import write_warc_run
+
+    d = tmp_path / "warc"
+    d.mkdir()
+    (d / "a.warc").write_bytes(build_warc(["p0"], False))
+    docs = docs_from_pairs(spark, [("p0", _one_span(PAGE))])
+    model = fixture_model.to_bytes()
+    base = str(tmp_path / "run")
+    calls = [
+        ("num_buckets", lambda: write_extraction_run(docs, model, base, "r",
+                                                     num_buckets=0)),
+        ("num_buckets", lambda: write_extraction_run(docs, model, base, "r",
+                                                     num_buckets=-3)),
+    ]
+    for cap in (0, -1):
+        calls += [
+            ("max_per_call", lambda cap=cap: write_extraction_run(
+                docs, model, base, "r", max_buckets_per_call=cap)),
+            ("max_per_call", lambda cap=cap: write_warc_run(
+                spark, str(d), base, "r", max_archives_per_call=cap)),
+        ]
+    sc = spark.sparkContext
+    sc.setJobGroup("sink-params", "driver-side parameter checks")
+    try:
+        for name, call in calls:
+            with pytest.raises(ValueError, match=name):
+                call()
+        assert list(sc.statusTracker().getJobIdsForGroup("sink-params")) == []
+    finally:
+        sc.setJobGroup(None, None)
+    assert not (tmp_path / "run").exists()
 
 
 def _ancestors(tree: list[str], i: int) -> list[str]:

@@ -4,6 +4,8 @@ import os
 import subprocess
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(__file__))
 
 from collections import defaultdict
@@ -269,32 +271,16 @@ def test_cli_train_nested_cv_score_files(tmp_path):
     assert {"candidate", "fold", "f1", "run_nb"} <= set(cv.columns)
 
 
-def test_bucketed_colocated_join_no_exchange(spark, tmp_path):
-    """Catalog-bucketed tables joined on their bucket key must plan a
-    SortMergeJoin with ZERO Exchange — the big×big co-located join shape
-    (sources/bucketed_catalog.py).  Also checks result equality vs a
-    plain join."""
-    from learnhtml_spark.sources.bucketed_catalog import (
-        assert_no_shuffle_join,
-        colocated_join,
-        write_bucketed,
-    )
+def test_cli_resume_extract_rejects_partitions(tmp_path, capsys):
+    """`extract --resume-base` takes its kernel parallelism from
+    spark.sql.shuffle.partitions: --partitions with it is a usage error,
+    raised before a session starts or anything is written."""
+    from learnhtml_spark import cli
 
-    docs = spark.range(200).selectExpr(
-        "id as doc_id", "concat('text ', id) as text"
-    )
-    stats = spark.range(150).selectExpr(
-        "id as doc_id", "id * 7 as n_tokens"
-    )
-    try:
-        write_bucketed(docs, "bdocs", n_buckets=4, path=str(tmp_path / "bdocs"))
-        write_bucketed(stats, "bstats", n_buckets=4, path=str(tmp_path / "bstats"))
-        joined = colocated_join(spark, "bdocs", "bstats")
-        plan = assert_no_shuffle_join(joined)
-        assert "SortMergeJoin" in plan
-        got = sorted((r["doc_id"], r["n_tokens"]) for r in joined.collect())
-        want = sorted((i, i * 7) for i in range(150))
-        assert got == want
-    finally:
-        spark.sql("drop table if exists bdocs")
-        spark.sql("drop table if exists bstats")
+    base = tmp_path / "run"
+    with pytest.raises(SystemExit) as err:
+        cli.main(["extract", "--input", str(tmp_path / "docs"),
+                  "--resume-base", str(base), "--partitions", "4"])
+    assert err.value.code == 2
+    assert "--partitions does not apply with --resume-base" in capsys.readouterr().err
+    assert not base.exists()
