@@ -181,7 +181,7 @@ def source_overlap(docs: DataFrame, k: int = 3) -> DataFrame:
     that decides whether cross-source near-dedup is worth running at all.
     ``overlap_coef = n_common / min(n_a, n_b)`` (Szymkiewicz–Simpson:
     1.0 means the smaller feed's content is wholly contained in the
-    larger's).  Shares ``_shingle_array``'s normalization with the whole
+    larger's).  Shares ``_shingle_sql``'s normalization with the whole
     MinHash family so the numbers compose with ``neardup_*``.
 
     Scale shape: the distinct (source, shingle) projection is one
@@ -191,17 +191,14 @@ def source_overlap(docs: DataFrame, k: int = 3) -> DataFrame:
     band join this is deliberately not).  The per-source counts table is
     ``n_sources`` rows — genuinely broadcast-sized at any corpus scale.
     Output is at most ``n_sources²/2`` rows."""
+    sql = _shingle_sql("_toks", k)
     sh = (
-        docs.select(
-            "source", F.explode(_shingle_array(docs, k)).alias("shingle")
-        )
+        _tokenized(docs, "source")
+        .selectExpr("source", f"explode({sql}) AS shingle")
         .distinct()
         # consumed three times (per-source counts + both join sides);
         # checkpointing the distinct (source, shingle) projection avoids
         # shingling the corpus three times (A/B r7: ~1.87 -> ~1.74s).
-        # Inline shingle expr, not the _with_shingles chain: for explode
-        # consumers the pre-projection measured slower (see shingles())
-        # - A/B here: inline+ckpt [1.54-1.79] vs 2proj+ckpt [1.87-2.47].
         .localCheckpoint(eager=False)
     )
     per = sh.groupBy("source").agg(F.count("*").cast("long").alias("n_sh"))
@@ -237,69 +234,87 @@ def source_overlap(docs: DataFrame, k: int = 3) -> DataFrame:
     )
 
 
-def _shingle_array_of(toks, k: int = 3):
-    """Column expr: distinct word k-gram shingles over a TOKEN-ARRAY
-    column (``_with_shingles`` materializes the tokens first so the
-    regex split runs once per row — see that helper's note).
+def _shingle_sql(toks: str, k: int) -> str:
+    """SQL text: the distinct word k-gram shingles (array<string>) of the
+    token-array column ``toks`` — the one shingle definition behind every
+    shingle consumer, batch and stream.  ``k < 1`` raises ValueError here,
+    before any plan is built.
 
     Built from ``k`` shifted slices zipped together rather than a
     ``transform`` over positions with ``element_at(toks, i+j)`` lambdas:
-    the lambda form re-evaluates the underlying ``split`` of the whole
-    text per element reference (no common-subexpression elimination
-    inside higher-order functions), which made shingling O(words²·k)
-    regex splits per document — measured 19 s for 5,000 small docs at
-    sf0.1, ~25× the slice form."""
-    n = F.size(toks)
-    parts = [F.slice(toks, j + 1, n - (k - 1)) for j in range(k)]
-    grams = parts[0]
-    for p in parts[1:]:
-        grams = F.zip_with(grams, p, lambda a, b: F.concat(a, F.lit(" "), b))
-    grams = F.when(n < k, F.array(F.concat_ws(" ", toks))).otherwise(grams)
+    the lambda form re-evaluates its array argument per element reference
+    (no common-subexpression elimination inside higher-order functions),
+    which made shingling O(words²·k) per document — measured 19 s for
+    5,000 small docs at sf0.1, ~25× the slice form.
+
+    Callers project the token array first (``_tokenized``): an attribute
+    reference costs nothing per use, where an inline tokenizer would be
+    split k+2 times per row (Spark does not CSE it).  Expression text,
+    not Column DSL, because each DSL operator costs the driver several
+    py4j round trips; the regex tokenizer itself stays DSL, since the
+    meaning of a regex literal in SQL text depends on
+    ``spark.sql.parser.escapedStringLiterals``."""
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
+    n = f"size({toks})"
+    grams = f"slice({toks}, 1, {n} - {k - 1})"
+    for j in range(1, k):
+        grams = (
+            f"zip_with({grams}, slice({toks}, {j + 1}, {n} - {k - 1}), "
+            "(a, b) -> concat(a, ' ', b))"
+        )
     # empty/whitespace-only docs would otherwise emit one blank shingle
     # ("" or " ", depending on which whitespace survives the space-only
     # trim) and ALL collide on it in the self-join paths (bounded by the
     # frequency cap, but an accidental O(empty²) hazard — VERDICT r3 #4);
     # an empty doc has no shingles, full stop
-    return F.array_distinct(F.filter(grams, lambda s: F.trim(s) != F.lit("")))
+    return (
+        f"array_distinct(filter(CASE WHEN {n} < {k} "
+        f"THEN array(concat_ws(' ', {toks})) ELSE {grams} END, "
+        "s -> trim(s) != ''))"
+    )
+
+
+def _tokenized(docs: DataFrame, *cols: str) -> DataFrame:
+    """``docs`` projected to ``cols`` + the lowercased token array as
+    ``_toks`` — the one tokenize step in front of every ``_shingle_sql``
+    consumer.  Catalyst keeps this projection separate from a consumer
+    that references ``_toks`` several times (CollapseProject does not
+    duplicate the non-cheap split), so the regex runs once per row."""
+    return docs.select(*cols, tokens(F.lower(F.col("text"))).alias("_toks"))
 
 
 def _shingle_array(docs: DataFrame, k: int = 3):
-    """Column expr: distinct word k-gram shingles of ``text`` (array) —
-    single-projection form for callers that need the expression inline.
-    Prefer ``_with_shingles`` on hot paths: embedding the tokenizer here
-    makes the projection reference ``split(text)`` k+2 times and Spark
-    does not CSE it (measured ~35% slower than tokenizing in a prior
-    projection)."""
-    return _shingle_array_of(tokens(F.lower(F.col("text"))), k)
+    """Column expr: ``_shingle_sql`` over the tokens of ``text``, for a
+    caller that needs the shingle array inline in one projection.  The
+    DSL token array is bound to the SQL lambda variable ``t`` (a
+    one-element ``transform``), so the split still runs once per row."""
+    shingle_fn = F.expr(f"t -> {_shingle_sql('t', k)}")
+    toks = F.array(tokens(F.lower(F.col("text"))))
+    return F.call_function("transform", toks, shingle_fn)[0]
 
 
 def _with_shingles(docs: DataFrame, k: int, cols: tuple[str, ...], out: str):
-    """``docs`` projected to ``cols`` + the shingle array as ``out``,
-    with the token array materialized in a PRIOR projection so the regex
-    split of ``text`` is evaluated once per row instead of k+2 times
-    (Catalyst's CollapseProject deliberately keeps the two projections
-    separate because merging would duplicate the non-cheap split —
-    measured ~35% faster at sf0.1, identical gram arrays)."""
-    base = docs.select(
-        *cols, tokens(F.lower(F.col("text"))).alias("_toks")
-    )
-    return base.select(
-        *cols, _shingle_array_of(F.col("_toks"), k).alias(out)
-    )
+    """``docs`` projected to ``cols`` + the shingle array as ``out`` —
+    for consumers that take the array's ``size`` or explode a shared,
+    checkpointed copy of it."""
+    sql = _shingle_sql("_toks", k)
+    return _tokenized(docs, *cols).selectExpr(*cols, f"{sql} AS {out}")
 
 
 def shingles(docs: DataFrame, k: int = 3) -> DataFrame:
     """(doc_id, shingle) distinct word k-gram shingles per document.
 
-    Deliberately the SINGLE-projection inline form: for an explode
-    consumer the two-projection ``_with_shingles`` chain measured ~1.8×
-    SLOWER (decontaminate A/B r7: ~1.6 → ~2.9s) — the generator path
-    evaluates the inline expression once per row anyway, so the prior
-    projection only adds array materialization; ``_with_shingles``
-    remains the right form for size()-style consumers and for shared
-    checkpointed bases."""
-    return docs.select(
-        "doc_id", F.explode(_shingle_array(docs, k)).alias("shingle")
+    The tokens are projected once and the shingle expression is exploded
+    over them, so neither the split nor the shingle array is evaluated
+    or materialized twice.  Measured at sf0.1 (4 cores, ``bench_extra.py
+    --reps 5``, three interleaved sessions per side, median of session
+    medians) against the previous form, which split the text inline in
+    the explode and was built in Column DSL: decontaminate 2.38 → 1.48 s,
+    contamination_report 2.07 → 1.28 s."""
+    sql = _shingle_sql("_toks", k)
+    return _tokenized(docs, "doc_id").selectExpr(
+        "doc_id", f"explode({sql}) AS shingle"
     )
 
 
@@ -377,9 +392,9 @@ _MH_P = 2147483647
 
 def _check_lsh_params(num_hashes: int, k: int, band_size: int = 1) -> None:
     """ValueError at call time for MinHash/LSH parameters outside their
-    ranges, which would otherwise fail deep in plan building (``k=0``:
-    IndexError; ``band_size=0``: ZeroDivisionError) or silently drop the
-    trailing ``num_hashes % band_size`` minhashes from every band."""
+    ranges, which would otherwise fail deep in plan building
+    (``band_size=0``: ZeroDivisionError) or silently drop the trailing
+    ``num_hashes % band_size`` minhashes from every band."""
     if num_hashes < 1:
         raise ValueError(f"num_hashes must be >= 1, got {num_hashes}")
     if k < 1:
@@ -410,32 +425,52 @@ def _mh_constants(num_hashes: int):
     return a, b
 
 
+def _shingle_hash_sql(s: str) -> str:
+    """SQL text: the 32-bit hash of shingle ``s`` every MinHash function
+    permutes — the first 8 hex digits of ONE md5 (portable: DuckDB
+    ``('0x'||substr(md5,..))::bigint``)."""
+    return f"CAST(conv(substring(md5({s}), 1, 8), 16, 10) AS BIGINT)"
+
+
+def _minhash_sql(h: str, a: int, b: int) -> str:
+    """SQL text: universal hash ``(a*h + b) mod P`` of hash ``h``; the
+    j-th minhash is its minimum over a document's shingles."""
+    return f"({a} * {h} + {b}) % {_MH_P}"
+
+
+def _band_structs_sql(mh: list[str], band_size: int) -> str:
+    """SQL text: array of ``named_struct(band, band_sig)``, one per band
+    of ``band_size`` consecutive minhashes ``mh`` (SQL expressions);
+    ``band_sig`` is the band's sorted minhashes joined with '|'."""
+    return "array({})".format(", ".join(
+        f"named_struct('band', {b}, 'band_sig', concat_ws('|', CAST("
+        f"sort_array(array({', '.join(mh[b * band_size:(b + 1) * band_size])}))"
+        " AS ARRAY<STRING>)))"
+        for b in range(len(mh) // band_size)
+    ))
+
+
 def minhash_signatures(docs: DataFrame, num_hashes: int = 16, k: int = 3) -> DataFrame:
     """Wide minhash signature per doc: (doc_id, mh1..mhN) where
-    minhash_j = min over shingles of (A_j*h + B_j) mod P, h = first 8 hex
-    digits of ONE md5(shingle) — portable (DuckDB:
-    ('0x'||substr(md5,..))::bigint) and 16× cheaper than hashing every
-    shingle once per function.
+    minhash_j = min over shingles of (A_j*h + B_j) mod P, h =
+    ``_shingle_hash_sql`` — one md5 per shingle, 16× cheaper than hashing
+    every shingle once per function.
 
     ONE shuffle: all N mins are aggregated in a single groupBy over the
     shingle rows; map-side combine collapses each partition to one row
-    per doc before the exchange."""
+    per doc before the exchange.  The grouped form measured faster in
+    batch than folding the hashes per row (``band_signatures_narrow``'s
+    ``aggregate``) or a per-hash ``array_min(transform(...))``; see
+    ROADMAP Direction 3."""
     _check_lsh_params(num_hashes, k)
     A, B = _mh_constants(num_hashes)
-    sh = shingles(docs, k)
-    hashed = sh.select(
-        "doc_id",
-        F.conv(F.substring(F.md5("shingle"), 1, 8), 16, 10)
-        .cast("long")
-        .alias("h"),
+    hashed = shingles(docs, k).selectExpr(
+        "doc_id", f"{_shingle_hash_sql('shingle')} AS h"
     )
-    aggs = [
-        F.min((F.lit(A[j]) * F.col("h") + F.lit(B[j])) % F.lit(_MH_P)).alias(
-            f"mh{j + 1}"
-        )
-        for j in range(num_hashes)
-    ]
-    return hashed.groupBy("doc_id").agg(*aggs)
+    return hashed.groupBy("doc_id").agg(*[
+        F.expr(f"min({_minhash_sql('h', a, b)}) AS mh{j + 1}")
+        for j, (a, b) in enumerate(zip(A, B))
+    ])
 
 
 def lsh_band_rows(
@@ -459,32 +494,8 @@ def lsh_band_rows(
     sig = minhash_signatures(docs, num_hashes, k)
     if checkpoint_sig:
         sig = sig.localCheckpoint(eager=False)
-    n_bands = num_hashes // band_size
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws(
-                    "|",
-                    F.transform(
-                        F.sort_array(
-                            F.array(
-                                *[
-                                    F.col(f"mh{b * band_size + j + 1}")
-                                    for j in range(band_size)
-                                ]
-                            )
-                        ),
-                        lambda c: c.cast("string"),
-                    ),
-                ).alias("band_sig"),
-            )
-            for b in range(n_bands)
-        ]
-    )
-    return sig.select(
-        "doc_id", F.explode(band_structs).alias("x")
-    ).select("doc_id", "x.band", "x.band_sig")
+    mh = [f"mh{j + 1}" for j in range(num_hashes)]
+    return sig.selectExpr("doc_id", f"inline({_band_structs_sql(mh, band_size)})")
 
 
 def minhash_lsh_candidates(

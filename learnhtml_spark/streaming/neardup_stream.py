@@ -31,9 +31,10 @@ Scale notes:
   (a doc's bands always share a micro-batch — they come from one row).
 
 Reference parity: extends learnhtml beyond its batch corpus tooling
-(SURVEY.md §2 training-pipeline operators); hashing/banding is identical
-to ``functions.dedup.minhash_lsh_candidates`` (same md5 + universal-hash
-constants), so stream and batch agree on candidates.
+(SURVEY.md §2 training-pipeline operators); shingling, hashing and
+banding are built from the same SQL helpers as
+``functions.dedup.lsh_band_rows``, so stream and batch agree on
+candidates.
 """
 
 from __future__ import annotations
@@ -43,10 +44,14 @@ from pyspark.sql import functions as F
 
 from learnhtml_spark.functions.dedup import (
     _MH_P,
+    _band_structs_sql,
+    _check_lsh_params,
     _mh_constants,
-    _shingle_array_of,
+    _minhash_sql,
+    _shingle_hash_sql,
+    _shingle_sql,
+    _tokenized,
 )
-from learnhtml_spark.functions.textstats import tokens
 
 
 def band_signatures_narrow(
@@ -54,72 +59,34 @@ def band_signatures_narrow(
 ) -> DataFrame:
     """(doc_id, band, band_sig) computed WITHOUT any shuffle or stateful
     aggregation — streaming-safe and value-identical to the batch
-    ``minhash_signatures`` + banding path (min over the same universal
-    hashes of the same md5 shingle hashes; band_sig = sorted minhashes
-    joined with '|').
+    ``lsh_band_rows``: both are built from the same shingle, hash,
+    minhash and band SQL helpers of ``functions.dedup``.
 
-    Everything folds in ONE ``aggregate`` expression: the merge lambda
-    updates all ``num_hashes`` running minima per shingle hash, and the
-    finish lambda (where the accumulator is a bound variable — evaluated
-    once, the HOF re-evaluation hazard of r3 cannot apply) assembles the
-    per-band sorted signature strings.  Documents with no shingles
-    (empty/whitespace text) keep the sentinel accumulator and are
-    filtered AFTER the explode, matching their absence from the batch
-    signature table."""
-    n_bands = num_hashes // band_size
+    Everything folds in ONE ``aggregate`` expression over the shingle
+    hashes: the merge lambda updates all ``num_hashes`` running minima,
+    and the finish lambda (where the accumulator is a bound variable —
+    evaluated once, the HOF re-evaluation hazard of r3 cannot apply)
+    assembles the per-band sorted signature strings.  Documents with no
+    shingles (empty/whitespace text) keep the sentinel accumulator and
+    are filtered AFTER the explode, matching their absence from the
+    batch signature table."""
+    _check_lsh_params(num_hashes, k, band_size)
     A, B = _mh_constants(num_hashes)
-
-    # tokens materialized in a prior projection so the regex split runs
-    # once per row (the batch `_with_shingles` rationale; streaming-safe —
-    # it is just a narrow projection chain)
-    docs = docs.select(
-        "doc_id", tokens(F.lower(F.col("text"))).alias("_toks")
+    hashes = f"transform({_shingle_sql('_toks', k)}, s -> {_shingle_hash_sql('s')})"
+    init = "array({})".format(", ".join([f"CAST({_MH_P} AS BIGINT)"] * num_hashes))
+    merge = "(acc, h) -> array({})".format(", ".join(
+        f"least(acc[{j}], {_minhash_sql('h', a, b)})"
+        for j, (a, b) in enumerate(zip(A, B))
+    ))
+    finish = "acc -> " + _band_structs_sql(
+        [f"acc[{j}]" for j in range(num_hashes)], band_size
     )
-    h_arr = F.transform(
-        _shingle_array_of(F.col("_toks"), k),
-        lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long"),
-    )
-    init = F.array(*[F.lit(_MH_P).cast("long") for _ in range(num_hashes)])
-
-    def merge(acc, h):
-        return F.array(
-            *[
-                F.least(
-                    acc[j], (F.lit(A[j]) * h + F.lit(B[j])) % F.lit(_MH_P)
-                )
-                for j in range(num_hashes)
-            ]
-        )
-
-    def finish(acc):
-        return F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.concat_ws(
-                        "|",
-                        F.transform(
-                            F.sort_array(
-                                F.array(
-                                    *[
-                                        acc[b * band_size + j]
-                                        for j in range(band_size)
-                                    ]
-                                )
-                            ),
-                            lambda c: c.cast("string"),
-                        ),
-                    ).alias("band_sig"),
-                )
-                for b in range(n_bands)
-            ]
-        )
-
-    bands = F.aggregate(h_arr, init, merge, finish)
     sentinel = "|".join([str(_MH_P)] * band_size)
     return (
-        docs.select("doc_id", F.explode(bands).alias("x"))
-        .select("doc_id", F.col("x.band").alias("band"), F.col("x.band_sig").alias("band_sig"))
+        _tokenized(docs, "doc_id")
+        .selectExpr(
+            "doc_id", f"inline(aggregate({hashes}, {init}, {merge}, {finish}))"
+        )
         .filter(F.col("band_sig") != sentinel)
     )
 
