@@ -123,16 +123,6 @@ def cmd_train(args):
     from learnhtml_spark.model import NodeClassifier
     from learnhtml_spark.training import training_frames
 
-    if args.legacy_full:
-        import runpy
-
-        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        runpy.run_path(
-            os.path.join(repo, "scripts", "train_model.py"),
-            run_name="__main__",
-        )
-        return
-
     params = {}
     if args.param_file:
         with open(args.param_file) as fh:
@@ -356,8 +346,6 @@ def main(argv=None):
     p.add_argument("--spark-search", action="store_true",
                    help="fan the (candidate x fold) grid out over Spark")
     p.add_argument("--cores", default="*")
-    p.add_argument("--legacy-full", action="store_true",
-                   help="run the round-4 full training script instead")
     p.set_defaults(fn=cmd_train)
 
     p = sub.add_parser(

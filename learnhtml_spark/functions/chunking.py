@@ -22,7 +22,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from learnhtml_spark.functions.dedup import shingles
+from learnhtml_spark.functions.dedup import (
+    _shingle_base,
+    _with_shingles,
+    shingles,
+)
 from learnhtml_spark.functions.textstats import tokens
 
 
@@ -185,6 +189,17 @@ def tfidf_topk(docs: DataFrame, k: int = 5) -> DataFrame:
     )
 
 
+def _eval_ids(docs: DataFrame, eval_n: int) -> DataFrame:
+    """(doc_id,) of the ``eval_n`` smallest doc_ids — the deterministic
+    stand-in benchmark of the decontamination family.  Broadcast into
+    several branches by every caller, so it is checkpointed lazily: the
+    corpus-wide orderBy+limit scan runs once, not per use."""
+    return (
+        docs.select("doc_id").orderBy("doc_id").limit(eval_n)
+        .localCheckpoint(eager=False)
+    )
+
+
 def decontaminate(
     docs: DataFrame, eval_n: int = 20, k: int = 5
 ) -> DataFrame:
@@ -204,12 +219,7 @@ def decontaminate(
     rows BEFORE shingling (ADVICE r4: joining after ``shingles`` shingled
     the full corpus twice — Spark cannot push an equi-join below the
     explode, so the filter must sit on the base table)."""
-    # eval_ids is broadcast into several branches below; checkpoint it
-    # lazily so the corpus-wide orderBy+limit scan runs once, not per use
-    eval_ids = (
-        docs.select("doc_id").orderBy("doc_id").limit(eval_n)
-        .localCheckpoint(eager=False)
-    )
+    eval_ids = _eval_ids(docs, eval_n)
     eval_docs = docs.join(F.broadcast(eval_ids), "doc_id")
     eval_grams = shingles(eval_docs, k).select("shingle").distinct()
     corpus_sh = shingles(docs, k).join(F.broadcast(eval_ids), "doc_id", "left_anti")
@@ -298,12 +308,7 @@ def bloom_decontaminate(
             )
         eval_ids = None
     else:
-        # eval_ids is broadcast into several branches below; checkpoint it
-        # lazily so the corpus-wide orderBy+limit scan runs once, not per use
-        eval_ids = (
-            docs.select("doc_id").orderBy("doc_id").limit(eval_n)
-            .localCheckpoint(eager=False)
-        )
+        eval_ids = _eval_ids(docs, eval_n)
         eval_grams = (
             shingles(docs.join(F.broadcast(eval_ids), "doc_id"), k)
             .select("shingle")
@@ -345,8 +350,6 @@ def bloom_decontaminate(
         # plan entirely.  Same md5/double-hash probe arithmetic, verified
         # row-identical; docs with no shingles report 0s exactly as the
         # restore join did.  A/B at sf0.1: ~3.85 -> ~3.15s.
-        from learnhtml_spark.functions.dedup import _with_shingles
-
         probe_expr = (
             "size(filter(transform(_sh, s -> named_struct("
             " 'h1', cast(conv(substring(md5(s), 1, 13), 16, 10) as bigint),"
@@ -449,33 +452,20 @@ def fuzzy_decontaminate(
     Tie-break: at equal containment the smallest eval_id wins (struct
     min over (-overlap, eval_id) — overlap ties are containment ties,
     n_grams being per-doc constant)."""
-    # eval_ids is broadcast into several branches below; checkpoint it
-    # lazily so the corpus-wide orderBy+limit scan runs once, not per use
-    eval_ids = (
-        docs.select("doc_id").orderBy("doc_id").limit(eval_n)
-        .localCheckpoint(eager=False)
-    )
+    eval_ids = _eval_ids(docs, eval_n)
     eval_docs = docs.join(F.broadcast(eval_ids), "doc_id")
     eval_grams = (
         shingles(eval_docs, k)
         .select(F.col("doc_id").alias("eval_id"), "shingle")
         .distinct()
     )
-    # ONE shared per-doc shingle-array table behind a lazy checkpoint:
-    # the overlap branch explodes it and the n_grams branch takes its
-    # size — previously each branch re-ran the whole tokenize+shingle
-    # build (Catalyst does not CSE subtrees across aggregates).  A/B r7:
-    # ~3.2 -> ~1.6s at sf0.1, row-identical.
-    from learnhtml_spark.functions.dedup import _with_shingles
-
-    base = _with_shingles(
-        docs.join(F.broadcast(eval_ids), "doc_id", "left_anti"),
-        k,
-        ("doc_id",),
-        "_sh",
-    ).localCheckpoint(eager=False)
-    corpus_sh = base.select("doc_id", F.explode("_sh").alias("shingle"))
-    n_grams = base.select("doc_id", F.size("_sh").alias("n_grams")).filter(
+    # the overlap branch explodes the shared shingle base, n_grams takes
+    # its size: the corpus is shingled once (A/B r7: ~3.2 -> ~1.6s at
+    # sf0.1, row-identical, against one shingle build per branch)
+    corpus_sh, sizes = _shingle_base(
+        docs.join(F.broadcast(eval_ids), "doc_id", "left_anti"), k
+    )
+    n_grams = sizes.selectExpr("doc_id", "n_sh AS n_grams").filter(
         F.col("n_grams") > 0
     )
     ov = (
@@ -529,12 +519,7 @@ def contamination_report(
     the number of eval docs containing that gram (<= eval_n).  Eval
     items with zero leakage are restored by a left join (a clean
     benchmark must appear as an explicit zero row)."""
-    # eval_ids is broadcast into several branches below; checkpoint it
-    # lazily so the corpus-wide orderBy+limit scan runs once, not per use
-    eval_ids = (
-        docs.select("doc_id").orderBy("doc_id").limit(eval_n)
-        .localCheckpoint(eager=False)
-    )
+    eval_ids = _eval_ids(docs, eval_n)
     eval_docs = docs.join(F.broadcast(eval_ids), "doc_id")
     eg = shingles(eval_docs, k).select(
         F.col("doc_id").alias("eval_doc_id"), "shingle"

@@ -15,14 +15,14 @@ NOTES = {
     "node_features": "scan -> python stage, no shuffle",
     "label_ratios": "scan -> python stages, no shuffle",
     "minhash_lsh": "sig agg (1 shuffle, 16 mins in one groupBy) + band-group cap window + band self-join + distinct",
-    "neardup_pipe": "LSH candidates -> Jaccard verify over candidate pairs only; size joins AQE-sided (no forced per-doc broadcast)",
+    "neardup_pipe": "LSH candidates -> Jaccard verify over candidate pairs only, off ONE checkpointed shingle base (explode + narrow sizes; 2 text splits in all); size joins AQE-sided (no forced per-doc broadcast)",
     "neardup_groups": "keeper-edge scale-default: band rows -> group-min agg -> join back on same key -> per-doc min; O(m) per band group",
     "dup_clusters": "alternating large-star/small-star contraction, O(log d) rounds (plan shown is the CONVERGED star-labels read off localCheckpoint blocks; each round was 2 aggs + 2 joins over the shrinking edge list)",
     "gopher_quality": "narrow repetition/length exprs + two hash aggs for top word + one pk join",
     "simhash_neardup": "Manku-table: one sig aggregate -> capped block equi-join -> popcount verify (AQE-sided sig joins)",
     "tfidf_topk": "tf agg -> df agg -> token join (vocab-sized, AQE) -> doc_id rank window; N = broadcast one-row count in-plan (no eager docs.count())",
     "pack_sequences": "md5 bucket -> two-phase distributed cumsum (literal-boundary chunks + broadcast offsets) -> integer bin math",
-    "simhash": "SINGLE hash-aggregate: 16 vote sums in one groupBy, no bit explode",
+    "simhash": "SINGLE hash-aggregate: 16 vote sums in one groupBy, no bit explode; built as SQL expression text (~190 py4j commands)",
     "ann_topk": "bucket inline (mapInPandas) -> ONE shuffle (groupBy bucket) -> numpy gram + top-k per bucket (applyInPandas)",
     "ivf_topk": "IVF-flat: centroid broadcast -> inline cell assignment (mapInPandas) -> ONE shuffle -> per-cell gram top-k",
     "sibling_pos": "two-phase rank: literal-boundary chunk ids (pure row fn) + (chunk,group) window + broadcast offsets",

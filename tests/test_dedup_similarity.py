@@ -69,7 +69,7 @@ def test_simhash_single_shuffle(docs):
     plan = simhash(docs, bits=16)._jdf.queryExecution().executedPlan().toString()
     # one hash-aggregate pair -> exactly one shuffle; no per-bit explosion
     assert plan.count("Exchange") == 1
-    assert "Generate" not in plan.split("HashAggregate")[0] or True
+    assert plan.count("Generate") == 1  # the token explode, no bit explode
     # value type is bigint on the Spark side (oracle casts too)
     assert dict(simhash(docs).dtypes)["simhash"] == "bigint"
 
@@ -492,13 +492,9 @@ def test_lsh_band_rows_plan_tokenizes_once(docs):
     assert plan.count("Exchange") == 1
 
 
-def test_lsh_band_rows_build_py4j_commands(docs, monkeypatch):
-    """Building the band-row plan stays a few hundred py4j commands (the
-    Column-DSL build issued over 2,000, ~0.3 s of driver time per call).
-    Counted, not timed, so the guard does not depend on the machine."""
+def _py4j_commands(monkeypatch, build) -> int:
+    """py4j commands the driver sends while ``build()`` runs."""
     import py4j.clientserver
-
-    from learnhtml_spark.functions.dedup import lsh_band_rows
 
     sent = []
     send = py4j.clientserver.ClientServerConnection.send_command
@@ -510,8 +506,76 @@ def test_lsh_band_rows_build_py4j_commands(docs, monkeypatch):
     monkeypatch.setattr(
         py4j.clientserver.ClientServerConnection, "send_command", counting_send
     )
-    lsh_band_rows(docs)
-    assert 0 < len(sent) < 1000
+    build()
+    return len(sent)
+
+
+def test_lsh_band_rows_build_py4j_commands(docs, monkeypatch):
+    """Building the band-row plan stays a few hundred py4j commands (the
+    Column-DSL build issued over 2,000, ~0.3 s of driver time per call).
+    Counted, not timed, so the guard does not depend on the machine."""
+    from learnhtml_spark.functions.dedup import lsh_band_rows
+
+    assert 0 < _py4j_commands(monkeypatch, lambda: lsh_band_rows(docs)) < 1000
+
+
+def test_simhash_build_py4j_commands(docs, monkeypatch):
+    """Building the 64-bit simhash plan stays under 1,000 py4j commands
+    (the per-bit Column-DSL build issued ~9,600)."""
+    from learnhtml_spark.functions.dedup import simhash
+
+    assert 0 < _py4j_commands(monkeypatch, lambda: simhash(docs, bits=64)) < 1000
+
+
+def test_neardup_pairs_plan_tokenizes_twice(docs):
+    """neardup_pairs splits the text twice in its executed plan: once for
+    the candidate bands, once for the shared shingle base that feeds both
+    verify sides and the sizes (it was 6)."""
+    from learnhtml_spark.functions.dedup import neardup_pairs
+
+    plan = neardup_pairs(docs)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("split(") <= 2
+
+
+@pytest.mark.parametrize("call", [
+    ("minhash_lsh_candidates", {"max_band_group": 0}),
+    ("minhash_lsh_candidates", {"max_band_group": -3}),
+    ("neardup_pairs", {"max_band_group": 0}),
+    ("ngram_jaccard_pairs", {"max_shingle_freq": 0}),
+    ("simhash_neardup", {"max_block_group": 0}),
+    ("simhash_neardup", {"max_hamming": -1}),
+    ("simhash_neardup", {"n_blocks": 0, "max_hamming": -1}),
+    ("simhash_neardup", {"n_blocks": -4}),
+], ids=lambda c: c[0] + ":" + ",".join(f"{k}={v}" for k, v in c[1].items()))
+def test_pair_caps_out_of_range_raise_before_any_job(spark, docs, call):
+    """Out-of-range group caps and simhash block parameters raise
+    ValueError on the driver (they returned 0 rows, or ZeroDivisionError
+    for n_blocks=0), and no Spark job runs first."""
+    from learnhtml_spark.functions import dedup
+
+    name, params = call
+    sc = spark.sparkContext
+    sc.setJobGroup("pair-caps", "driver-side cap checks")
+    try:
+        with pytest.raises(ValueError):
+            getattr(dedup, name)(docs, **params)
+        assert list(sc.statusTracker().getJobIdsForGroup("pair-caps")) == []
+    finally:
+        sc.setJobGroup(None, None)
+
+
+def test_pair_caps_lower_bound_is_valid(spark):
+    """A cap of 1 is in range: groups of one row survive it, so a pair
+    sharing exactly one shingle of frequency 2 is dropped, while a cap of
+    2 keeps it."""
+    from learnhtml_spark.functions.dedup import ngram_jaccard_pairs
+
+    df = spark.createDataFrame(
+        [(1, "alpha beta gamma"), (2, "alpha beta gamma")],
+        "doc_id long, text string",
+    )
+    assert ngram_jaccard_pairs(df, max_shingle_freq=2).count() == 1
+    assert ngram_jaccard_pairs(df, max_shingle_freq=1).count() == 0
 
 
 def test_group_topk_matches_naive_window(spark):
@@ -754,6 +818,21 @@ def test_simhash_neardup_identical_and_cap(spark):
 
     with pytest.raises(ValueError, match="pigeonhole"):
         simhash_neardup(df, max_hamming=4, n_blocks=4)
+
+
+def test_simhash_neardup_one_64bit_block(spark, docs):
+    """One 64-bit block (bits=64, n_blocks=1, max_hamming=0): the block
+    mask is all 64 bits, so the output is exactly the pairs with equal
+    signatures (a 2^64-1 mask literal failed to build)."""
+    from learnhtml_spark.functions.dedup import simhash, simhash_neardup
+
+    sig = {r["doc_id"]: r["simhash"] for r in simhash(docs, bits=64).collect()}
+    want = {(a, b) for a in sig for b in sig if a < b and sig[a] == sig[b]}
+    got = {
+        (r["doc_a"], r["doc_b"])
+        for r in simhash_neardup(docs, bits=64, max_hamming=0, n_blocks=1).collect()
+    }
+    assert got == want and (1, 2) in got
 
 
 def test_tfidf_topk_hand_checked(spark):
