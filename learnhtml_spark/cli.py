@@ -22,8 +22,13 @@ DEFAULT_MODEL = os.path.join(
 
 
 def _session(cores: str):
+    """The active session as it is (the caller's conf stays theirs), or a
+    new local one with the CLI's own settings."""
     from pyspark.sql import SparkSession
 
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
     return (
         SparkSession.builder.master(f"local[{cores}]")
         .appName("learnhtml-spark-cli")

@@ -192,8 +192,10 @@ def tfidf_topk(docs: DataFrame, k: int = 5) -> DataFrame:
 def _eval_ids(docs: DataFrame, eval_n: int) -> DataFrame:
     """(doc_id,) of the ``eval_n`` smallest doc_ids — the deterministic
     stand-in benchmark of the decontamination family.  Broadcast into
-    several branches by every caller, so it is checkpointed lazily: the
-    corpus-wide orderBy+limit scan runs once, not per use."""
+    several branches by every caller, so it is checkpointed
+    (``eager=False``; under AQE creating the checkpoint already runs the
+    plan's shuffle map stages): the corpus-wide orderBy+limit scan runs
+    once, not per use."""
     return (
         docs.select("doc_id").orderBy("doc_id").limit(eval_n)
         .localCheckpoint(eager=False)

@@ -320,9 +320,11 @@ def shingles(docs: DataFrame, k: int = 3) -> DataFrame:
 
 def _shingle_base(docs: DataFrame, k: int) -> tuple[DataFrame, DataFrame]:
     """((doc_id, shingle), (doc_id, n_sh)): the exploded distinct shingles
-    and the per-doc shingle counts, both read off ONE lazily checkpointed
-    ``_with_shingles`` table — the shingle base every Jaccard verifier
-    shares.  The sizes come narrow (the array's ``size``, no aggregate);
+    and the per-doc shingle counts, both read off ONE
+    ``localCheckpoint(eager=False)`` of the ``_with_shingles`` table — the
+    shingle base every Jaccard verifier shares.  No action runs here, but
+    under AQE creating the checkpoint already runs the shuffle map stages
+    of any exchange in ``docs``' plan.  The sizes come narrow (the array's ``size``, no aggregate);
     without the checkpoint each consumer re-runs the tokenize+shingle
     build, since Catalyst does not share subtrees across joins (A/B r7 on
     ``ngram_jaccard_pairs``: ~1.9 -> ~1.1s, identical rows)."""
@@ -532,8 +534,11 @@ def lsh_band_rows(
     Banding is pure array work on the wide minhash signature — the only
     shuffle below this point is the signature aggregation itself.
 
-    ``checkpoint_sig`` lazily checkpoints the compact per-doc signature
-    table (doc_id + num_hashes ints): set it when the band rows feed a
+    ``checkpoint_sig`` checkpoints the compact per-doc signature table
+    (doc_id + num_hashes ints) with ``localCheckpoint(eager=False)``; under
+    AQE creating that checkpoint already runs the signature aggregate's
+    shuffle map stage, and the first downstream job computes the rest.
+    Set it when the band rows feed a
     self-join whose two sides would otherwise re-run the whole
     shingle→minhash pipeline (A/B r7 on the candidate join: ~8% off);
     leave it off when the caller checkpoints the band rows itself
@@ -821,8 +826,10 @@ def _star_contract(edges: DataFrame, max_iter: int) -> tuple[DataFrame, int]:
     - **distributed** otherwise: the Spark rounds below.
 
     Distributed round economics (optimization round, guide §1-§2): each
-    round is ONE fused small∘large plan behind a LAZY ``localCheckpoint``
-    whose materialization is triggered by the signature aggregate itself
+    round is ONE fused small∘large plan behind a
+    ``localCheckpoint(eager=False)`` (under AQE, creating it already runs
+    the plan's shuffle map stages) whose materialization is triggered by
+    the signature aggregate itself
     — one driver-synchronized job per round instead of the previous four
     (two eager checkpoints + two signature collects), and the window-min
     form of the star operators (see ``_large_star``) drops one Exchange
@@ -913,9 +920,11 @@ def dup_clusters(
     keeper A<B would leave B edgeless), which breaks transitivity."""
     from pyspark.sql import Window
 
-    # the minhash signature is computed ONCE (bands checkpointed lazily —
-    # the first downstream job materializes it); edges and nodes derive
-    # from the materialized blocks.  grp_min is a window min over the
+    # the minhash signature is computed ONCE (bands checkpointed with
+    # eager=False: under AQE creating the checkpoint already runs the
+    # signature aggregate's shuffle map stage, and the first downstream
+    # job materializes the rest); edges and nodes derive from the
+    # materialized blocks.  grp_min is a window min over the
     # band rows (one exchange) instead of an aggregate joined back on the
     # same key (two exchanges of the band rows) — same groups, same min.
     bands = lsh_band_rows(docs, num_hashes, band_size, k).localCheckpoint(

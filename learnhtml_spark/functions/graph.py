@@ -61,9 +61,10 @@ def pagerank(
     driver-synchronized jobs, each re-scanning ranks⋈deg, to move one
     double to the driver and back.  ``deg`` and ``nodes`` are
     checkpointed once before the loop (``deg`` was re-aggregated from
-    the raw edges every round), and the per-round checkpoint is lazy —
-    one materialization per round, triggered by the next round's (or the
-    final action's) first use.
+    the raw edges every round), and the per-round checkpoint is
+    ``eager=False``: under AQE, creating it already runs the shuffle map
+    stages of the round's plan, and the rest materializes on the next
+    round's (or the final action's) first use.
 
     Float summation note: the dangling-mass aggregate sums the SAME
     per-node values the old driver-side round computed (rank of every

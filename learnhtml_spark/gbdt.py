@@ -9,8 +9,9 @@ environment, so this is a from-scratch numpy GBDT:
   gain scan fully vectorized per feature),
 - depth-limited regression trees on the logloss gradient/hessian
   (XGBoost-style gain with lambda regularization),
-- dense numpy arrays only; a fitted model is a few small arrays per
-  tree — trivially picklable for Spark broadcast.
+- dense numpy arrays only; a fitted model is six flat arrays over all
+  its trees' nodes — trivially picklable for Spark broadcast — and
+  fitting and scoring walk every tree of those arrays at once.
 
 Designed for the node-classification workload: hundreds-to-thousands of
 rows per fit, ~100 numeric features; scoring is vectorized and fast
@@ -22,28 +23,45 @@ from __future__ import annotations
 import numpy as np
 
 
-class _Tree:
-    __slots__ = ("feature", "threshold", "left", "right", "value")
+#: the packed form's node fields, in npz member order after
+#: ``tree_sizes`` (nodes per tree): one flat array per field over every
+#: tree's nodes; children are indices relative to their tree's root
+_NODE_FIELDS = {
+    "pk_feature": np.int32,
+    "pk_threshold": np.float64,
+    "pk_left": np.int32,
+    "pk_right": np.int32,
+    "pk_value": np.float64,
+}
 
-    def __init__(self, n_nodes):
-        self.feature = np.full(n_nodes, -1, dtype=np.int32)
-        self.threshold = np.zeros(n_nodes, dtype=np.float64)
-        self.left = np.full(n_nodes, -1, dtype=np.int32)
-        self.right = np.full(n_nodes, -1, dtype=np.int32)
-        self.value = np.zeros(n_nodes, dtype=np.float64)
 
-    def predict(self, x: np.ndarray) -> np.ndarray:
-        idx = np.zeros(len(x), dtype=np.int32)
-        while True:
-            feat = self.feature[idx]
-            leaf = feat < 0
-            if leaf.all():
-                return self.value[idx]
-            go_left = np.where(
-                leaf, True, x[np.arange(len(x)), np.maximum(feat, 0)] <= self.threshold[idx]
-            )
-            nxt = np.where(go_left, self.left[idx], self.right[idx])
-            idx = np.where(leaf, idx, nxt).astype(np.int32)
+def _pack(trees: list[list]) -> dict:
+    """The packed arrays of ``_build_tree`` node lists."""
+    nodes = [node for tree in trees for node in tree]
+    a = np.asarray(nodes, dtype=np.float64).reshape(-1, len(_NODE_FIELDS))
+    pack = {"tree_sizes": np.asarray([len(t) for t in trees], dtype=np.int64)}
+    for (name, dtype), col in zip(_NODE_FIELDS.items(), a.T):
+        pack[name] = col.astype(dtype)
+    return pack
+
+
+def _leaves(pack: dict, x: np.ndarray) -> np.ndarray:
+    """(n, T) leaf value of every row in every tree: all trees are walked
+    at once over an (n, T) matrix of node indices, one gather per level."""
+    feature, threshold = pack["pk_feature"], pack["pk_threshold"]
+    left, right = pack["pk_left"], pack["pk_right"]
+    sizes = pack["tree_sizes"]
+    root = np.cumsum(sizes) - sizes
+    idx = np.tile(root, (len(x), 1))
+    row = np.arange(len(x))[:, None]
+    while True:
+        feat = feature[idx]
+        leaf = feat < 0
+        if leaf.all():
+            return pack["pk_value"][idx]
+        go_left = x[row, np.maximum(feat, 0)] <= threshold[idx]
+        child = np.where(go_left, left[idx], right[idx])
+        idx = np.where(leaf, idx, root + child)
 
 
 def _best_split(x, g, h, rows, lam):
@@ -77,48 +95,40 @@ def _best_split(x, g, h, rows, lam):
 
 
 def _build_tree(x, g, h, rows, depth, lam, min_rows):
+    """One regression tree as its node list, root first: ``[feature,
+    threshold, left, right, value]`` per node (``_NODE_FIELDS`` order),
+    children indexing the list."""
     nodes = []
 
-    def new_node():
-        nodes.append([-1, 0.0, -1, -1, 0.0])
-        return len(nodes) - 1
-
     def grow(rows, d):
-        ni = new_node()
-        if d >= depth or len(rows) < min_rows:
-            nodes[ni][4] = -g[rows].sum() / (h[rows].sum() + lam)
-            return ni
-        f, t, gain = _best_split(x, g, h, rows, lam)
+        ni = len(nodes)
+        nodes.append([-1, 0.0, -1, -1, 0.0])
+        f, gain = None, 0.0
+        if d < depth and len(rows) >= min_rows:
+            f, t, gain = _best_split(x, g, h, rows, lam)
         if f is None or gain <= 1e-12:
             nodes[ni][4] = -g[rows].sum() / (h[rows].sum() + lam)
-            return ni
-        mask = x[rows, f] <= t
-        li = grow(rows[mask], d + 1)
-        ri = grow(rows[~mask], d + 1)
-        nodes[ni][0] = f
-        nodes[ni][1] = t
-        nodes[ni][2] = li
-        nodes[ni][3] = ri
+        else:
+            mask = x[rows, f] <= t
+            nodes[ni][:4] = [f, t, grow(rows[mask], d + 1), grow(rows[~mask], d + 1)]
         return ni
 
     grow(rows, 0)
-    tree = _Tree(len(nodes))
-    for i, (f, t, l, r, v) in enumerate(nodes):
-        tree.feature[i] = f
-        tree.threshold[i] = t
-        tree.left[i] = l
-        tree.right[i] = r
-        tree.value[i] = v
-    return tree
+    return nodes
 
 
 class GBDTClassifier:
-    """Binary-logloss gradient boosting; predict_proba over a dense matrix."""
+    """Binary-logloss gradient boosting; predict_proba over a dense matrix.
+    The fitted ensemble is its packed node arrays (``to_arrays``' trees)."""
 
-    def __init__(self, trees=None, learning_rate=0.2, base_score=0.0):
-        self.trees = trees or []
+    def __init__(self, pack=None, learning_rate=0.2, base_score=0.0):
+        self.pack = _pack([]) if pack is None else pack
         self.learning_rate = learning_rate
         self.base_score = base_score
+
+    @property
+    def n_trees(self) -> int:
+        return len(self.pack["tree_sizes"])
 
     @classmethod
     def fit(
@@ -149,19 +159,18 @@ class GBDTClassifier:
             g = (p - y) * w
             h = np.maximum(p * (1 - p) * w, 1e-12)
             tree = _build_tree(x, g, h, rows_all, depth, lam, min_rows)
-            step = tree.predict(x)
-            z = z + learning_rate * step
+            z = z + learning_rate * _leaves(_pack([tree]), x)[:, 0]
             trees.append(tree)
             # early exit when perfectly fit
             if ((p >= 0.5) == (y >= 0.5)).all() and np.abs(p - y).max() < 1e-3:
                 break
-        return cls(trees, learning_rate, base)
+        return cls(_pack(trees), learning_rate, base)
 
     def decision_function(self, x: np.ndarray) -> np.ndarray:
         x = np.ascontiguousarray(x, dtype=np.float64)
         z = np.full(len(x), self.base_score)
-        for t in self.trees:
-            z += self.learning_rate * t.predict(x)
+        for v in _leaves(self.pack, x).T:  # tree order: the fold fit used
+            z += self.learning_rate * v
         return z
 
     def predict_proba(self, x: np.ndarray) -> np.ndarray:
@@ -173,45 +182,13 @@ class GBDTClassifier:
     # measured as the dominant cost of per-task model deserialization on
     # executors — while the packed form loads in single-digit ms.
     def to_arrays(self) -> dict:
-        sizes = np.asarray([len(t.feature) for t in self.trees], dtype=np.int64)
         return {
             "learning_rate": np.float64(self.learning_rate),
             "base_score": np.float64(self.base_score),
-            "tree_sizes": sizes,
-            "pk_feature": np.concatenate([t.feature for t in self.trees])
-            if self.trees
-            else np.zeros(0, np.int32),
-            "pk_threshold": np.concatenate([t.threshold for t in self.trees])
-            if self.trees
-            else np.zeros(0),
-            "pk_left": np.concatenate([t.left for t in self.trees])
-            if self.trees
-            else np.zeros(0, np.int32),
-            "pk_right": np.concatenate([t.right for t in self.trees])
-            if self.trees
-            else np.zeros(0, np.int32),
-            "pk_value": np.concatenate([t.value for t in self.trees])
-            if self.trees
-            else np.zeros(0),
+            **self.pack,
         }
 
     @classmethod
     def from_arrays(cls, data) -> "GBDTClassifier":
-        sizes = np.asarray(data["tree_sizes"], dtype=np.int64)
-        offsets = np.concatenate([[0], np.cumsum(sizes)])
-        trees = []
-        feature = np.asarray(data["pk_feature"])
-        threshold = np.asarray(data["pk_threshold"])
-        left = np.asarray(data["pk_left"])
-        right = np.asarray(data["pk_right"])
-        value = np.asarray(data["pk_value"])
-        for i in range(len(sizes)):
-            a, b = offsets[i], offsets[i + 1]
-            t = _Tree(int(sizes[i]))
-            t.feature = feature[a:b]
-            t.threshold = threshold[a:b]
-            t.left = left[a:b]
-            t.right = right[a:b]
-            t.value = value[a:b]
-            trees.append(t)
-        return cls(trees, float(data["learning_rate"]), float(data["base_score"]))
+        pack = {k: np.asarray(data[k]) for k in ("tree_sizes", *_NODE_FIELDS)}
+        return cls(pack, float(data["learning_rate"]), float(data["base_score"]))

@@ -21,6 +21,7 @@ inside the extraction UDF (reference J4/M8: the broadcast-model pattern).
 
 from __future__ import annotations
 
+import functools
 import io
 import json
 import re
@@ -47,50 +48,25 @@ def _numeric_columns(df: pd.DataFrame) -> list[str]:
     return [c for c in df.columns if c != "path" and df[c].dtype != object]
 
 
-#: (column, value) -> tuple-of-slots memo: feature values repeat massively
-#: across rows and documents (tag names, framework class strings), so the
-#: hashing work is paid once per distinct value per worker
-_SLOT_CACHE: dict = {}
-_SLOT_CACHE_MAX = 500_000
-
-
-#: per-column crc32 of the "col=" prefix: crc32 is streamable
-#: (crc32(a+b) == crc32(b, crc32(a))), so hashing a value under its column
-#: namespace only has to hash the value bytes, not re-hash the ~20-byte
-#: prefix per gram — slots are bit-identical to crc32(col + "=" + gram)
-_BASE_CRC: dict = {}
-
-
-def _value_slots(col: str, v: str) -> tuple:
-    key = (col, v)
-    cached = _SLOT_CACHE.get(key)
-    if cached is not None:
-        return cached
+@functools.lru_cache(maxsize=500_000)
+def _value_slots(col: str, v: str) -> np.ndarray:
+    """Read-only hash slots of one column value: crc32(col + "=" + gram)
+    per gram.  crc32 is streamable (crc32(a+b) == crc32(b, crc32(a))), so
+    each gram only hashes its own bytes after the "col=" prefix's crc."""
     crc = zlib.crc32
-    bc = _BASE_CRC.get(col)
-    if bc is None:
-        bc = _BASE_CRC[col] = crc((col + "=").encode("utf-8", "ignore"))
+    base = crc((col + "=").encode("utf-8", "ignore"))
     if col.endswith("tag"):
-        out = (crc(v.encode("utf-8", "ignore"), bc) % HASH_DIM,)
+        grams = [v]
     elif col.endswith("tags"):
-        out = tuple(
-            crc(tok.encode("utf-8", "ignore"), bc) % HASH_DIM
-            for tok in v.split(",")
-            if tok
-        )
+        grams = [tok for tok in v.split(",") if tok]
     else:  # class/id text: char 3-grams after camel split + lower
-        s = camel_case_split(v).lower()
-        if not s:
-            out = ()
-        else:
-            padded = f" {s} "
-            out = tuple(
-                crc(padded[j : j + 3].encode("utf-8", "ignore"), bc) % HASH_DIM
-                for j in range(len(padded) - 2)
-            )
-    if len(_SLOT_CACHE) >= _SLOT_CACHE_MAX:
-        _SLOT_CACHE.clear()
-    _SLOT_CACHE[key] = out
+        padded = f" {camel_case_split(v).lower()} "
+        grams = [padded[j : j + 3] for j in range(len(padded) - 2)]
+    out = np.array(
+        [crc(g.encode("utf-8", "ignore"), base) % HASH_DIM for g in grams],
+        dtype=np.int64,
+    )
+    out.flags.writeable = False
     return out
 
 
@@ -110,32 +86,27 @@ def featurize_frame(df: pd.DataFrame, columns: list[str] | None = None):
     num_cols = _numeric_columns(df)
     x_num = df[num_cols].to_numpy(dtype=np.float64, copy=True)
 
-    rows: list[int] = []
-    slots: list[int] = []
-    cache_get = _SLOT_CACHE.get
+    none = np.zeros(0, dtype=np.int64)  # np.concatenate rejects []
+    rows, slots = [none], [none]
     for col in _string_columns(df):
-        # values are strings or missing by construction; the isinstance
-        # guard replaces fillna("")+astype(str) (two pandas passes per
-        # column) with one list pass — identical values.  The memo lookup
-        # is inlined (one dict .get bound once per column) because the
-        # _value_slots call overhead itself dominated this loop on warm
-        # caches (~250 lookups/doc across the 33 string columns).
-        values = df[col].tolist()
-        vs = _value_slots
-        for i, v in enumerate(values):
-            if not isinstance(v, str):
-                v = ""
-            ss = cache_get((col, v))
-            if ss is None:
-                ss = vs(col, v)
-            if ss:
-                rows.extend([i] * len(ss))
-                slots.extend(ss)
-    return (
-        x_num,
-        np.asarray(rows, dtype=np.int64),
-        np.asarray(slots, dtype=np.int64),
-    )
+        # feature values repeat massively across rows (tag names,
+        # framework class strings): hash each distinct value once per
+        # batch, and the memo pays it once per worker
+        codes, uniques = pd.factorize(df[col])
+        # code -1 (missing) reads the last entry: the slots of ""
+        per_code = [_value_slots(col, v) for v in uniques]
+        per_code.append(_value_slots(col, ""))
+        counts = np.array([len(a) for a in per_code])[codes]
+        rows.append(np.repeat(np.arange(len(codes)), counts))
+        slots.extend([per_code[c] for c in codes.tolist()])
+    return x_num, np.concatenate(rows), np.concatenate(slots)
+
+
+def _logit(x_num, rows, slots, w_num, w_hash, bias) -> np.ndarray:
+    """The linear stage's score: numeric weights plus the hashed slots'."""
+    z = x_num @ w_num + bias
+    np.add.at(z, rows, w_hash[slots])
+    return z
 
 
 class NodeClassifier:
@@ -246,8 +217,7 @@ class NodeClassifier:
         w_h = np.zeros(HASH_DIM, dtype=np.float64)
         b = 0.0
         for _ in range(epochs):
-            z = x_num @ w_n + b
-            np.add.at(z, rows, w_h[slots])
+            z = _logit(x_num, rows, slots, w_n, w_h, b)
             p = 1.0 / (1.0 + np.exp(-np.clip(z, -30, 30)))
             g = (p - y) * sample_w / n
             w_n -= lr * (x_num.T @ g + l2 * w_n)
@@ -257,23 +227,19 @@ class NodeClassifier:
             b -= lr * g.sum()
         model = cls(w_n, w_h, float(b), scale, num_mask=num_mask, columns=columns)
 
+        # the heads stack on [scaled numeric ++ logit score]
+        x_stack = np.column_stack([x_num, _logit(x_num, rows, slots, w_n, w_h, b)])
         if head == "mlp":
             # M8 deep variant (reference utils/keras.py create_model via
-            # DEEP_TUNABLE): numpy MLP over [scaled numeric ++ logit score]
+            # DEEP_TUNABLE): numpy MLP
             from learnhtml_spark.mlp import MLPClassifier
 
-            logit_score = x_num @ w_n + b
-            np.add.at(logit_score, rows, w_h[slots])
-            x_deep = np.column_stack([x_num, logit_score])
-            model.mlp = MLPClassifier(**(mlp_params or {})).fit(x_deep, y)
+            model.mlp = MLPClassifier(**(mlp_params or {})).fit(x_stack, y)
         elif gbdt_rounds > 0:
             from learnhtml_spark.gbdt import GBDTClassifier
 
-            logit_score = x_num @ w_n + b
-            np.add.at(logit_score, rows, w_h[slots])
-            x_tree = np.column_stack([x_num, logit_score])
             model.gbdt = GBDTClassifier.fit(
-                x_tree,
+                x_stack,
                 y,
                 n_rounds=gbdt_rounds,
                 depth=gbdt_depth,
@@ -292,9 +258,9 @@ class NodeClassifier:
         x_scaled = x_num / self.scale
         if self.num_mask is not None:
             x_scaled = x_scaled * self.num_mask  # train/serve parity (M7)
-        z = x_scaled @ self.w_num + self.bias
-        np.add.at(z, rows, self.w_hash[slots])
-        return x_scaled, z
+        return x_scaled, _logit(
+            x_scaled, rows, slots, self.w_num, self.w_hash, self.bias
+        )
 
     def predict_proba(self, frame: pd.DataFrame) -> np.ndarray:
         x_scaled, z = self._logit_and_numeric(frame)

@@ -106,11 +106,20 @@ def main():
     d = spark.read.parquet(f"{SF}/documents.parquet")
     pushdown_plan = cap(d.filter(F.col("lang") == "en").select("doc_id", "n_chars"))
 
+    conf = spark.conf.get
+    settings = (
+        f"master `{spark.sparkContext.master}`, "
+        f"`spark.sql.adaptive.enabled={conf('spark.sql.adaptive.enabled')}`, "
+        f"`spark.sql.shuffle.partitions={conf('spark.sql.shuffle.partitions')}`, "
+        "`spark.sql.autoBroadcastJoinThreshold="
+        f"{conf('spark.sql.autoBroadcastJoinThreshold')}`, input `{SF}`"
+    )
     lines = [
         "# PLANS — Catalyst physical-plan audit",
         "",
         '`df.explain("formatted")` captures for the load-bearing plans.',
         "Regenerate with `python scripts/capture_plans.py`.",
+        f"Captured with {settings}; exchange counts depend on these.",
         "",
         "## 1. Flagship extraction — ZERO exchanges",
         "",

@@ -137,7 +137,7 @@ def main(n_docs: int = 300):
     y_h = np.concatenate(h_labels)
     f1_h = f1_score(y_h > 0.5, pred_h)
     print(f"refit: {time.time() - t0:.1f}s, train accuracy {acc:.4f}, "
-          f"holdout F1 {f1_h:.4f}, trees {len(model.gbdt.trees)}")
+          f"holdout F1 {f1_h:.4f}, trees {model.gbdt.n_trees}")
 
     out = "/tmp/model_distributed.npz"
     model.save(out)

@@ -36,7 +36,7 @@ def main():
     model = NodeClassifier.fit(frames, labels, epochs=400, lr=1.0, l2=1e-5,
                                gbdt_rounds=200, gbdt_depth=4)
     print(f"trained on {len(frames)} docs in {time.time() - t0:.1f}s "
-          f"({len(model.gbdt.trees)} trees)")
+          f"({model.gbdt.n_trees} trees)")
 
     # verify exact fit on the training corpus
     bad = sum(

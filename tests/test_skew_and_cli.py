@@ -284,3 +284,25 @@ def test_cli_resume_extract_rejects_partitions(tmp_path, capsys):
     assert err.value.code == 2
     assert "--partitions does not apply with --resume-base" in capsys.readouterr().err
     assert not base.exists()
+
+
+def test_cli_keeps_caller_session_conf(spark, tmp_path):
+    """A command run in-process reuses the caller's active session as it
+    is: the CLI's own shuffle-partition setting applies only to a session
+    it creates, so the caller's spark.sql.shuffle.partitions survives."""
+    from learnhtml_spark import cli
+    from learnhtml_spark.corpus import synthesize_page
+    from learnhtml_spark.operators.extract import docs_from_pairs
+
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        spans, _ = synthesize_page("d0", "body words for the cli " * 6)
+        ind, outd = str(tmp_path / "docs"), str(tmp_path / "features")
+        docs_from_pairs(spark, [("d0", spans)]).write.parquet(ind)
+        cli.main(["features", "--input", ind, "--output", outd, "--cores", "2"])
+        assert spark.conf.get(key) == "7"
+        assert spark.read.parquet(outd).count() > 0
+    finally:
+        spark.conf.set(key, old)
