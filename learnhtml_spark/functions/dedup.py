@@ -19,6 +19,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, StructField, StructType
 
 from learnhtml_spark.functions.textstats import fingerprint, tokens
 from learnhtml_spark.log import logger
@@ -739,10 +740,25 @@ def _broadcast_threshold(spark) -> int:
     return spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
 
 
-def _star_contract_local(edges: DataFrame, max_iter: int) -> tuple[DataFrame, int]:
-    """``_star_contract``'s rounds on the driver, for an edge list Spark
-    would broadcast anyway: collected once, contracted in numpy, returned
-    as a local relation built from one Arrow table.
+def _collect_within_broadcast(df: DataFrame) -> pa.Table | None:
+    """``df``'s Arrow table if it fits the session's broadcast threshold
+    ``t`` — at most ``t // 16`` rows and ``t`` bytes — else None.  One
+    bounded job: at most ``t // 16 + 1`` rows reach the driver, and
+    ``t < 0`` (broadcasting disabled) returns None without a job.  For an
+    edge list (two longs, 16 bytes per row) the rule is
+    ``n_edges * 16 <= t``."""
+    t = _broadcast_threshold(df.sparkSession)
+    if t < 0:
+        return None
+    rows = t // 16
+    table = df.limit(rows + 1).toArrow()
+    return table if table.num_rows <= rows and table.nbytes <= t else None
+
+
+def _contract(a: np.ndarray, b: np.ndarray, v: int, max_iter: int):
+    """Star contraction in numpy over dense node ids ``0..v-1``: the
+    canonical (a < b) edge arrays ``a``, ``b`` to ``(a, b, rounds)``, the
+    star edges (component min, member) and the round count.
 
     The trajectory is the distributed loop's, operator for operator: the
     raw large-star step, small-star, canonical distinct; convergence when
@@ -752,17 +768,10 @@ def _star_contract_local(edges: DataFrame, max_iter: int) -> tuple[DataFrame, in
     The first comparison is against the input as given, duplicates
     included, as the distributed signature counts them.
 
-    Node ids are mapped once to dense order-preserving ints, so a group
-    min on the dense ids is the min on the real ones and an edge packs
-    into one int64 ``a*V + b`` (V <= 2 * edges, far below 2^31.5 at any
-    driver-sized graph) for the distinct and the equality checks."""
-    t = edges.select("a", "b").toArrow()
-    n = t.num_rows
-    ids, dense = np.unique(
-        np.concatenate([t["a"].to_numpy(), t["b"].to_numpy()]),
-        return_inverse=True,
-    )
-    v = len(ids)
+    Dense ids keep the order of the real ones, so a group min on them is
+    the min on the real ids, and an edge packs into one int64 ``a*v + b``
+    (``v`` far below 2^31.5 at any driver-sized graph) for the distinct
+    and the equality checks."""
 
     def node_min(g, vals):
         # m[u] = min(u, vals over rows with g == u): one argsort, one reduceat
@@ -788,7 +797,6 @@ def _star_contract_local(edges: DataFrame, max_iter: int) -> tuple[DataFrame, in
             np.concatenate([mb[keep], mb]) * v + np.concatenate([a[keep], b])
         )
 
-    a, b = dense[:n], dense[n:]
     prev = np.sort(a * v + b)
     for rounds in range(1, max_iter + 1):
         cur = small_star(*large_star_raw(a, b))
@@ -796,8 +804,7 @@ def _star_contract_local(edges: DataFrame, max_iter: int) -> tuple[DataFrame, in
         if np.array_equal(cur, prev):
             ls_a, ls_b = large_star_raw(a, b)
             if np.array_equal(np.unique(ls_a * v + ls_b), cur):
-                stars = pa.table({"a": ids[a], "b": ids[b]}).cast(t.schema)
-                return edges.sparkSession.createDataFrame(stars), rounds
+                return a, b, rounds
         prev = cur
     raise RuntimeError(
         f"dup_clusters did not converge within max_iter={max_iter} "
@@ -816,32 +823,29 @@ def _star_contract(edges: DataFrame, max_iter: int) -> tuple[DataFrame, int]:
 
     Two executors run the SAME operator trajectory (same edge set after
     every round, same ``rounds``, same ``max_iter`` failure), chosen by
-    the edge count ``n`` the first signature below returns, so the choice
-    costs no job:
-    - **local** when ``n * 16`` bytes (two longs per edge) is at most the
-      session's ``spark.sql.autoBroadcastJoinThreshold``: Spark would ship
-      a relation that size to every executor, so the driver can hold it.
-      ``_star_contract_local`` collects the edges once and contracts them
-      in numpy; no Spark job runs per round.  ``-1`` disables it.
-    - **distributed** otherwise: the Spark rounds below.
+    ``_collect_within_broadcast`` on the checkpointed edges:
+    - **local** when the edges fit the session's
+      ``spark.sql.autoBroadcastJoinThreshold`` (16 bytes per edge): Spark
+      would ship a relation that size to every executor, so the driver can
+      hold it.  One bounded collect reads the checkpoint, with no
+      signature job first; ``_contract`` runs the rounds in numpy and the
+      stars come back as a local relation.  ``-1`` disables it.
+    - **distributed** otherwise: one signature, then the Spark rounds
+      below.
 
-    Distributed round economics (optimization round, guide §1-§2): each
-    round is ONE fused small∘large plan behind a
-    ``localCheckpoint(eager=False)`` (under AQE, creating it already runs
-    the plan's shuffle map stages) whose materialization is triggered by
-    the signature aggregate itself
-    — one driver-synchronized job per round instead of the previous four
-    (two eager checkpoints + two signature collects), and the window-min
-    form of the star operators (see ``_large_star``) drops one Exchange
-    per operator.  Convergence is detected on the composition (signature
-    unchanged across a full round == the edge set is a fixed point of
-    small∘large) and then VERIFIED per operator with one extra aggregate:
-    large_star(E) == E together with small(large(E)) == E implies
-    small(E) == E, so the returned set satisfies the paper's criterion —
-    a fixed point of BOTH operators, i.e. a disjoint union of
-    min-centered stars — exactly as the split-check loop did, on the
-    identical L,S,L,S operator trajectory (same sets, same rounds, same
-    max_iter failure condition).
+    Distributed round economics: each round is ONE fused small∘large plan
+    behind a ``localCheckpoint(eager=False)`` (under AQE, creating it
+    already runs the plan's shuffle map stages) whose materialization is
+    triggered by the signature aggregate itself — one driver-synchronized
+    job per round, and the window-min form of the star operators (see
+    ``_large_star``) drops one Exchange per operator.  Convergence is
+    detected on the composition (signature unchanged across a full round
+    == the edge set is a fixed point of small∘large) and then VERIFIED per
+    operator with one extra aggregate: large_star(E) == E together with
+    small(large(E)) == E implies small(E) == E, so the returned set
+    satisfies the paper's criterion — a fixed point of BOTH operators,
+    i.e. a disjoint union of min-centered stars — on the L,S,L,S operator
+    trajectory.
 
     Signatures are (count, double-seeded xxhash64 bit_xor) — the edge
     lists are canonical and distinct, so signature equality is set
@@ -858,14 +862,23 @@ def _star_contract(edges: DataFrame, max_iter: int) -> tuple[DataFrame, int]:
         return (row["n"], row["h1"], row["h2"])
 
     edges = edges.localCheckpoint(eager=False)
+    t = _collect_within_broadcast(edges.select("a", "b"))
+    if t is not None:
+        n = t.num_rows
+        if n == 0:
+            return edges, 0
+        ids, dense = np.unique(
+            np.concatenate([t["a"].to_numpy(), t["b"].to_numpy()]),
+            return_inverse=True,
+        )
+        a, b, rounds = _contract(dense[:n], dense[n:], len(ids), max_iter)
+        logger.info(_CONTRACTED, n, rounds, "local")
+        stars = pa.table({"a": ids[a], "b": ids[b]}).cast(t.schema)
+        return edges.sparkSession.createDataFrame(stars), rounds
     prev = _sig(edges)
     n_edges = prev[0]
     if n_edges == 0:
         return edges, 0
-    if n_edges * 16 <= _broadcast_threshold(edges.sparkSession):
-        stars, rounds = _star_contract_local(edges, max_iter)
-        logger.info(_CONTRACTED, n_edges, rounds, "local")
-        return stars, rounds
     for rounds in range(1, max_iter + 1):
         edges = _small_star(_large_star_raw(edges)).localCheckpoint(
             eager=False
@@ -886,6 +899,48 @@ def _star_contract(edges: DataFrame, max_iter: int) -> tuple[DataFrame, int]:
     )
 
 
+def _clusters_local(t: pa.Table, bands: DataFrame, max_iter: int) -> DataFrame:
+    """``dup_clusters`` on the driver from the collected band rows ``t``:
+    the (band, band_sig) group minimum, the canonical distinct edges
+    (member, group min), ``_contract`` and a label per node, returned as
+    one local relation with the distributed path's schema.
+
+    Rows with a null doc_id join no group minimum and no edge (Spark's
+    ``min`` and ``!=`` skip nulls) and come out as one (null, null, false)
+    row, as the distributed node ``distinct`` and left join give."""
+    rows = t.filter(t["doc_id"].is_valid())
+    ids, d = np.unique(rows["doc_id"].to_numpy(), return_inverse=True)
+    v = len(ids)
+    sig = rows["band_sig"].combine_chunks().dictionary_encode()
+    key = rows["band"].to_numpy().astype(np.int64) * len(sig.dictionary)
+    _, grp = np.unique(key + sig.indices.to_numpy(), return_inverse=True)
+    gmin = np.full(grp.max(initial=-1) + 1, v)
+    np.minimum.at(gmin, grp, d)
+    y = gmin[grp]
+    keep = d != y
+    # y, the group min, is <= d: each kept edge is already (y, d) canonical
+    e = np.unique(y[keep] * v + d[keep])
+    label = np.arange(v)
+    if len(e):
+        a, b, rounds = _contract(*np.divmod(e, v), v, max_iter)
+        logger.info(_CONTRACTED, len(e), rounds, "local")
+        label[b] = a
+    typ = t.schema.field("doc_id").type
+    cols = [pa.array(ids, typ), pa.array(ids[label], typ),
+            pa.array(label != np.arange(v))]
+    if t["doc_id"].null_count:
+        cols = [pa.concat_arrays([c, pa.array([x], c.type)])
+                for c, x in zip(cols, (None, None, False))]
+    f = bands.schema["doc_id"]
+    schema = StructType([
+        f,
+        StructField("cluster_id", f.dataType, f.nullable),
+        StructField("is_duplicate", BooleanType(), False),
+    ])
+    out = pa.Table.from_arrays(cols, names=schema.fieldNames())
+    return bands.sparkSession.createDataFrame(out, schema)
+
+
 def dup_clusters(
     docs: DataFrame,
     num_hashes: int = 16,
@@ -903,11 +958,17 @@ def dup_clusters(
     al. 2014) over the undirected (doc, band-group-min) edges —
     O(log diameter) rounds, so chain-shaped components that would cost
     min-label propagation one round per hop collapse in a handful of
-    rounds.  ``_star_contract`` runs those rounds on the driver when the
-    edge list fits the session's ``spark.sql.autoBroadcastJoinThreshold``
-    (16 bytes per edge; no Spark job per round) and as shuffled Spark
-    rounds above it; both executors follow the same trajectory and return
-    the same star edges.
+    rounds.
+
+    Two executors, one decision rule (``_collect_within_broadcast``): the
+    band rows are checkpointed once, and when they fit the session's
+    ``spark.sql.autoBroadcastJoinThreshold`` one bounded collect brings
+    them to the driver, where ``_clusters_local`` does the group min, the
+    edges, the contraction and the labels and returns one local relation
+    — no Spark job after the collect.  Above the threshold (``-1``: always)
+    the edges are built from the same checkpoint by a window min and
+    ``_star_contract`` contracts them, locally or in shuffled rounds by
+    the same rule; both executors return the same rows and schema.
 
     This is genuinely iterative — the SQL oracle replays the SEMANTICS
     (transitive closure, min label) as a recursive CTE over the same
@@ -920,16 +981,18 @@ def dup_clusters(
     keeper A<B would leave B edgeless), which breaks transitivity."""
     from pyspark.sql import Window
 
-    # the minhash signature is computed ONCE (bands checkpointed with
-    # eager=False: under AQE creating the checkpoint already runs the
-    # signature aggregate's shuffle map stage, and the first downstream
-    # job materializes the rest); edges and nodes derive from the
-    # materialized blocks.  grp_min is a window min over the
-    # band rows (one exchange) instead of an aggregate joined back on the
-    # same key (two exchanges of the band rows) — same groups, same min.
+    # the minhash signature is computed ONCE: under AQE creating the
+    # checkpoint already runs the signature aggregate's shuffle map stage,
+    # and the bounded collect (with broadcasting disabled, the first job
+    # below) materializes the band rows; the distributed fallback reads
+    # the same blocks.  grp_min is a window min over the band rows (one
+    # exchange) instead of an aggregate joined back on the same key.
     bands = lsh_band_rows(docs, num_hashes, band_size, k).localCheckpoint(
         eager=False
     )
+    t = _collect_within_broadcast(bands)
+    if t is not None:
+        return _clusters_local(t, bands, max_iter)
     edges = _canon_edges(
         bands.select(
             F.col("doc_id").alias("x"),

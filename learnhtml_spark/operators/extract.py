@@ -33,7 +33,8 @@ from pyspark.sql.types import StructType
 
 from learnhtml_spark.htmlparse import parse_html
 from learnhtml_spark.kernels.document import (
-    check_model_columns, concat_columns, extract_rows, spans_list, tally)
+    check_model_columns, concat_columns, drop_zip_importers, extract_rows,
+    spans_list, tally)
 from learnhtml_spark.kernels.features import extract_features_from_tree
 from learnhtml_spark.kernels.labeling import (
     NON_CONTENT_BLOCK_RATIO,
@@ -136,6 +137,7 @@ def keyed_spans(docs: DataFrame, model: NodeClassifier | bytes | None, keys: lis
         docs.sparkSession, model, depth, height)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         clf = None if load is None else load()
         cols = schema.fieldNames()
         for pdf in batches:

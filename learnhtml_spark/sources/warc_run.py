@@ -45,7 +45,8 @@ from pyspark import Accumulator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from learnhtml_spark.kernels.document import error_row, extract_rows, tally
+from learnhtml_spark.kernels.document import (
+    drop_zip_importers, error_row, extract_rows, tally)
 from learnhtml_spark.operators.extract import broadcast_model
 from learnhtml_spark.schemas import EXTRACTED_SPANS
 from learnhtml_spark.sources.tables import (
@@ -101,6 +102,7 @@ def _archive_spans(raw: DataFrame, model_bytes: bytes | None,
     batch_docs = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         clf = None if load is None else load()
         cols = WARC_SPANS.fieldNames()
         counted: set = set()  # (archive, uri) pages already counted

@@ -17,7 +17,7 @@ NOTES = {
     "minhash_lsh": "sig agg (1 shuffle, 16 mins in one groupBy) + band-group cap window + band self-join + distinct",
     "neardup_pipe": "LSH candidates -> Jaccard verify over candidate pairs only, off ONE checkpointed shingle base (explode + narrow sizes; 2 text splits in all); size joins AQE-sided (no forced per-doc broadcast)",
     "neardup_groups": "keeper-edge scale-default: band rows -> group-min agg -> join back on same key -> per-doc min; O(m) per band group",
-    "dup_clusters": "alternating large-star/small-star contraction, O(log d) rounds (plan shown is the CONVERGED star-labels read off localCheckpoint blocks; each round was 2 aggs + 2 joins over the shrinking edge list)",
+    "dup_clusters": "band rows checkpointed once; within the broadcast threshold (as here) ONE bounded collect, then band-group min, edges, large-star/small-star contraction and labels in numpy (plan shown is the returned local relation); above it a window group-min builds the edges and each contraction round is one fused small∘large plan, one job",
     "gopher_quality": "narrow repetition/length exprs + two hash aggs for top word + one pk join",
     "simhash_neardup": "Manku-table: one sig aggregate -> capped block equi-join -> popcount verify (AQE-sided sig joins)",
     "tfidf_topk": "tf agg -> df agg -> token join (vocab-sized, AQE) -> doc_id rank window; N = broadcast one-row count in-plan (no eager docs.count())",
@@ -50,10 +50,10 @@ NOTES = {
     "range_pairs": "two-table range join (pair output): 3-cell bucket replication turns the inequality join into a (key, cell) equi-join; each pair matched exactly once",
     "fuzzy_decontaminate": "broadcast per-eval-doc gram set; corpus exploded ONCE (n_grams is the narrow array-size expr, no second shingle pass) -> (doc, eval) overlap agg -> per-doc struct-min",
     "incremental_dedup": "snapshot-over-snapshot: corpus bands -> per-signature min aggregate (ONE probe row per sig, skew-immune) -> new-side band join -> per-doc min + unique restore join",
-    "cluster_size_hist": "two hash aggregates over dup_clusters' converged labels (second agg keys on the tiny distinct-size domain — aggregate, never window)",
+    "cluster_size_hist": "two hash aggregates over dup_clusters' labels (a local relation within the broadcast threshold; the second agg keys on the tiny distinct-size domain — aggregate, never window)",
     "hll_distinct": "deterministic HLL sketch: two map-side-combined hash aggs — (group, bucket) register max then per-group register sum (order-exact doubles); registers-only by default (exact countDistinct is an include_exact=True opt-in)",
     "mixture_sample": "data-mixing sampler: broadcast rates allowlist join -> shared deterministic hash order -> skew-safe two-phase rank -> per-stratum integer-ratio bound",
-    "cluster_keepers": "converged cluster labels -> pk join with quality column (AQE-sided) -> ONE min(struct(-q, id)) argmax aggregate per cluster -> keeper join back on cluster_id",
+    "cluster_keepers": "dup_clusters' labels (a local relation within the broadcast threshold) -> pk join with quality column (AQE-sided) -> ONE min(struct(-q, id)) argmax aggregate per cluster -> keeper join back on cluster_id",
     "pii_scrub": "pure narrow plan (JVM regexp redaction passes, map-only, zero shuffles)",
     "quality_gate": "gopher signals (narrow exprs + two hash aggs + pk join) -> narrow CASE verdict chain",
     "corpus_build": "four stage branches (exact fp agg, keeper-edge LSH, gopher gate, broadcast-eval decontaminate) -> three AQE-sized doc_id equi-joins; whole pipeline one plan",
@@ -69,7 +69,7 @@ NOTES = {
     "url_canon": "pure JVM canonicalization exprs inside the scan projection, zero exchanges",
     "url_dedup": "canonicalize in-projection -> ONE hash aggregate on the canonical key (map-side partial agg)",
     "link_graph": "edge derivation: broadcast one-row count cross join -> narrow modular exprs + explode",
-    "components": "connected components via large-star/small-star contraction (plan shown reads the converged star labels off localCheckpoint blocks; each round = 2 aggs + 2 joins on the shrinking edge list)",
+    "components": "connected components via large-star/small-star contraction: an edge list within the broadcast threshold (as here) is contracted in numpy from ONE bounded collect (plan shown joins the nodes with the stars' local relation); above it each round is one fused small∘large plan, one job",
     "nfc_normalize": "pure narrow plan: scan -> ONE Arrow-batched mapInPandas (unicodedata), zero exchanges",
     "warc_cdx": "binaryFile listing fan-out -> ONE mapInPandas (member/record span index), narrow",
     "warc_stream": "plan shown is the batch read of the stream's parquet sink; the streaming plan is binaryFile source -> fused per-archive kernel -> sink (stateless, checkpoint = processed-archive manifest)",

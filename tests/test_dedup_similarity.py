@@ -492,10 +492,16 @@ def test_lsh_band_rows_plan_tokenizes_once(docs):
     assert plan.count("Exchange") == 1
 
 
-def _py4j_commands(monkeypatch, build) -> int:
-    """py4j commands the driver sends while ``build()`` runs."""
+def _driver_cost(spark, monkeypatch, build) -> tuple[int, int]:
+    """(py4j commands the driver sends, Spark jobs that run) while
+    ``build()`` runs; the jobs are read by job group from the status
+    tracker."""
+    import uuid
+
     import py4j.clientserver
 
+    sc = spark.sparkContext
+    group = f"driver-cost-{uuid.uuid4().hex}"
     sent = []
     send = py4j.clientserver.ClientServerConnection.send_command
 
@@ -503,28 +509,36 @@ def _py4j_commands(monkeypatch, build) -> int:
         sent.append(1)
         return send(self, command)
 
-    monkeypatch.setattr(
-        py4j.clientserver.ClientServerConnection, "send_command", counting_send
-    )
-    build()
-    return len(sent)
+    sc.setJobGroup(group, "counted call")
+    try:
+        with monkeypatch.context() as m:
+            m.setattr(
+                py4j.clientserver.ClientServerConnection, "send_command",
+                counting_send,
+            )
+            build()
+    finally:
+        sc.setJobGroup(None, None)
+    return len(sent), len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_lsh_band_rows_build_py4j_commands(docs, monkeypatch):
+def test_lsh_band_rows_build_py4j_commands(spark, docs, monkeypatch):
     """Building the band-row plan stays a few hundred py4j commands (the
     Column-DSL build issued over 2,000, ~0.3 s of driver time per call).
     Counted, not timed, so the guard does not depend on the machine."""
     from learnhtml_spark.functions.dedup import lsh_band_rows
 
-    assert 0 < _py4j_commands(monkeypatch, lambda: lsh_band_rows(docs)) < 1000
+    sent, _ = _driver_cost(spark, monkeypatch, lambda: lsh_band_rows(docs))
+    assert 0 < sent < 1000
 
 
-def test_simhash_build_py4j_commands(docs, monkeypatch):
+def test_simhash_build_py4j_commands(spark, docs, monkeypatch):
     """Building the 64-bit simhash plan stays under 1,000 py4j commands
     (the per-bit Column-DSL build issued ~9,600)."""
     from learnhtml_spark.functions.dedup import simhash
 
-    assert 0 < _py4j_commands(monkeypatch, lambda: simhash(docs, bits=64)) < 1000
+    sent, _ = _driver_cost(spark, monkeypatch, lambda: simhash(docs, bits=64))
+    assert 0 < sent < 1000
 
 
 def test_neardup_pairs_plan_tokenizes_twice(docs):
@@ -1438,17 +1452,130 @@ def test_cluster_keepers_float_and_null_quality(spark):
         assert out[d]["keeper_id"] == 4
 
 
-def test_cluster_keepers_no_per_cluster_window(spark):
-    # the keeper choice must be one aggregate, not a window over the
-    # (potentially huge) cluster
+def test_cluster_keepers_no_per_cluster_window(spark, star_executor_conf):
+    """The keeper choice is one aggregate, not a window over the
+    (potentially huge) cluster: the optimized plan has no Window node
+    under either clustering executor."""
     from learnhtml_spark.functions.dedup import cluster_keepers
 
-    df = spark.createDataFrame(
-        [(i, f"doc {i} text", i) for i in range(10)],
-        "doc_id long, text string, n_chars long",
+    df = _planted_docs(spark)
+    for executor in ("local", "distributed"):
+        star_executor_conf(executor)
+        plan = cluster_keepers(df)._jdf.queryExecution().optimizedPlan()
+        assert "Window" not in plan.toString(), executor
+
+
+def _planted_docs(spark, id_type="long", extra=()):
+    """(doc_id, text, n_chars) over singletons plus planted near-dup
+    chains (each copy changes one word of the previous one); the last
+    chain has NULL quality throughout.  ``extra`` rows are appended."""
+    import random
+
+    rng = random.Random(11)
+    vocab = [f"w{i}" for i in range(400)]
+    rows = [(" ".join(rng.choices(vocab, k=20)), rng.randrange(100))
+            for _ in range(30)]
+    for length, quality in ((2, True), (5, True), (9, True), (4, False)):
+        words = rng.choices(vocab, k=30)
+        for _ in range(length):
+            rows.append((" ".join(words),
+                         rng.randrange(100) if quality else None))
+            words[rng.randrange(30)] = rng.choice(vocab)
+    cast = str if id_type == "string" else int
+    data = [(cast(i + 1), t, q) for i, (t, q) in enumerate(rows)]
+    return spark.createDataFrame(
+        data + list(extra), f"doc_id {id_type}, text string, n_chars long"
     )
-    plan = cluster_keepers(df)._jdf.queryExecution().optimizedPlan().toString()
-    assert "row_number" not in plan
+
+
+def _rows_and_schema(df):
+    from collections import Counter
+
+    return df.schema, Counter(tuple(r) for r in df.collect())
+
+
+_PLANTED = ("the quick brown fox jumps over the lazy dog and runs far away "
+            "into the quiet green forest this morning")
+#: a null doc_id sharing a chain's text, a second row of doc 3, an empty
+#: document and one with fewer than k tokens
+_EDGE_ROWS = [(None, _PLANTED, 7), (3, _PLANTED + " again", 8),
+              (1000, "", 1), (1001, "two words", 2),
+              (1002, _PLANTED, 5), (1003, _PLANTED + " tail", 6)]
+
+
+@pytest.mark.parametrize("fn", ["dup_clusters", "cluster_keepers",
+                                "cluster_size_hist"])
+def test_clustering_executors_agree(spark, star_executor_conf, fn):
+    """The driver executor (band rows within the broadcast threshold), the
+    distributed one and the mixed one (band rows above the threshold,
+    their edges within it) return equal rows and equal schemas: planted
+    chains, a null doc_id, a duplicated doc_id, docs without shingles and
+    an all-NULL-quality cluster."""
+    from learnhtml_spark.functions import dedup
+
+    df = _planted_docs(spark, extra=_EDGE_ROWS)
+    n_bands = dedup.lsh_band_rows(df).count()
+    out = {}
+    for executor in ("local", "distributed", "mixed"):
+        if executor == "mixed":
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
+                           str(16 * (n_bands - 1)))
+        else:
+            star_executor_conf(executor)
+        out[executor] = _rows_and_schema(getattr(dedup, fn)(df))
+    assert out["local"] == out["distributed"] == out["mixed"]
+    rows = out["local"][1]
+    if fn == "dup_clusters":
+        assert rows[(None, None, False)] == 1
+        assert sum(r[2] for r in rows) >= 16  # the chains are clustered
+    if fn == "cluster_keepers":
+        assert sum(n for r, n in rows.items() if r[0] == 3) == 2
+
+
+def test_dup_clusters_executors_agree_string_ids(
+    spark, star_executor_conf, caplog, monkeypatch
+):
+    """String doc ids (ordered as strings: "100" < "90") and a null one
+    give the same clusters and schema on both executors; each executor
+    logs its own contraction line."""
+    from learnhtml_spark.functions.dedup import dup_clusters
+    from learnhtml_spark.log import logger
+
+    monkeypatch.setattr(logger, "propagate", True)
+    caplog.set_level("INFO", logger="learnhtml_spark")
+    df = _planted_docs(spark, "string", [(None, _PLANTED, 1),
+                                         ("x", _PLANTED, 2),
+                                         ("90", _PLANTED, 3),
+                                         ("100", _PLANTED, 4)])
+    out = {}
+    for executor in ("local", "distributed"):
+        star_executor_conf(executor)
+        caplog.clear()
+        out[executor] = _rows_and_schema(dup_clusters(df))
+        assert [r.getMessage().endswith(f" {executor} executor")
+                for r in caplog.records
+                if r.getMessage().startswith("star contraction")] == [True]
+    assert out["local"] == out["distributed"]
+    schema, rows = out["local"]
+    assert schema.simpleString() == (
+        "struct<doc_id:string,cluster_id:string,is_duplicate:boolean>")
+    assert {r for r in rows if r[1] == "100"} == {
+        ("100", "100", False), ("90", "100", True), ("x", "100", True)}
+    assert rows[(None, None, False)] == 1
+
+
+def test_cluster_keepers_job_count(spark, star_executor_conf, monkeypatch):
+    """On band rows within the broadcast threshold, one
+    ``cluster_keepers(...).toPandas()`` runs at most 8 Spark jobs (it ran
+    14 when the edges were checkpointed and signed before the driver
+    contraction)."""
+    from learnhtml_spark.functions.dedup import cluster_keepers
+
+    star_executor_conf("local")
+    df = _planted_docs(spark)
+    _, jobs = _driver_cost(spark, monkeypatch,
+                           lambda: cluster_keepers(df).toPandas())
+    assert 0 < jobs <= 8
 
 
 def test_pii_scrub_hand_checked(spark):

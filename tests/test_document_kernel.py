@@ -11,7 +11,8 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(__file__))
 
-from learnhtml_spark.kernels.document import error_row, extract_rows
+from learnhtml_spark.kernels.document import (
+    drop_zip_importers, error_row, extract_rows)
 from learnhtml_spark.operators.extract import docs_from_pairs, extract_content_spans
 from learnhtml_spark.sources.warc_source import build_warc
 from learnhtml_spark.spans import split_html_to_spans
@@ -300,3 +301,33 @@ def _ancestors(tree: list[str], i: int) -> list[str]:
             out.append(line)
             depth = indent(line)
     return out
+
+
+def test_drop_zip_importers_keeps_zip_imports(tmp_path, monkeypatch):
+    """The worker-task helper drops every cached zip importer (each one
+    re-reads its archive on the next ``importlib.invalidate_caches()``)
+    and leaves ``sys.path`` alone: a later import from the same zip still
+    works."""
+    import importlib
+    import zipfile
+    import zipimport
+
+    archive = tmp_path / "pkgs.zip"
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("zipmod_first.py", "VALUE = 1\n")
+        z.writestr("zipmod_second.py", "VALUE = 2\n")
+    monkeypatch.syspath_prepend(str(archive))
+    for name in ("zipmod_first", "zipmod_second"):
+        monkeypatch.delitem(sys.modules, name, raising=False)
+
+    def zip_importers():
+        return [p for p, f in sys.path_importer_cache.items()
+                if isinstance(f, zipimport.zipimporter)]
+
+    assert importlib.import_module("zipmod_first").VALUE == 1
+    assert str(archive) in zip_importers()
+    path = list(sys.path)
+    drop_zip_importers()
+    assert zip_importers() == [] and sys.path == path
+    second = importlib.import_module("zipmod_second")
+    assert second.VALUE == 2 and second.__file__.startswith(str(archive))
