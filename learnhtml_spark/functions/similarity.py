@@ -9,6 +9,25 @@
   the scale path — random hyperplanes derived deterministically from md5
   (portable to the SQL oracle), sign-pattern bucketing, then exact cosine
   within buckets only.
+- ``ivf_topk`` / ``semdedup``: the same shape over IVF cells (nearest
+  fitted or data-seeded centroid); ``pca_project`` and
+  ``embedding_decontaminate`` are narrow passes against broadcast
+  constants.
+
+Shared parts — each concept has one implementation:
+
+- ``_unit``: the zero-guarded row normalization;
+- ``_fold_dot``: the dim-by-dim projection fold in DuckDB's ``list_sum``
+  order (LSH codes, IVF cells, PCA) so values are bit-stable across
+  engines;
+- ``_topk_pairs``: top-k by (-sim, neighbor_id) with self excluded, for
+  any id type (ids are ordered by their dense rank);
+- ``_cells``: the one cell map, one row per (vector, probed cell) with
+  ``is_home`` marking the vector's own cell; ``_cell_topk``: the one
+  per-cell kernel (every row a query, home rows the members) plus, when
+  a vector probes more than its home cell, the one global re-rank;
+- ``_sorted_unit``: a small collected side (exact corpus, IVF seeds,
+  eval set) as ascending ids and a unit matrix.
 
 Plan economics (the round-2 lesson): the plane matrix depends only on
 (bit, dim) — it is a CONSTANT.  Deriving it per row × bit × dim with
@@ -50,6 +69,41 @@ def _round6(x):
     return np.copysign(np.floor(np.abs(x) * 1e6 + 0.5), x) / 1e6
 
 
+def _check_at_least_1(**params) -> None:
+    for name, value in params.items():
+        if value < 1:
+            raise ValueError(f"{name} must be >= 1, got {value}")
+
+
+def _check_bits(bits: int) -> None:
+    # codes are int32 sign patterns: bit 31 would make them negative and a
+    # multiprobe flip of it would overflow the column type
+    if not 1 <= bits <= 31:
+        raise ValueError(f"bits must be in 1..31, got {bits}")
+
+
+def _unit(m):
+    """Rows of ``m`` scaled to unit norm; zero rows stay zero."""
+    import numpy as np
+
+    norms = np.sqrt((m * m).sum(axis=1))
+    norms[norms == 0] = 1.0
+    return m / norms[:, None]
+
+
+def _fold_dot(q, m):
+    """(rows of q) · (rows of m), folded dim-by-dim (vectorized across
+    rows × targets) so the float64 addition ORDER matches a sequential
+    left-fold — the same associativity as DuckDB's ``list_sum`` — and
+    engine-specific matmul associativity cannot move a bit."""
+    import numpy as np
+
+    out = np.zeros((q.shape[0], m.shape[0]), dtype=np.float64)
+    for d in range(m.shape[1]):
+        out += q[:, d : d + 1] * m[:, d]
+    return out
+
+
 def _plane_matrix(bits: int, dims: int):
     """Deterministic (bits × dims) hyperplane matrix: component (b, d) is
     nibble(md5('b:d')) - 7.5 in [-7.5, 7.5] — the exact derivation the
@@ -68,22 +122,21 @@ def _plane_matrix(bits: int, dims: int):
 
 
 def _bucket_codes(emb_mat, bits: int):
-    """Bucket id per row: sign pattern of the ``bits`` plane projections.
-
-    The projection fold runs dim-by-dim (vectorized across rows × bits) so
-    the float64 addition ORDER matches a sequential left-fold — the same
-    associativity as Spark's ``F.aggregate`` and DuckDB's ``list_sum`` —
-    then rounds at 6 dp before the sign test, so engine-specific matmul
-    associativity cannot flip a bucket."""
+    """Bucket id per row: sign pattern of the ``bits`` plane projections,
+    rounded at 6 dp before the sign test (``_fold_dot`` order)."""
     import numpy as np
 
-    n, dims = emb_mat.shape
-    planes = _plane_matrix(bits, dims)
-    proj = np.zeros((n, bits), dtype=np.float64)
-    for d in range(dims):
-        proj += emb_mat[:, d : d + 1] * planes[:, d]
+    proj = _fold_dot(emb_mat, _plane_matrix(bits, emb_mat.shape[1]))
     signs = _round6(proj) > 0
     return (signs * (1 << np.arange(bits))).sum(axis=1).astype(np.int32)
+
+
+def _nearest(sims, p: int):
+    """Column indices of each row's ``p`` largest sims, best first; ties
+    keep the smaller column (stable sort)."""
+    import numpy as np
+
+    return np.argsort(-sims, axis=1, kind="stable")[:, :p].astype(np.int32)
 
 
 def _emb_f64(series):
@@ -94,28 +147,36 @@ def _emb_f64(series):
     return np.array([np.asarray(v, dtype=np.float64) for v in series])
 
 
-def _id_schema(embeddings: DataFrame) -> str:
-    return (
-        "vec_id long"
-        if dict(embeddings.dtypes)["vec_id"] == "bigint"
-        else "vec_id string"
-    )
+def _id_type(embeddings: DataFrame) -> str:
+    return "long" if dict(embeddings.dtypes)["vec_id"] == "bigint" else "string"
+
+
+def _sorted_unit(rows):
+    """Collected (vec_id, embedding) rows → (ascending ids, unit matrix)."""
+    import numpy as np
+
+    ids = np.array([r["vec_id"] for r in rows])
+    order = np.argsort(ids, kind="stable")
+    mat = np.array([r["embedding"] for r in rows], dtype=np.float64)
+    return ids[order], _unit(mat[order])
 
 
 def _topk_pairs(q_ids, cand_ids, sims, k):
     """Vectorized top-k over a (queries × candidates) rounded-sim matrix
-    with exact (-sim, neighbor_id ASC) ordering and self-exclusion.
+    with exact (-sim, neighbor_id ASC) ordering and self-exclusion, for
+    any id type.
 
-    sims are 6-dp-rounded, so ``sim * 1e6`` is an exact integer and the
-    composite int64 key ``-sim_int * 2^32 + id`` reproduces the
+    sims are 6-dp-rounded, so ``sim * 1e6`` is an exact integer, and the
+    candidate ids are replaced by their dense rank (< 2^32), so the
+    composite int64 key ``-sim_int * 2^32 + rank`` reproduces the
     (-sim, id) lexicographic order bit-for-bit — one argsort instead of a
-    Python lexsort per query row.  Requires non-negative int ids < 2^32
-    (callers fall back to the per-row lexsort otherwise).  Returns
-    (qi, ci, ranks) index arrays into q_ids / cand_ids."""
+    lexsort per query row.  Returns (qi, ci, ranks) index arrays into
+    q_ids / cand_ids."""
     import numpy as np
 
+    _, id_rank = np.unique(cand_ids, return_inverse=True)
     sim_int = np.rint(sims * 1e6).astype(np.int64)
-    key = -sim_int * (1 << 32) + cand_ids[None, :].astype(np.int64)
+    key = -sim_int * (1 << 32) + id_rank[None, :].astype(np.int64)
     # self matches sort last (key = +max), so non-self ranks stay 1..kk
     key = np.where(
         q_ids[:, None] == cand_ids[None, :], np.iinfo(np.int64).max, key
@@ -132,14 +193,92 @@ def _topk_pairs(q_ids, cand_ids, sims, k):
     return qi[keep], ci[keep], ranks[keep]
 
 
-def _ids_vectorizable(ids) -> bool:
-    import numpy as np
+def _topk_frame(q_ids, cand_ids, sims, k):
+    """(vec_id, neighbor_id, sim, rank) rows of ``_topk_pairs``."""
+    import pandas as pd
 
+    qi, ci, ranks = _topk_pairs(q_ids, cand_ids, sims, k)
+    return pd.DataFrame(
+        {
+            "vec_id": q_ids[qi],
+            "neighbor_id": cand_ids[ci],
+            "sim": sims[qi, ci],
+            "rank": ranks,
+        }
+    )
+
+
+def _cells(embeddings: DataFrame, cells_of) -> DataFrame:
+    """(vec_id, cell, embedding, is_home): the one cell map.  ``cells_of``
+    takes a batch's (n × dims) float64 matrix and returns an (n × p) int
+    matrix; column 0 is each vector's home cell (where it is INDEXED) and
+    every column becomes one row (where it QUERIES).  The vector travels
+    with its cells, so the downstream groupBy shuffles the corpus once."""
+    import numpy as np
+    import pandas as pd
+
+    def run(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            cells = np.asarray(cells_of(_emb_f64(pdf["embedding"])))
+            n, p = cells.shape
+            yield pd.DataFrame(
+                {
+                    "vec_id": np.concatenate([pdf["vec_id"].to_numpy()] * p),
+                    "cell": cells.T.ravel().astype(np.int32),
+                    "embedding": np.concatenate(
+                        [pdf["embedding"].to_numpy()] * p
+                    ),
+                    "is_home": np.arange(n * p) < n,
+                }
+            )
+
+    schema = (
+        f"vec_id {_id_type(embeddings)}, cell int, embedding array<float>, "
+        "is_home boolean"
+    )
+    return embeddings.select("vec_id", "embedding").mapInPandas(run, schema=schema)
+
+
+def _cell_topk_pdf(pdf, k: int):
+    """Per-cell kernel: every row is a query, the ``is_home`` rows are the
+    members (each vector is indexed in exactly one cell, so a (query,
+    member) pair occurs in exactly one cell — merging cells needs no
+    dedup); exact (-sim, neighbor_id) top-k per query, self excluded."""
+    home = pdf["is_home"].to_numpy()
+    ids = pdf["vec_id"].to_numpy()
+    u = _unit(_emb_f64(pdf["embedding"]))
+    if home.all():
+        # numpy computes a @ a.T on one array with another BLAS kernel than
+        # a product of two arrays, and the two can differ in the last bit:
+        # cells without probe rows keep the one-array gram
+        return _topk_frame(ids, ids, _round6(u @ u.T), k)
+    return _topk_frame(ids, ids[home], _round6(u @ u[home].T), k)
+
+
+def _cell_topk(cells: DataFrame, k: int, probes: bool) -> DataFrame:
+    """The one top-k tail over ``_cells`` rows.  Without probes each
+    vector's cell holds all its candidates, so the kernel's ranks are
+    final (ONE shuffle).  With probes each query's winners are spread over
+    its probed cells: a second small shuffle re-ranks them globally by the
+    same (-sim, neighbor_id) order."""
+    id_t = _id_type(cells)
+    per_cell = cells.groupBy("cell").applyInPandas(
+        lambda pdf: _cell_topk_pdf(pdf, k),
+        schema=f"vec_id {id_t}, neighbor_id {id_t}, sim double, rank int",
+    )
+    if not probes:
+        return per_cell
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("vec_id").orderBy(
+        F.desc("sim"), F.asc("neighbor_id")
+    )
     return (
-        np.issubdtype(np.asarray(ids).dtype, np.integer)
-        and len(ids) > 0
-        and ids.min() >= 0
-        and ids.max() < (1 << 32)
+        per_cell.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .withColumn("rank", F.col("rank").cast("int"))
     )
 
 
@@ -159,9 +298,7 @@ def cosine_topk(
     ``ann_lsh_topk`` (bucketed, no driver materialization).  Each Arrow
     batch then does ONE numpy (batch × corpus) matmul + top-k: zero
     shuffles, embarrassingly parallel over the query rows."""
-    import numpy as np
-    import pandas as pd
-
+    _check_at_least_1(k=k)
     if max_rows is None:
         max_rows = _MAX_BROADCAST_ROWS
     spark = embeddings.sparkSession
@@ -179,60 +316,28 @@ def cosine_topk(
             f"can hold the corpus, or use ann_lsh_topk (LSH-bucketed, "
             f"distributed) for large corpora."
         )
-    ids = np.array([r["vec_id"] for r in rows])
-    mat = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    norms = np.sqrt((mat * mat).sum(axis=1))
-    norms[norms == 0] = 1.0
-    order = np.argsort(ids, kind="stable")
-    bc = spark.sparkContext.broadcast((ids[order], mat[order], norms[order]))
+    bc = spark.sparkContext.broadcast(_sorted_unit(rows))
 
     def run(batches):
-        all_ids, all_mat, all_norms = bc.value
-        unit = all_mat / all_norms[:, None]
-        fast_ids = _ids_vectorizable(all_ids)
+        all_ids, unit = bc.value
         for pdf in batches:
             if not len(pdf):
                 continue
-            q = _emb_f64(pdf["embedding"])
-            qn = np.sqrt((q * q).sum(axis=1))
-            qn[qn == 0] = 1.0
-            sims = _round6((q / qn[:, None]) @ unit.T)
-            q_ids = pdf["vec_id"].to_numpy()
-            if fast_ids:
-                qi, ci, ranks = _topk_pairs(q_ids, all_ids, sims, k)
-                yield pd.DataFrame(
-                    {
-                        "vec_id": q_ids[qi],
-                        "neighbor_id": all_ids[ci],
-                        "sim": sims[qi, ci],
-                        "rank": ranks,
-                    }
-                )
-                continue
-            out_rows = []
-            for i, vid in enumerate(q_ids):
-                s = sims[i]
-                # exclude self, then top-k by (-sim, neighbor_id); full
-                # lexsort — rounded sims create tie plateaus that a
-                # partition-prune would cut through mid-plateau
-                cand = np.where(all_ids != vid)[0]
-                ordered = cand[np.lexsort((all_ids[cand], -s[cand]))][:k]
-                for rank, j in enumerate(ordered, 1):
-                    out_rows.append((vid, all_ids[j], float(s[j]), rank))
-            yield pd.DataFrame(
-                out_rows, columns=["vec_id", "neighbor_id", "sim", "rank"]
-            )
+            sims = _round6(_unit(_emb_f64(pdf["embedding"])) @ unit.T)
+            yield _topk_frame(pdf["vec_id"].to_numpy(), all_ids, sims, k)
 
-    id_t = _id_schema(embeddings).split(" ")[1]
+    id_t = _id_type(embeddings)
     schema = f"vec_id {id_t}, neighbor_id {id_t}, sim double, rank int"
     return embeddings.select("vec_id", "embedding").mapInPandas(run, schema=schema)
 
 
 def hyperplane_lsh_buckets(embeddings: DataFrame, bits: int = 8) -> DataFrame:
-    """(vec_id, bucket): sign pattern of ``bits`` deterministic hyperplane
-    projections.  One narrow mapInPandas — no shuffle, no join; the plane
-    matrix is a process-level constant (see ``_plane_matrix``)."""
+    """(vec_id, bucket): sign pattern of ``bits`` (1..31) deterministic
+    hyperplane projections.  One narrow mapInPandas — no shuffle, no join;
+    the plane matrix is a process-level constant (see ``_plane_matrix``)."""
     import pandas as pd
+
+    _check_bits(bits)
 
     def run(batches):
         for pdf in batches:
@@ -241,31 +346,7 @@ def hyperplane_lsh_buckets(embeddings: DataFrame, bits: int = 8) -> DataFrame:
             codes = _bucket_codes(_emb_f64(pdf["embedding"]), bits)
             yield pd.DataFrame({"vec_id": pdf["vec_id"], "bucket": codes})
 
-    schema = _id_schema(embeddings) + ", bucket int"
-    return embeddings.select("vec_id", "embedding").mapInPandas(run, schema=schema)
-
-
-def _bucketed(embeddings: DataFrame, bits: int) -> DataFrame:
-    """(vec_id, bucket, embedding) in one pass — bucket computed alongside
-    the vector so the downstream groupBy shuffles the corpus exactly once
-    (round 2 recomputed the whole interpreted projection on BOTH sides of
-    a self-join; this materializes it inline instead)."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            codes = _bucket_codes(_emb_f64(pdf["embedding"]), bits)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "bucket": codes,
-                    "embedding": pdf["embedding"],
-                }
-            )
-
-    schema = _id_schema(embeddings) + ", bucket int, embedding array<float>"
+    schema = f"vec_id {_id_type(embeddings)}, bucket int"
     return embeddings.select("vec_id", "embedding").mapInPandas(run, schema=schema)
 
 
@@ -283,15 +364,14 @@ def embedding_neardup_pairs(
     import numpy as np
     import pandas as pd
 
+    _check_bits(bits)
+
     def per_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         n = len(pdf)
         if n < 2:
             return pd.DataFrame({"vec_id_a": [], "vec_id_b": [], "sim": []})
         ids = pdf["vec_id"].to_numpy()
-        mat = _emb_f64(pdf["embedding"])
-        norms = np.sqrt((mat * mat).sum(axis=1))
-        norms[norms == 0] = 1.0
-        unit = mat / norms[:, None]
+        unit = _unit(_emb_f64(pdf["embedding"]))
         sims = _round6(unit @ unit.T)
         ai, bi = np.where(
             np.triu(np.ones((n, n), dtype=bool), 1) & (sims >= threshold)
@@ -302,50 +382,13 @@ def embedding_neardup_pairs(
         b2 = np.where(swap, a, b)
         return pd.DataFrame({"vec_id_a": a2, "vec_id_b": b2, "sim": s})
 
-    id_t = _id_schema(embeddings).split(" ")[1]
+    id_t = _id_type(embeddings)
     schema = f"vec_id_a {id_t}, vec_id_b {id_t}, sim double"
     return (
-        _bucketed(embeddings, bits)
-        .groupBy("bucket")
+        _cells(embeddings, lambda q: _bucket_codes(q, bits)[:, None])
+        .groupBy("cell")
         .applyInPandas(per_bucket, schema=schema)
     )
-
-
-def _group_topk_pdf(pdf, k: int):
-    """Shared per-group kernel for the bucketed ANN ops: one gram matrix,
-    exact (-sim, neighbor_id) top-k per row, self excluded."""
-    import numpy as np
-    import pandas as pd
-
-    n = len(pdf)
-    if n < 2:
-        return pd.DataFrame(
-            {"vec_id": [], "neighbor_id": [], "sim": [], "rank": []}
-        )
-    ids = pdf["vec_id"].to_numpy()
-    mat = _emb_f64(pdf["embedding"])
-    norms = np.sqrt((mat * mat).sum(axis=1))
-    norms[norms == 0] = 1.0
-    unit = mat / norms[:, None]
-    sims = _round6(unit @ unit.T)
-    if _ids_vectorizable(ids):
-        qi, ci, ranks = _topk_pairs(ids, ids, sims, k)
-        return pd.DataFrame(
-            {
-                "vec_id": ids[qi],
-                "neighbor_id": ids[ci],
-                "sim": sims[qi, ci],
-                "rank": ranks,
-            }
-        )
-    out = []
-    for i in range(n):
-        s = sims[i]
-        cand = np.where(ids != ids[i])[0]
-        ordered = cand[np.lexsort((ids[cand], -s[cand]))][:k]
-        for rank, j in enumerate(ordered, 1):
-            out.append((ids[i], ids[j], float(s[j]), rank))
-    return pd.DataFrame(out, columns=["vec_id", "neighbor_id", "sim", "rank"])
 
 
 def fit_ivf_centroids(mat, n_centroids: int, n_iter: int = 8):
@@ -365,9 +408,7 @@ def fit_ivf_centroids(mat, n_centroids: int, n_iter: int = 8):
     n = mat.shape[0]
     if n < n_centroids:
         raise ValueError(f"need >= {n_centroids} vectors, got {n}")
-    norms = np.sqrt((mat * mat).sum(axis=1))
-    norms[norms == 0] = 1.0
-    unit = mat / norms[:, None]
+    unit = _unit(mat)
     idx = (np.arange(n_centroids, dtype=np.int64) * n) // n_centroids
     cent = unit[idx].copy()
     for _ in range(n_iter):
@@ -399,18 +440,10 @@ def ivf_assign_cells(q_mat, cent_unit):
     """Cell index per row: argmax over centroids of the 6-dp-rounded dot
     product with the UNIT centroid (same argmax as cosine — the query norm
     is constant across centroids), ties to the smallest cell id.  The dot
-    folds dim-by-dim like ``_bucket_codes`` so the float64 addition order
-    matches DuckDB's sequential ``list_sum`` fold — cell assignment is
-    bit-stable across engines by construction (ADVICE r3: the previous
+    is ``_fold_dot``'s sequential fold, so cell assignment is bit-stable
+    across engines by construction (ADVICE r3: the previous
     matmul-vs-list_cosine_similarity pairing was only tolerance-stable)."""
-    import numpy as np
-
-    n = q_mat.shape[0]
-    n_cent, dims = cent_unit.shape
-    proj = np.zeros((n, n_cent), dtype=np.float64)
-    for d in range(dims):
-        proj += q_mat[:, d : d + 1] * cent_unit[:, d]
-    return np.argmax(_round6(proj), axis=1).astype(np.int32)
+    return _nearest(_round6(_fold_dot(q_mat, cent_unit)), 1)[:, 0]
 
 
 def ivf_topk(
@@ -435,178 +468,40 @@ def ivf_topk(
     vec_id; assignment by rounded cosine vs each seed) — kept for recall
     comparison against the fitted fit (BENCH.md).
 
-    ``nprobe > 1`` (fitted mode only) is the standard IVF recall lever:
-    each vector stays indexed in its ONE nearest cell, but its query side
-    also probes the next ``nprobe - 1`` nearest cells — candidate volume
-    grows ~nprobe× with the index still single-copy; a second small
-    shuffle re-ranks the per-cell winners globally.
+    ``nprobe > 1`` is the standard IVF recall lever: each vector stays
+    indexed in its ONE nearest cell, but its query side also probes the
+    next ``nprobe - 1`` nearest cells — candidate volume grows ~nprobe×
+    with the index still single-copy; a second small shuffle re-ranks the
+    per-cell winners globally.
 
     Plan (all modes): centroid matrix broadcast into a narrow mapInPandas
     assignment, ONE shuffle (groupBy cell), one numpy gram matrix per
     inverted list via applyInPandas (+ the re-rank exchange when
     nprobe > 1)."""
     import numpy as np
-    import pandas as pd
 
+    _check_at_least_1(k=k, nprobe=nprobe, n_centroids=n_centroids)
     spark = embeddings.sparkSession
-    id_t = _id_schema(embeddings).split(" ")[1]
-
     if centroids is not None:
-        cent_unit = np.asarray(centroids, dtype=np.float64)
-        bc = spark.sparkContext.broadcast(cent_unit)
+        bc = spark.sparkContext.broadcast(np.asarray(centroids, dtype=np.float64))
 
-        if nprobe == 1:
+        def cells_of(q):
+            return _nearest(_round6(_fold_dot(q, bc.value)), nprobe)
 
-            def assign(batches):
-                cu = bc.value
-                for pdf in batches:
-                    if not len(pdf):
-                        continue
-                    cells = ivf_assign_cells(_emb_f64(pdf["embedding"]), cu)
-                    yield pd.DataFrame(
-                        {
-                            "vec_id": pdf["vec_id"],
-                            "cell": cells,
-                            "embedding": pdf["embedding"],
-                        }
-                    )
-
-            assigned = embeddings.select("vec_id", "embedding").mapInPandas(
-                assign,
-                schema=f"vec_id {id_t}, cell int, embedding array<float>",
-            )
-            schema = f"vec_id {id_t}, neighbor_id {id_t}, sim double, rank int"
-            return assigned.groupBy("cell").applyInPandas(
-                lambda pdf: _group_topk_pdf(pdf, k), schema=schema
-            )
-
-        def probe_rows(batches):
-            cu = bc.value
-            n_cent, dims = cu.shape
-            np_eff = min(nprobe, n_cent)
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                q = _emb_f64(pdf["embedding"])
-                proj = np.zeros((len(q), n_cent), dtype=np.float64)
-                for d in range(dims):
-                    proj += q[:, d : d + 1] * cu[:, d]
-                # stable sort on -proj: ties keep cell-ascending order;
-                # column 0 equals ivf_assign_cells' argmax home cell
-                order = np.argsort(-_round6(proj), axis=1, kind="stable")
-                frames = [
-                    pd.DataFrame(
-                        {
-                            "vec_id": pdf["vec_id"],
-                            "cell": order[:, p].astype(np.int32),
-                            "embedding": pdf["embedding"],
-                            "is_home": p == 0,
-                        }
-                    )
-                    for p in range(np_eff)
-                ]
-                yield pd.concat(frames, ignore_index=True)
-
-        probed = embeddings.select("vec_id", "embedding").mapInPandas(
-            probe_rows,
-            schema=(
-                f"vec_id {id_t}, cell int, embedding array<float>, "
-                "is_home boolean"
-            ),
+    else:
+        rows = (
+            embeddings.select("vec_id", "embedding")
+            .orderBy("vec_id")
+            .limit(n_centroids)
+            .collect()
         )
-        per_group = probed.groupBy("cell").applyInPandas(
-            lambda pdf: _group_topk_against_home_pdf(pdf, k),
-            schema=f"vec_id {id_t}, neighbor_id {id_t}, sim double",
-        )
-        from pyspark.sql import Window
+        bc = spark.sparkContext.broadcast(_sorted_unit(rows)[1])
 
-        w = Window.partitionBy("vec_id").orderBy(
-            F.desc("sim"), F.asc("neighbor_id")
-        )
-        return (
-            per_group.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .withColumn("rank", F.col("rank").cast("int"))
-        )
+        def cells_of(q):
+            # seeds ascend by vec_id: ties go to the smallest seed id
+            return _nearest(_round6(_unit(q) @ bc.value.T), nprobe)
 
-    cent_rows = (
-        embeddings.select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .limit(n_centroids)
-        .collect()
-    )
-    cent_ids = np.array([r["vec_id"] for r in cent_rows])
-    cent = np.array([r["embedding"] for r in cent_rows], dtype=np.float64)
-    cent_norm = np.sqrt((cent * cent).sum(axis=1))
-    cent_norm[cent_norm == 0] = 1.0
-    cent_unit = cent / cent_norm[:, None]
-    bc = spark.sparkContext.broadcast((cent_ids, cent_unit))
-
-    def assign(batches):
-        ids_c, cu = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            q = _emb_f64(pdf["embedding"])
-            qn = np.sqrt((q * q).sum(axis=1))
-            qn[qn == 0] = 1.0
-            sims = _round6((q / qn[:, None]) @ cu.T)
-            # first max = smallest centroid index; ids_c sorted ascending
-            cells = ids_c[np.argmax(sims, axis=1)]
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "cell": cells,
-                    "embedding": pdf["embedding"],
-                }
-            )
-
-    assigned = embeddings.select("vec_id", "embedding").mapInPandas(
-        assign, schema=f"vec_id {id_t}, cell {id_t}, embedding array<float>"
-    )
-
-    schema = f"vec_id {id_t}, neighbor_id {id_t}, sim double, rank int"
-    return assigned.groupBy("cell").applyInPandas(
-        lambda pdf: _group_topk_pdf(pdf, k), schema=schema
-    )
-
-
-def _group_topk_against_home_pdf(pdf, k: int):
-    """Multiprobe per-group kernel: every row is a QUERY probing this
-    bucket; only ``is_home`` rows are MEMBERS (each vector is indexed in
-    exactly one bucket, so a (query, member) pair occurs in exactly one
-    probe group — the cross-group merge needs no dedup).  Emits each
-    query's top-k against the members (self excluded, no rank column —
-    the global rank is assigned after the merge)."""
-    import numpy as np
-    import pandas as pd
-
-    home = pdf[pdf["is_home"].to_numpy()]
-    if len(home) == 0 or (len(pdf) == 1 and len(home) == 1):
-        return pd.DataFrame({"vec_id": [], "neighbor_id": [], "sim": []})
-    q_ids = pdf["vec_id"].to_numpy()
-    m_ids = home["vec_id"].to_numpy()
-    q_mat = _emb_f64(pdf["embedding"])
-    m_mat = _emb_f64(home["embedding"])
-
-    def unit(m):
-        n = np.sqrt((m * m).sum(axis=1))
-        n[n == 0] = 1.0
-        return m / n[:, None]
-
-    sims = _round6(unit(q_mat) @ unit(m_mat).T)
-    if _ids_vectorizable(np.concatenate([q_ids, m_ids])):
-        qi, ci, _ = _topk_pairs(q_ids, m_ids, sims, k)
-        return pd.DataFrame(
-            {"vec_id": q_ids[qi], "neighbor_id": m_ids[ci], "sim": sims[qi, ci]}
-        )
-    out = []
-    for i, vid in enumerate(q_ids):
-        s = sims[i]
-        cand = np.where(m_ids != vid)[0]
-        ordered = cand[np.lexsort((m_ids[cand], -s[cand]))][:k]
-        out.extend((vid, m_ids[j], float(s[j])) for j in ordered)
-    return pd.DataFrame(out, columns=["vec_id", "neighbor_id", "sim"])
+    return _cell_topk(_cells(embeddings, cells_of), k, probes=nprobe > 1)
 
 
 def ann_lsh_topk(
@@ -618,8 +513,8 @@ def ann_lsh_topk(
     numpy gram matrix + per-row top-k per bucket — replaces round 2's
     bucket self-join with interpreted per-pair zip_with/aggregate dots
     (355 s → seconds on the same input, same oracle answers).  Recall and
-    bucket size are tuned via ``bits``; skewed buckets are bounded by
-    2^bits fan-out — at larger scale raise ``bits`` (and/or multiprobe)
+    bucket size are tuned via ``bits`` (1..31); skewed buckets are bounded
+    by 2^bits fan-out — at larger scale raise ``bits`` (and/or multiprobe)
     so Σ n_b² stays linear-ish.
 
     ``multiprobe=1`` additionally probes every bucket at Hamming distance
@@ -631,81 +526,27 @@ def ann_lsh_topk(
     plus a second small shuffle (global re-rank over n×k×probes rows);
     measured recall@3 at sf0.1: 0.06 → ~0.3 at bits=6 (BENCH.md)."""
     import numpy as np
-    import pandas as pd
 
-    id_t = _id_schema(embeddings).split(" ")[1]
-    if multiprobe == 0:
-        schema = f"vec_id {id_t}, neighbor_id {id_t}, sim double, rank int"
-        return (
-            _bucketed(embeddings, bits)
-            .groupBy("bucket")
-            .applyInPandas(lambda pdf: _group_topk_pdf(pdf, k), schema=schema)
-        )
-    if multiprobe != 1:
+    _check_bits(bits)
+    _check_at_least_1(k=k)
+    if multiprobe not in (0, 1):
         raise ValueError("multiprobe must be 0 or 1 (Hamming radius)")
 
-    def probe_rows(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            codes = _bucket_codes(_emb_f64(pdf["embedding"]), bits)
-            frames = [
-                pd.DataFrame(
-                    {
-                        "vec_id": pdf["vec_id"],
-                        "bucket": codes,
-                        "embedding": pdf["embedding"],
-                        "is_home": True,
-                    }
-                )
-            ]
-            for b in range(bits):
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "vec_id": pdf["vec_id"],
-                            "bucket": codes ^ (1 << b),
-                            "embedding": pdf["embedding"],
-                            "is_home": False,
-                        }
-                    )
-                )
-            yield pd.concat(frames, ignore_index=True)
+    def cells_of(q):
+        codes = _bucket_codes(q, bits)
+        flips = [codes ^ (1 << b) for b in range(bits)] if multiprobe else []
+        return np.column_stack([codes, *flips])
 
-    probed = embeddings.select("vec_id", "embedding").mapInPandas(
-        probe_rows,
-        schema=(
-            f"vec_id {id_t}, bucket int, embedding array<float>, "
-            "is_home boolean"
-        ),
-    )
-    per_group = probed.groupBy("bucket").applyInPandas(
-        lambda pdf: _group_topk_against_home_pdf(pdf, k),
-        schema=f"vec_id {id_t}, neighbor_id {id_t}, sim double",
-    )
-    # global merge: each (query, member) pair exists in exactly one probe
-    # group, so a plain windowed re-rank (high-cardinality key vec_id)
-    # finishes the top-k — same (-sim, neighbor_id) order as _topk_pairs
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("vec_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id")
-    )
-    return (
-        per_group.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .withColumn("rank", F.col("rank").cast("int"))
-    )
+    return _cell_topk(_cells(embeddings, cells_of), k, probes=multiprobe == 1)
 
 
 def pca_project(embeddings: DataFrame, mean, components) -> DataFrame:
     """(vec_id, pc1..pck): project each embedding onto offline-fitted
     principal components (``scripts/fit_pca.py`` artifact — mean vector +
     component matrix shipped as constants to BOTH engines, the IVF
-    centroid pattern).  The projection folds dim-by-dim like
-    ``ivf_assign_cells`` so the float64 addition order matches DuckDB's
-    sequential ``list_sum`` — values are bit-stable across engines after
-    the 6dp round.  One narrow mapInPandas: zero shuffles; the standard
+    centroid pattern).  The projection is ``_fold_dot`` of the centered
+    vector, so values are bit-stable across engines after the 6dp round.
+    One narrow mapInPandas: zero shuffles; the standard
     dimensionality-reduction front of an embedding pipeline (cheaper ANN,
     visualization, drift monitoring)."""
     import numpy as np
@@ -716,25 +557,19 @@ def pca_project(embeddings: DataFrame, mean, components) -> DataFrame:
     k = comp.shape[0]
     spark = embeddings.sparkSession
     bc = spark.sparkContext.broadcast((mean, comp))
-    id_t = _id_schema(embeddings).split(" ")[1]
 
     def run(batches):
         m, c = bc.value
-        n_comp, dims = c.shape
         for pdf in batches:
             if not len(pdf):
                 continue
-            q = _emb_f64(pdf["embedding"])
-            proj = np.zeros((len(q), n_comp), dtype=np.float64)
-            for d in range(dims):
-                proj += (q[:, d : d + 1] - m[d]) * c[:, d]
-            proj = _round6(proj)
+            proj = _round6(_fold_dot(_emb_f64(pdf["embedding"]) - m, c))
             out = {"vec_id": pdf["vec_id"]}
-            for j in range(n_comp):
+            for j in range(k):
                 out[f"pc{j + 1}"] = proj[:, j]
             yield pd.DataFrame(out)
 
-    schema = f"vec_id {id_t}, " + ", ".join(
+    schema = f"vec_id {_id_type(embeddings)}, " + ", ".join(
         f"pc{j + 1} double" for j in range(k)
     )
     return embeddings.select("vec_id", "embedding").mapInPandas(run, schema=schema)
@@ -761,48 +596,17 @@ def semdedup(embeddings: DataFrame, centroids, threshold: float = 0.5) -> DataFr
     import pandas as pd
 
     spark = embeddings.sparkSession
-    id_t = _id_schema(embeddings).split(" ")[1]
-    cent_unit = np.asarray(centroids, dtype=np.float64)
-    bc = spark.sparkContext.broadcast(cent_unit)
-
-    def assign(batches):
-        cu = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cells = ivf_assign_cells(_emb_f64(pdf["embedding"]), cu)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "cell": cells,
-                    "embedding": pdf["embedding"],
-                }
-            )
-
-    assigned = embeddings.select("vec_id", "embedding").mapInPandas(
-        assign, schema=f"vec_id {id_t}, cell int, embedding array<float>"
-    )
+    id_t = _id_type(embeddings)
+    bc = spark.sparkContext.broadcast(np.asarray(centroids, dtype=np.float64))
 
     def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        if n == 0:
-            return pd.DataFrame(
-                {"vec_id": [], "cell": [], "keeper_id": [], "is_kept": []}
-            )
         ids = pdf["vec_id"].to_numpy()
-        mat = _emb_f64(pdf["embedding"])
-        norms = np.sqrt((mat * mat).sum(axis=1))
-        norms[norms == 0] = 1.0
-        unit = mat / norms[:, None]
-        sims = _round6(unit @ unit.T)
-        mask = sims >= threshold
+        unit = _unit(_emb_f64(pdf["embedding"]))
+        mask = _round6(unit @ unit.T) >= threshold
         np.fill_diagonal(mask, True)
-        if _ids_vectorizable(ids):
-            iid = ids.astype(np.int64)
-            masked = np.where(mask, iid[None, :], np.iinfo(np.int64).max)
-            keep = masked.min(axis=1).astype(ids.dtype)
-        else:
-            keep = np.array([min(ids[mask[i]]) for i in range(n)])
+        # the keeper is the smallest id in each row's mask: min dense rank
+        uniq, id_rank = np.unique(ids, return_inverse=True)
+        keep = uniq[np.where(mask, id_rank[None, :], len(uniq)).min(axis=1)]
         return pd.DataFrame(
             {
                 "vec_id": ids,
@@ -812,9 +616,13 @@ def semdedup(embeddings: DataFrame, centroids, threshold: float = 0.5) -> DataFr
             }
         )
 
-    return assigned.groupBy("cell").applyInPandas(
-        per_cell,
-        schema=f"vec_id {id_t}, cell int, keeper_id {id_t}, is_kept boolean",
+    return (
+        _cells(embeddings, lambda q: ivf_assign_cells(q, bc.value)[:, None])
+        .groupBy("cell")
+        .applyInPandas(
+            per_cell,
+            schema=f"vec_id {id_t}, cell int, keeper_id {id_t}, is_kept boolean",
+        )
     )
 
 
@@ -845,34 +653,25 @@ def embedding_decontaminate(
     import numpy as np
     import pandas as pd
 
-    if eval_n < 1:
-        raise ValueError("eval_n must be >= 1")
+    _check_at_least_1(eval_n=eval_n)
     spark = embeddings.sparkSession
-    id_t = _id_schema(embeddings).split(" ")[1]
+    id_t = _id_type(embeddings)
     rows = (
         embeddings.select("vec_id", "embedding")
         .orderBy("vec_id")
         .limit(eval_n)
         .collect()
     )
-    ids = np.array([r["vec_id"] for r in rows])
-    order = np.argsort(ids, kind="stable")
-    eval_ids = ids[order]
-    mat = np.array([r["embedding"] for r in rows], dtype=np.float64)[order]
-    norms = np.sqrt((mat * mat).sum(axis=1))
-    norms[norms == 0] = 1.0
+    eval_ids, eval_unit = _sorted_unit(rows)
     cutoff = eval_ids[-1]
-    bc = spark.sparkContext.broadcast((eval_ids, mat / norms[:, None]))
+    bc = spark.sparkContext.broadcast((eval_ids, eval_unit))
 
     def run(batches):
         e_ids, e_unit = bc.value
         for pdf in batches:
             if not len(pdf):
                 continue
-            q = _emb_f64(pdf["embedding"])
-            qn = np.sqrt((q * q).sum(axis=1))
-            qn[qn == 0] = 1.0
-            sims = _round6((q / qn[:, None]) @ e_unit.T)
+            sims = _round6(_unit(_emb_f64(pdf["embedding"])) @ e_unit.T)
             # argmax returns the FIRST max column; columns ascend by
             # eval id, so ties resolve to the smallest eval id — the
             # oracle's (sim desc, eval_id asc) rank-1 row

@@ -8,9 +8,9 @@ transforms over ``mapInPandas``.
 Round 3: formats whose containers are plain structs are decoded FOR REAL
 in pure numpy — BMP (uncompressed 24/32-bit), PPM/PGM (binary P6/P5) and
 WAV (PCM 8/16-bit) need no codec library.  Round 6: PNG is decoded for
-real too — ``operators.png`` implements DEFLATE (stored, fixed- and
-dynamic-Huffman), the zlib/adler32 wrapper, CRC32 and scanline
-unfiltering from scratch (tested against stdlib zlib as an oracle).
+real too — ``operators.png`` parses the container and unfilters the
+scanlines; the DEFLATE stream, CRC32 and adler32 come from stdlib
+``zlib``.
 The remaining compressed codecs (JPEG, MP3, MP4...) genuinely require
 libraries absent from this environment, so they keep the documented
 stub seam: ``decode_media`` raises NotImplementedError for them unless
@@ -222,7 +222,7 @@ def decode_media(
 ):
     """Decode a media payload into (width, height, n_frames, decoder,
     thumbnail).  Codec-free container formats (BMP, PPM/PGM, PCM WAV) and
-    PNG (from-scratch inflate, ``operators.png``) are decoded for real;
+    PNG (``operators.png``, stdlib inflate) are decoded for real;
     everything else hits the stub seam — raises unless
     ``deterministic_fake`` (production plugs Pillow/ffmpeg there)."""
     kind = _sniff(payload) if payload is not None else None
@@ -390,8 +390,8 @@ def synth_payload_for(doc_id: str, kind: str) -> bytes:
 
 def synthesize_media(docs: DataFrame) -> DataFrame:
     """(doc_id, media_ref, payload): three deterministic payload rows per
-    document (one BMP image, one PNG image — exercising the from-scratch
-    inflate path — and one PCM-WAV audio) — NARROW generation, no
+    document (one BMP image, one PNG image — exercising the PNG
+    decode path — and one PCM-WAV audio) — NARROW generation, no
     shuffle; feeds ``media_features`` with real decodable bytes."""
     schema = "doc_id string, media_ref string, payload binary"
 

@@ -1,16 +1,17 @@
 """Minimal PDF text/layout span extraction — the "PDF/layout parse" leg
 of the north rule's main-content extraction triad (HTML boilerplate
-strip / PDF parse / DOM heuristics), with zero codec libraries: content
-streams compressed with /FlateDecode are inflated by the repo's own
-from-scratch DEFLATE implementation (``operators.png.zlib_decompress``).
+strip / PDF parse / DOM heuristics), with no PDF library: content
+streams compressed with /FlateDecode are inflated through
+``operators.png.zlib_decompress`` (zlib header and adler32 checks, raw
+DEFLATE by the stdlib ``zlib`` module).
 
 Scope (documented, like the multimodal codec seams):
 - PDF 1.x files with uncompressed cross-reference layout (objects are
   located by scanning ``N 0 obj … endobj`` spans, so a damaged or absent
   xref table is tolerated — the parser is recovery-oriented like the
   HTML parser);
-- content streams raw or /FlateDecode (our inflate handles stored,
-  fixed- and dynamic-Huffman blocks); other filters (LZW, DCT…) raise;
+- content streams raw or /FlateDecode (stored, fixed- and
+  dynamic-Huffman blocks); other filters (LZW, DCT…) raise;
 - text via the Tj / ' / " / TJ operators with literal ``(…)`` strings
   (escapes: \\\\ \\( \\) \\n \\r \\t \\b \\f, octal, line continuation)
   and ``<hex>`` strings, 1-byte encodings (WinAnsi/Standard-ish: bytes

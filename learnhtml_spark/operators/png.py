@@ -1,201 +1,34 @@
-"""From-scratch PNG codec (decode + stored-block encode) in pure
-python/numpy — closes the round-5 multimodal stub seam for PNG without
-any codec library: the DEFLATE inflater (RFC 1951: stored, fixed-Huffman
-AND dynamic-Huffman blocks), the zlib wrapper (RFC 1950, adler32
-verified), CRC32, and the PNG container + scanline unfiltering
-(RFC 2083 filters 0-4 incl. Paeth) are all implemented here.
+"""PNG codec (decode + stored-block encode) in python/numpy — closes the
+round-5 multimodal stub seam for PNG: the PNG container (chunk CRCs),
+the zlib wrapper (RFC 1950 header and adler32 checks) and the scanline
+unfiltering (RFC 2083 filters 0-4 incl. Paeth) are implemented here; the
+raw DEFLATE stream (RFC 1951) is inflated by the stdlib ``zlib`` module,
+which also supplies CRC32 and adler32.
 
 Scope: 8-bit samples, color types 0 (gray), 2 (RGB), 3 (palette),
 4 (gray+alpha), 6 (RGBA), non-interlaced — i.e. what PNG encoders emit
 by default for photographic/synthetic content.  16-bit and Adam7 raise
 with a clear message (they remain the one documented seam).
 
-This is a correctness/seam-closure decoder: the symbol-by-symbol
-Huffman walk is Python-speed, fine for the thumbnail-sized media spans
-the extraction pipeline carries (and for tests, which cross-check
-against stdlib zlib as an oracle); a production deployment would plug
-an optimized codec at the same ``decode_media`` seam.
+The encoder writes stored (uncompressed) DEFLATE blocks, so synthesized
+payloads are byte-stable across zlib builds.
 
-Tests: tests/test_misc_surface.py — inverse-encode (stored blocks),
-stdlib-zlib oracle streams (fixed via Z_FIXED, dynamic via default
-strategy), filter coverage, and corrupt-stream failure modes.
+Tests: tests/test_png.py — inverse-encode (stored blocks), stdlib-zlib
+streams (fixed via Z_FIXED, dynamic via default strategy), filter
+coverage, and corrupt-stream failure modes.
 """
 
 from __future__ import annotations
 
 import struct
+import zlib
 
 import numpy as np
 
-# --- DEFLATE tables (RFC 1951 §3.2.5-3.2.6) --------------------------------
-
-_LEN_BASE = [3, 4, 5, 6, 7, 8, 9, 10, 11, 13, 15, 17, 19, 23, 27, 31, 35,
-             43, 51, 59, 67, 83, 99, 115, 131, 163, 195, 227, 258]
-_LEN_EXTRA = [0, 0, 0, 0, 0, 0, 0, 0, 1, 1, 1, 1, 2, 2, 2, 2, 3, 3, 3, 3,
-              4, 4, 4, 4, 5, 5, 5, 5, 0]
-_DIST_BASE = [1, 2, 3, 4, 5, 7, 9, 13, 17, 25, 33, 49, 65, 97, 129, 193,
-              257, 385, 513, 769, 1025, 1537, 2049, 3073, 4097, 6145,
-              8193, 12289, 16385, 24577]
-_DIST_EXTRA = [0, 0, 0, 0, 1, 1, 2, 2, 3, 3, 4, 4, 5, 5, 6, 6, 7, 7, 8, 8,
-               9, 9, 10, 10, 11, 11, 12, 12, 13, 13]
-_CLEN_ORDER = [16, 17, 18, 0, 8, 7, 9, 6, 10, 5, 11, 4, 12, 3, 13, 2, 14,
-               1, 15]
-
-_FIXED_LIT_LENGTHS = ([8] * 144) + ([9] * 112) + ([7] * 24) + ([8] * 8)
-_FIXED_DIST_LENGTHS = [5] * 30
-
-
-def _huff_table(lengths):
-    """Canonical Huffman decode table: (nbits, code) -> symbol."""
-    maxlen = max(lengths) if lengths else 0
-    bl_count = [0] * (maxlen + 1)
-    for ln in lengths:
-        if ln:
-            bl_count[ln] += 1
-    table = {}
-    code = 0
-    next_code = [0] * (maxlen + 1)
-    for b in range(1, maxlen + 1):
-        code = (code + bl_count[b - 1]) << 1
-        next_code[b] = code
-    for sym, ln in enumerate(lengths):
-        if ln:
-            table[(ln, next_code[ln])] = sym
-            next_code[ln] += 1
-    return table
-
-
-class _BitReader:
-    """LSB-first bit reader over a bytes buffer (DEFLATE bit order)."""
-
-    __slots__ = ("data", "pos")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-
-    def bits(self, n: int) -> int:
-        v = 0
-        d, pos = self.data, self.pos
-        if (pos + n) > len(d) * 8:
-            raise ValueError("inflate: truncated stream")
-        for i in range(n):
-            v |= ((d[pos >> 3] >> (pos & 7)) & 1) << i
-            pos += 1
-        self.pos = pos
-        return v
-
-    def symbol(self, table) -> int:
-        """Huffman codes pack MSB-first while the stream is LSB-first:
-        accumulate one bit at a time."""
-        d, pos = self.data, self.pos
-        nbytes8 = len(d) * 8
-        code = 0
-        for length in range(1, 16):
-            if pos >= nbytes8:
-                raise ValueError("inflate: truncated stream")
-            code = (code << 1) | ((d[pos >> 3] >> (pos & 7)) & 1)
-            pos += 1
-            sym = table.get((length, code))
-            if sym is not None:
-                self.pos = pos
-                return sym
-        raise ValueError("inflate: invalid Huffman code")
-
-    def align_byte(self):
-        self.pos = (self.pos + 7) & ~7
-
-
-def inflate(data: bytes) -> bytes:
-    """Raw DEFLATE decompression (RFC 1951): stored, fixed-Huffman and
-    dynamic-Huffman blocks."""
-    br = _BitReader(data)
-    out = bytearray()
-    while True:
-        bfinal = br.bits(1)
-        btype = br.bits(2)
-        if btype == 0:  # stored
-            br.align_byte()
-            base = br.pos >> 3
-            if base + 4 > len(data):
-                raise ValueError("inflate: truncated stored header")
-            ln, nln = struct.unpack_from("<HH", data, base)
-            if ln ^ nln != 0xFFFF:
-                raise ValueError("inflate: stored LEN/NLEN mismatch")
-            if base + 4 + ln > len(data):
-                raise ValueError("inflate: truncated stored block")
-            out += data[base + 4: base + 4 + ln]
-            br.pos = (base + 4 + ln) * 8
-        elif btype in (1, 2):
-            if btype == 1:
-                lit_t = _huff_table(_FIXED_LIT_LENGTHS)
-                dist_t = _huff_table(_FIXED_DIST_LENGTHS)
-            else:
-                hlit = br.bits(5) + 257
-                hdist = br.bits(5) + 1
-                hclen = br.bits(4) + 4
-                clens = [0] * 19
-                for i in range(hclen):
-                    clens[_CLEN_ORDER[i]] = br.bits(3)
-                cl_t = _huff_table(clens)
-                lengths = []
-                while len(lengths) < hlit + hdist:
-                    s = br.symbol(cl_t)
-                    if s < 16:
-                        lengths.append(s)
-                    elif s == 16:
-                        if not lengths:
-                            raise ValueError("inflate: repeat with no prior")
-                        lengths += [lengths[-1]] * (3 + br.bits(2))
-                    elif s == 17:
-                        lengths += [0] * (3 + br.bits(3))
-                    else:
-                        lengths += [0] * (11 + br.bits(7))
-                lit_t = _huff_table(lengths[:hlit])
-                dist_t = _huff_table(lengths[hlit:])
-            while True:
-                sym = br.symbol(lit_t)
-                if sym < 256:
-                    out.append(sym)
-                elif sym == 256:
-                    break
-                else:
-                    if sym > 285:
-                        raise ValueError("inflate: bad length symbol")
-                    i = sym - 257
-                    length = _LEN_BASE[i] + br.bits(_LEN_EXTRA[i])
-                    dsym = br.symbol(dist_t)
-                    if dsym > 29:
-                        raise ValueError("inflate: bad distance symbol")
-                    dist = _DIST_BASE[dsym] + br.bits(_DIST_EXTRA[dsym])
-                    if dist > len(out):
-                        raise ValueError("inflate: distance beyond output")
-                    start = len(out) - dist
-                    for j in range(length):  # overlapping copies are legal
-                        out.append(out[start + j])
-        else:
-            raise ValueError("inflate: reserved block type 3")
-        if bfinal:
-            return bytes(out)
-
-
-def adler32(data: bytes) -> int:
-    """RFC 1950 checksum, vectorized: per-chunk numpy prefix sums keep
-    the int64 partials below overflow before each mod."""
-    a, b = 1, 0
-    arr = np.frombuffer(data, np.uint8).astype(np.int64)
-    # b grows ~ len*255*len/2 per chunk; 2^63 bound => chunk ~ 2^26 safe
-    step = 1 << 24
-    for i in range(0, len(arr), step):
-        chunk = arr[i: i + step]
-        csum = np.cumsum(chunk)
-        b = (b + len(chunk) * a + int(csum.sum())) % 65521
-        a = (a + int(csum[-1]) if len(chunk) else a) % 65521
-    return ((b << 16) | a) & 0xFFFFFFFF
-
 
 def zlib_decompress(data: bytes) -> bytes:
-    """RFC 1950 wrapper around ``inflate`` with adler32 verification."""
+    """RFC 1950 stream -> bytes: header checks here, raw DEFLATE by stdlib
+    ``zlib``, adler32 verified here so a bad checksum names itself."""
     if len(data) < 6:
         raise ValueError("zlib: stream too short")
     cmf, flg = data[0], data[1]
@@ -205,9 +38,12 @@ def zlib_decompress(data: bytes) -> bytes:
         raise ValueError("zlib: bad header check")
     if flg & 0x20:
         raise ValueError("zlib: preset dictionary unsupported")
-    raw = inflate(data[2:-4])
+    try:
+        raw = zlib.decompress(data[2:-4], -15)
+    except zlib.error as e:
+        raise ValueError(f"inflate: {e}") from None
     want = struct.unpack(">I", data[-4:])[0]
-    if adler32(raw) != want:
+    if zlib.adler32(raw) != want:
         raise ValueError("zlib: adler32 mismatch")
     return raw
 
@@ -227,32 +63,8 @@ def zlib_compress_stored(data: bytes) -> bytes:
         out += chunk
         if final:
             break
-    out += struct.pack(">I", adler32(data))
+    out += struct.pack(">I", zlib.adler32(data))
     return bytes(out)
-
-
-_CRC_TABLE = None
-
-
-def crc32(data: bytes, crc: int = 0) -> int:
-    # plain-int table loop: python ints are ~30x faster per byte than the
-    # numpy-scalar walk this used to do (every numpy index/xor on a 0-d
-    # array costs ~1 us of dispatch; media payloads pay crc32 six times
-    # per PNG doc, so this was ~25% of the whole media_features kernel)
-    global _CRC_TABLE
-    if _CRC_TABLE is None:
-        tbl = []
-        for i in range(256):
-            c = i
-            for _ in range(8):
-                c = (0xEDB88320 ^ (c >> 1)) if (c & 1) else (c >> 1)
-            tbl.append(c)
-        _CRC_TABLE = tbl
-    crc ^= 0xFFFFFFFF
-    tbl = _CRC_TABLE
-    for byte in data:
-        crc = tbl[(crc ^ byte) & 0xFF] ^ (crc >> 8)
-    return crc ^ 0xFFFFFFFF
 
 
 _CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
@@ -273,7 +85,7 @@ def decode_png(payload: bytes) -> np.ndarray:
         if len(body) != size:
             raise ValueError("PNG: truncated chunk")
         want = struct.unpack_from(">I", payload, pos + 8 + size)[0]
-        if crc32(payload[pos + 4: pos + 8 + size]) != want:
+        if zlib.crc32(payload[pos + 4: pos + 8 + size]) != want:
             raise ValueError("PNG: chunk CRC mismatch")
         if ctype == b"IHDR":
             ihdr = struct.unpack(">IIBBBBB", body)
@@ -364,7 +176,7 @@ def encode_png(px: np.ndarray) -> bytes:
             struct.pack(">I", len(body))
             + ctype
             + body
-            + struct.pack(">I", crc32(ctype + body))
+            + struct.pack(">I", zlib.crc32(ctype + body))
         )
 
     ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)

@@ -23,12 +23,15 @@ NOTES = {
     "tfidf_topk": "tf agg -> df agg -> token join (vocab-sized, AQE) -> doc_id rank window; N = broadcast one-row count in-plan (no eager docs.count())",
     "pack_sequences": "md5 bucket -> two-phase distributed cumsum (literal-boundary chunks + broadcast offsets) -> integer bin math",
     "simhash": "SINGLE hash-aggregate: 16 vote sums in one groupBy, no bit explode; built as SQL expression text (~190 py4j commands)",
-    "ann_topk": "bucket inline (mapInPandas) -> ONE shuffle (groupBy bucket) -> numpy gram + top-k per bucket (applyInPandas)",
-    "ivf_topk": "IVF-flat: centroid broadcast -> inline cell assignment (mapInPandas) -> ONE shuffle -> per-cell gram top-k",
+    "ann_topk": "_cells (LSH code, home cell only) inline -> ONE shuffle (groupBy cell) -> _cell_topk_pdf gram + rank-keyed top-k per bucket (applyInPandas)",
+    "ann_multiprobe": "_cells (code + one row per single-bit flip; home rows are the members) -> groupBy cell -> _cell_topk_pdf -> the one row_number re-rank on vec_id",
+    "ivf_topk": "IVF-flat: centroid broadcast -> _cells (nearest centroid, _fold_dot order) -> ONE shuffle -> _cell_topk_pdf per cell",
+    "ivf_probe": "_cells (2 nearest centroids; home rows are the members) -> groupBy cell -> _cell_topk_pdf -> the one row_number re-rank on vec_id (ann_multiprobe's tail)",
     "sibling_pos": "two-phase rank: literal-boundary chunk ids (pure row fn) + (chunk,group) window + broadcast offsets",
-    "embedding_neardup": "bucket inline -> ONE shuffle -> per-bucket gram + threshold filter",
+    "embedding_neardup": "_cells (LSH code) inline -> ONE shuffle -> per-bucket gram + threshold filter",
     "ngram_jaccard": "shingle self-join + AQE-sided size joins (no forced per-doc broadcast) — exact verify step",
-    "cosine_topk": "broadcast corpus matmul in one python stage (exact baseline; ann_topk is the scale path)",
+    "cosine_topk": "broadcast unit corpus (_sorted_unit) -> one python stage: batch matmul + rank-keyed top-k (exact baseline; ann_topk is the scale path)",
+    "pca_project": "one narrow mapInPandas: _fold_dot of the centered vector against the broadcast components, zero exchanges",
     "source_rollup": "dim broadcast (BroadcastHashJoin), partial aggs map-side",
     "token_stats": "pure narrow plan",
     "quality": "pure narrow plan",
@@ -58,8 +61,8 @@ NOTES = {
     "quality_gate": "gopher signals (narrow exprs + two hash aggs + pk join) -> narrow CASE verdict chain",
     "corpus_build": "four stage branches (exact fp agg, keeper-edge LSH, gopher gate, broadcast-eval decontaminate) -> three AQE-sized doc_id equi-joins; whole pipeline one plan",
     "contamination_report": "eval grams broadcast (bounded by eval suite) -> one corpus shingle pass -> per-eval-doc agg + zero-leak restore join",
-    "embedding_decontaminate": "semantic decontamination: eval matrix broadcast (small by construction) -> ONE narrow mapInPandas gram pass; vec_id>cutoff pushed to the parquet scan, ZERO exchanges",
-    "semdedup": "SemDeDup: centroid broadcast -> narrow cell assignment (mapInPandas) -> ONE shuffle -> per-cell gram + in-kernel min-keeper fold (no pair rows)",
+    "embedding_decontaminate": "semantic decontamination: eval matrix broadcast (_sorted_unit; small by construction) -> ONE narrow mapInPandas gram pass; vec_id>cutoff pushed to the parquet scan, ZERO exchanges",
+    "semdedup": "SemDeDup: centroid broadcast -> _cells (nearest centroid) -> ONE shuffle -> per-cell gram + in-kernel min-keeper fold by dense id rank (no pair rows)",
     "quantile_filter": "guarded padded desc key -> skew-safe two-phase rank -> broadcast per-group counts -> integer-ratio cut",
     "pdf_spans": "pure narrow plan: synthesize -> build/Flate-compress -> inflate/parse, one python stage, zero exchanges",
     "heuristic_spans": "scan -> repartition (2x cores: python-stage balancing, the _docs_balanced pattern) -> ONE mapInPandas (parse + blockify + density rules)",

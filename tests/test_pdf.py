@@ -1,6 +1,6 @@
 """PDF text/layout span extraction (operators/pdf.py): round-trip
-through the repo's own PDF builder (Flate streams compressed with the
-from-scratch zlib encoder, inflated by the from-scratch inflater),
+through the repo's own PDF builder (Flate streams written by the
+stored-block zlib encoder, inflated through ``zlib_decompress``),
 PDF string-syntax edge cases, multi-page /Kids ordering, layout
 coordinates, and the Spark operator's poison-row contract.
 

@@ -1,10 +1,12 @@
-"""Unit tests for the similarity family's round-3 kernels: rounding mode,
-plane-matrix derivation, vectorized top-k, and the bucketed Spark plans.
+"""Unit tests for the similarity family's shared parts: rounding mode,
+plane-matrix derivation, the rank-keyed top-k for every id type, the
+bucketed and cell-probing Spark plans, and the call-time parameter ranges.
 
 Semantics are ALSO pinned end-to-end by the DuckDB oracles in
 __spark_entry__.py; these tests pin the internals that make those oracles
 pass (HALF_UP rounding, md5 plane derivation, composite-key top-k) so a
-refactor can't silently drift them.
+refactor can't silently drift them.  String ids and longs outside 0..2^32
+have no oracle; they are checked against a per-row lexsort reference.
 """
 
 import hashlib
@@ -552,3 +554,250 @@ def test_embedding_decontaminate_string_ids(spark):
     assert {r["vec_id"] for r in out} == {"id3", "id4", "id5"}
     assert all(r["nearest_eval_id"] in {"id0", "id1", "id2"} for r in out)
     assert dict(out[0].asDict())["max_sim"] <= 1.0
+
+
+def _lexsort_topk(q_id, ids, sims_row, cand_mask, k):
+    """Per-row reference top-k: candidates in ``cand_mask`` other than the
+    query itself, ordered by (-sim, id), first k as (id, sim)."""
+    cand = np.where(cand_mask & (ids != q_id))[0]
+    best = cand[np.lexsort((ids[cand], -sims_row[cand]))][:k]
+    return [(ids[j], sims_row[j]) for j in best]
+
+
+_ID_KINDS = {
+    # lexicographic order differs from numeric order ("v10" < "v2")
+    "string": lambda n: np.array([f"v{(i * 17) % n}" for i in range(n)], dtype=object),
+    # negative longs and longs beyond 2^32, both signs
+    "wide": lambda n: np.array(
+        [-i - 1 if i % 3 == 0 else (-1) ** i * (2 ** 33 + i * 1_000_003)
+         for i in range(n)],
+        dtype=np.int64,
+    ),
+}
+
+
+@pytest.mark.parametrize("id_kind", ["string", "wide"])
+def test_topk_pairs_any_id_type_matches_lexsort(id_kind):
+    """The dense-rank key equals the per-row lexsort on tie plateaus, with
+    queries outside the candidates and k beyond the candidate count."""
+    from learnhtml_spark.functions.similarity import _topk_pairs
+
+    rng = np.random.default_rng(21)
+    pool = _ID_KINDS[id_kind](30)
+    for _ in range(60):
+        n_c = int(rng.integers(1, 12))
+        cand = pool[rng.choice(len(pool), n_c, replace=False)]
+        q_ids = pool[rng.choice(len(pool), int(rng.integers(1, 8)), replace=False)]
+        sims = rng.integers(-4, 5, (len(q_ids), n_c)) / 4.0
+        k = int(rng.integers(1, n_c + 3))
+        qi, ci, ranks = _topk_pairs(q_ids, cand, sims, k)
+        for i, q in enumerate(q_ids):
+            mine = qi == i
+            got = list(zip(cand[ci[mine]], sims[i, ci[mine]]))
+            assert got == _lexsort_topk(q, cand, sims[i], np.ones(n_c, bool), k)
+            assert ranks[mine].tolist() == list(range(1, len(got) + 1))
+
+
+def _frame(spark, ids, mat):
+    t = "string" if ids.dtype == object else "long"
+    rows = [(ids[i].item() if t == "long" else ids[i], [float(x) for x in mat[i]])
+            for i in range(len(ids))]
+    return spark.createDataFrame(rows, f"vec_id {t}, embedding array<float>")
+
+
+def _unit_rows(m):
+    norms = np.sqrt((m * m).sum(axis=1))
+    norms[norms == 0] = 1.0
+    return m / norms[:, None]
+
+
+def _probe_order(sims):
+    from learnhtml_spark.functions.similarity import _round6
+
+    return np.argsort(-_round6(sims), axis=1, kind="stable")
+
+
+def _fold(q, m):
+    out = np.zeros((len(q), len(m)))
+    for d in range(q.shape[1]):
+        out += q[:, d : d + 1] * m[:, d]
+    return out
+
+
+@pytest.mark.parametrize("id_kind", ["string", "wide"])
+def test_similarity_family_any_id_type_matches_lexsort(spark, id_kind):
+    """Every top-k operator, and semdedup's keeper, on string ids and on
+    negative / beyond-2^32 longs equals the per-row lexsort reference over
+    the operator's candidate sets; exact duplicate vectors make tie
+    plateaus that only the id order breaks."""
+    from learnhtml_spark.functions.similarity import (
+        _bucket_codes,
+        _round6,
+        ann_lsh_topk,
+        cosine_topk,
+        fit_ivf_centroids,
+        ivf_topk,
+        semdedup,
+    )
+
+    n = 48
+    rng = np.random.default_rng(13)
+    mat = rng.standard_normal((n, 8)).astype(np.float32).astype(np.float64)
+    mat[40:44] = mat[0]
+    mat[44:48] = mat[5]
+    ids = _ID_KINDS[id_kind](n)
+    df = _frame(spark, ids, mat)
+    unit = _unit_rows(mat)
+    sims = _round6(unit @ unit.T)
+    by_id = np.argsort(ids, kind="stable")
+    cent = fit_ivf_centroids(mat[by_id], 3)
+    codes = _bucket_codes(mat, 3)
+    flips = np.stack([codes] + [codes ^ (1 << b) for b in range(3)], axis=1)
+    fitted = _probe_order(_fold(mat, cent))
+    seeds = _probe_order(unit @ unit[by_id[:4]].T)
+
+    def probes(order, p):
+        return (order[:, :p][:, :, None] == order[None, :, 0]).any(axis=1)
+
+    cases = {
+        "cosine_topk": (cosine_topk(df, k=4), np.ones((n, n), bool), 4),
+        "ann_topk": (
+            ann_lsh_topk(df, bits=3, k=3), codes[:, None] == codes[None, :], 3
+        ),
+        "ann_multiprobe": (
+            ann_lsh_topk(df, bits=3, k=3, multiprobe=1),
+            (flips[:, :, None] == codes[None, None, :]).any(axis=1), 3,
+        ),
+        "ivf_seeded": (ivf_topk(df, n_centroids=4, k=3), probes(seeds, 1), 3),
+        "ivf_fitted": (ivf_topk(df, k=3, centroids=cent), probes(fitted, 1), 3),
+        "ivf_nprobe2": (
+            ivf_topk(df, k=3, centroids=cent, nprobe=2), probes(fitted, 2), 3
+        ),
+    }
+    pos = {v: i for i, v in enumerate(ids.tolist())}
+    for name, (out, mask, k) in cases.items():
+        assert dict(out.dtypes)["neighbor_id"] == dict(df.dtypes)["vec_id"]
+        got = {}
+        for r in out.collect():
+            got.setdefault(r["vec_id"], []).append(
+                (r["rank"], r["neighbor_id"], r["sim"])
+            )
+        for v, i in pos.items():
+            want = _lexsort_topk(ids[i], ids, sims[i], mask[i], k)
+            have = sorted(got.get(v, []))
+            assert [r for r, _, _ in have] == list(range(1, len(have) + 1))
+            assert [nb for _, nb, _ in have] == [w for w, _ in want], (name, v)
+            for (_, _, s_have), (_, s_want) in zip(have, want):
+                assert s_have == pytest.approx(s_want, abs=2e-6)
+
+    cell = fitted[:, 0]
+    got = {r["vec_id"]: r for r in semdedup(df, cent, threshold=0.3).collect()}
+    for v, i in pos.items():
+        mates = (cell == cell[i]) & (sims[i] >= 0.3)
+        mates[i] = True
+        assert got[v]["keeper_id"] == min(ids[mates].tolist()), v
+        assert got[v]["cell"] == cell[i]
+        assert got[v]["is_kept"] == (got[v]["keeper_id"] == v)
+
+
+@pytest.fixture(scope="module")
+def random_emb(spark):
+    rng = np.random.default_rng(5)
+    mat = rng.standard_normal((40, 8)).astype(np.float32).astype(np.float64)
+    return _frame(spark, np.arange(40, dtype=np.int64), mat), mat
+
+
+def test_ivf_seeded_nprobe_equals_python_reference(random_emb):
+    """Data-seeded mode honours nprobe: nprobe=2 equals brute-force top-k
+    over members of the query's 2 best seed cells, members indexed in
+    their single best cell only — and differs from nprobe=1."""
+    from learnhtml_spark.functions.similarity import _round6, ivf_topk
+
+    df, mat = random_emb
+    k, n_seeds = 2, 4
+    unit = _unit_rows(mat)
+    order = _probe_order(unit @ unit[:n_seeds].T)
+    home = order[:, 0]
+    sims = _round6(unit @ unit.T)
+
+    def run(nprobe):
+        got = {}
+        for r in ivf_topk(df, n_centroids=n_seeds, k=k, nprobe=nprobe).collect():
+            got.setdefault(r["vec_id"], []).append((r["rank"], r["neighbor_id"]))
+        return {v: sorted(x) for v, x in got.items()}
+
+    got = run(2)
+    for i in range(len(mat)):
+        mask = np.isin(home, order[i, :2])
+        want = _lexsort_topk(i, np.arange(len(mat)), sims[i], mask, k)
+        assert got.get(i, []) == [(r + 1, w) for r, (w, _) in enumerate(want)], i
+    assert got != run(1)
+
+
+@pytest.mark.parametrize(
+    "name,params",
+    [
+        ("cosine_topk", {"k": 0}),
+        ("cosine_topk", {"k": -2}),
+        ("ann_lsh_topk", {"k": -1}),
+        ("ann_lsh_topk", {"k": 0, "multiprobe": 1}),
+        ("ann_lsh_topk", {"bits": 0}),
+        ("ann_lsh_topk", {"bits": 32, "multiprobe": 1}),
+        ("hyperplane_lsh_buckets", {"bits": 0}),
+        ("hyperplane_lsh_buckets", {"bits": 32}),
+        ("embedding_neardup_pairs", {"bits": 33}),
+        ("ivf_topk", {"k": 0}),
+        ("ivf_topk", {"nprobe": 0}),
+        ("ivf_topk", {"nprobe": 0, "centroids": "fitted"}),
+        ("ivf_topk", {"n_centroids": 0}),
+        ("embedding_decontaminate", {"eval_n": 0}),
+    ],
+    ids=lambda v: v if isinstance(v, str) else ",".join(f"{a}={b}" for a, b in v.items()),
+)
+def test_similarity_params_out_of_range(spark, random_emb, request, name, params):
+    """Out-of-range k / nprobe / n_centroids / bits / eval_n raise
+    ValueError at call time, before any Spark job."""
+    import learnhtml_spark.functions.similarity as sim
+
+    df, mat = random_emb
+    if params.get("centroids") == "fitted":
+        params = dict(params, centroids=sim.fit_ivf_centroids(mat, 3))
+    sc = spark.sparkContext
+    group = request.node.name  # one group per case: the tracker keeps old jobs
+    sc.setJobGroup(group, "driver-side parameter checks")
+    try:
+        with pytest.raises(ValueError, match="must be"):
+            getattr(sim, name)(df, **params)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setJobGroup(None, None)
+
+
+def test_similarity_params_bound_values_run(random_emb):
+    """The bounds themselves are in range: k, nprobe and n_centroids of 1,
+    bits of 1 and 31 (codes stay non-negative int32, a multiprobe flip of
+    bit 30 included)."""
+    import learnhtml_spark.functions.similarity as sim
+
+    df, mat = random_emb
+    cent = sim.fit_ivf_centroids(mat, 3)
+    n = len(mat)
+    for out in (
+        sim.cosine_topk(df, k=1),
+        sim.ann_lsh_topk(df, bits=1, k=1),
+        sim.ivf_topk(df, n_centroids=1, k=1),
+        sim.ivf_topk(df, k=1, centroids=cent, nprobe=1),
+    ):
+        rows = out.collect()
+        assert 0 < len(rows) <= n and {r["rank"] for r in rows} == {1}
+    # at 31 bits each vector's only candidate is its exact twin
+    twins = df.union(df.selectExpr("vec_id + 100 as vec_id", "embedding"))
+    rows = sim.ann_lsh_topk(twins, bits=31, k=1, multiprobe=1).collect()
+    assert sorted((r["vec_id"], r["neighbor_id"]) for r in rows) == sorted(
+        [(i, i + 100) for i in range(n)] + [(i + 100, i) for i in range(n)]
+    )
+    assert len(sim.cosine_topk(df, k=1).collect()) == n
+    buckets = [r["bucket"] for r in sim.hyperplane_lsh_buckets(df, bits=31).collect()]
+    assert len(buckets) == n and min(buckets) >= 0
+    assert sim.embedding_neardup_pairs(df, threshold=0.0, bits=1).count() > 0
+    assert sim.embedding_decontaminate(df, eval_n=1).count() == n - 1
