@@ -19,7 +19,10 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, StructField, StructType
+from pyspark.sql.types import (
+    BooleanType, DoubleType, FloatType, IntegralType, LongType, StructField,
+    StructType,
+)
 
 from learnhtml_spark.functions.textstats import fingerprint, tokens
 from learnhtml_spark.log import logger
@@ -899,15 +902,31 @@ def _star_contract(edges: DataFrame, max_iter: int) -> tuple[DataFrame, int]:
     )
 
 
-def _clusters_local(t: pa.Table, bands: DataFrame, max_iter: int) -> DataFrame:
-    """``dup_clusters`` on the driver from the collected band rows ``t``:
-    the (band, band_sig) group minimum, the canonical distinct edges
-    (member, group min), ``_contract`` and a label per node, returned as
-    one local relation with the distributed path's schema.
+def _band_rows(
+    docs: DataFrame, num_hashes: int, band_size: int, k: int
+) -> tuple[DataFrame, pa.Table | None]:
+    """The clustering input: the checkpointed LSH band rows, and their
+    Arrow table when they fit the broadcast threshold
+    (``_collect_within_broadcast``), else None.
 
-    Rows with a null doc_id join no group minimum and no edge (Spark's
-    ``min`` and ``!=`` skip nulls) and come out as one (null, null, false)
-    row, as the distributed node ``distinct`` and left join give."""
+    The minhash signature is computed ONCE: under AQE creating the
+    checkpoint already runs the signature aggregate's shuffle map stage,
+    and the bounded collect (with broadcasting disabled, the first
+    downstream job) materializes the band rows; the distributed executor
+    reads the same blocks."""
+    bands = lsh_band_rows(docs, num_hashes, band_size, k).localCheckpoint(
+        eager=False
+    )
+    return bands, _collect_within_broadcast(bands)
+
+
+def _labels_local(t: pa.Table, max_iter: int) -> tuple[np.ndarray, np.ndarray]:
+    """The driver executor's labels from the collected band rows ``t``:
+    ``(ids, lab)``, the ascending distinct non-null doc ids and, per id,
+    the index in ``ids`` of its component minimum.  The (band, band_sig)
+    group minimum gives the canonical distinct edges (member, group min)
+    and ``_contract`` contracts them.  Rows with a null doc_id join no
+    group minimum and no edge (Spark's ``min`` and ``!=`` skip nulls)."""
     rows = t.filter(t["doc_id"].is_valid())
     ids, d = np.unique(rows["doc_id"].to_numpy(), return_inverse=True)
     v = len(ids)
@@ -920,79 +939,45 @@ def _clusters_local(t: pa.Table, bands: DataFrame, max_iter: int) -> DataFrame:
     keep = d != y
     # y, the group min, is <= d: each kept edge is already (y, d) canonical
     e = np.unique(y[keep] * v + d[keep])
-    label = np.arange(v)
+    lab = np.arange(v)
     if len(e):
         a, b, rounds = _contract(*np.divmod(e, v), v, max_iter)
         logger.info(_CONTRACTED, len(e), rounds, "local")
-        label[b] = a
-    typ = t.schema.field("doc_id").type
-    cols = [pa.array(ids, typ), pa.array(ids[label], typ),
-            pa.array(label != np.arange(v))]
-    if t["doc_id"].null_count:
-        cols = [pa.concat_arrays([c, pa.array([x], c.type)])
-                for c, x in zip(cols, (None, None, False))]
-    f = bands.schema["doc_id"]
-    schema = StructType([
-        f,
-        StructField("cluster_id", f.dataType, f.nullable),
-        StructField("is_duplicate", BooleanType(), False),
-    ])
+        lab[b] = a
+    return ids, lab
+
+
+def _local_relation(bands: DataFrame, cols: list, schema: StructType) -> DataFrame:
+    """The Arrow columns ``cols`` as one local relation with ``schema``."""
     out = pa.Table.from_arrays(cols, names=schema.fieldNames())
     return bands.sparkSession.createDataFrame(out, schema)
 
 
-def dup_clusters(
-    docs: DataFrame,
-    num_hashes: int = 16,
-    band_size: int = 4,
-    k: int = 3,
-    max_iter: int = 25,
-) -> DataFrame:
-    """Connected-component dedup clusters over the LSH keeper-edge graph:
-    (doc_id, cluster_id, is_duplicate) where ``cluster_id`` is the
-    smallest doc_id in the doc's TRANSITIVE near-dup component — the
-    batch closure ``neardup_groups`` deliberately does not compute (A~B
-    via band 1 and B~C via band 2 puts A,B,C in one cluster here).
+def _clusters_local(t: pa.Table, bands: DataFrame, ids, lab) -> DataFrame:
+    """``dup_clusters``'s rows from the driver labels as one local relation
+    with the distributed executor's schema.  Null doc_ids come out as one
+    (null, null, false) row, as the distributed node ``distinct`` and left
+    join give."""
+    typ = t.schema.field("doc_id").type
+    cols = [pa.array(ids, typ), pa.array(ids[lab], typ),
+            pa.array(lab != np.arange(len(ids)))]
+    if t["doc_id"].null_count:
+        cols = [pa.concat_arrays([c, pa.array([x], c.type)])
+                for c, x in zip(cols, (None, None, False))]
+    f = bands.schema["doc_id"]
+    return _local_relation(bands, cols, StructType([
+        f,
+        StructField("cluster_id", f.dataType, f.nullable),
+        StructField("is_duplicate", BooleanType(), False),
+    ]))
 
-    Algorithm: alternating large-star/small-star contraction (Kiveris et
-    al. 2014) over the undirected (doc, band-group-min) edges —
-    O(log diameter) rounds, so chain-shaped components that would cost
-    min-label propagation one round per hop collapse in a handful of
-    rounds.
 
-    Two executors, one decision rule (``_collect_within_broadcast``): the
-    band rows are checkpointed once, and when they fit the session's
-    ``spark.sql.autoBroadcastJoinThreshold`` one bounded collect brings
-    them to the driver, where ``_clusters_local`` does the group min, the
-    edges, the contraction and the labels and returns one local relation
-    — no Spark job after the collect.  Above the threshold (``-1``: always)
-    the edges are built from the same checkpoint by a window min and
-    ``_star_contract`` contracts them, locally or in shuffled rounds by
-    the same rule; both executors return the same rows and schema.
-
-    This is genuinely iterative — the SQL oracle replays the SEMANTICS
-    (transitive closure, min label) as a recursive CTE over the same
-    edges; the fixed point is algorithm-independent.
-
-    Edges are the per-band-group STAR edges (every member -> its group's
-    min doc_id, O(m) rows per group) — NOT ``neardup_groups``'s per-doc
-    one-hop keeper: collapsing a doc's bands to one keeper loses the
-    co-membership of a group's own min member (G={B,X} with X's global
-    keeper A<B would leave B edgeless), which breaks transitivity."""
+def _clusters_distributed(bands: DataFrame, max_iter: int) -> DataFrame:
+    """``dup_clusters``'s rows in Spark: a window min over the band rows
+    (one exchange, instead of an aggregate joined back on the same key)
+    builds the edges and ``_star_contract`` contracts them."""
     from pyspark.sql import Window
 
-    # the minhash signature is computed ONCE: under AQE creating the
-    # checkpoint already runs the signature aggregate's shuffle map stage,
-    # and the bounded collect (with broadcasting disabled, the first job
-    # below) materializes the band rows; the distributed fallback reads
-    # the same blocks.  grp_min is a window min over the band rows (one
-    # exchange) instead of an aggregate joined back on the same key.
-    bands = lsh_band_rows(docs, num_hashes, band_size, k).localCheckpoint(
-        eager=False
-    )
-    t = _collect_within_broadcast(bands)
-    if t is not None:
-        return _clusters_local(t, bands, max_iter)
     edges = _canon_edges(
         bands.select(
             F.col("doc_id").alias("x"),
@@ -1019,6 +1004,51 @@ def dup_clusters(
             ),
         )
     )
+
+
+def dup_clusters(
+    docs: DataFrame,
+    num_hashes: int = 16,
+    band_size: int = 4,
+    k: int = 3,
+    max_iter: int = 25,
+) -> DataFrame:
+    """Connected-component dedup clusters over the LSH keeper-edge graph:
+    (doc_id, cluster_id, is_duplicate) where ``cluster_id`` is the
+    smallest doc_id in the doc's TRANSITIVE near-dup component — the
+    batch closure ``neardup_groups`` deliberately does not compute (A~B
+    via band 1 and B~C via band 2 puts A,B,C in one cluster here).
+
+    Algorithm: alternating large-star/small-star contraction (Kiveris et
+    al. 2014) over the undirected (doc, band-group-min) edges —
+    O(log diameter) rounds, so chain-shaped components that would cost
+    min-label propagation one round per hop collapse in a handful of
+    rounds.
+
+    Two executors, one decision rule (``_collect_within_broadcast``): the
+    band rows are checkpointed once, and when they fit the session's
+    ``spark.sql.autoBroadcastJoinThreshold`` one bounded collect brings
+    them to the driver, where ``_labels_local`` does the group min, the
+    edges, the contraction and the labels and ``_clusters_local`` returns
+    one local relation — no Spark job after the collect.  Above the
+    threshold (``-1``: always) the edges are built from the same
+    checkpoint by a window min and ``_star_contract`` contracts them,
+    locally or in shuffled rounds by the same rule; both executors return
+    the same rows and schema.
+
+    This is genuinely iterative — the SQL oracle replays the SEMANTICS
+    (transitive closure, min label) as a recursive CTE over the same
+    edges; the fixed point is algorithm-independent.
+
+    Edges are the per-band-group STAR edges (every member -> its group's
+    min doc_id, O(m) rows per group) — NOT ``neardup_groups``'s per-doc
+    one-hop keeper: collapsing a doc's bands to one keeper loses the
+    co-membership of a group's own min member (G={B,X} with X's global
+    keeper A<B would leave B edgeless), which breaks transitivity."""
+    bands, t = _band_rows(docs, num_hashes, band_size, k)
+    if t is None:
+        return _clusters_distributed(bands, max_iter)
+    return _clusters_local(t, bands, *_labels_local(t, max_iter))
 
 
 def _keeper_key(who: str, pos: str):
@@ -1298,13 +1328,30 @@ def cluster_size_hist(
     big boilerplate clusters vs singletons; n_docs = size × n_clusters
     is each size's share of the corpus).  Documents with no shingles
     never enter the graph and are not counted (same domain as
-    ``dup_clusters``).
+    ``dup_clusters``); a null doc_id counts as one cluster of size 1, its
+    one (null, null) label row.
 
-    Two map-side-combined hash aggregates on top of the cluster labels —
-    the histogram adds nothing to the clustering's scale profile (the
-    second aggregate's key cardinality is the number of DISTINCT sizes,
-    tiny; safe because it aggregates, never windows, on it)."""
-    cl = dup_clusters(docs, num_hashes, band_size, k, max_iter)
+    Same two executors as ``dup_clusters``: within the broadcast
+    threshold the histogram is two numpy counts over the driver labels,
+    returned as one local relation.  Above it, two map-side-combined hash
+    aggregates on top of the cluster labels — the histogram adds nothing
+    to the clustering's scale profile (the second aggregate's key
+    cardinality is the number of DISTINCT sizes, tiny; safe because it
+    aggregates, never windows, on it)."""
+    bands, t = _band_rows(docs, num_hashes, band_size, k)
+    if t is not None:
+        _, lab = _labels_local(t, max_iter)
+        sizes = np.bincount(lab)
+        sizes = sizes[sizes > 0]
+        if t["doc_id"].null_count:
+            sizes = np.append(sizes, 1)
+        size, n = np.unique(sizes, return_counts=True)
+        cols = [pa.array(x, pa.int64()) for x in (size, n, size * n)]
+        return _local_relation(bands, cols, StructType([
+            StructField(c, LongType(), False)
+            for c in ("cluster_size", "n_clusters", "n_docs")
+        ]))
+    cl = _clusters_distributed(bands, max_iter)
     sizes = cl.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
     return (
         sizes.groupBy("cluster_size")
@@ -1317,6 +1364,61 @@ def cluster_size_hist(
             .alias("n_docs"),
         )
     )
+
+
+def _keepers_local(
+    q: DataFrame, bands: DataFrame, ids: np.ndarray, lab: np.ndarray
+) -> DataFrame | None:
+    """``cluster_keepers``'s rows from the driver labels and the quality
+    projection ``q`` (doc_id cast long, _q) as one local relation, or None
+    when the Spark plan must decide: non-integral doc ids, a quality that
+    is neither integral nor floating, ``q`` above the broadcast threshold,
+    or an int/long quality at its type's minimum (whose negation wraps, or
+    raises under ANSI; ``coalesce(q, 0)`` widens byte and short to int).
+
+    One row per collected ``q`` row whose doc_id is a labelled node — the
+    inner join; the keeper is the lexicographic min of (quality is null,
+    -coalesce(quality, 0), doc_id) per cluster.  numpy orders floats as
+    Spark does: NaN above every number and equal to NaN, -0.0 equal to
+    0.0."""
+    f = bands.schema["doc_id"]
+    if not isinstance(f.dataType, IntegralType):
+        return None
+    if not isinstance(q.schema["_q"].dataType,
+                      (IntegralType, FloatType, DoubleType)):
+        return None
+    qt = _collect_within_broadcast(q)
+    if qt is None:
+        return None
+    qt = qt.filter(qt["doc_id"].is_valid())
+    d = qt["doc_id"].to_numpy()
+    p = np.searchsorted(ids, d)
+    hit = p < len(ids)
+    hit[hit] = ids[p[hit]] == d[hit]
+    p = p[hit]
+    qcol = qt["_q"].combine_chunks().filter(pa.array(hit))
+    nullq = qcol.is_null().to_numpy(zero_copy_only=False)
+    qv = qcol.fill_null(0).to_numpy()
+    if qv.dtype.kind == "i":
+        if qv.dtype.itemsize >= 4 and (qv == np.iinfo(qv.dtype).min).any():
+            return None
+        qv = qv.astype(np.int64)
+    c = lab[p]
+    # ids ascend, so the node index p orders as the doc_id does
+    order = np.lexsort((p, -qv, nullq, c))
+    cs = c[order]
+    first = order[np.r_[True, cs[1:] != cs[:-1]]]
+    keeper = np.empty(len(ids), np.int64)
+    keeper[c[first]] = p[first]
+    kp = keeper[c]
+    cols = [pa.array(ids[p]), pa.array(ids[c]), pa.array(ids[kp]),
+            pa.array(p == kp)]
+    return _local_relation(bands, cols, StructType([
+        f,
+        StructField("cluster_id", f.dataType, f.nullable),
+        StructField("keeper_id", f.dataType, True),
+        StructField("is_kept", BooleanType(), True),
+    ]))
 
 
 def cluster_keepers(
@@ -1337,23 +1439,40 @@ def cluster_keepers(
     (``neardup_groups``/``dup_clusters``) remain the oracle-simple
     default; this operator is the policy layer on top.
 
-    Scale: one equi-join of the cluster labels with the per-doc quality
-    column (doc_id primary key, AQE-sized), one map-side-combined
-    struct-min aggregate per cluster — ``min(struct(-quality, doc_id))``
-    selects argmax(quality) with deterministic tie-break in a single
-    pass, no per-cluster window — and one join of the per-cluster
-    keeper row (one row per cluster) back on cluster_id.
+    Scale: two executors, one decision rule
+    (``_collect_within_broadcast``).  When both the band rows and the
+    ``(doc_id cast long, quality)`` projection fit the session's
+    ``spark.sql.autoBroadcastJoinThreshold``, two bounded collects bring
+    them to the driver and ``_keepers_local`` does the labels, the join,
+    the keeper min and ``is_kept`` in numpy and returns one local
+    relation (the few-thousand-row result of a dedup run is then 4 jobs,
+    not 7).  Otherwise the cluster labels (local or distributed, as in
+    ``dup_clusters``) take one equi-join with the per-doc quality column
+    (doc_id primary key, AQE-sized), one map-side-combined struct-min
+    aggregate per cluster — ``min(struct(-quality, doc_id))`` selects
+    argmax(quality) with deterministic tie-break in a single pass, no
+    per-cluster window — and one join of the per-cluster keeper row (one
+    row per cluster) back on cluster_id.  Both return the same rows and
+    schema.
 
     The quality metric keeps its INPUT dtype (a long cast would silently
     truncate float scores), and NULL quality never wins: struct-min
     sorts NULL fields first, so a bare ``-q`` key would crown a
     null-quality doc over any scored one — the leading null-flag field
     demotes them, and an all-NULL cluster falls back to min doc_id."""
-    lab = dup_clusters(docs, num_hashes, band_size, k, max_iter)
     q = docs.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.col(quality_col).alias("_q"),
     )
+    bands, t = _band_rows(docs, num_hashes, band_size, k)
+    if t is None:
+        lab = _clusters_distributed(bands, max_iter)
+    else:
+        labels = _labels_local(t, max_iter)
+        out = _keepers_local(q, bands, *labels)
+        if out is not None:
+            return out
+        lab = _clusters_local(t, bands, *labels)
     j = lab.join(q, "doc_id")
     keepers = j.groupBy("cluster_id").agg(
         F.min(

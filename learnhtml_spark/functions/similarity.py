@@ -148,7 +148,8 @@ def _emb_f64(series):
 
 
 def _id_type(embeddings: DataFrame) -> str:
-    return "long" if dict(embeddings.dtypes)["vec_id"] == "bigint" else "string"
+    """The ``vec_id`` column's own type, as DDL for the output schemas."""
+    return dict(embeddings.dtypes)["vec_id"]
 
 
 def _sorted_unit(rows):
@@ -316,6 +317,10 @@ def cosine_topk(
             f"can hold the corpus, or use ann_lsh_topk (LSH-bucketed, "
             f"distributed) for large corpora."
         )
+    id_t = _id_type(embeddings)
+    schema = f"vec_id {id_t}, neighbor_id {id_t}, sim double, rank int"
+    if not rows:
+        return spark.createDataFrame([], schema)
     bc = spark.sparkContext.broadcast(_sorted_unit(rows))
 
     def run(batches):
@@ -326,8 +331,6 @@ def cosine_topk(
             sims = _round6(_unit(_emb_f64(pdf["embedding"])) @ unit.T)
             yield _topk_frame(pdf["vec_id"].to_numpy(), all_ids, sims, k)
 
-    id_t = _id_type(embeddings)
-    schema = f"vec_id {id_t}, neighbor_id {id_t}, sim double, rank int"
     return embeddings.select("vec_id", "embedding").mapInPandas(run, schema=schema)
 
 
@@ -656,12 +659,19 @@ def embedding_decontaminate(
     _check_at_least_1(eval_n=eval_n)
     spark = embeddings.sparkSession
     id_t = _id_type(embeddings)
+    schema = (
+        f"vec_id {id_t}, max_sim double, "
+        f"nearest_eval_id {id_t}, contaminated boolean"
+    )
     rows = (
         embeddings.select("vec_id", "embedding")
         .orderBy("vec_id")
         .limit(eval_n)
         .collect()
     )
+    if not rows:
+        # no eval set means an empty frame: nothing to decontaminate
+        return spark.createDataFrame([], schema)
     eval_ids, eval_unit = _sorted_unit(rows)
     cutoff = eval_ids[-1]
     bc = spark.sparkContext.broadcast((eval_ids, eval_unit))
@@ -693,10 +703,4 @@ def embedding_decontaminate(
     corpus = embeddings.filter(
         F.col("vec_id") > F.lit(cutoff.item() if hasattr(cutoff, "item") else cutoff)
     )
-    return corpus.select("vec_id", "embedding").mapInPandas(
-        run,
-        schema=(
-            f"vec_id {id_t}, max_sim double, "
-            f"nearest_eval_id {id_t}, contaminated boolean"
-        ),
-    )
+    return corpus.select("vec_id", "embedding").mapInPandas(run, schema=schema)

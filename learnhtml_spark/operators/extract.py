@@ -159,6 +159,7 @@ def extract_node_features(
     names = schema.fieldNames()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for pdf in batches:
             # column dicts per doc, ONE DataFrame per batch: the pandas
             # constructor on 100+ columns costs ~4× the feature kernel
@@ -186,6 +187,7 @@ def label_documents(docs_with_gold: DataFrame) -> DataFrame:
     inclusion ratio and threshold labels."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         cols = [
             "doc_id",
             "node_path",

@@ -45,6 +45,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from learnhtml_spark.kernels.document import drop_zip_importers
+
 MEDIA_FEATURES = StructType(
     [
         StructField("media_ref", StringType(), False),
@@ -288,6 +290,7 @@ def media_features(
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for pdf in batches:
             rows = []
             for i, ref in enumerate(pdf["media_ref"]):
@@ -396,6 +399,7 @@ def synthesize_media(docs: DataFrame) -> DataFrame:
     schema = "doc_id string, media_ref string, payload binary"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for pdf in batches:
             rows = []
             for doc_id in pdf["doc_id"]:

@@ -50,6 +50,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from learnhtml_spark.kernels.document import drop_zip_importers
 from learnhtml_spark.operators.png import zlib_compress_stored, zlib_decompress
 
 _RE_OBJ = re.compile(rb"(\d+)\s+\d+\s+obj\b(.*?)endobj", re.S)
@@ -412,6 +413,7 @@ def pdf_spans(pdf_df: DataFrame) -> DataFrame:
     failure (the media_features contract)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         cols = [f.name for f in PDF_SPANS.fields]
         for pdf in batches:
             rows = []
@@ -442,6 +444,7 @@ def synthesize_pdfs(docs: DataFrame) -> DataFrame:
     generation, no shuffle; feeds ``pdf_spans`` with real bytes."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for pdf in batches:
             rows = [
                 (str(d), synth_pdf_for(str(d))) for d in pdf["doc_id"]

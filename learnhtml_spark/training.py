@@ -24,6 +24,7 @@ from learnhtml_spark.kernels.document import (
     block_columns,
     block_frame_columns,
     concat_columns,
+    drop_zip_importers,
     html_doc,
     parse_doc,
     spans_list,
@@ -103,6 +104,7 @@ def training_rows(docs_with_gold, depth: int = 5, height: int = 5):
     names = schema.fieldNames()
 
     def run(batches):
+        drop_zip_importers()
         for pdf in batches:
             col_dicts = []
             for doc_id, spans, gold in zip(

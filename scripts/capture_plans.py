@@ -53,10 +53,10 @@ NOTES = {
     "range_pairs": "two-table range join (pair output): 3-cell bucket replication turns the inequality join into a (key, cell) equi-join; each pair matched exactly once",
     "fuzzy_decontaminate": "broadcast per-eval-doc gram set; corpus exploded ONCE (n_grams is the narrow array-size expr, no second shingle pass) -> (doc, eval) overlap agg -> per-doc struct-min",
     "incremental_dedup": "snapshot-over-snapshot: corpus bands -> per-signature min aggregate (ONE probe row per sig, skew-immune) -> new-side band join -> per-doc min + unique restore join",
-    "cluster_size_hist": "two hash aggregates over dup_clusters' labels (a local relation within the broadcast threshold; the second agg keys on the tiny distinct-size domain — aggregate, never window)",
+    "cluster_size_hist": "within the broadcast threshold (as here) two numpy counts over dup_clusters' driver labels, no Spark job after the band-row collect (plan shown is the returned local relation); above it two hash aggregates over the distributed labels (the second agg keys on the tiny distinct-size domain — aggregate, never window)",
     "hll_distinct": "deterministic HLL sketch: two map-side-combined hash aggs — (group, bucket) register max then per-group register sum (order-exact doubles); registers-only by default (exact countDistinct is an include_exact=True opt-in)",
     "mixture_sample": "data-mixing sampler: broadcast rates allowlist join -> shared deterministic hash order -> skew-safe two-phase rank -> per-stratum integer-ratio bound",
-    "cluster_keepers": "dup_clusters' labels (a local relation within the broadcast threshold) -> pk join with quality column (AQE-sided) -> ONE min(struct(-q, id)) argmax aggregate per cluster -> keeper join back on cluster_id",
+    "cluster_keepers": "band rows and the (doc_id, quality) projection both within the broadcast threshold (as here): two bounded collects, then labels, pk join, struct-min keeper and is_kept in numpy (plan shown is the returned local relation); otherwise dup_clusters' labels -> pk join with quality column (AQE-sided) -> ONE min(struct(-q, id)) argmax aggregate per cluster -> keeper join back on cluster_id",
     "pii_scrub": "pure narrow plan (JVM regexp redaction passes, map-only, zero shuffles)",
     "quality_gate": "gopher signals (narrow exprs + two hash aggs + pk join) -> narrow CASE verdict chain",
     "corpus_build": "four stage branches (exact fp agg, keeper-edge LSH, gopher gate, broadcast-eval decontaminate) -> three AQE-sized doc_id equi-joins; whole pipeline one plan",

@@ -1503,6 +1503,25 @@ _EDGE_ROWS = [(None, _PLANTED, 7), (3, _PLANTED + " again", 8),
               (1002, _PLANTED, 5), (1003, _PLANTED + " tail", 6)]
 
 
+def _by_executor(spark, star_executor_conf, df, call):
+    """{executor: (schema, row Counter)} of ``call(df)`` under the driver
+    executor (band rows within the broadcast threshold), the distributed
+    one and the mixed one (band rows above the threshold, their edges
+    within it)."""
+    from learnhtml_spark.functions import dedup
+
+    n_bands = dedup.lsh_band_rows(df).count()
+    out = {}
+    for executor in ("local", "distributed", "mixed"):
+        if executor == "mixed":
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
+                           str(16 * (n_bands - 1)))
+        else:
+            star_executor_conf(executor)
+        out[executor] = _rows_and_schema(call(df))
+    return out
+
+
 @pytest.mark.parametrize("fn", ["dup_clusters", "cluster_keepers",
                                 "cluster_size_hist"])
 def test_clustering_executors_agree(spark, star_executor_conf, fn):
@@ -1514,15 +1533,7 @@ def test_clustering_executors_agree(spark, star_executor_conf, fn):
     from learnhtml_spark.functions import dedup
 
     df = _planted_docs(spark, extra=_EDGE_ROWS)
-    n_bands = dedup.lsh_band_rows(df).count()
-    out = {}
-    for executor in ("local", "distributed", "mixed"):
-        if executor == "mixed":
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
-                           str(16 * (n_bands - 1)))
-        else:
-            star_executor_conf(executor)
-        out[executor] = _rows_and_schema(getattr(dedup, fn)(df))
+    out = _by_executor(spark, star_executor_conf, df, getattr(dedup, fn))
     assert out["local"] == out["distributed"] == out["mixed"]
     rows = out["local"][1]
     if fn == "dup_clusters":
@@ -1530,6 +1541,109 @@ def test_clustering_executors_agree(spark, star_executor_conf, fn):
         assert sum(r[2] for r in rows) >= 16  # the chains are clustered
     if fn == "cluster_keepers":
         assert sum(n for r, n in rows.items() if r[0] == 3) == 2
+
+
+_OTHER = ("entirely different words fill this second paragraph about "
+          "query planners shuffles and adaptive execution strategies")
+_NAN = float("nan")
+#: case -> (doc_id type, quality type, rows of (doc_id, text, quality),
+#: {doc_id: keeper_id}, whether the driver executor picks the keepers)
+_KEEPER_CASES = {
+    # NaN sorts above every number (loses to 5.0) and never below null;
+    # NaNs tie with each other, so the smaller doc_id wins
+    "nan": ("int", "double", [
+        (1, _PLANTED, _NAN), (2, _PLANTED + " tail", 5.0),
+        (3, _PLANTED + " again", _NAN),
+        (4, _OTHER, None), (6, _OTHER + " tail", _NAN),
+        (5, _OTHER + " again", _NAN)],
+        {1: 2, 2: 2, 3: 2, 4: 5, 5: 5, 6: 5}, True),
+    # -0.0 equals 0.0: both clusters fall to the smaller doc_id
+    "signed_zero": ("long", "float", [
+        (1, _PLANTED, -0.0), (2, _PLANTED + " tail", 0.0),
+        (4, _OTHER, 0.0), (5, _OTHER + " tail", -0.0)],
+        {1: 1, 2: 1, 4: 4, 5: 4}, True),
+    "tie": ("long", "long", [
+        (1, _PLANTED, 3), (3, _PLANTED + " tail", 7),
+        (2, _PLANTED + " again", 7)],
+        {1: 2, 2: 2, 3: 2}, True),
+    # one doc_id, two rows, two qualities: two output rows, one keeper
+    "repeat": ("short", "int", [
+        (1, _PLANTED, 6), (2, _PLANTED + " tail", 5),
+        (2, _PLANTED + " tail", 9), (3, _OTHER, 1)],
+        {1: 2, 2: 2, 3: 3}, True),
+    # numeric strings (the quality join casts doc_id to long), ordered
+    # as strings: "10" < "9"; the Spark plan picks them
+    "string_ids": ("string", "long", [
+        ("9", _PLANTED, 4), ("10", _PLANTED + " tail", 4),
+        ("77", _OTHER, 1)],
+        {"9": "10", "10": "10", "77": "77"}, False),
+    "decimal_quality": ("long", "decimal(10,2)", [
+        (1, _PLANTED, 0.5), (2, _PLANTED + " tail", 0.75),
+        (3, _OTHER, None)],
+        {1: 2, 2: 2, 3: 3}, False),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_KEEPER_CASES))
+def test_cluster_keepers_executors_agree(spark, star_executor_conf, case):
+    """``cluster_keepers``'s driver keeper (numpy over the collected band
+    rows and quality) and the Spark keeper aggregate return equal rows
+    and schemas on every executor, with Spark's float order (NaN, -0.0),
+    ties, a repeated doc_id and input id / quality types kept; string ids
+    and decimal quality take the Spark plan on every executor."""
+    import random
+    from collections import Counter
+
+    from learnhtml_spark.functions.dedup import cluster_keepers
+
+    id_t, q_t, rows, keepers, on_driver = _KEEPER_CASES[case]
+    rng = random.Random(5)
+    vocab = [f"w{i}" for i in range(400)]
+    single = [(100 + i if id_t != "string" else str(100 + i),
+               " ".join(rng.choices(vocab, k=20)), None) for i in range(8)]
+    df = spark.createDataFrame(
+        [(d, t, None if q is None else float(q)) for d, t, q in rows + single],
+        f"doc_id {id_t}, text string, q double",
+    ).selectExpr("doc_id", "text", f"cast(q as {q_t}) q")
+    out = _by_executor(spark, star_executor_conf, df,
+                       lambda d: cluster_keepers(d, quality_col="q"))
+    assert out["local"] == out["distributed"] == out["mixed"]
+    schema, got = out["local"]
+    t = df.schema["doc_id"].dataType.simpleString()
+    assert schema.simpleString() == (
+        f"struct<doc_id:{t},cluster_id:{t},keeper_id:{t},is_kept:boolean>")
+    assert Counter(r[0] for r in got.elements()) == Counter(
+        r[0] for r in rows + single)
+    for doc, _, keeper, kept in got:
+        assert keeper == keepers.get(doc, doc), (case, doc)
+        assert kept == (doc == keeper)
+    star_executor_conf("local")
+    plan = cluster_keepers(df, quality_col="q")._jdf.queryExecution()
+    assert ("Join" not in plan.optimizedPlan().toString()) == on_driver
+
+
+def test_cluster_keepers_quality_at_long_min(spark, star_executor_conf):
+    """A long quality at its minimum negates to itself outside ANSI mode
+    (the keeper key's ``-q`` wraps), so that doc wins its cluster; the
+    driver executor leaves such a frame to the Spark plan, and every
+    executor agrees."""
+    from learnhtml_spark.functions.dedup import cluster_keepers
+
+    key = "spark.sql.ansi.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        df = spark.createDataFrame(
+            [(1, _PLANTED, 5), (2, _PLANTED + " tail", -(2 ** 63)),
+             (3, _OTHER, 1)], "doc_id long, text string, n_chars long")
+        out = _by_executor(spark, star_executor_conf, df, cluster_keepers)
+        star_executor_conf("local")
+        plan = cluster_keepers(df)._jdf.queryExecution().optimizedPlan()
+    finally:
+        spark.conf.set(key, old)
+    assert "Join" in plan.toString()
+    assert out["local"] == out["distributed"] == out["mixed"]
+    assert {r[0]: r[2] for r in out["local"][1]} == {1: 2, 2: 2, 3: 3}
 
 
 def test_dup_clusters_executors_agree_string_ids(
@@ -1576,6 +1690,27 @@ def test_cluster_keepers_job_count(spark, star_executor_conf, monkeypatch):
     _, jobs = _driver_cost(spark, monkeypatch,
                            lambda: cluster_keepers(df).toPandas())
     assert 0 < jobs <= 8
+
+
+def test_clustering_driver_executor_job_count(
+    spark, star_executor_conf, monkeypatch
+):
+    """Within the broadcast threshold the keeper policy and the size
+    histogram run on the driver labels too: one
+    ``cluster_keepers(...).toPandas()`` runs at most 4 Spark jobs (7 when
+    the keepers were a join and an aggregate over the local labels) and
+    one ``cluster_size_hist(...).collect()`` at most 3 (was 5)."""
+    from learnhtml_spark.functions.dedup import (
+        cluster_keepers, cluster_size_hist)
+
+    star_executor_conf("local")
+    df = _planted_docs(spark)
+    _, jobs = _driver_cost(spark, monkeypatch,
+                           lambda: cluster_keepers(df).toPandas())
+    assert 0 < jobs <= 4
+    _, jobs = _driver_cost(spark, monkeypatch,
+                           lambda: cluster_size_hist(df).collect())
+    assert 0 < jobs <= 3
 
 
 def test_pii_scrub_hand_checked(spark):

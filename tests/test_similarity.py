@@ -707,6 +707,44 @@ def random_emb(spark):
     return _frame(spark, np.arange(40, dtype=np.int64), mat), mat
 
 
+def test_similarity_keeps_int_vec_id_type(spark, random_emb):
+    """An ``int`` vec_id keeps its type through the top-k operators (it
+    was declared ``string`` and failed the task) and gives the same rows
+    as the ``bigint`` frame."""
+    from learnhtml_spark.functions.similarity import (
+        ann_lsh_topk, cosine_topk, embedding_decontaminate)
+
+    df, _ = random_emb
+    narrow = df.selectExpr("cast(vec_id as int) vec_id", "embedding")
+    for call in (lambda d: cosine_topk(d, k=3),
+                 lambda d: ann_lsh_topk(d, bits=2, k=3),
+                 lambda d: embedding_decontaminate(d, eval_n=5,
+                                                   threshold=0.3)):
+        out = call(narrow)
+        assert {t for c, t in out.dtypes if "id" in c} == {"int"}
+        assert sorted(map(tuple, out.collect())) == sorted(
+            map(tuple, call(df).collect()))
+
+
+def test_similarity_empty_frame_returns_empty(spark):
+    """``cosine_topk`` and ``embedding_decontaminate`` on an empty frame
+    return no rows with their declared schema (the driver-side unit
+    matrix of zero rows raised numpy's AxisError)."""
+    from learnhtml_spark.functions.similarity import (
+        cosine_topk, embedding_decontaminate)
+
+    empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    out = cosine_topk(empty, k=3)
+    assert out.dtypes == [("vec_id", "bigint"), ("neighbor_id", "bigint"),
+                          ("sim", "double"), ("rank", "int")]
+    assert out.collect() == []
+    out = embedding_decontaminate(empty, eval_n=4)
+    assert out.dtypes == [("vec_id", "bigint"), ("max_sim", "double"),
+                          ("nearest_eval_id", "bigint"),
+                          ("contaminated", "boolean")]
+    assert out.collect() == []
+
+
 def test_ivf_seeded_nprobe_equals_python_reference(random_emb):
     """Data-seeded mode honours nprobe: nprobe=2 equals brute-force top-k
     over members of the query's 2 best seed cells, members indexed in
