@@ -216,6 +216,7 @@ def cmd_label(args):
         StructType,
     )
 
+    from learnhtml_spark.kernels.document import python_task
     from learnhtml_spark.operators.extract import label_documents
     from learnhtml_spark.schemas import SPAN
 
@@ -251,6 +252,7 @@ def cmd_label(args):
         ]
     )
 
+    @python_task
     def gen(batches):
         from learnhtml_spark.kernels.tokenize import get_blocks
 

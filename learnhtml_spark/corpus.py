@@ -160,10 +160,12 @@ def synthesize_docs_pdf(pdf):
 
 def synthesize_docs(documents_df):
     """documents table -> interleaved-span docs table (distributed)."""
+    from learnhtml_spark.kernels.document import python_task
     from learnhtml_spark.schemas import DOCS
 
     cols = ["doc_id", "text", "lang", "source"]
 
+    @python_task
     def run(batches):
         for pdf in batches:
             yield synthesize_docs_pdf(pdf[cols])

@@ -403,10 +403,13 @@ def _bloom_probe_pandas(corpus_sh: DataFrame, words, m_bits: int, n_hash: int) -
     import numpy as np
     import pandas as pd
 
+    from learnhtml_spark.kernels.document import python_task
+
     bc = corpus_sh.sparkSession.sparkContext.broadcast(
         np.array(words, dtype=np.int64)
     )
 
+    @python_task
     def run(batches):
         bitmap = bc.value
         for pdf in batches:

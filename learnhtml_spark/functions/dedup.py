@@ -1406,8 +1406,7 @@ def _keepers_local(
     c = lab[p]
     # ids ascend, so the node index p orders as the doc_id does
     order = np.lexsort((p, -qv, nullq, c))
-    cs = c[order]
-    first = order[np.r_[True, cs[1:] != cs[:-1]]]
+    first = order[np.diff(c[order], prepend=-1) != 0]
     keeper = np.empty(len(ids), np.int64)
     keeper[c[first]] = p[first]
     kp = keeper[c]
@@ -1447,7 +1446,11 @@ def cluster_keepers(
     the keeper min and ``is_kept`` in numpy and returns one local
     relation (the few-thousand-row result of a dedup run is then 4 jobs,
     not 7).  Otherwise the cluster labels (local or distributed, as in
-    ``dup_clusters``) take one equi-join with the per-doc quality column
+    ``dup_clusters``) take the Spark plan below.  When the band rows fit
+    but the projection does not (it has one row per input document, and
+    documents without shingles or repeated ids add rows the band rows do
+    not show), its bounded collect is one job spent before that plan.
+    The Spark plan is one equi-join with the per-doc quality column
     (doc_id primary key, AQE-sized), one map-side-combined struct-min
     aggregate per cluster — ``min(struct(-quality, doc_id))`` selects
     argmax(quality) with deterministic tie-break in a single pass, no

@@ -73,8 +73,9 @@ def doc_outlinks(base_url: str, html: str) -> list[tuple]:
 def extract_outlinks(docs: DataFrame) -> DataFrame:
     """(doc_id, spans) -> outlink edge rows.  The doc_id column is the
     page URL (the crawl document model, sources/warc_source.py)."""
-    from learnhtml_spark.kernels.document import spans_list
+    from learnhtml_spark.kernels.document import python_task, spans_list
 
+    @python_task
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [f.name for f in OUTLINKS.fields]
         for pdf in batches:

@@ -54,6 +54,8 @@ import hashlib
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from learnhtml_spark.kernels.document import python_task
+
 _MAX_BROADCAST_ROWS = 200_000  # ~100 MB at 64 float64 dims — broadcast ceiling
 
 
@@ -218,6 +220,7 @@ def _cells(embeddings: DataFrame, cells_of) -> DataFrame:
     import numpy as np
     import pandas as pd
 
+    @python_task
     def run(batches):
         for pdf in batches:
             if not len(pdf):
@@ -323,6 +326,7 @@ def cosine_topk(
         return spark.createDataFrame([], schema)
     bc = spark.sparkContext.broadcast(_sorted_unit(rows))
 
+    @python_task
     def run(batches):
         all_ids, unit = bc.value
         for pdf in batches:
@@ -342,6 +346,7 @@ def hyperplane_lsh_buckets(embeddings: DataFrame, bits: int = 8) -> DataFrame:
 
     _check_bits(bits)
 
+    @python_task
     def run(batches):
         for pdf in batches:
             if not len(pdf):
@@ -561,6 +566,7 @@ def pca_project(embeddings: DataFrame, mean, components) -> DataFrame:
     spark = embeddings.sparkSession
     bc = spark.sparkContext.broadcast((mean, comp))
 
+    @python_task
     def run(batches):
         m, c = bc.value
         for pdf in batches:
@@ -676,6 +682,7 @@ def embedding_decontaminate(
     cutoff = eval_ids[-1]
     bc = spark.sparkContext.broadcast((eval_ids, eval_unit))
 
+    @python_task
     def run(batches):
         e_ids, e_unit = bc.value
         for pdf in batches:

@@ -441,9 +441,12 @@ def normalize_docs(docs: DataFrame, form: str = "NFC") -> DataFrame:
 
     import pandas as pd
 
+    from learnhtml_spark.kernels.document import python_task
+
     if form not in ("NFC", "NFD", "NFKC", "NFKD"):
         raise ValueError(f"unknown normalization form: {form}")
 
+    @python_task
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             raw = pdf["text"].fillna("")

@@ -44,7 +44,7 @@ import sys
 import zipimport
 from collections import Counter
 from itertools import chain
-from typing import Iterable, NamedTuple
+from typing import Callable, Iterable, Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -87,8 +87,8 @@ class Doc(NamedTuple):
 
 
 def drop_zip_importers() -> None:
-    """Drop every ``zipimporter`` from ``sys.path_importer_cache``; call it
-    at the top of a Python task's body.
+    """Drop every ``zipimporter`` from ``sys.path_importer_cache``; a task
+    body calls it first, through ``python_task``.
 
     A PySpark worker runs ``importlib.invalidate_caches()`` before each
     task, and on CPython 3.11 every cached ``zipimporter`` then re-reads
@@ -100,6 +100,21 @@ def drop_zip_importers() -> None:
     for path, finder in list(sys.path_importer_cache.items()):
         if isinstance(finder, zipimport.zipimporter):
             del sys.path_importer_cache[path]
+
+
+def python_task(run: Callable[[Iterator], Iterator]) -> Callable[[Iterator], Iterator]:
+    """``run``, a ``mapInPandas`` body (batches in, batches out), behind
+    ``drop_zip_importers``: every Python task body goes through this
+    wrapper, so none pays the worker's per-task archive re-reads.
+
+    ``mapInPandas`` bodies only: Spark dispatches a grouped body
+    (``applyInPandas``) on its argument count, which the wrapper hides."""
+
+    def task(batches: Iterator) -> Iterator:
+        drop_zip_importers()
+        return run(batches)
+
+    return task
 
 
 def error_text(exc: BaseException) -> str:

@@ -33,7 +33,7 @@ from pyspark.sql.types import StructType
 
 from learnhtml_spark.htmlparse import parse_html
 from learnhtml_spark.kernels.document import (
-    check_model_columns, concat_columns, drop_zip_importers, extract_rows,
+    check_model_columns, concat_columns, extract_rows, python_task,
     spans_list, tally)
 from learnhtml_spark.kernels.features import extract_features_from_tree
 from learnhtml_spark.kernels.labeling import (
@@ -136,8 +136,8 @@ def keyed_spans(docs: DataFrame, model: NodeClassifier | bytes | None, keys: lis
     load = None if model is None else broadcast_model(
         docs.sparkSession, model, depth, height)
 
+    @python_task
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_importers()
         clf = None if load is None else load()
         cols = schema.fieldNames()
         for pdf in batches:
@@ -158,8 +158,8 @@ def extract_node_features(
     schema = node_features_schema(depth, height)
     names = schema.fieldNames()
 
+    @python_task
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_importers()
         for pdf in batches:
             # column dicts per doc, ONE DataFrame per batch: the pandas
             # constructor on 100+ columns costs ~4× the feature kernel
@@ -186,8 +186,8 @@ def label_documents(docs_with_gold: DataFrame) -> DataFrame:
     (doc_id, spans, gold_blocks); output one row per node with the LCS
     inclusion ratio and threshold labels."""
 
+    @python_task
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_importers()
         cols = [
             "doc_id",
             "node_path",

@@ -45,7 +45,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from learnhtml_spark.kernels.document import drop_zip_importers
+from learnhtml_spark.kernels.document import python_task
 
 MEDIA_FEATURES = StructType(
     [
@@ -289,8 +289,8 @@ def media_features(
         *(("media_ref", "payload") if has_payload else ("media_ref",))
     )
 
+    @python_task
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_importers()
         for pdf in batches:
             rows = []
             for i, ref in enumerate(pdf["media_ref"]):
@@ -398,8 +398,8 @@ def synthesize_media(docs: DataFrame) -> DataFrame:
     shuffle; feeds ``media_features`` with real decodable bytes."""
     schema = "doc_id string, media_ref string, payload binary"
 
+    @python_task
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_importers()
         for pdf in batches:
             rows = []
             for doc_id in pdf["doc_id"]:

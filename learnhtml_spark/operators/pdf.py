@@ -50,7 +50,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from learnhtml_spark.kernels.document import drop_zip_importers
+from learnhtml_spark.kernels.document import python_task
 from learnhtml_spark.operators.png import zlib_compress_stored, zlib_decompress
 
 _RE_OBJ = re.compile(rb"(\d+)\s+\d+\s+obj\b(.*?)endobj", re.S)
@@ -412,8 +412,8 @@ def pdf_spans(pdf_df: DataFrame) -> DataFrame:
     poison payloads become one auditable error row, never a task
     failure (the media_features contract)."""
 
+    @python_task
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_importers()
         cols = [f.name for f in PDF_SPANS.fields]
         for pdf in batches:
             rows = []
@@ -443,8 +443,8 @@ def synthesize_pdfs(docs: DataFrame) -> DataFrame:
     """(doc_id, payload): one deterministic PDF per document — narrow
     generation, no shuffle; feeds ``pdf_spans`` with real bytes."""
 
+    @python_task
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_importers()
         for pdf in batches:
             rows = [
                 (str(d), synth_pdf_for(str(d))) for d in pdf["doc_id"]

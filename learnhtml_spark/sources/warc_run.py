@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from learnhtml_spark.kernels.document import (
-    drop_zip_importers, error_row, extract_rows, tally)
+    error_row, extract_rows, python_task, tally)
 from learnhtml_spark.operators.extract import broadcast_model
 from learnhtml_spark.schemas import EXTRACTED_SPANS
 from learnhtml_spark.sources.tables import (
@@ -101,8 +101,8 @@ def _archive_spans(raw: DataFrame, model_bytes: bytes | None,
     load = None if model_bytes is None else broadcast_model(spark, model_bytes)
     batch_docs = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
 
+    @python_task
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_importers()
         clf = None if load is None else load()
         cols = WARC_SPANS.fieldNames()
         counted: set = set()  # (archive, uri) pages already counted

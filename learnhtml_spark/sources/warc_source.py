@@ -54,7 +54,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from learnhtml_spark.kernels.document import drop_zip_importers, error_text
+from learnhtml_spark.kernels.document import error_text, python_task
 
 CRLF = b"\r\n"
 
@@ -327,8 +327,8 @@ def read_warc_dir(spark: SparkSession, directory: str) -> DataFrame:
         .select("path", "content")
     )
 
+    @python_task
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_importers()
         cols = [f.name for f in WARC_RECORDS.fields]
         for pdf in batches:
             rows = []
@@ -446,8 +446,8 @@ def read_warc_cdx(spark: SparkSession, directory: str) -> DataFrame:
         .select("path", "content")
     )
 
+    @python_task
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_importers()
         cols = ["archive", "offset", "length", "warc_type", "target_uri"]
         for pdf in batches:
             rows = []
@@ -552,8 +552,8 @@ def read_warc_docs(spark: SparkSession, directory: str) -> DataFrame:
         .select("path", "content")
     )
 
+    @python_task
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_importers()
         for pdf in batches:
             rows = []
             for path, content in zip(pdf["path"], pdf["content"]):

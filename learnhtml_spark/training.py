@@ -24,9 +24,9 @@ from learnhtml_spark.kernels.document import (
     block_columns,
     block_frame_columns,
     concat_columns,
-    drop_zip_importers,
     html_doc,
     parse_doc,
+    python_task,
     spans_list,
 )
 from learnhtml_spark.kernels.labeling import block_ratios
@@ -103,8 +103,8 @@ def training_rows(docs_with_gold, depth: int = 5, height: int = 5):
     )
     names = schema.fieldNames()
 
+    @python_task
     def run(batches):
-        drop_zip_importers()
         for pdf in batches:
             col_dicts = []
             for doc_id, spans, gold in zip(

@@ -1543,6 +1543,36 @@ def test_clustering_executors_agree(spark, star_executor_conf, fn):
         assert sum(n for r, n in rows.items() if r[0] == 3) == 2
 
 
+@pytest.mark.parametrize("frame", ["empty", "no_shingles", "null_ids"])
+@pytest.mark.parametrize("fn", ["dup_clusters", "cluster_keepers",
+                                "cluster_size_hist"])
+def test_clustering_executors_agree_without_edges(
+    spark, star_executor_conf, fn, frame
+):
+    """Frames that give the clustering no labelled id — no rows, empty
+    texts only (no shingles, no band rows; a text of fewer than k tokens
+    is one shingle), every doc_id null — return equal rows and schemas
+    on every executor; ``cluster_keepers`` returns no row (its quality
+    join matches none)."""
+    from learnhtml_spark.functions import dedup
+
+    df = _planted_docs(spark, extra=_EDGE_ROWS)
+    df = {
+        "empty": df.limit(0),
+        "no_shingles": df.selectExpr("doc_id", "'' AS text", "n_chars"),
+        "null_ids": df.selectExpr(
+            "CAST(NULL AS long) AS doc_id", "text", "n_chars"),
+    }[frame]
+    out = _by_executor(spark, star_executor_conf, df, getattr(dedup, fn))
+    assert out["local"] == out["distributed"] == out["mixed"]
+    expect = {}
+    if frame == "null_ids" and fn != "cluster_keepers":
+        # a null doc_id is one (null, null, false) node, one size-1 cluster
+        expect = {"dup_clusters": {(None, None, False): 1},
+                  "cluster_size_hist": {(1, 1, 1): 1}}[fn]
+    assert out["local"][1] == expect
+
+
 _OTHER = ("entirely different words fill this second paragraph about "
           "query planners shuffles and adaptive execution strategies")
 _NAN = float("nan")

@@ -12,7 +12,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(__file__))
 
 from learnhtml_spark.kernels.document import (
-    drop_zip_importers, error_row, extract_rows)
+    drop_zip_importers, error_row, extract_rows, python_task)
 from learnhtml_spark.operators.extract import docs_from_pairs, extract_content_spans
 from learnhtml_spark.sources.warc_source import build_warc
 from learnhtml_spark.spans import split_html_to_spans
@@ -331,3 +331,31 @@ def test_drop_zip_importers_keeps_zip_imports(tmp_path, monkeypatch):
     assert zip_importers() == [] and sys.path == path
     second = importlib.import_module("zipmod_second")
     assert second.VALUE == 2 and second.__file__.startswith(str(archive))
+
+
+def test_python_task_drops_zip_importers_first(tmp_path, monkeypatch):
+    """A ``python_task`` body starts with no cached zip importer, keeps
+    its argument and its generator output, and leaves ``sys.path``
+    alone."""
+    import importlib
+    import zipfile
+    import zipimport
+
+    archive = tmp_path / "task.zip"
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("zipmod_task.py", "VALUE = 3\n")
+    monkeypatch.syspath_prepend(str(archive))
+    monkeypatch.delitem(sys.modules, "zipmod_task", raising=False)
+    assert importlib.import_module("zipmod_task").VALUE == 3
+    path = list(sys.path)
+    seen = []
+
+    @python_task
+    def run(batches):
+        seen.append([p for p, f in sys.path_importer_cache.items()
+                     if isinstance(f, zipimport.zipimporter)])
+        for b in batches:
+            yield b * 2
+
+    assert list(run(iter([1, 2]))) == [2, 4]
+    assert seen == [[]] and sys.path == path
