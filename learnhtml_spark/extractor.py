@@ -28,8 +28,8 @@ class HTMLExtractor:
     def _kept_blocks(self, html: str) -> list:
         """(block, path) pairs the model keeps, document order."""
         doc = html_doc(html)
-        cols = block_columns(doc, self.depth, self.height)
-        (keep,) = predict_keep(self.model, [doc], [cols], self.depth, self.height)
+        cols = block_columns([doc], self.depth, self.height)
+        (keep,) = predict_keep(self.model, [doc], *cols, self.depth, self.height)
         return [(b, p) for b, p, k in zip(doc.blocks, doc.paths, keep) if k]
 
     def extract_from_html(self, html: str) -> list[str]:

@@ -45,23 +45,38 @@ def _pack(trees: list[list]) -> dict:
     return pack
 
 
-def _leaves(pack: dict, x: np.ndarray) -> np.ndarray:
-    """(n, T) leaf value of every row in every tree: all trees are walked
-    at once over an (n, T) matrix of node indices, one gather per level."""
-    feature, threshold = pack["pk_feature"], pack["pk_threshold"]
-    left, right = pack["pk_left"], pack["pk_right"]
+def _walk(pack: dict) -> tuple:
+    """A packed ensemble as a table of absolute children, built once per
+    ensemble: ``child[2 * i]`` / ``child[2 * i + 1]`` are node i's left /
+    right child, a leaf's both itself, and leaves test column 0.  Returns
+    ``(roots, child, feature, threshold, value, steps)``, ``steps`` the
+    deepest leaf's depth."""
     sizes = pack["tree_sizes"]
-    root = np.cumsum(sizes) - sizes
-    idx = np.tile(root, (len(x), 1))
+    roots = np.cumsum(sizes) - sizes
+    base = np.repeat(roots, sizes)
+    feature = pack["pk_feature"]
+    leaf = feature < 0
+    node = np.arange(len(feature))
+    child = np.stack([np.where(leaf, node, base + pack["pk_left"]),
+                      np.where(leaf, node, base + pack["pk_right"])], axis=1).ravel()
+    frontier, steps = roots, 0
+    while (inner := frontier[~leaf[frontier]]).size:
+        frontier = child.reshape(-1, 2)[inner].ravel()
+        steps += 1
+    return (roots, child, np.where(leaf, 0, feature), pack["pk_threshold"],
+            pack["pk_value"], steps)
+
+
+def _leaves(walk: tuple, x: np.ndarray) -> np.ndarray:
+    """(n, T) leaf value of every row in every tree: all trees are walked
+    at once over an (n, T) matrix of node indices, one gather per level for
+    a fixed number of levels (a leaf steps to itself; NaN goes right)."""
+    roots, child, feature, threshold, value, steps = walk
+    idx = np.broadcast_to(roots, (len(x), len(roots)))
     row = np.arange(len(x))[:, None]
-    while True:
-        feat = feature[idx]
-        leaf = feat < 0
-        if leaf.all():
-            return pack["pk_value"][idx]
-        go_left = x[row, np.maximum(feat, 0)] <= threshold[idx]
-        child = np.where(go_left, left[idx], right[idx])
-        idx = np.where(leaf, idx, root + child)
+    for _ in range(steps):
+        idx = child[2 * idx + ~(x[row, feature[idx]] <= threshold[idx])]
+    return value[idx]
 
 
 def _best_split(x, g, h, rows, lam):
@@ -123,6 +138,7 @@ class GBDTClassifier:
 
     def __init__(self, pack=None, learning_rate=0.2, base_score=0.0):
         self.pack = _pack([]) if pack is None else pack
+        self._walk = _walk(self.pack)
         self.learning_rate = learning_rate
         self.base_score = base_score
 
@@ -159,7 +175,7 @@ class GBDTClassifier:
             g = (p - y) * w
             h = np.maximum(p * (1 - p) * w, 1e-12)
             tree = _build_tree(x, g, h, rows_all, depth, lam, min_rows)
-            z = z + learning_rate * _leaves(_pack([tree]), x)[:, 0]
+            z = z + learning_rate * _leaves(_walk(_pack([tree])), x)[:, 0]
             trees.append(tree)
             # early exit when perfectly fit
             if ((p >= 0.5) == (y >= 0.5)).all() and np.abs(p - y).max() < 1e-3:
@@ -169,7 +185,7 @@ class GBDTClassifier:
     def decision_function(self, x: np.ndarray) -> np.ndarray:
         x = np.ascontiguousarray(x, dtype=np.float64)
         z = np.full(len(x), self.base_score)
-        for v in _leaves(self.pack, x).T:  # tree order: the fold fit used
+        for v in _leaves(self._walk, x).T:  # tree order: the fold fit used
             z += self.learning_rate * v
         return z
 

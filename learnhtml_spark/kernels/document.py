@@ -1,24 +1,23 @@
-"""The document kernel: the one per-document extraction loop behind every
-HTML extraction surface.
+"""The document kernel: the one extraction kernel behind every HTML
+extraction surface, run over a batch of documents (an Arrow batch).
 
     (key, spans) -> parse -> blockify -> verdict -> assemble -> rows
 
 - **parse** (``parse_doc``): spans -> markup + boundaries, media, parsed
   tree, blocks and each block's start path (computed here, once per
   block; the model's block stats re-read the path ``getpath`` memoized).
-- **verdict**: the density rules (``heuristic_block_flags``,
-  jusText/boilerpipe style), per document; or the model, per batch of
-  documents — per-document feature columns plus the blockifier's block
-  stats (``block_columns``, the one featurizer: training fits on the same
-  rows), concatenated (``concat_columns``) into ONE frame and ONE
-  ``clf.predict`` for the whole batch (``predict_keep``).  No
-  per-document pandas frame: its construction cost dominates the kernel
-  otherwise.  The batch's parsed trees stay live until its predict
+- **verdict**: the density rules (``heuristic_block_flags``), per
+  document; or the model: ONE feature pass over the node table of the
+  batch's trees plus the block stats (``block_columns``, the one
+  featurizer: training fits on the same rows) and ONE ``clf.predict``
+  (``predict_keep``).  The batch's trees stay live until its predict
   returns, so the batch size is the model path's memory bound.  A model
   is checked against the featurizer's columns on the driver
   (``check_model_columns``) before any batch reaches it.
 - **assemble** (``assemble_doc``): kept blocks + carried-through media ->
-  ordered ``(kind, text, media_ref, offset)`` rows.
+  ordered ``(kind, text, media_ref, offset)`` rows; the tree is then cut
+  free of cycles (``release``): ``extract_rows`` holds the cyclic
+  collector off for the batch.
 
 Keys are opaque tuples, ``doc_id`` last, that lead every output row
 untouched: ``(doc_id,)`` or ``(bucket, doc_id)`` for span tables,
@@ -26,24 +25,25 @@ untouched: ``(doc_id,)`` or ``(bucket, doc_id)`` for span tables,
 
 Error-row contract (``error_row``): a document whose parse, featurization
 or assembly raises becomes ONE row ``key + ("error", "{Class}: {msg}"[:500],
-None, -1)`` instead of failing its task; consumers filter ``kind ==
-'error'`` and lineage counts them.
+None, -1)`` instead of failing its task (a raising batch featurization is
+retried per document to find it); consumers filter ``kind == 'error'`` and
+lineage counts them.
 
-Callers: ``operators/extract.py`` (classifier spans, node features),
+Callers: ``operators/extract.py`` (classifier spans),
 ``operators/heuristic.py`` (model-free spans, the golden generator's
-sequential run), ``extractor.py`` (single document),
-``sources/warc_run.py`` (crawl archives, both verdicts) and
-``training.py`` (training rows: ``parse_doc`` + ``block_columns`` + a
-label).  This module imports nothing from ``training.py``: the block stats
-(``BLOCK_STAT_COLUMNS``, ``block_stats_list``) live here.
+sequential run), ``extractor.py`` (a batch of one), ``sources/warc_run.py``
+(crawl archives, both verdicts) and ``training.py`` (training rows:
+``parse_doc`` + ``block_columns`` + a label).  This module imports nothing
+from ``training.py``: the block stats (``BLOCK_STAT_COLUMNS``,
+``block_stats_list``) live here.
 """
 
 from __future__ import annotations
 
+import gc
 import sys
 import zipimport
 from collections import Counter
-from itertools import chain
 from typing import Callable, Iterable, Iterator, NamedTuple
 
 import numpy as np
@@ -52,7 +52,7 @@ import pandas as pd
 from learnhtml_spark.htmlparse import getpath, parse_html
 from learnhtml_spark.kernels.blockify import blocks_from_tree
 from learnhtml_spark.kernels.features import (
-    extract_features_from_tree,
+    extract_features_from_trees,
     feature_columns,
 )
 from learnhtml_spark.spans import assemble_output, html_from_spans, media_spans
@@ -197,17 +197,6 @@ def heuristic_block_flags(
     return out
 
 
-def concat_columns(col_dicts: list[dict], names: list[str]) -> dict:
-    """Row-concatenate per-document column dicts (arrays or lists)."""
-    merged = {}
-    for k in names:
-        if isinstance(col_dicts[0][k], np.ndarray):
-            merged[k] = np.concatenate([d[k] for d in col_dicts])
-        else:
-            merged[k] = list(chain.from_iterable(d[k] for d in col_dicts))
-    return merged
-
-
 def block_stats_list(blocks) -> dict[str, list[float]]:
     """Per block-start-path stats (``BLOCK_STAT_COLUMNS`` order) for a
     block list."""
@@ -234,46 +223,39 @@ def block_frame_columns(depth: int, height: int) -> list[str]:
     return feature_columns(depth, height) + BLOCK_STAT_COLUMNS
 
 
-def block_columns(doc: Doc, depth: int, height: int) -> dict | None:
-    """Model input columns for the document's block-start nodes: tree
-    features plus the blockifier's per-block stats (None without blocks).
+def block_columns(docs: list[Doc], depth: int, height: int) -> tuple[dict, np.ndarray]:
+    """``(columns, owner)``: model input columns for the block-start nodes
+    of a batch, tree features plus the blockifier's per-block stats, and the
+    index into ``docs`` of each row (a document without blocks has none).
     The one featurizer: serving predicts on these rows, and training
     (``training.py``, serial and distributed) fits on them plus a label."""
-    if not doc.blocks:
-        return None
-    starts = {id(b.features["block_start_element"]) for b in doc.blocks}
-    d = extract_features_from_tree(
-        doc.root, depth, height, select_nodes=starts, as_columns=True
-    )
-    stats = block_stats_list(doc.blocks)
+    have = [i for i, doc in enumerate(docs) if doc.blocks]
+    starts = {id(b.features["block_start_element"]) for i in have for b in docs[i].blocks}
+    cols, owner = extract_features_from_trees(
+        [docs[i].root for i in have], depth, height, select_nodes=starts)
+    owner = np.asarray(have, dtype=np.int64)[owner]
+    stats = {i: block_stats_list(docs[i].blocks) for i in have}
     zeros = [0.0] * len(BLOCK_STAT_COLUMNS)
-    for name, vals in zip(
-        BLOCK_STAT_COLUMNS, zip(*(stats.get(p) or zeros for p in d["path"]))
-    ):
-        d[name] = np.asarray(vals, dtype=np.float64)
-    return d
+    vals = np.asarray(
+        [stats[i].get(p) or zeros for i, p in zip(owner.tolist(), cols["path"])],
+        dtype=np.float64,
+    ).reshape(-1, len(BLOCK_STAT_COLUMNS))
+    for name, col in zip(BLOCK_STAT_COLUMNS, np.ascontiguousarray(vals.T)):
+        cols[name] = col
+    return cols, owner
 
 
 def predict_keep(
-    clf, docs: list[Doc], cols: list[dict | None], depth: int, height: int
+    clf, docs: list[Doc], cols: dict, owner: np.ndarray, depth: int, height: int
 ) -> list[list[bool]]:
-    """Per-document keep flags from ONE ``clf.predict`` over every block
-    row of the batch; ``cols[i]`` is None for a document without blocks."""
-    present = [c for c in cols if c is not None]
-    positive = [set() for _ in cols]
-    if present:
+    """Per-document keep flags from ONE ``clf.predict`` over the batch's
+    block rows ``(cols, owner)``, ``block_columns(docs, depth, height)``."""
+    positive = [set() for _ in docs]
+    if len(owner):
         names = block_frame_columns(depth, height)
-        merged = concat_columns(present, names)
-        pred = np.asarray(
-            clf.predict(pd.DataFrame(merged, columns=names)), dtype=bool
-        )
-        owners = np.repeat(
-            [i for i, c in enumerate(cols) if c is not None],
-            [len(c["path"]) for c in present],
-        )
-        for i, p in zip(
-            owners[pred], np.asarray(merged["path"], dtype=object)[pred]
-        ):
+        pred = np.asarray(clf.predict(pd.DataFrame(cols, columns=names)), dtype=bool)
+        paths = np.asarray(cols["path"], dtype=object)[pred]
+        for i, p in zip(owner[pred].tolist(), paths):
             positive[i].add(p)
     return [[p in pos for p in doc.paths] for doc, pos in zip(docs, positive)]
 
@@ -290,7 +272,7 @@ def check_model_columns(clf, depth: int = 5, height: int = 5) -> None:
     want = clf.input_columns()
     window = f"the block featurizer at depth={depth}, height={height}"
     if isinstance(want, int):
-        probe = block_columns(html_doc("<p>x</p>"), depth, height)
+        probe, _ = block_columns([html_doc("<p>x</p>")], depth, height)
         width = sum(isinstance(probe[c], np.ndarray) for c in have)
         if want != width:
             raise ModelColumnsError(
@@ -316,6 +298,15 @@ def assemble_doc(key: tuple, doc: Doc, keep: list[bool]) -> list[tuple]:
     return [(*prefix, *r) for r in rows] if prefix else rows
 
 
+def release(doc: Doc) -> None:
+    """Drop the parent links of a document's parsed tree once its rows are
+    assembled: the tree is then free of reference cycles, and refcounting
+    frees it while ``extract_rows`` holds the cyclic collector off."""
+    if doc.root is not None:
+        for node in doc.root.iter():
+            node._parent = None
+
+
 def extract_rows(
     docs: Iterable[tuple[tuple, list]], clf=None, depth: int = 5, height: int = 5
 ) -> list[tuple]:
@@ -323,28 +314,54 @@ def extract_rows(
     ``key + (kind, text, media_ref, offset)``, error rows included.
 
     ``clf`` None selects the density rules, which assemble each document
-    as soon as it is judged, so no parsed tree outlives its document; a
-    classifier selects the model verdict with one predict call for the
-    whole batch, which keeps the batch's trees live until it returns."""
-    rows, keys, parsed, verdicts = [], [], [], []
+    as soon as it is judged; a classifier selects the model verdict with
+    one feature pass and one predict call for the whole batch, which keeps
+    the batch's trees live until it returns.  The cyclic garbage collector
+    is off for the call (the caller's setting is restored on return or
+    raise): the parsed trees are its only cyclic garbage, and each tree's
+    cycles are cut (``release``) once its document's rows are assembled."""
+    enabled = gc.isenabled()
+    gc.disable()
+    try:
+        return _extract_rows(docs, clf, depth, height)
+    finally:
+        if enabled:
+            gc.enable()
+
+
+def _extract_rows(docs, clf, depth: int, height: int) -> list[tuple]:
+    rows, keys, parsed = [], [], []
     for key, spans in docs:
         try:
             doc = parse_doc(spans_list(spans))
             if clf is None:
                 rows.extend(assemble_doc(key, doc, heuristic_block_flags(doc.blocks)))
+                release(doc)
                 continue
-            verdict = block_columns(doc, depth, height)
         except Exception as exc:  # noqa: BLE001 — per-document isolation
             rows.append(error_row(key, exc))
             continue
         keys.append(key)
         parsed.append(doc)
-        verdicts.append(verdict)
-    if clf is not None:
-        verdicts = predict_keep(clf, parsed, verdicts, depth, height)
+    if not parsed:
+        return rows
+    try:
+        cols = block_columns(parsed, depth, height)
+    except Exception:  # noqa: BLE001 — find the documents whose features raise
+        ok = []
+        for key, doc in zip(keys, parsed):
+            try:
+                block_columns([doc], depth, height)
+                ok.append((key, doc))
+            except Exception as exc:  # noqa: BLE001
+                rows.append(error_row(key, exc))
+        keys, parsed = [k for k, _ in ok], [d for _, d in ok]
+        cols = block_columns(parsed, depth, height)
+    verdicts = predict_keep(clf, parsed, *cols, depth, height)
     for key, doc, keep in zip(keys, parsed, verdicts):
         try:
             rows.extend(assemble_doc(key, doc, keep))
         except Exception as exc:  # noqa: BLE001
             rows.append(error_row(key, exc))
+        release(doc)
     return rows

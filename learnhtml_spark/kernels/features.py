@@ -17,12 +17,19 @@ reference's feature frame (learnhtml/features.py):
   (features.py:107-114,196-223).
 - the node's XPath as ``path``.
 
-All columns are computed in one pass over the node list with explicit
-parent-index arrays — no recursion, suitable for running per document
-inside Arrow-batched pandas UDFs.
+The unit of work is a batch of trees (an Arrow batch's documents), not a
+document: ``node_table`` flattens the trees into one table of per-node
+arrays with a sentinel "no node" row, and ``extract_features_from_trees``
+computes every column over it with numpy — ancestor level h is the parent
+index gathered h times, descendant level l a ``np.bincount`` into each
+node's level-l ancestor's output row.  Python runs once per node to read
+the tree and once per output row for the path and the joined strings.
+``extract_features_from_tree`` is the one-tree call of the same function.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -54,10 +61,6 @@ DESCENDANT_FEATURES = [
     "tags",
 ]
 
-#: zero/empty padding for missing ancestors, aligned with LOCAL_COLUMNS
-_EMPTY_LOCAL = (0, 0, "", 0, 0, 0, 0, 0, "", "")
-
-
 def ancestor_columns(height: int) -> list[str]:
     return [
         f"ancestor{i}_{name}"
@@ -82,6 +85,163 @@ def feature_columns(depth: int, height: int) -> list[str]:
     )
 
 
+class NodeTable(NamedTuple):
+    """One row per node of a list of trees (trees in order, each in
+    document order) plus a last sentinel row ``n``, "no node": each root's
+    parent, its own parent, and a missing ancestor's 0/``""`` padding."""
+
+    nodes: list  # the Element of each row
+    owner: np.ndarray  # (n,) index of the row's tree
+    parent: np.ndarray  # (n + 1,) parent row
+    local: dict  # LOCAL_COLUMNS over the n + 1 rows; strings as object arrays
+    spaced_class: np.ndarray  # (n + 1,) class text, characters space-interleaved
+
+
+def node_table(roots: list[Element]) -> NodeTable:
+    """Flatten parsed trees into one ``NodeTable``; the subtree text
+    length is a prefix sum over the pre-order rows."""
+    nodes: list = []
+    sizes = []
+    for root in roots:
+        before = len(nodes)
+        nodes.extend(root.iter())
+        sizes.append(len(nodes) - before)
+    n = len(nodes)
+    row = {id(node): i for i, node in enumerate(nodes)}
+    par = [row.get(id(node._parent), n) for node in nodes] + [n]
+    # pre-order puts a parent before its children: depth and sibling
+    # position in one forward pass, subtree size in one backward pass
+    dep = [0] * (n + 1)
+    sib = [0] * (n + 1)
+    seen = [0] * (n + 1)
+    for i in range(n):
+        p = par[i]
+        dep[i] = dep[p] + 1
+        sib[i] = seen[p]
+        seen[p] += 1
+    size = [1] * n + [0]
+    for i in range(n - 1, -1, -1):
+        size[par[i]] += size[i]
+    parent = np.asarray(par, dtype=np.int64)
+    sibling_pos = np.asarray(sib, dtype=np.int64)
+    sibling_pos[parent == n] = 0  # roots: the sentinel is no parent
+
+    tags = [node.tag for node in nodes]
+    is_el = [isinstance(t, str) for t in tags]
+    tag = [t if e else "html_comment" for t, e in zip(tags, is_el)]
+    class_text = [
+        node.attrib.get("class", "") if e else "" for node, e in zip(nodes, is_el)
+    ]
+    id_text = [node.attrib.get("id", "") if e else "" for node, e in zip(nodes, is_el)]
+    # an element's subtree text: the text of every element in it and the
+    # tail of every node in it but its own (comment/PI text is excluded,
+    # their tails count: lxml's itertext)
+    el = np.asarray(is_el, dtype=bool)
+    text = np.asarray([len(node.text or "") for node in nodes], dtype=np.int64)
+    tail = np.asarray([len(node.tail or "") for node in nodes], dtype=np.int64)
+    csum = np.concatenate([[0], np.cumsum(np.where(el, text, 0) + tail)])
+    first = np.arange(n)
+    end = first + np.asarray(size[:n], dtype=np.int64)
+    text_len = np.where(el, csum[end] - csum[first] - tail, 0)
+
+    def ints(values) -> np.ndarray:
+        return np.append(np.asarray(values, dtype=np.int64), 0)
+
+    def strs(values) -> np.ndarray:
+        out = np.empty(n + 1, dtype=object)
+        out[:n] = values
+        out[n] = ""
+        return out
+
+    local = {
+        "depth": np.asarray(dep, dtype=np.int64),
+        "sibling_pos": sibling_pos,
+        "tag": strs(tag),
+        "no_classes": ints([len(c.split()) if c else 0 for c in class_text]),
+        "id_len": ints([len(s) for s in id_text]),
+        "class_len": ints([len(c) for c in class_text]),
+        "no_children": ints([len(node._children) for node in nodes]),
+        "text_len": np.append(text_len, 0),
+        "class_text": strs(class_text),
+        "id_text": strs(id_text),
+    }
+    # reference quirk: a descendant's classes join as ' '.join(class_str)
+    spaced = strs([" ".join(c) if c else "" for c in class_text])
+    owner = np.repeat(np.arange(len(roots), dtype=np.int64), sizes)
+    return NodeTable(nodes, owner, parent, local, spaced)
+
+
+#: descendant averages: (output name, local column summed)
+_AVERAGED = (
+    ("no_children_avg", "no_children"),
+    ("id_len_avg", "id_len"),
+    ("no_classes_avg", "no_classes"),
+    ("class_len_avg", "class_len"),
+    ("text_len_avg", "text_len"),
+)
+
+
+def _joined(pieces: np.ndarray, order: np.ndarray, ends: list[int]) -> list[str]:
+    """Comma-join ``pieces[order]`` over consecutive runs ending at ``ends``."""
+    parts = pieces[order].tolist()
+    return [",".join(parts[lo:hi]) for lo, hi in zip([0] + ends, ends)]
+
+
+def extract_features_from_trees(
+    roots: list[Element], depth: int, height: int, select_nodes=None
+) -> tuple[dict, np.ndarray]:
+    """Feature columns for the nodes of parsed trees, one batch: ``(columns,
+    owner)``, rows in tree order and document order within a tree, ``owner``
+    the index into ``roots`` of each row's tree.
+
+    ``select_nodes`` (optional set of Element identities, ``id(el)``)
+    restricts the OUTPUT rows (e.g. block-start nodes only for the serving
+    path) — every feature is still computed over the whole trees, so values
+    are identical to the full frame.  Numeric columns are int64/float64
+    arrays, string columns lists."""
+    t = node_table(roots)
+    n = len(t.nodes)
+    kept = np.arange(n) if select_nodes is None else np.flatnonzero(
+        np.fromiter((id(x) in select_nodes for x in t.nodes), dtype=bool, count=n))
+    nk = len(kept)
+    data = {}
+    for name, col in t.local.items():
+        data[name] = col[kept] if col.dtype != object else col[kept].tolist()
+
+    # the level-h ancestor of every row, h = 1.., the sentinel when none
+    ancestors = [t.parent]
+    for _ in range(max(depth, height) - 1):
+        ancestors.append(t.parent[ancestors[-1]])
+
+    # descendant level l of a kept row: the nodes whose level-l ancestor it
+    # is; their integer sums are exact in float64, so every average is the
+    # per-node accumulation's, and the strings join in document order
+    out_row = np.full(n + 1, nk, dtype=np.int64)
+    out_row[kept] = np.arange(nk)
+    for lvl in range(depth):
+        pre = f"descendant{lvl + 1}_"
+        target = out_row[ancestors[lvl][:n]]
+        counts = np.bincount(target, minlength=nk + 1)[:nk]
+        data[pre + "no_nodes"] = counts
+        for name, src in _AVERAGED:
+            sums = np.bincount(target, weights=t.local[src][:n], minlength=nk + 1)[:nk]
+            data[pre + name] = np.divide(sums, counts, out=np.zeros(nk), where=counts > 0)
+        order = np.argsort(target, kind="stable")[: counts.sum()]
+        ends = np.cumsum(counts).tolist()
+        data[pre + "classes"] = _joined(t.spaced_class, order, ends)
+        data[pre + "ids"] = _joined(t.local["id_text"], order, ends)
+        data[pre + "tags"] = _joined(t.local["tag"], order, ends)
+
+    for h in range(height):
+        up = ancestors[h][kept]
+        pre = f"ancestor{h + 1}_"
+        for name, col in t.local.items():
+            data[pre + name] = col[up] if col.dtype != object else col[up].tolist()
+
+    data["path"] = [getpath(t.nodes[i]) for i in kept.tolist()]
+    return data, t.owner[kept]
+
+
 def extract_features_from_tree(
     root: Element,
     depth: int,
@@ -89,199 +249,10 @@ def extract_features_from_tree(
     select_nodes=None,
     as_columns: bool = False,
 ) -> pd.DataFrame:
-    """Feature frame for the nodes of a parsed tree, document order.
-
-    ``select_nodes`` (optional set of Element identities, ``id(el)``)
-    restricts the OUTPUT rows (e.g. block-start nodes only for the serving
-    path) — every feature is still computed over the whole tree, so values
-    are identical to the full frame; only row assembly is skipped.
-    ``as_columns`` returns the raw {column: array/list} dict instead of a
-    DataFrame so callers can concatenate many documents into one frame
-    (per-doc DataFrame construction dominates the profile otherwise)."""
-    nodes = list(root.iter())
-    n = len(nodes)
-    index = {id(node): i for i, node in enumerate(nodes)}
-    parent_l = [-1] * n
-    for i, node in enumerate(nodes):
-        p = node._parent
-        if p is not None:
-            parent_l[i] = index[id(p)]
-
-    # ---- local features ---------------------------------------------------
-    # built as plain python lists and converted to numpy once at the end:
-    # per-element numpy scalar reads/writes inside these per-node loops cost
-    # ~100ns each and trees average a few dozen nodes, so array dispatch
-    # overhead dominated the array-in-the-loop form
-    depth_l = [0] * n
-    for i in range(n):
-        p = parent_l[i]
-        depth_l[i] = depth_l[p] + 1 if p >= 0 else 1
-    depth_arr = np.asarray(depth_l, dtype=np.int64)
-
-    sp = [0] * n
-    for node in nodes:
-        for k, child in enumerate(node._children):
-            sp[index[id(child)]] = k
-    sibling_pos = np.asarray(sp, dtype=np.int64)
-
-    is_el = [isinstance(node.tag, str) for node in nodes]
-    tags = [node.tag if e else "html_comment" for node, e in zip(nodes, is_el)]
-    class_text = [
-        node.attrib.get("class", "") if e else "" for node, e in zip(nodes, is_el)
-    ]
-    id_text = [
-        node.attrib.get("id", "") if e else "" for node, e in zip(nodes, is_el)
-    ]
-    no_classes_l = [len(c.split()) for c in class_text]
-    id_len_l = [len(s) for s in id_text]
-    class_len_l = [len(c) for c in class_text]
-    no_children_l = [len(node._children) for node in nodes]
-    no_classes = np.asarray(no_classes_l, dtype=np.int64)
-    id_len = np.asarray(id_len_l, dtype=np.int64)
-    class_len = np.asarray(class_len_l, dtype=np.int64)
-    no_children = np.asarray(no_children_l, dtype=np.int64)
-
-    # subtree text length, bottom-up (reverse document order): the subtree
-    # text of an element is its text + each child's subtree text + tail;
-    # comment/PI children contribute only their tails (lxml itertext rule)
-    tl = [0] * n
-    for i in range(n - 1, -1, -1):
-        node = nodes[i]
-        total = len(node.text) if node.text else 0
-        for child in node._children:
-            ci = index[id(child)]
-            if isinstance(child.tag, str):
-                total += tl[ci]
-            if child.tail:
-                total += len(child.tail)
-        tl[i] = total
-    text_len_l = [t if e else 0 for t, e in zip(tl, is_el)]
-    text_len = np.asarray(text_len_l, dtype=np.int64)
-
-    if select_nodes is None:
-        keep = None
-        kept = list(range(n))
-    else:
-        keep = np.fromiter(
-            (id(node) in select_nodes for node in nodes), dtype=bool, count=n
-        )
-        kept = [i for i in range(n) if keep[i]]
-
-    def col_num(arr):
-        return arr if keep is None else arr[keep]
-
-    def col_str(lst):
-        return lst if keep is None else [lst[i] for i in kept]
-
-    # accumulate every column into one dict and build the frame once at the
-    # end — per-column DataFrame.__setitem__ dominates the profile otherwise
-    data = {
-        "depth": col_num(depth_arr),
-        "sibling_pos": col_num(sibling_pos),
-        "tag": col_str(tags),
-        "no_classes": col_num(no_classes),
-        "id_len": col_num(id_len),
-        "class_len": col_num(class_len),
-        "no_children": col_num(no_children),
-        "text_len": col_num(text_len),
-        "class_text": col_str(class_text),
-        "id_text": col_str(id_text),
-    }
-
-    # ---- descendant aggregates --------------------------------------------
-    # aggregates are only needed for the KEPT rows, so one pass walks each
-    # node's ancestor chain (≤ depth steps) and accumulates straight into
-    # the kept ancestor's row — replacing the per-level bincount/gather
-    # machinery whose ~30 tiny-array numpy dispatches per document
-    # dominated this kernel (trees average a few dozen nodes).  Sums
-    # accumulate in document order of the contributing node, the same
-    # order np.bincount added them, and integer partial sums are exact in
-    # float64, so every average is bit-identical to the vectorized form.
-    if depth > 0:
-        nk = len(kept)
-        kept_pos = {node: row for row, node in enumerate(kept)}
-        counts = [[0] * nk for _ in range(depth)]
-        sums = [[[0] * nk for _ in range(5)] for _ in range(depth)]
-        l_classes = [[[] for _ in range(nk)] for _ in range(depth)]
-        l_ids = [[[] for _ in range(nk)] for _ in range(depth)]
-        l_tags = [[[] for _ in range(nk)] for _ in range(depth)]
-        for i in range(n):
-            a = parent_l[i]
-            lvl = 0
-            while a >= 0 and lvl < depth:
-                row = kept_pos.get(a)
-                if row is not None:
-                    counts[lvl][row] += 1
-                    s = sums[lvl]
-                    s[0][row] += no_children_l[i]
-                    s[1][row] += id_len_l[i]
-                    s[2][row] += no_classes_l[i]
-                    s[3][row] += class_len_l[i]
-                    s[4][row] += text_len_l[i]
-                    # reference quirk: ' '.join over the class string's chars
-                    l_classes[lvl][row].append(" ".join(class_text[i]))
-                    l_ids[lvl][row].append(id_text[i])
-                    l_tags[lvl][row].append(tags[i])
-                a = parent_l[a]
-                lvl += 1
-        for lvl in range(depth):
-            pre = f"descendant{lvl + 1}_"
-            c = counts[lvl]
-            data[pre + "no_nodes"] = np.asarray(c, dtype=np.int64)
-            for k, name in enumerate(
-                ("no_children_avg", "id_len_avg", "no_classes_avg",
-                 "class_len_avg", "text_len_avg")
-            ):
-                s = sums[lvl][k]
-                data[pre + name] = np.asarray(
-                    [s[r] / c[r] if c[r] else 0.0 for r in range(nk)],
-                    dtype=np.float64,
-                )
-            data[pre + "classes"] = [",".join(x) for x in l_classes[lvl]]
-            data[pre + "ids"] = [",".join(x) for x in l_ids[lvl]]
-            data[pre + "tags"] = [",".join(x) for x in l_tags[lvl]]
-
-    # ---- ancestor features -------------------------------------------------
-    if height > 0:
-        local_rows = list(
-            zip(
-                depth_l,
-                sp,
-                tags,
-                no_classes_l,
-                id_len_l,
-                class_len_l,
-                no_children_l,
-                text_len_l,
-                class_text,
-                id_text,
-            )
-        )
-        anc_chains = []
-        for i in kept:
-            chain = []
-            a = parent_l[i]
-            for _h in range(height):
-                if a < 0:
-                    break
-                chain.append(a)
-                a = parent_l[a]
-            anc_chains.append(chain)
-        for h in range(height):
-            col_rows = [
-                local_rows[c[h]] if h < len(c) else _EMPTY_LOCAL
-                for c in anc_chains
-            ]
-            pre = f"ancestor{h + 1}_"
-            # one C-level transpose instead of a listcomp per column
-            cols = list(zip(*col_rows)) or [()] * len(LOCAL_COLUMNS)
-            for k, name in enumerate(LOCAL_COLUMNS):
-                if name in ("tag", "class_text", "id_text"):
-                    data[pre + name] = list(cols[k])
-                else:
-                    data[pre + name] = np.asarray(cols[k], dtype=np.int64)
-
-    data["path"] = [getpath(nodes[i]) for i in kept]
+    """Feature frame for the nodes of one parsed tree, document order: the
+    one-tree call of ``extract_features_from_trees``.  ``as_columns``
+    returns the raw {column: array/list} dict instead of a DataFrame."""
+    data, _ = extract_features_from_trees([root], depth, height, select_nodes)
     if as_columns:
         return data
     return pd.DataFrame(data, columns=feature_columns(depth, height))

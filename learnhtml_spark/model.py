@@ -86,20 +86,24 @@ def featurize_frame(df: pd.DataFrame, columns: list[str] | None = None):
     num_cols = _numeric_columns(df)
     x_num = df[num_cols].to_numpy(dtype=np.float64, copy=True)
 
-    none = np.zeros(0, dtype=np.int64)  # np.concatenate rejects []
-    rows, slots = [none], [none]
-    for col in _string_columns(df):
-        # feature values repeat massively across rows (tag names,
-        # framework class strings): hash each distinct value once per
-        # batch, and the memo pays it once per worker
-        codes, uniques = pd.factorize(df[col])
-        # code -1 (missing) reads the last entry: the slots of ""
-        per_code = [_value_slots(col, v) for v in uniques]
-        per_code.append(_value_slots(col, ""))
-        counts = np.array([len(a) for a in per_code])[codes]
-        rows.append(np.repeat(np.arange(len(codes)), counts))
-        slots.extend([per_code[c] for c in codes.tolist()])
-    return x_num, np.concatenate(rows), np.concatenate(slots)
+    # feature values repeat massively across rows (tag names, framework
+    # class strings): hash each distinct value once per batch (the memo pays
+    # it once per worker), then gather all rows' slots from their values'
+    str_cols = _string_columns(df)
+    per_value = [np.zeros(0, dtype=np.int64)]  # np.concatenate rejects []
+    codes = [np.zeros(0, dtype=np.int64)]
+    for col in str_cols:
+        col_codes, uniques = pd.factorize(df[col])
+        # code -1 (missing) reads the slots of "", appended last
+        codes.append(np.where(col_codes < 0, len(uniques), col_codes) + len(per_value))
+        per_value.extend(_value_slots(col, v) for v in [*uniques, ""])
+    codes = np.concatenate(codes)
+    lens = np.array([len(a) for a in per_value], dtype=np.int64)
+    counts = lens[codes]
+    rows = np.repeat(np.tile(np.arange(len(df), dtype=np.int64), len(str_cols)), counts)
+    first = np.cumsum(lens) - lens  # each value's first slot in the concatenation
+    pos = np.repeat(first[codes] - (np.cumsum(counts) - counts), counts)
+    return x_num, rows, np.concatenate(per_value)[pos + np.arange(len(pos))]
 
 
 def _logit(x_num, rows, slots, w_num, w_hash, bias) -> np.ndarray:

@@ -33,9 +33,8 @@ from pyspark.sql.types import StructType
 
 from learnhtml_spark.htmlparse import parse_html
 from learnhtml_spark.kernels.document import (
-    check_model_columns, concat_columns, extract_rows, python_task,
-    spans_list, tally)
-from learnhtml_spark.kernels.features import extract_features_from_tree
+    check_model_columns, extract_rows, python_task, spans_list, tally)
+from learnhtml_spark.kernels.features import extract_features_from_trees
 from learnhtml_spark.kernels.labeling import (
     NON_CONTENT_BLOCK_RATIO,
     get_ratios_per_html,
@@ -161,22 +160,17 @@ def extract_node_features(
     @python_task
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            # column dicts per doc, ONE DataFrame per batch: the pandas
-            # constructor on 100+ columns costs ~4× the feature kernel
-            # itself when built per doc
-            col_dicts = []
+            ids, roots = [], []
             for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
                 html, _ = html_from_spans(spans_list(spans))
                 root = parse_html(html) if html else None
-                if root is None:
-                    continue
-                d = extract_features_from_tree(root, depth, height, as_columns=True)
-                d["doc_id"] = [doc_id] * len(d["path"])
-                col_dicts.append(d)
-            if col_dicts:
-                yield pd.DataFrame(concat_columns(col_dicts, names), columns=names)
-            else:
-                yield pd.DataFrame(columns=names)
+                if root is not None:
+                    ids.append(doc_id)
+                    roots.append(root)
+            # one feature pass and ONE DataFrame per batch
+            cols, owner = extract_features_from_trees(roots, depth, height)
+            cols["doc_id"] = [ids[i] for i in owner.tolist()]
+            yield pd.DataFrame(cols, columns=names)
 
     return docs.mapInPandas(run, schema=schema)
 

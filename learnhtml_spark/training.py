@@ -9,8 +9,8 @@ featurizer ``block_columns`` (block-start nodes, the reference's
 gets a label from the same parsed blocks: LCS (``lcs_labels``, inclusion
 ratio > ``RATIO_THRESHOLD``) or exact (``exact_labels``, block text is a
 known content text).  Labels are keyed by block start path, the last
-duplicate winning.  ``training_rows`` is the same per-document function as
-one ``mapInPandas``, for distributed training."""
+duplicate winning.  ``training_rows`` is the same featurizer over each Arrow batch in one
+``mapInPandas``, for distributed training."""
 
 from __future__ import annotations
 
@@ -23,7 +23,6 @@ from learnhtml_spark.kernels.document import (
     Doc,
     block_columns,
     block_frame_columns,
-    concat_columns,
     html_doc,
     parse_doc,
     python_task,
@@ -49,21 +48,22 @@ def exact_labels(doc: Doc, content_texts: list[str]) -> list[int]:
     return [int(b.text in want) for b in doc.blocks]
 
 
-def labeled_block_columns(doc: Doc, labels: list[int], depth: int, height: int):
-    """``block_columns`` plus a ``label`` column from per-block ``labels``
-    (None without blocks)."""
-    cols = block_columns(doc, depth, height)
-    if cols is not None:
-        by_path = dict(zip(doc.paths, labels))
-        cols["label"] = np.asarray([by_path[p] for p in cols["path"]], dtype=np.int64)
-    return cols
+def labeled_block_columns(
+    docs: list[Doc], labels: list[list[int]], depth: int, height: int
+) -> tuple[dict, np.ndarray]:
+    """``block_columns`` of a batch plus a ``label`` column, ``labels[i]``
+    the per-block labels of ``docs[i]``."""
+    cols, owner = block_columns(docs, depth, height)
+    by_path = [dict(zip(doc.paths, y)) for doc, y in zip(docs, labels)]
+    cols["label"] = np.asarray(
+        [by_path[i][p] for i, p in zip(owner.tolist(), cols["path"])], dtype=np.int64
+    )
+    return cols, owner
 
 
 def _training_pair(doc: Doc, labels: list[int], depth: int, height: int):
-    frame = pd.DataFrame(
-        labeled_block_columns(doc, labels, depth, height),
-        columns=block_frame_columns(depth, height) + ["label"],
-    )
+    cols, _ = labeled_block_columns([doc], [labels], depth, height)
+    frame = pd.DataFrame(cols, columns=block_frame_columns(depth, height) + ["label"])
     return frame, frame.pop("label").to_numpy(dtype=np.int64)
 
 
@@ -90,7 +90,7 @@ def training_rows(docs_with_gold, depth: int = 5, height: int = 5):
     """Distributed training rows: ``docs_with_gold`` (doc_id, spans,
     gold_blocks) -> one row per block-start node, ``(doc_id, features...,
     path, block stats..., label)`` with LCS labels, from one
-    ``mapInPandas`` of ``labeled_block_columns`` per document — no
+    ``mapInPandas`` of ``labeled_block_columns`` per Arrow batch — no
     features-labels join."""
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
@@ -106,18 +106,15 @@ def training_rows(docs_with_gold, depth: int = 5, height: int = 5):
     @python_task
     def run(batches):
         for pdf in batches:
-            col_dicts = []
-            for doc_id, spans, gold in zip(
-                pdf["doc_id"], pdf["spans"], pdf["gold_blocks"]
-            ):
-                doc = parse_doc(spans_list(spans))
-                labels = lcs_labels(doc, [] if gold is None else list(gold))
-                cols = labeled_block_columns(doc, labels, depth, height)
-                if cols is not None:
-                    cols["doc_id"] = [doc_id] * len(cols["path"])
-                    col_dicts.append(cols)
-            if col_dicts:
-                yield pd.DataFrame(concat_columns(col_dicts, names), columns=names)
+            docs = [parse_doc(spans_list(spans)) for spans in pdf["spans"]]
+            labels = [
+                lcs_labels(doc, [] if gold is None else list(gold))
+                for doc, gold in zip(docs, pdf["gold_blocks"])
+            ]
+            cols, owner = labeled_block_columns(docs, labels, depth, height)
+            if len(owner):
+                cols["doc_id"] = pdf["doc_id"].to_numpy(dtype=object)[owner].tolist()
+                yield pd.DataFrame(cols, columns=names)
 
     return docs_with_gold.mapInPandas(run, schema=schema)
 

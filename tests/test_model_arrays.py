@@ -160,5 +160,5 @@ def test_featurize_frame_on_block_rows(fixture_docs):
 
     names = block_frame_columns(5, 5)
     for _, html, _ in fixture_docs:
-        cols = block_columns(html_doc(html), 5, 5)
+        cols, _ = block_columns([html_doc(html)], 5, 5)
         _assert_featurized(pd.DataFrame(cols, columns=names))
